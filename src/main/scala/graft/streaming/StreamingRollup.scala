@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
-import graft.tsdb.{Db, Ingest}
+import graft.tsdb.{Db, FooterSchema, Ingest}
 
 /** Streaming maintenance of a [[graft.tsdb.Rollup]] layout: each
   * micro-batch is aggregated into partials and APPENDED
@@ -29,7 +29,7 @@ object StreamingRollup {
   def rollupAvailable(spark: SparkSession, eventsDir: String, dest: String,
                       checkpoint: String, widthNs: Long,
                       propsTags: Seq[String] = Seq("k")): Unit = {
-    val schema = spark.read.parquet(eventsDir).schema
+    val schema = FooterSchema.read(spark, eventsDir).schema
     val tagCols = propsTags.map(k =>
       nullif(regexp_extract(col("props"), "\"" + k + "\":\\s*(\\d+)", 1), lit(""))
         .as(Db.TagPrefix + k))

@@ -1504,7 +1504,8 @@ object Db {
     * analog of `Database::builder().open(path)` (talna
     * `src/db_builder.rs`): the storage-engine knobs (LSM cache sizes,
     * keyspaces) have no Spark counterpart, so opening is just binding
-    * the layout path.
+    * the layout path: one listing and one parquet footer read on the
+    * driver, no Spark job.
     */
   def open(spark: SparkSession, path: String): Db = Ingest.open(spark, path)
 
@@ -1524,7 +1525,7 @@ object Db {
     val tagCols = propsTags.map(k =>
       nullif(regexp_extract(col("props"), "\"" + k + "\":\\s*(\\d+)", 1), lit(""))
         .as(TagPrefix + k))
-    val raw = spark.read.parquet(s"$sfDir/events.parquet")
+    val raw = FooterSchema.read(spark, s"$sfDir/events.parquet")
     val df = raw.select(Seq(
         col("event_type").as("metric"),
         tsNs(raw.schema).as("ts"),
@@ -1558,7 +1559,7 @@ object Db {
     */
   def fromEventsAuto(spark: SparkSession, sfDir: String, sampleRows: Int = 1024): Db = {
     val KeyRe = "\"([A-Za-z0-9_-]+)\"\\s*:".r
-    val keys = spark.read.parquet(s"$sfDir/events.parquet")
+    val keys = FooterSchema.read(spark, s"$sfDir/events.parquet")
       .select(col("props")).where(col("props").isNotNull).limit(sampleRows)
       .collect()
       .flatMap(r => KeyRe.findAllMatchIn(r.getString(0)).map(_.group(1)))

@@ -76,18 +76,14 @@ object Ingest {
     * back as a string column; tag columns keep their `tag_` prefix; a
     * float-stored `value` (see [[write]]) widens back to double so
     * aggregation always runs in f64, like the reference's query path.
+    * Opening lists the layout and reads one parquet footer on the
+    * driver ([[FooterSchema]]); it launches no Spark job.
     */
   def open(spark: SparkSession, path: String): Db =
-    new Db(spark.read.parquet(path)
+    new Db(FooterSchema.read(spark, path)
       .withColumn("metric", col("metric").cast("string"))
       .withColumn("value", col("value").cast("double")))
 
-  /** Write-once cached graft layout for a source events dir: the first
-    * call materializes `Db.fromEvents` through [[write]]; later calls
-    * reuse it. Lets queries exercise the real on-disk layout (metric
-    * partition dirs + materialized tag columns ⇒ partition pruning and
-    * parquet tag pushdown) without rewriting per run.
-    */
   /** Bucketed series layout: `bucketBy` on the series key (metric +
     * primary tag) with in-bucket sort. Repeated series-keyed joins and
     * aggregations between tables written this way are co-located —
@@ -184,7 +180,7 @@ object Ingest {
     * real deployment layers a transactional table format for that.
     */
   def compactRollup(spark: SparkSession, path: String): Unit = {
-    val frame = spark.read.parquet(path)
+    val frame = FooterSchema.read(spark, path)
     val tags = frame.columns.filter(_.startsWith(Db.TagPrefix)).sorted.toSeq.map(col)
     val compacted = frame
       .groupBy(col("metric") +: tags :+ col("bucket_start"): _*)
@@ -213,18 +209,23 @@ object Ingest {
     * detected by their `batch_id=` partition directories; batches whose
     * write never completed (no `_SUCCESS` marker — a crash between the
     * parquet job and the streaming checkpoint commit) are pruned here,
-    * which is the read half of the exactly-once contract.
+    * which is the read half of the exactly-once contract. Like [[open]],
+    * opening launches no Spark job: batches are found through the
+    * Hadoop `FileSystem` of `path`, and the schema comes from one footer.
     */
   def openRollup(spark: SparkSession, path: String, widthNs: Long): Rollup = {
-    val staged = Option(new java.io.File(path).listFiles()).toSeq.flatten
-      .filter(f => f.isDirectory && f.getName.startsWith("batch_id="))
+    val root = new org.apache.hadoop.fs.Path(path)
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    val staged =
+      (try fs.listStatus(root).toSeq catch { case _: java.io.FileNotFoundException => Nil })
+        .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch_id="))
+        .map(_.getPath)
     val frame =
-      if (staged.isEmpty) spark.read.parquet(path)
+      if (staged.isEmpty) FooterSchema.read(spark, path)
       else {
-        val complete = staged.filter(f => new java.io.File(f, "_SUCCESS").exists())
+        val complete = staged.filter(b => fs.exists(new org.apache.hadoop.fs.Path(b, "_SUCCESS")))
         require(complete.nonEmpty, s"no complete batch under staged rollup $path")
-        spark.read.option("basePath", path)
-          .parquet(complete.map(_.getAbsolutePath).sorted: _*)
+        FooterSchema.read(spark, complete.map(_.toString).sorted, Map("basePath" -> path))
           .drop("batch_id")
       }
     new Rollup(frame.withColumn("metric", col("metric").cast("string")), widthNs)
@@ -341,6 +342,12 @@ object Ingest {
     digest.digest().take(6).map("%02x".format(_)).mkString
   }
 
+  /** Write-once cached graft layout for a source events dir: the first
+    * call materializes `Db.fromEvents` through [[write]]; later calls
+    * reuse it. Lets queries exercise the real on-disk layout (metric
+    * partition dirs + materialized tag columns ⇒ partition pruning and
+    * parquet tag pushdown) without rewriting per run.
+    */
   def ensureLayout(spark: SparkSession, sfDir: String,
                    base: String = ""): String = {
     val fp = contentFingerprint(s"$sfDir/events.parquet")

@@ -1,6 +1,9 @@
 package graft.tsdb
 
 import graft.SparkSpec
+import org.apache.spark.ListenerBusBridge
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class IngestSpec extends SparkSpec {
@@ -136,5 +139,124 @@ class IngestSpec extends SparkSpec {
       .select("metric", "ts", "value", "tag_user", "tag_k")
       .orderBy("ts", "value").collect()
     assert(a.sameElements(b))
+  }
+
+  /** `f`'s result and the Spark jobs it launched: a listener counts the
+    * jobs of a fresh job group, read once the listener bus has drained.
+    */
+  private def jobsDuring[T](f: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = s"graft-open-${java.util.UUID.randomUUID}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "layout open")
+    try {
+      val r = f
+      ListenerBusBridge.drain(sc)
+      (r, jobs.get)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  private def metricAsString(df: DataFrame) =
+    df.withColumn("metric", col("metric").cast("string"))
+
+  test("layout opens read Spark's schema from one footer and launch no job") {
+    val root = java.nio.file.Files.createTempDirectory("graft_footer").toString
+    val events = s"$sfDir/events.parquet"
+    val db = Db.fromEvents(spark, sfDir)
+    val w = Duration.hours(1)
+    val plain = s"$root/plain"
+    Ingest.write(db, plain)
+    val f32 = s"$root/f32"
+    Ingest.write(db, f32, highPrecision = false)
+    val appended = s"$root/appended"
+    Ingest.write(db, appended)
+    Ingest.append(db, appended)
+    val rollup = s"$root/rollup"
+    Ingest.writeRollup(db, rollup, w)
+    val compacted = s"$root/compacted"
+    Ingest.writeRollup(db, compacted, w)
+    Ingest.appendRollup(db, compacted, w)
+    Ingest.compactRollup(spark, compacted)
+    val staged = s"$root/staged"
+    Seq(0L, 1L, 2L).foreach(b => Ingest.appendRollupBatch(db, staged, w, b))
+    java.nio.file.Files.delete(java.nio.file.Paths.get(staged, "batch_id=1", "_SUCCESS"))
+    val complete = Seq(0, 2).map(b => s"$staged/batch_id=$b")
+    // which footer Spark reads decides the schema when files disagree:
+    // `metric=cpu.idle/` sorts before `metric=cpu/` ('.' < '/'), so its
+    // f32 file is the one both inferences must pick
+    val mixed = s"$root/mixed"
+    val purchases = db.frame.where(col("metric") === "purchase")
+    Ingest.write(new Db(purchases.withColumn("metric", lit("cpu"))), mixed)
+    Ingest.append(new Db(purchases.withColumn("metric", lit("cpu.idle"))), mixed,
+      highPrecision = false)
+
+    // the driver-side read reproduces Spark's inferred schema
+    def sameRead(paths: Seq[String], options: Map[String, String] = Map.empty) = {
+      val want = spark.read.options(options).parquet(paths: _*).schema
+      val (got, jobs) = jobsDuring(FooterSchema.read(spark, paths, options).schema)
+      assert(got == want, s"$paths:\n${got.treeString}\nvs Spark's\n${want.treeString}")
+      assert(jobs == 0, s"$paths: reading the schema launched $jobs job(s)")
+    }
+    Seq(events, plain, f32, appended, rollup, compacted, mixed).foreach(p => sameRead(Seq(p)))
+    sameRead(complete, Map("basePath" -> staged))
+    assert(spark.read.parquet(mixed).schema("value").dataType.typeName == "float")
+
+    // every public open path: Spark's schema, no job
+    def sameOpen(name: String, open: => DataFrame, want: => DataFrame) = {
+      val (got, jobs) = jobsDuring(open)
+      assert(got.schema == want.schema, s"$name:\n${got.schema.treeString}")
+      assert(jobs == 0, s"$name: opening launched $jobs job(s)")
+      got
+    }
+    for (p <- Seq(plain, f32, appended))
+      sameOpen(p, Ingest.open(spark, p).frame,
+        metricAsString(spark.read.parquet(p)).withColumn("value", col("value").cast("double")))
+    for (p <- Seq(rollup, compacted))
+      sameOpen(p, Ingest.openRollup(spark, p, w).frame, metricAsString(spark.read.parquet(p)))
+    val stagedFrame = sameOpen(staged, Ingest.openRollup(spark, staged, w).frame,
+      metricAsString(spark.read.option("basePath", staged).parquet(complete: _*)
+        .drop("batch_id")))
+    // the batch without `_SUCCESS` stays pruned
+    assert(stagedFrame.count() == 2 * spark.read.parquet(rollup).count())
+    val (_, fromEventsJobs) = jobsDuring(Db.fromEvents(spark, sfDir))
+    assert(fromEventsJobs == 0, s"fromEvents launched $fromEventsJobs job(s)")
+  }
+
+  test("an open with no data file fails as spark.read.parquet does") {
+    val root = java.nio.file.Files.createTempDirectory("graft_footer_err")
+    val onlySuccess = root.resolve("only_success")
+    java.nio.file.Files.createDirectories(onlySuccess)
+    java.nio.file.Files.createFile(onlySuccess.resolve("_SUCCESS"))
+    for (p <- Seq(root.resolve("missing").toString, onlySuccess.toString)) {
+      def failure(f: => Any): (Class[_], Option[String]) = intercept[Exception](f) match {
+        case e: org.apache.spark.SparkThrowable => (e.getClass, Some(e.getCondition))
+        case e => (e.getClass, None)
+      }
+      val want = failure(spark.read.parquet(p))
+      assert(failure(Ingest.open(spark, p)) == want, p)
+      assert(failure(Ingest.openRollup(spark, p, Duration.hours(1))) == want, p)
+    }
+  }
+
+  test("schema merging or a parquet summary file leaves the inference to Spark") {
+    val layout = Ingest.ensureLayout(spark, sfDir,
+      base = java.nio.file.Files.createTempDirectory("graft_merge").toString)
+    assert(FooterSchema.dataSchema(spark, Seq(layout)).isDefined)
+    assert(FooterSchema.dataSchema(spark, Seq(layout), Map("mergeSchema" -> "true")).isEmpty)
+    spark.conf.set("spark.sql.parquet.mergeSchema", "true")
+    try assert(FooterSchema.dataSchema(spark, Seq(layout)).isEmpty)
+    finally spark.conf.unset("spark.sql.parquet.mergeSchema")
+    // Spark reads a summary file's schema in place of any data footer
+    java.nio.file.Files.createFile(java.nio.file.Paths.get(layout, "_common_metadata"))
+    assert(FooterSchema.dataSchema(spark, Seq(layout)).isEmpty)
   }
 }

@@ -1,6 +1,7 @@
 package graft.tsdb
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 
 /** Aggregation kinds, parity with reference talna `src/agg/{avg,sum,min,max,count}.rs`.
@@ -109,10 +110,12 @@ final class Db(val frame: DataFrame) {
   /** Newest-N data points per series (metric × full tagset), mirroring the
     * reference's newest-first primary-key scan (timestamps stored negated
     * big-endian so forward scans read newest first — README "Data model").
+    * A small input ([[Db.smallInputRoute]]) ranks on one partition with
+    * no exchange; a large one shuffles on the series key.
     */
   def latest(metric: String, n: Int, filterExpr: String = "*"): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val base = scan(metric, filterExpr)
+    val base = Db.smallInputRoute(scan(metric, filterExpr))
     val w = Window.partitionBy(tagColumns.map(col): _*).orderBy(col("ts").desc, col("value").desc)
     base.withColumn("rn", row_number().over(w)).where(col("rn") <= n).drop("rn")
   }
@@ -1511,6 +1514,28 @@ object Db {
 
   private[tsdb] def validated(metric: String): String = MetricName(metric).name
 
+  /** Route an aggregate's filtered input by its size: `df.coalesce(1)`
+    * when every leaf of its physical plan is a file scan and the files
+    * those scans select after partition pruning total at most
+    * `spark.sql.files.openCostInBytes` (Spark's estimate of the bytes
+    * one file open costs), else `df` unchanged. A single-partition child
+    * satisfies any aggregate's or window's required distribution, so a
+    * small query plans no exchange and runs as one job with one task
+    * instead of an AQE shuffle stage plus a result stage. The statistic
+    * comes from the file index listed at open and costs driver-side
+    * planning only, no job. Large inputs and in-memory, RDD or cached
+    * frames keep the shuffle route.
+    */
+  private[tsdb] def smallInputRoute(df: DataFrame): DataFrame = {
+    val qe = df.queryExecution
+    val leaves = qe.sparkPlan.collectLeaves()
+    val scans = leaves.collect { case s: FileSourceScanExec => s }
+    val small = scans.nonEmpty && scans.size == leaves.size &&
+      scans.map(_.selectedPartitions.totalFileSize).sum <=
+        qe.sparkSession.sessionState.conf.filesOpenCostInBytes
+    if (small) df.coalesce(1) else df
+  }
+
   /** Canonical series frame from the driver's `events` table:
     * metric = event_type, ts = ns epoch, value = value,
     * tags = { user = user_id } ∪ { k = props.k | k ∈ propsTags }.
@@ -1574,8 +1599,13 @@ object Db {
   * Bucketing is epoch-aligned tumbling: `bucket_start = (ts div width) *
   * width` — deterministic under parallel merge, unlike the reference's
   * scan-anchored buckets (`src/agg/stream.rs:73`) which are inherently
-  * sequential. One hash-aggregate, map-side partial combine, single
-  * shuffle on (group, bucket).
+  * sequential. One hash-aggregate, on one of two routes picked by
+  * [[Db.smallInputRoute]] from the total size of the files the scan
+  * selects after partition pruning: at most
+  * `spark.sql.files.openCostInBytes` (4 MB by default) reads the input
+  * on one partition with no exchange, one job with one task; anything
+  * larger, or an input that is not all file scans, takes a map-side
+  * partial combine and a single shuffle on (group, bucket).
   *
   * Double aggregates are computed via exact DECIMAL sums then converted,
   * so results are bit-identical regardless of partitioning/merge order
@@ -1643,12 +1673,18 @@ final case class AggBuilder(
     }).as("value")
   }
 
+  /** The points every aggregate of this builder reads: the scan, minus
+    * series lacking the group tag (the reference skips them,
+    * agg/builder.rs:121), routed by [[Db.smallInputRoute]].
+    */
+  private def input: DataFrame =
+    Db.smallInputRoute(db.scan(metric, filterExpr, minTs, maxTs)
+      .where(db.tagCol(groupBy).isNotNull))
+
   def build(): DataFrame = {
-    val grpCol = db.tagCol(groupBy)
-    val base = db.scan(metric, filterExpr, minTs, maxTs)
-      .where(grpCol.isNotNull) // reference skips series lacking the group tag (agg/builder.rs:121)
     val bucketStart = (expr(s"ts div ${widthNs}L") * lit(widthNs)).as("bucket_start")
-    base.groupBy(grpCol.as("grp"), bucketStart).agg(count(lit(1)).as("n"), aggValueCol)
+    input.groupBy(db.tagCol(groupBy).as("grp"), bucketStart)
+      .agg(count(lit(1)).as("n"), aggValueCol)
   }
 
   /** The GK sketch's rank-error contract as an ORACLE-CHECKABLE frame:
@@ -1677,11 +1713,8 @@ final case class AggBuilder(
     }
     require(rankMargin > 0 && q - rankMargin > 0 && q + rankMargin < 1,
       "rank band must stay inside (0,1)")
-    val grpCol = db.tagCol(groupBy)
-    val base = db.scan(metric, filterExpr, minTs, maxTs)
-      .where(grpCol.isNotNull)
     val bucketStart = (expr(s"ts div ${widthNs}L") * lit(widthNs)).as("bucket_start")
-    base.groupBy(grpCol.as("grp"), bucketStart)
+    input.groupBy(db.tagCol(groupBy).as("grp"), bucketStart)
       .agg(count(lit(1)).as("n"),
         expr(s"approx_percentile(value, ${q}d, $acc)").as("approx"),
         array_sort(collect_list(col("value"))).as("vs"))
@@ -1699,15 +1732,13 @@ final case class AggBuilder(
     * bucket). `dow = ((ts div 1d) + 4) % 7` with 0 = Sunday (epoch day
     * 0 was a Thursday) — pure int64 arithmetic, identical on any
     * engine. Output is bounded at groups × 7 rows no matter the point
-    * volume; one map-side-combined exchange.
+    * volume; one map-side-combined exchange (none on the small-input
+    * route, see [[AggBuilder]]).
     */
   def buildSeasonal(): DataFrame = {
-    val grpCol = db.tagCol(groupBy)
     val dayNs = Duration.days(1)
-    val base = db.scan(metric, filterExpr, minTs, maxTs)
-      .where(grpCol.isNotNull)
     val dow = ((expr(s"ts div ${dayNs}L") + lit(4L)) % lit(7L)).as("dow")
-    base.groupBy(grpCol.as("grp"), dow).agg(count(lit(1)).as("n"), aggValueCol)
+    input.groupBy(db.tagCol(groupBy).as("grp"), dow).agg(count(lit(1)).as("n"), aggValueCol)
   }
 
   /** Trailing `nBuckets`-bucket moving average over the aggregated
@@ -1936,7 +1967,7 @@ final case class AggBuilder(
     * groups in the SAME pass — GROUPING SETS ((grp, bucket), (bucket))
     * — the "per-host series plus the fleet-wide line" dashboard query.
     * Computed as ONE Expand (replication factor 2 — the number of
-    * sets, not 2^keys) + ONE hash aggregate + ONE shuffle; two
+    * sets, not 2^keys) + ONE hash aggregate + at most ONE shuffle; two
     * separate aggregations would scan and shuffle the points twice.
     * Margin rows carry `grp = NULL, gid = 2` — `grouping_id()` puts
     * the FIRST grouping column (grp) in the most-significant bit, so
@@ -1948,10 +1979,8 @@ final case class AggBuilder(
     * lesson, Analytics.scala).
     */
   def buildWithMargin(): DataFrame = {
-    val grpCol = db.tagCol(groupBy)
-    val pre = db.scan(metric, filterExpr, minTs, maxTs)
-      .where(grpCol.isNotNull)
-      .select(grpCol.as("grp"),
+    val pre = input
+      .select(db.tagCol(groupBy).as("grp"),
         (expr(s"ts div ${widthNs}L") * lit(widthNs)).as("bucket_start"),
         col("value"))
     pre.groupingSets(

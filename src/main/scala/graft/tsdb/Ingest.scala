@@ -1,5 +1,6 @@
 package graft.tsdb
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -12,6 +13,17 @@ import org.apache.spark.sql.functions._
   * At 100 TB: one directory per metric, `repartition(metric, bucket(ts))`
   * ahead of the write keeps file counts bounded per partition, and time
   * locality within files makes `start/end` scans IO-minimal.
+  *
+  * Aggregates over these layouts ([[AggBuilder.build]], [[Db.latest]],
+  * [[Rollup.agg]]) take one of two routes, picked per query by
+  * [[Db.smallInputRoute]] from one statistic: the total size of the
+  * files the scan selects after partition pruning, read from the file
+  * index listed at open. At most `spark.sql.files.openCostInBytes`
+  * (4 MB by default), the input is read on one partition and the query
+  * runs as one job with no exchange; above it, the aggregate shuffles
+  * as usual. Layout upkeep (compaction, `_SUCCESS` checks, batch
+  * discovery) goes through the Hadoop `FileSystem` of the path, so the
+  * work dir may be any URI Spark writes to (HDFS, an object store).
   */
 object Ingest {
 
@@ -191,17 +203,30 @@ object Ingest {
         max(col("max_value")).as("max_value"))
     val tmp = path + ".compact"
     compacted.write.partitionBy("metric").mode("overwrite").parquet(tmp)
-    val dir = new java.io.File(path)
-    val old = new java.io.File(path + ".old")
-    if (old.exists()) org.apache.commons.io.FileUtils.deleteDirectory(old)
-    if (!dir.renameTo(old))
+    val dir = new Path(path)
+    val old = new Path(path + ".old")
+    val fs = fileSystem(spark, dir)
+    fs.delete(old, true)
+    if (!fs.rename(dir, old))
       throw new java.io.IOException(s"compaction aside-move failed: $path -> $old")
-    if (!new java.io.File(tmp).renameTo(dir)) {
+    if (!fs.rename(new Path(tmp), dir)) {
       // roll back so the live path keeps serving the pre-compaction copy
-      old.renameTo(dir)
+      fs.rename(old, dir)
       throw new java.io.IOException(s"compaction swap failed: $tmp -> $path")
     }
-    org.apache.commons.io.FileUtils.deleteDirectory(old)
+    fs.delete(old, true)
+  }
+
+  /** The Hadoop `FileSystem` of `path`, so layout upkeep works on any
+    * work dir Spark can write (local, HDFS, an object store).
+    */
+  private def fileSystem(spark: SparkSession, path: Path) =
+    path.getFileSystem(spark.sessionState.newHadoopConf())
+
+  /** Whether the write to `path` completed, i.e. left its `_SUCCESS` marker. */
+  private def written(spark: SparkSession, path: String): Boolean = {
+    val marker = new Path(path, "_SUCCESS")
+    fileSystem(spark, marker).exists(marker)
   }
 
   /** Reopen a rollup layout written by [[writeRollup]]/[[appendRollup]]
@@ -214,8 +239,8 @@ object Ingest {
     * Hadoop `FileSystem` of `path`, and the schema comes from one footer.
     */
   def openRollup(spark: SparkSession, path: String, widthNs: Long): Rollup = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    val root = new Path(path)
+    val fs = fileSystem(spark, root)
     val staged =
       (try fs.listStatus(root).toSeq catch { case _: java.io.FileNotFoundException => Nil })
         .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch_id="))
@@ -223,7 +248,7 @@ object Ingest {
     val frame =
       if (staged.isEmpty) FooterSchema.read(spark, path)
       else {
-        val complete = staged.filter(b => fs.exists(new org.apache.hadoop.fs.Path(b, "_SUCCESS")))
+        val complete = staged.filter(b => fs.exists(new Path(b, "_SUCCESS")))
         require(complete.nonEmpty, s"no complete batch under staged rollup $path")
         FooterSchema.read(spark, complete.map(_.toString).sorted, Map("basePath" -> path))
           .drop("batch_id")
@@ -237,7 +262,7 @@ object Ingest {
   def ensureRollup(spark: SparkSession, sfDir: String, widthNs: Long,
                    base: String = ""): String = {
     val path = rollupPath(sfDir, widthNs, graft.Conf.resolveWorkDir(spark, base))
-    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(path, "_SUCCESS")))
+    if (!written(spark, path))
       writeRollup(Db.fromEvents(spark, sfDir), path, widthNs)
     path
   }
@@ -286,7 +311,7 @@ object Ingest {
     val srcPath = ensureRollup(spark, sfDir, srcWidth, base)
     val path = rollupPath(sfDir, widthNs,
       graft.Conf.resolveWorkDir(spark, base)) + s"_from${srcWidth}"
-    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(path, "_SUCCESS")))
+    if (!written(spark, path))
       writeRollupFrom(spark, srcPath, srcWidth, path, widthNs)
     path
   }
@@ -302,7 +327,7 @@ object Ingest {
   def ensureRollupCascadeFrom(spark: SparkSession, srcPath: String,
                               srcWidth: Long, widthNs: Long): String = {
     val path = s"${srcPath}_cascade_w$widthNs"
-    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(path, "_SUCCESS")))
+    if (!written(spark, path))
       writeRollupFrom(spark, srcPath, srcWidth, path, widthNs)
     path
   }
@@ -354,7 +379,7 @@ object Ingest {
     val root = graft.Conf.resolveWorkDir(spark, base)
     val path = s"$root/graft_layout_v${LayoutVersion}_" +
       s"${Integer.toHexString(sfDir.hashCode)}_$fp"
-    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(path, "_SUCCESS")))
+    if (!written(spark, path))
       write(Db.fromEvents(spark, sfDir), path)
     path
   }

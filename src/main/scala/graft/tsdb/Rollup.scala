@@ -102,7 +102,11 @@ final class Rollup(val frame: DataFrame, val widthNs: Long) {
 
   /** Re-aggregate the partials at `width` (a multiple of the rollup
     * width). Output schema matches [[AggBuilder.build]]:
-    * `grp, bucket_start, n, value`.
+    * `grp, bucket_start, n, value`. Routed like [[AggBuilder.build]]:
+    * partials whose selected files total at most
+    * `spark.sql.files.openCostInBytes` merge on one partition with no
+    * exchange ([[Db.smallInputRoute]]); larger ones shuffle on
+    * (group, bucket).
     */
   def agg(kind: AggKind, metric: String, groupBy: String, width: Long,
           filterExpr: String = "*"): DataFrame = {
@@ -121,10 +125,10 @@ final class Rollup(val frame: DataFrame, val widthNs: Long) {
       case _ => ()
     }
     val grpCol = tagCol(groupBy)
-    val base = frame
+    val base = Db.smallInputRoute(frame
       .where(col("metric") === lit(Db.validated(metric)))
       .where(FilterParser.compileString(filterExpr, tagCol))
-      .where(grpCol.isNotNull)
+      .where(grpCol.isNotNull))
     val bucket = (expr(s"bucket_start div ${width}L") * lit(width)).as("bucket_start")
     val n = functions.sum(col("n")).as("n")
     val decSum = functions.sum(col("sum_value"))

@@ -1,8 +1,6 @@
 package graft.tsdb
 
 import graft.SparkSpec
-import org.apache.spark.ListenerBusBridge
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -76,6 +74,38 @@ class IngestSpec extends SparkSpec {
     assert(db.avg("purchase", "zz").granularity(Duration.days(1)).build().count() == 0)
   }
 
+  test("layout upkeep goes through the Hadoop FileSystem of a file: URI work dir") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_uri")
+    val root = dir.toUri.toString.stripSuffix("/")
+    assert(root.startsWith("file:"))
+    val (h, d) = (Duration.hours(1), Duration.days(1))
+    def ensureAll() = {
+      val rollup = Ingest.ensureRollup(spark, sfDir, h, base = root)
+      Seq(Ingest.ensureLayout(spark, sfDir, base = root), rollup,
+        Ingest.ensureRollupCascade(spark, sfDir, h, d, base = root),
+        Ingest.ensureRollupCascadeFrom(spark, rollup, h, d))
+    }
+    val paths = ensureAll()
+    // every `_SUCCESS` check finds the first call's marker: nothing is rewritten
+    val (again, jobs) = jobsDuring(ensureAll())
+    assert(again == paths && jobs == 0, s"second ensure launched $jobs job(s)")
+
+    val rollup = paths(1)
+    // the events appended once more double every count, not any average
+    def daily = sortedRows(Ingest.openRollup(spark, rollup, h).avg("purchase", "user", d).drop("n"))
+    val want = daily
+    val partials = Ingest.openRollup(spark, rollup, h).frame.count()
+    Ingest.appendRollup(Db.fromEvents(spark, sfDir), rollup, h)
+    Ingest.compactRollup(spark, rollup)
+    assert(Ingest.openRollup(spark, rollup, h).frame.count() == partials)
+    assert(daily == want)
+    for (sibling <- Seq(".compact", ".old")) {
+      val leftover = java.nio.file.Paths.get(new java.net.URI(rollup + sibling))
+      assert(!java.nio.file.Files.exists(leftover), s"compaction left $leftover behind")
+    }
+    org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
+  }
+
   test("bucketed layout: series-keyed self-join plans with no shuffle exchange") {
     // a previous JVM's managed-table location survives on disk while the
     // in-memory catalog starts empty — clear both before writing
@@ -139,30 +169,6 @@ class IngestSpec extends SparkSpec {
       .select("metric", "ts", "value", "tag_user", "tag_k")
       .orderBy("ts", "value").collect()
     assert(a.sameElements(b))
-  }
-
-  /** `f`'s result and the Spark jobs it launched: a listener counts the
-    * jobs of a fresh job group, read once the listener bus has drained.
-    */
-  private def jobsDuring[T](f: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val group = s"graft-open-${java.util.UUID.randomUUID}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "layout open")
-    try {
-      val r = f
-      ListenerBusBridge.drain(sc)
-      (r, jobs.get)
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
   }
 
   private def metricAsString(df: DataFrame) =

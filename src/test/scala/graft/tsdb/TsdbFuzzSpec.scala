@@ -1,12 +1,12 @@
 package graft.tsdb
 
-import graft.SparkSpec
+import graft.{SparkSpec, TempDirSpec}
 import org.apache.spark.sql.functions._
 
 /** Seeded property fuzz for the round-4 TSDB operators: random series
   * against straightforward Scala references.
   */
-class TsdbFuzzSpec extends SparkSpec {
+class TsdbFuzzSpec extends SparkSpec with TempDirSpec {
 
   private val rnd = new scala.util.Random(20260812L)
 
@@ -25,7 +25,7 @@ class TsdbFuzzSpec extends SparkSpec {
         Duration.days(3))
       val rw = Duration.minutes(1 + rnd.nextInt(120))
       val mult = 1 + rnd.nextInt(6)
-      val dir = s"/root/repo/out/test_rollup_fuzz"
+      val dir = s"$tempDir/test_rollup_fuzz"
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
       Ingest.writeRollup(db, dir, rw)
       val rollup = Ingest.openRollup(spark, dir, rw)
@@ -195,7 +195,7 @@ class TsdbFuzzSpec extends SparkSpec {
   }
 
   test("plan: the rollup query partition-prunes the metric directory") {
-    val dir = "/root/repo/out/test_rollup_plan"
+    val dir = s"$tempDir/test_rollup_plan"
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
     Ingest.writeRollup(Db.fromEvents(spark, sfDir), dir, Duration.hours(1))
     val plan = Ingest.openRollup(spark, dir, Duration.hours(1))

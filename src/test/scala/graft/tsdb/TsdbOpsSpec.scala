@@ -1,12 +1,12 @@
 package graft.tsdb
 
-import graft.SparkSpec
+import graft.{SparkSpec, TempDirSpec}
 import org.apache.spark.sql.functions._
 
 /** Specs for the round-4 TSDB additions: per-series rate, as-of
   * alignment, and exact bucketed quantiles.
   */
-class TsdbOpsSpec extends SparkSpec {
+class TsdbOpsSpec extends SparkSpec with TempDirSpec {
 
   private def db(rows: Seq[(String, Long, Double, String)]) = {
     import spark.implicits._
@@ -231,7 +231,7 @@ class TsdbOpsSpec extends SparkSpec {
     // points spread across several hourly partials inside one day
     val d = db((0 until 48).map(i =>
       ("m", i * hour + 7L, (i % 7) * 1.5 + 0.25, if (i % 2 == 0) "u" else "v")))
-    val path = s"/root/repo/out/test_rollup_stddev_${System.nanoTime()}"
+    val path = s"$tempDir/test_rollup_stddev"
     Ingest.writeRollup(d, path, hour)
     val r = Ingest.openRollup(spark, path, hour)
     val got = r.stddev("m", "user", day).collect()
@@ -246,7 +246,7 @@ class TsdbOpsSpec extends SparkSpec {
     val hour = Duration.hours(1)
     val day = Duration.days(1)
     val d = Db.fromEvents(spark, sfDir)
-    val path = s"/root/repo/out/test_rollup_zscore_${System.nanoTime()}"
+    val path = s"$tempDir/test_rollup_zscore"
     Ingest.writeRollup(d, path, hour)
     val r = Ingest.openRollup(spark, path, hour)
     val over = r.zscoreOver(d, "purchase", "user", day)
@@ -343,7 +343,7 @@ class TsdbOpsSpec extends SparkSpec {
   }
 
   test("rollup re-aggregation is identical to the raw-points aggregation for every kind") {
-    val dir = "/root/repo/out/test_rollup"
+    val dir = s"$tempDir/test_rollup"
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
     val db = Db.fromEvents(spark, sfDir)
     Ingest.writeRollup(db, dir, Duration.hours(1))
@@ -375,8 +375,8 @@ class TsdbOpsSpec extends SparkSpec {
   }
 
   test("cascaded rollup (day-from-hour) equals both the direct day build and raw points") {
-    val src = "/root/repo/out/test_rollup_cascade_src"
-    val dst = "/root/repo/out/test_rollup_cascade_dst"
+    val src = s"$tempDir/test_rollup_cascade_src"
+    val dst = s"$tempDir/test_rollup_cascade_dst"
     Seq(src, dst).foreach(p =>
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p)))
     val db = Db.fromEvents(spark, sfDir)
@@ -399,7 +399,7 @@ class TsdbOpsSpec extends SparkSpec {
     // the cascaded level's PARTIALS are row-identical to a direct
     // day-level build from raw (associativity at the layout level, not
     // just the query level)
-    val direct = "/root/repo/out/test_rollup_cascade_direct"
+    val direct = s"$tempDir/test_rollup_cascade_direct"
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(direct))
     Ingest.writeRollup(db, direct, Duration.days(1))
     val a = Ingest.openRollup(spark, dst, Duration.days(1)).frame.collect()
@@ -475,7 +475,7 @@ class TsdbOpsSpec extends SparkSpec {
 
   test("incremental rollup append merges partials exactly (no read-modify-write)") {
     import org.apache.spark.sql.functions.col
-    val dir = "/root/repo/out/test_rollup_inc"
+    val dir = s"$tempDir/test_rollup_inc"
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
     val raw = Db.fromEvents(spark, sfDir)
     // split the corpus mid-stream: first half written, second appended
@@ -492,7 +492,7 @@ class TsdbOpsSpec extends SparkSpec {
 
     // overlap case: the SAME (series, bucket) receives partials from
     // both batches — the merge path is exercised, not vacuous
-    val dir2 = "/root/repo/out/test_rollup_inc2"
+    val dir2 = s"$tempDir/test_rollup_inc2"
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir2))
     val mk = db(Seq(
       ("m", 100L, 2.0, "u"), ("m", 200L, 4.0, "u")))   // batch 1, same hour bucket
@@ -512,6 +512,8 @@ class TsdbOpsSpec extends SparkSpec {
 
     // compaction: one row per (series, bucket) again, identical answers
     Ingest.compactRollup(spark, dir2)
+    for (sibling <- Seq(".compact", ".old"))
+      assert(!new java.io.File(dir2 + sibling).exists(), s"compaction left $dir2$sibling behind")
     val r3 = Ingest.openRollup(spark, dir2, Duration.hours(1))
     assert(r3.frame.groupBy(col("metric"), col("tag_user"), col("bucket_start"))
       .count().where(col("count") > 1).count() == 0)
@@ -1031,7 +1033,7 @@ class TsdbOpsSpec extends SparkSpec {
   test("rollup rejects BOTH quantile kinds up-front (no partials exist for them)") {
     val hour = Duration.hours(1)
     val d = db(Seq(("m", 0L, 1.0, "u")))
-    val path = s"/root/repo/out/test_rollup_qreject_${System.nanoTime()}"
+    val path = s"$tempDir/test_rollup_qreject"
     Ingest.writeRollup(d, path, hour)
     val r = Ingest.openRollup(spark, path, hour)
     val e1 = intercept[IllegalArgumentException](

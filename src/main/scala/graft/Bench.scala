@@ -1203,7 +1203,7 @@ object Bench {
       val tmpG = graft.Conf.resolveWorkDir(spark, "") + "/bench_text_grams100"
       // zstd for the shared frame (guide §6): 31% fewer bytes than
       // snappy (127.8 → 87.8 MB at 100×) at an equal write wall and
-      // equal consumer walls (measured, Probe grams) — at 100 TB the
+      // equal consumer walls (measured at 100×) — at 100 TB the
       // checkpoint's footprint is what the codec choice buys
       val (gramSec, gramTel) = timedLeg(
         TextAnalysis.gramInstances(spark, dir100)
@@ -1288,7 +1288,7 @@ object Bench {
     s""""knn_work":{"base":${leg(sfDir)},"x10":${leg(dir10)}}"""
   }
 
-  /** Probe-style phase walls for the 100× embedding-LSH leg, recorded
+  /** Phase walls for the 100× embedding-LSH leg, recorded
     * IN the artifact: candidate generation (banded signatures +
     * self-join, materialized to parquet and timed as its own wall) and
     * the verify join over those materialized candidates through BOTH
@@ -1575,9 +1575,9 @@ object Bench {
   private def q5Bucketed100Json(spark: SparkSession, sfDir: String): String =
     try {
       sectionHygiene(spark)
-      // r13 (guide §6): one file per bucket (writer pre-partitioned on
-      // the bucket key — halves the build by deleting per-file open/
-      // commit overhead on 1088→32 files) + the sorted-scan flag, which
+      // r13 (guide §6): bucketFacts writes one file per bucket (halves
+      // the build by deleting per-file open/commit overhead on 1088→32
+      // files) + the sorted-scan flag, which
       // is the ONLY way Spark 3+/4 honors a bucketed table's sortBy at
       // scan time (it requires single-file buckets): the per-query SMJ
       // sorts over both 60M-row fact scans disappear (plan capture
@@ -1604,7 +1604,7 @@ object Bench {
         }
         val t0 = System.nanoTime()
         graft.operators.Analytics.bucketFacts(spark, dir, buckets = 32,
-          prefix = prefix, onePerBucket = true)
+          prefix = prefix)
         val buildSec = (System.nanoTime() - t0) / 1e9
         def once(): Double = {
           val t = System.nanoTime()

@@ -121,19 +121,19 @@ object Analytics {
     * keys include the bucket key reuses the same distribution — the
     * whole q3 pipeline becomes exchange-free (spec-asserted). Pay the
     * shuffle once at ingest, not once per query.
+    *
+    * Each bucket lands in ONE file: the writer is pre-partitioned on
+    * the bucket key, and hashpartitioning and bucket-id use the same
+    * Murmur3(seed 42) mod `buckets`, so each write task holds exactly
+    * one bucket. Spark only trusts a bucketed table's sortBy order when
+    * every bucket is a single file; multi-file buckets re-sort both
+    * sides of every bucketed SMJ (measured at 100×: build 30.7 → 17.1
+    * s, 1088 → 32 files — see plans/r13/q5_bucketed100_*).
     */
   def bucketFacts(spark: SparkSession, dir: String,
-                  buckets: Int = 8, prefix: String = "graft",
-                  onePerBucket: Boolean = false): Unit = {
-    // onePerBucket: pre-partition the writer on the bucket key —
-    // hashpartitioning and bucket-id use the same Murmur3(seed 42) mod
-    // buckets, so each write task holds exactly one bucket and each
-    // bucket lands in ONE file. Spark only trusts a bucketed table's
-    // sortBy order when every bucket is a single file; multi-file
-    // buckets silently re-sort both sides of every bucketed SMJ
-    // (measured — see plans/r13/q5_bucketed100_*)
+                  buckets: Int = 8, prefix: String = "graft"): Unit = {
     def write(df: DataFrame, key: String, table: String): Unit =
-      (if (onePerBucket) df.repartition(buckets, col(key)) else df)
+      df.repartition(buckets, col(key))
         .write.bucketBy(buckets, key).sortBy(key)
         .mode("overwrite").format("parquet").saveAsTable(table)
     write(t(spark, dir, "lineitem"), "l_orderkey", s"${prefix}_lineitem_b")

@@ -1293,8 +1293,8 @@ object Dedup {
 
   /** The cosine verify join over a pre-built candidate-pair frame —
     * exposed so a benchmark can materialize the candidates once and
-    * time the verify phase as its own wall (the Probe decomposition,
-    * in-artifact). Payload fetch: the side is only (vec_id, v, nrm) —
+    * time the verify phase as its own wall (Bench's `lsh_phases`
+    * section). Payload fetch: the side is only (vec_id, v, nrm) —
     * broadcast it while the corpus stays under
     * [[BroadcastVerifyMaxRows]] (measured, not guessed: at 400k rows
     * the broadcast verify cost 97 s / 39 GB peak heap at 100× while
@@ -1642,10 +1642,10 @@ object Dedup {
     * deterministic canonical representative), the `cluster_size`, and
     * `is_keeper` (true exactly for the representative).
     *
-    * Distributed shape: min-label propagation — every node starts as its
-    * own label; each round replaces a node's label with the minimum over
-    * itself and its neighbors (one shuffle join + one aggregate per
-    * round); a fixed point is reached after O(component diameter)
+    * Distributed shape: min-label propagation — every node starts at
+    * the minimum of itself and its neighbors; each round replaces a
+    * node's label with the minimum over itself and its neighbors (one
+    * shuffle join + one aggregate per round); a fixed point is reached after O(component diameter)
     * rounds — with a pointer-doubling shortcut each round (a node's
     * label jumps through the previous round's label table: comp values
     * only decrease and comp(x) ≤ x, so the jump is always downhill),
@@ -1667,6 +1667,9 @@ object Dedup {
     * speed; blocks die with executors). Same contract either way,
     * spec-asserted identical results.
     */
+  def clusterPairs(pairs: DataFrame, maxIters: Int = 40): DataFrame =
+    clusterPairsTuned(pairs, maxIters)
+
   /** Eager materialization + plan truncation, reliable iff the context
     * has a checkpoint dir (see [[clusterPairs]] doc).
     */
@@ -1707,33 +1710,6 @@ object Dedup {
   private[graft] val ClusterJumpBroadcastMaxRows: Long =
     math.min(5000000L, Runtime.getRuntime.maxMemory / (64L * 8L))
 
-  def clusterPairs(pairs: DataFrame, maxIters: Int = 40): DataFrame =
-    clusterPairsTuned(pairs, maxIters, foldInit = true,
-      broadcastJumpMaxRows = ClusterJumpBroadcastMaxRows)
-
-  /** [[clusterPairs]] with the convergence/plan knobs exposed for A/B
-    * measurement (probe/spec use):
-    *  - `foldInit`: seed each node's label with min(id, min neighbor)
-    *    inside the init aggregate (replacing the same-cost distinct),
-    *    which is round 1's hop for free — measured one full round
-    *    saved at every scale (sf0.1 ngram graph 3→2 rounds,
-    *    100× simhash graph 15→14);
-    *  - `broadcastJumpMaxRows`: see [[ClusterJumpBroadcastMaxRows]];
-    *    0 forces the shuffle route;
-    *  - `localContraction`: run a partition-level union-find first and
-    *    propagate over the contracted boundary graph only (round 13 —
-    *    the loop's rounds are hop-limited by chain structure, so the
-    *    fix is to collapse the chains before the loop); false forces
-    *    the uncontracted loop (spec/A-B use).
-    * (A `jumps > 1` variant — chaining extra pointer-jump joins per
-    * round — was measured and REJECTED: the loop is hop-limited, not
-    * chain-limited (100× rounds stayed 14 with double jumps), and the
-    * extra join on the skewed comp key blew the round cost up 8×.)
-    * All knobs preserve the fixed point exactly: comp values only
-    * step downhill through node ids of the same component, and
-    * convergence still means "no label changed across a full
-    * hop+jump round".
-    */
   /** Partition-local union-find over one edge partition: every node
     * that appears in the partition is mapped to the MINIMUM node id of
     * its partition-local component (union-by-min + path compression,
@@ -1792,11 +1768,24 @@ object Dedup {
     */
   private[graft] val ClusterContractionMinPairs = 100000L
 
+  /** [[clusterPairs]] with its two size gates exposed, so a spec can
+    * force each route:
+    *  - `contractionMinPairs`: see [[ClusterContractionMinPairs]]; 0
+    *    forces the partition-local contraction, `Long.MaxValue` the
+    *    uncontracted loop over the corpus pair graph;
+    *  - `broadcastJumpMaxRows`: see [[ClusterJumpBroadcastMaxRows]]; 0
+    *    forces the shuffled pointer-jump join.
+    * Every route reaches the same fixed point: comp values only step
+    * downhill through node ids of the same component, and convergence
+    * still means "no label changed across a full hop+jump round".
+    * (A `jumps > 1` variant — chaining extra pointer-jump joins per
+    * round — was measured and REJECTED: the loop is hop-limited, not
+    * chain-limited (100× rounds stayed 14 with double jumps), and the
+    * extra join on the skewed comp key blew the round cost up 8×.)
+    */
   private[graft] def clusterPairsTuned(pairs: DataFrame, maxIters: Int = 40,
-                                       foldInit: Boolean = true,
                                        broadcastJumpMaxRows: Long =
                                          ClusterJumpBroadcastMaxRows,
-                                       localContraction: Boolean = true,
                                        contractionMinPairs: Long =
                                          ClusterContractionMinPairs): DataFrame = {
     val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
@@ -1832,10 +1821,11 @@ object Dedup {
     // back to the uncontracted loop rather than risk a cast. Size-gated
     // by [[ClusterContractionMinPairs]]; the count scans the persisted
     // frame the loop materializes anyway.
-    val contract = localContraction &&
-      sym.schema.fields.forall(_.dataType ==
+    // sym holds every pair twice; halving the count (not doubling the
+    // bound) keeps `Long.MaxValue` from overflowing
+    val contract = sym.schema.fields.forall(_.dataType ==
         org.apache.spark.sql.types.LongType) &&
-      sym.count() >= 2L * contractionMinPairs
+      sym.count() / 2 >= contractionMinPairs
     val labels =
       if (contract) {
         val sp = sym.sparkSession
@@ -1861,8 +1851,7 @@ object Dedup {
           .union(cEdges.select(col("dst").as("src"), col("src").as("dst")))
           .repartition(col("src"))
           .persist()
-        val repLabels = propagateLabels(cSym, maxIters, foldInit,
-          broadcastJumpMaxRows)
+        val repLabels = propagateLabels(cSym, maxIters, broadcastJumpMaxRows)
         // label every member through its min rep; reps that never hit
         // a boundary edge are their own component's minimum
         val out = byNode
@@ -1874,7 +1863,7 @@ object Dedup {
         cSym.unpersist()
         byNode.unpersist()
         out
-      } else propagateLabels(sym, maxIters, foldInit, broadcastJumpMaxRows)
+      } else propagateLabels(sym, maxIters, broadcastJumpMaxRows)
     val out = labels
       .withColumn("cluster_size",
         count(lit(1)).over(org.apache.spark.sql.expressions.Window
@@ -1892,19 +1881,15 @@ object Dedup {
     * this runs on (corpus pair graph or contracted boundary graph).
     */
   private def propagateLabels(sym: DataFrame, maxIters: Int,
-                              foldInit: Boolean,
                               broadcastJumpMaxRows: Long): DataFrame = {
-    var labels =
-      (if (foldInit)
-         // round 1's hop folded into the init aggregate: same shuffle
-         // the distinct would pay, but labels start one hop ahead
-         sym.groupBy(col("src"))
-           .agg(least(col("src"), min(col("dst"))).as("comp"))
-           .select(col("src").as("id"), col("comp"))
-       else
-         sym.select(col("src").as("id")).distinct()
-           .withColumn("comp", col("id")))
-        .repartition(col("id")).transform(materialize)
+    // round 1's hop folded into the init aggregate: each node starts at
+    // min(id, min neighbor) for the same shuffle a distinct would pay —
+    // one round saved at every measured scale (sf0.1 ngram graph 3→2,
+    // 100× simhash graph 15→14)
+    var labels = sym.groupBy(col("src"))
+      .agg(least(col("src"), min(col("dst"))).as("comp"))
+      .select(col("src").as("id"), col("comp"))
+      .repartition(col("id")).transform(materialize)
     // route the per-round pointer-jump join ONCE from the label-frame
     // size (cheap count over the checkpointed init frame): broadcast
     // when it fits, shuffle when corpus-sized

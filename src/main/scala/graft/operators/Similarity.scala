@@ -280,10 +280,10 @@ object Similarity {
     * `nprobe/nlist` of the data. Nothing per-query ever shuffles the
     * corpus.
     */
-  private def ivfSearch(index: IvfIndex.Index, queries: DataFrame,
-                        numQueries: Int, k: Int, nprobe: Int,
-                        corpusFilter: Option[Column] = None,
-                        exclude: Option[(DataFrame, Long)] = None): DataFrame = {
+  private[operators] def ivfSearch(index: IvfIndex.Index, queries: DataFrame,
+                                   numQueries: Int, k: Int, nprobe: Int,
+                                   corpusFilter: Option[Column] = None,
+                                   exclude: Option[(DataFrame, Long)] = None): DataFrame = {
     val spark = queries.sparkSession
     val filtered = corpusFilter
       .foldLeft(IvfIndex.open(spark, index))((d, p) => d.where(p))
@@ -345,26 +345,17 @@ object Similarity {
     * Deleted vectors may still QUERY (a query needn't be in the
     * index); they just can't be returned. The demo delete set is
     * `vec_id % 17 == 0` — deterministic, so the oracle re-derives the
-    * identical exclusion. `viaPredicate` routes the exclusion through
-    * the pushed-filter path instead (spec-only: the two paths must be
-    * row-identical, the dedup-verify two-path contract).
+    * identical exclusion.
     */
   def ivfDeletedTopK(spark: SparkSession, dir: String,
                      numQueries: Int = 5, k: Int = 5,
-                     nlist: Int = 16, nprobe: Int = 4,
-                     viaPredicate: Boolean = false): DataFrame = {
+                     nlist: Int = 16, nprobe: Int = 4): DataFrame = {
     val e = vecs(spark, dir)
     val index = IvfIndex.ensure(spark, dir, "first", nlist, iters = 0,
       train = () => firstVectorCentroids(e, nlist), corpus = e)
-    val queries = e.where(col("vec_id") < numQueries)
-    if (viaPredicate)
-      ivfSearch(index, queries, numQueries, k, nprobe,
-        corpusFilter = Some(col("vec_id") % 17 =!= 0))
-    else {
-      val tombstones = e.select(col("vec_id")).where(col("vec_id") % 17 === 0)
-      ivfSearch(index, queries, numQueries, k, nprobe,
-        exclude = Some((tombstones, tombstones.count())))
-    }
+    val tombstones = e.select(col("vec_id")).where(col("vec_id") % 17 === 0)
+    ivfSearch(index, e.where(col("vec_id") < numQueries), numQueries, k, nprobe,
+      exclude = Some((tombstones, tombstones.count())))
   }
 
   /** FILTERED IVF ANN (round 10): [[filteredTopK]]'s pre-filter

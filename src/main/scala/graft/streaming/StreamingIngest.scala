@@ -1,9 +1,8 @@
 package graft.streaming
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
-import graft.tsdb.Db
+import graft.tsdb.{Db, FooterSchema}
 
 /** Structured-Streaming ingestion into the graft on-disk layout: the
   * streaming re-expression of the reference's point-write path (talna
@@ -31,18 +30,9 @@ object StreamingIngest {
   def ingestAvailable(spark: SparkSession, eventsDir: String, dest: String,
                       checkpoint: String,
                       propsTags: Seq[String] = Seq("k")): Unit = {
-    val schema = spark.read.parquet(eventsDir).schema
-    val tagCols = propsTags.map(k =>
-      nullif(regexp_extract(col("props"), "\"" + k + "\":\\s*(\\d+)", 1), lit(""))
-        .as(Db.TagPrefix + k))
-    val canonical = spark.readStream
-      .schema(schema)
-      .parquet(eventsDir)
-      .select(Seq(
-        col("event_type").as("metric"),
-        Db.tsNs(schema).as("ts"),
-        col("value"),
-        col("user_id").cast("string").as(Db.TagPrefix + "user")) ++ tagCols: _*)
+    val schema = FooterSchema.read(spark, eventsDir).schema
+    val canonical = Db
+      .canonicalEvents(spark.readStream.schema(schema).parquet(eventsDir), propsTags)
       // same write-boundary guard as the batch path (Ingest.write):
       // reference MetricName::try_from rejects invalid names at ingest,
       // and graft's own query APIs refuse to read them back

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import graft.tsdb.{Db, FooterSchema, Ingest}
 
@@ -30,17 +29,8 @@ object StreamingRollup {
                       checkpoint: String, widthNs: Long,
                       propsTags: Seq[String] = Seq("k")): Unit = {
     val schema = FooterSchema.read(spark, eventsDir).schema
-    val tagCols = propsTags.map(k =>
-      nullif(regexp_extract(col("props"), "\"" + k + "\":\\s*(\\d+)", 1), lit(""))
-        .as(Db.TagPrefix + k))
-    val canonical = spark.readStream
-      .schema(schema)
-      .parquet(eventsDir)
-      .select(Seq(
-        col("event_type").as("metric"),
-        Db.tsNs(schema).as("ts"),
-        col("value"),
-        col("user_id").cast("string").as(Db.TagPrefix + "user")) ++ tagCols: _*)
+    val canonical = Db.canonicalEvents(
+      spark.readStream.schema(schema).parquet(eventsDir), propsTags)
     val q = canonical.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         Ingest.appendRollupBatch(new Db(batch), dest, widthNs, batchId)

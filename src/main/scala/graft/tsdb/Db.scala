@@ -1546,18 +1546,25 @@ object Db {
     * (`src/agg/builder.rs:121`).
     */
   def fromEvents(spark: SparkSession, sfDir: String,
-                 propsTags: Seq[String] = Seq("k")): Db = {
-    val tagCols = propsTags.map(k =>
-      nullif(regexp_extract(col("props"), "\"" + k + "\":\\s*(\\d+)", 1), lit(""))
-        .as(TagPrefix + k))
-    val raw = FooterSchema.read(spark, s"$sfDir/events.parquet")
-    val df = raw.select(Seq(
+                 propsTags: Seq[String] = Seq("k")): Db =
+    new Db(canonicalEvents(FooterSchema.read(spark, s"$sfDir/events.parquet"),
+      propsTags))
+
+  /** The canonical series frame of an `events` frame, batch or
+    * streaming: the mapping [[fromEvents]] documents, shared with the
+    * streaming landings so a streamed layout and a batch-written one
+    * are interchangeable.
+    */
+  private[graft] def canonicalEvents(events: DataFrame,
+                                     propsTags: Seq[String]): DataFrame =
+    events.select(Seq(
         col("event_type").as("metric"),
-        tsNs(raw.schema).as("ts"),
+        tsNs(events.schema).as("ts"),
         col("value"),
-        col("user_id").cast("string").as(TagPrefix + "user")) ++ tagCols: _*)
-    new Db(df)
-  }
+        col("user_id").cast("string").as(TagPrefix + "user")) ++
+      propsTags.map(k =>
+        nullif(regexp_extract(col("props"), "\"" + k + "\":\\s*(\\d+)", 1), lit(""))
+          .as(TagPrefix + k)): _*)
 
   /** ns-epoch long `ts` for an events frame, tolerant of both on-disk
     * encodings the driver has shipped: int64 nanoseconds (read as

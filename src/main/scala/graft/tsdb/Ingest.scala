@@ -1,7 +1,7 @@
 package graft.tsdb
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Batch ingest: writes a canonical series frame in the graft on-disk
@@ -61,12 +61,7 @@ object Ingest {
 
   def write(db: Db, path: String, filesPerWeek: Int = 4,
             highPrecision: Boolean = true): Unit =
-    db.frame
-      .withColumn("metric", validatedMetric)
-      .withColumn("value", storedValue(highPrecision))
-      .repartition(layoutKey(filesPerWeek): _*)
-      .sortWithinPartitions(col("metric"), col("ts"))
-      .write.partitionBy("metric").mode("overwrite").parquet(path)
+    writeLayout(db, path, filesPerWeek, highPrecision, "overwrite")
 
   /** Append a batch to an existing layout — the Spark re-expression of
     * the reference's `Database::write` ingestion path (talna
@@ -77,12 +72,19 @@ object Ingest {
     */
   def append(db: Db, path: String, filesPerWeek: Int = 4,
              highPrecision: Boolean = true): Unit =
+    writeLayout(db, path, filesPerWeek, highPrecision, "append")
+
+  /** The layout write behind [[write]] and [[append]], which differ only
+    * in the save `mode`.
+    */
+  private def writeLayout(db: Db, path: String, filesPerWeek: Int,
+                          highPrecision: Boolean, mode: String): Unit =
     db.frame
       .withColumn("metric", validatedMetric)
       .withColumn("value", storedValue(highPrecision))
       .repartition(layoutKey(filesPerWeek): _*)
       .sortWithinPartitions(col("metric"), col("ts"))
-      .write.partitionBy("metric").mode("append").parquet(path)
+      .write.partitionBy("metric").mode(mode).parquet(path)
 
   /** Reopen a graft layout as a Db. The `metric` partition column comes
     * back as a string column; tag columns keep their `tag_` prefix; a
@@ -192,17 +194,9 @@ object Ingest {
     * real deployment layers a transactional table format for that.
     */
   def compactRollup(spark: SparkSession, path: String): Unit = {
-    val frame = FooterSchema.read(spark, path)
-    val tags = frame.columns.filter(_.startsWith(Db.TagPrefix)).sorted.toSeq.map(col)
-    val compacted = frame
-      .groupBy(col("metric") +: tags :+ col("bucket_start"): _*)
-      .agg(sum(col("n")).as("n"),
-        sum(col("sum_value")).as("sum_value"),
-        sum(col("sum_sq")).as("sum_sq"),
-        min(col("min_value")).as("min_value"),
-        max(col("max_value")).as("max_value"))
     val tmp = path + ".compact"
-    compacted.write.partitionBy("metric").mode("overwrite").parquet(tmp)
+    mergePartials(FooterSchema.read(spark, path), col("bucket_start"))
+      .write.partitionBy("metric").mode("overwrite").parquet(tmp)
     val dir = new Path(path)
     val old = new Path(path + ".old")
     val fs = fileSystem(spark, dir)
@@ -287,17 +281,25 @@ object Ingest {
                       path: String, widthNs: Long): Unit = {
     require(widthNs % srcWidth == 0,
       s"cascade width $widthNs is not a multiple of the source width $srcWidth")
-    val src = openRollup(spark, srcPath, srcWidth).frame
-    val tags = src.columns.filter(_.startsWith(Db.TagPrefix)).sorted.toSeq.map(col)
-    src
-      .groupBy(col("metric") +: tags :+
-        (expr(s"bucket_start div ${widthNs}L") * lit(widthNs)).as("bucket_start"): _*)
+    mergePartials(openRollup(spark, srcPath, srcWidth).frame,
+      (expr(s"bucket_start div ${widthNs}L") * lit(widthNs)).as("bucket_start"))
+      .write.partitionBy("metric").mode("overwrite").parquet(path)
+  }
+
+  /** Merge rollup partials to one row per (metric, tagset, `bucketStart`),
+    * the grouping column named `bucket_start`: counts, decimal sums and
+    * Σv² add, mins/maxes combine. Shared by [[compactRollup]] (same
+    * buckets) and [[writeRollupFrom]] (coarser buckets).
+    */
+  private def mergePartials(partials: DataFrame, bucketStart: Column): DataFrame = {
+    val tags = partials.columns.filter(_.startsWith(Db.TagPrefix)).sorted.toSeq.map(col)
+    partials
+      .groupBy(col("metric") +: tags :+ bucketStart: _*)
       .agg(sum(col("n")).as("n"),
         sum(col("sum_value")).as("sum_value"),
         sum(col("sum_sq")).as("sum_sq"),
         min(col("min_value")).as("min_value"),
         max(col("max_value")).as("max_value"))
-      .write.partitionBy("metric").mode("overwrite").parquet(path)
   }
 
   /** Write-once cached two-level cascade: the `widthNs` rollup built

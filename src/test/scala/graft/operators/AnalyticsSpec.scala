@@ -1,9 +1,9 @@
 package graft.operators
 
-import graft.SparkSpec
+import graft.{SparkSpec, TempDirSpec}
 import org.apache.spark.sql.functions._
 
-class AnalyticsSpec extends SparkSpec {
+class AnalyticsSpec extends SparkSpec with TempDirSpec {
 
   test("q1 aggregates per (returnflag, linestatus)") {
     val out = Analytics.q1(spark, sfDir).collect()
@@ -22,6 +22,15 @@ class AnalyticsSpec extends SparkSpec {
       }
     }
     Analytics.bucketFacts(spark, sfDir, buckets = 4)
+    // one file per bucket: Spark trusts a bucket's sortBy order only
+    // when the bucket is a single file
+    val warehouse = new java.io.File(
+      new java.net.URI(spark.conf.get("spark.sql.warehouse.dir")).getPath)
+    for (tbl <- Seq("graft_lineitem_b", "graft_orders_b", "graft_customer_b")) {
+      val files = new java.io.File(warehouse, tbl).listFiles()
+        .count(_.getName.endsWith(".parquet"))
+      assert(files == 4, s"$tbl holds $files parquet files, expected one per bucket")
+    }
     val bucketed = Analytics.q3Bucketed(spark, sfDir)
     val plan = bucketed.queryExecution.executedPlan.toString
     // the fact-fact join AND the aggregation ride the bucketing: no
@@ -353,7 +362,7 @@ class AnalyticsSpec extends SparkSpec {
 
   test("pivotDaily: a declared type absent from the data is a 0 column, not NULL or dropped") {
     import spark.implicits._
-    val dir = s"/root/repo/out/test_pivot_${System.nanoTime()}"
+    val dir = s"$tempDir/pivot"
     Seq((0L, "click"), (5L, "click"), (86_400_000_000_000L, "view"))
       .toDF("ts", "event_type")
       .write.parquet(s"$dir/events.parquet")
@@ -979,7 +988,7 @@ class AnalyticsSpec extends SparkSpec {
     // unguarded variance — the ADVICE r10 divergence class (Spark NULL
     // vs DuckDB inf) — so var_b must be the guarded NULL and t_stat
     // NULL while mean_b stays defined.
-    val dir1 = s"/root/repo/out/test_abv_${System.nanoTime()}"
+    val dir1 = s"$tempDir/abv"
     Seq((0L, "purchase", 10.0), (2L, "purchase", 20.0), (1L, "purchase", 7.0))
       .toDF("user_id", "event_type", "value")
       .withColumn("ts", lit(0L))
@@ -991,7 +1000,7 @@ class AnalyticsSpec extends SparkSpec {
     assert(!r1.isNullAt(r1.fieldIndex("var_a")), "var_a defined at n=2")
     assert(r1.isNullAt(r1.fieldIndex("t_stat")))
     // an EMPTY arm: n_b = 0 → mean_b and var_b both NULL
-    val dir0 = s"/root/repo/out/test_abv0_${System.nanoTime()}"
+    val dir0 = s"$tempDir/abv0"
     Seq((0L, "purchase", 10.0), (2L, "purchase", 20.0))
       .toDF("user_id", "event_type", "value")
       .withColumn("ts", lit(0L))

@@ -2,31 +2,12 @@ package graft.operators
 
 import graft.SparkSpec
 
-/** Seeded fuzz: [[Dedup.clusterPairs]] against a local union-find
-  * reference on random graphs — pointer-doubling label propagation must
+/** Seeded fuzz: [[Dedup.clusterPairs]] against the union-find
+  * reference ([[UnionFindReference]]) on random graphs — pointer-doubling label propagation must
   * produce exactly the connected components for any edge set, not just
   * the chain/triangle shapes the unit spec pins.
   */
 class ClusterFuzzSpec extends SparkSpec {
-
-  private def unionFind(n: Int, edges: Seq[(Long, Long)]): Map[Long, Long] = {
-    val parent = Array.tabulate(n)(identity)
-    def find(x: Int): Int = {
-      var r = x
-      while (parent(r) != r) r = parent(r)
-      var c = x
-      while (parent(c) != c) { val nxt = parent(c); parent(c) = r; c = nxt }
-      r
-    }
-    edges.foreach { case (a, b) =>
-      val (ra, rb) = (find(a.toInt), find(b.toInt))
-      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-    }
-    // canonical label = min node id in the component == root under
-    // min-directed unions
-    val touched = edges.flatMap(e => Seq(e._1, e._2)).distinct
-    touched.map(v => v -> find(v.toInt).toLong).toMap
-  }
 
   test("clusterPairs == union-find on seeded random graphs") {
     import spark.implicits._
@@ -39,15 +20,12 @@ class ClusterFuzzSpec extends SparkSpec {
         while (b == a) b = rnd.nextInt(n)
         (math.min(a, b).toLong, math.max(a, b).toLong)
       }.distinct
-      val expect = unionFind(n, edges)
-      val got = Dedup.clusterPairs(edges.toDF("doc_a", "doc_b"))
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(got == expect, s"trial $trial (n=$n, m=${edges.size})")
-      // cluster sizes: count of members per canonical label
-      val sizes = Dedup.clusterPairs(edges.toDF("doc_a", "doc_b"))
-        .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
-      val expectSizes = expect.groupBy(_._2).view.mapValues(_.size.toLong).toMap
-      sizes.foreach { case (id, s) => assert(s == expectSizes(expect(id))) }
+      // labels, cluster sizes and keeper flags, row for row
+      val got = Dedup.clusterPairs(edges.toDF("doc_a", "doc_b")).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getBoolean(3)))
+      assert(got.length == got.toSet.size, s"trial $trial: duplicate rows")
+      assert(got.toSet == UnionFindReference.clusterRows(edges),
+        s"trial $trial (n=$n, m=${edges.size})")
     }
   }
 

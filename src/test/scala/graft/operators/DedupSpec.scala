@@ -452,59 +452,55 @@ class DedupSpec extends SparkSpec {
     assert(hist.map { case (size, n) => size * n }.sum == members)
   }
 
-  test("clusterPairs tuned routes (fold-init, broadcast jump) are row-identical to the baseline loop") {
-    import org.apache.spark.sql.functions._
+  test("clusterPairs routes (default, uncontracted, contracted, shuffle jump) equal a union-find reference") {
     // adversarial graph: a 60-node chain (forces many propagation
     // rounds), a 6-clique sharing its minimum with nothing, and one
     // isolated pair — ids interleaved so the minimum is not positional
     val chain = (0 until 59).map(i => (100L + i, 101L + i))
     val clique = for (a <- 0 until 6; b <- (a + 1) until 6) yield (10L + a, 10L + b)
     val lone = Seq((7L, 3L))
-    val pairs = spark.createDataFrame(chain ++ clique ++ lone)
-      .toDF("doc_a", "doc_b")
+    val edges = chain ++ clique ++ lone
+    val pairs = spark.createDataFrame(edges).toDF("doc_a", "doc_b")
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getBoolean(3)))
       .toSet
-    val baseline = rows(Dedup.clusterPairsTuned(pairs, 40,
-      foldInit = false, broadcastJumpMaxRows = 0L,
-      localContraction = false))
-    val baseRounds = Dedup.lastClusterRounds
-    // the uncontracted tuned loop (r12's production route) …
-    val uncontracted = rows(Dedup.clusterPairsTuned(pairs, 40,
-      localContraction = false))
-    assert(uncontracted == baseline,
-      "uncontracted tuned routes changed the component labeling")
-    // … the default route on a tiny graph (size-gated: stays
-    // uncontracted below ClusterContractionMinPairs) …
-    assert(rows(Dedup.clusterPairs(pairs)) == baseline,
+    val reference = UnionFindReference.clusterRows(edges)
+    // sanity on the reference itself: chain is ONE component rooted at
+    // its min, the clique at 10, the pair at 3
+    val byCluster = reference.groupBy(_._2)
+    assert(byCluster.keySet == Set(100L, 10L, 3L) && byCluster(100L).size == 60 &&
+      byCluster(10L).size == 6 && byCluster(3L).size == 2)
+    // the default route on a tiny graph (size-gated: stays
+    // uncontracted below ClusterContractionMinPairs, broadcast jump) …
+    assert(rows(Dedup.clusterPairs(pairs)) == reference,
       "default route changed the component labeling")
-    // … and the r13 contraction route, forced on via the gate knob:
-    // partition-local union-find feeding the same loop. The chain is
-    // the adversarial case — edges scattered across partitions force
+    // … the uncontracted loop, forced by the gate …
+    assert(rows(Dedup.clusterPairsTuned(pairs, 40,
+      contractionMinPairs = Long.MaxValue)) == reference,
+      "uncontracted route changed the component labeling")
+    val uncontractedRounds = Dedup.lastClusterRounds
+    // … the shuffled pointer-jump join …
+    assert(rows(Dedup.clusterPairsTuned(pairs, 40,
+      broadcastJumpMaxRows = 0L)) == reference,
+      "shuffle-jump route changed the component labeling")
+    // … and the contraction route, forced on via the gate: partition-
+    // local union-find feeding the same loop. The chain is the
+    // adversarial case — edges scattered across partitions force
     // boundary-graph stitching, while whatever lands together must
     // collapse locally.
-    val tuned = rows(Dedup.clusterPairsTuned(pairs, 40,
-      contractionMinPairs = 0L))
-    val tunedRounds = Dedup.lastClusterRounds
-    assert(tuned == baseline, "tuned routes changed the component labeling")
+    assert(rows(Dedup.clusterPairsTuned(pairs, 40,
+      contractionMinPairs = 0L)) == reference,
+      "contracted route changed the component labeling")
+    val contractedRounds = Dedup.lastClusterRounds
     // contraction runs the loop on the boundary graph: never more
-    // rounds than the uncontracted baseline (fold-init alone already
-    // guaranteed ≤)
-    assert(tunedRounds <= baseRounds,
-      s"contracted loop took MORE rounds ($tunedRounds > $baseRounds)")
+    // rounds than the uncontracted loop
+    assert(contractedRounds <= uncontractedRounds,
+      s"contracted loop took MORE rounds ($contractedRounds > $uncontractedRounds)")
     // the loop must have run on a CONTRACTED node set: strictly fewer
     // loop nodes than the 68 distinct paired docs (60-chain + 6-clique
     // + pair), however the 2 local-mode partitions split the edges
     assert(Dedup.lastClusterNodes >= 0 && Dedup.lastClusterNodes < 68,
       s"contraction did not shrink the loop (${Dedup.lastClusterNodes} nodes)")
-    // sanity on the labeling itself: chain is ONE component rooted at
-    // its min, the clique at 10, the pair at 3
-    val byCluster = tuned.groupBy(_._2)
-    assert(byCluster(100L).size == 60 && byCluster(10L).size == 6 &&
-      byCluster(3L).size == 2)
-    tuned.foreach { case (id, cid, size, keeper) =>
-      assert(keeper == (id == cid) && size == byCluster(cid).size)
-    }
   }
 
   test("quality keeper keeps the best-scoring member of every cluster, same kept count") {

@@ -1,9 +1,9 @@
 package graft.operators
 
-import graft.SparkSpec
+import graft.{SparkSpec, TempDirSpec}
 import org.apache.spark.sql.functions._
 
-class SimilaritySpec extends SparkSpec {
+class SimilaritySpec extends SparkSpec with TempDirSpec {
 
   test("brute-force topk: k rows per query, ranked, self excluded") {
     val out = Similarity.bruteForceTopK(spark, sfDir, numQueries = 3, k = 5).collect()
@@ -434,7 +434,7 @@ class SimilaritySpec extends SparkSpec {
 
   test("knnClassify: perfect accuracy on a label-clustered corpus") {
     import spark.implicits._
-    val dir = s"/root/repo/out/test_knn_classify_${System.nanoTime()}"
+    val dir = s"$tempDir/knn_classify"
     // three orthogonal clusters of 20 vectors: cosine within a cluster
     // ≈ 1, across clusters ≈ 0 — every neighborhood is pure
     val rows = for (lab <- 0 until 3; i <- 0 until 20) yield {
@@ -448,7 +448,6 @@ class SimilaritySpec extends SparkSpec {
     assert(out.nonEmpty)
     assert(out.forall(_.getAs[Boolean]("correct")),
       "a pure neighborhood must vote the true label")
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
   }
 
   test("clusterStats: populations cover the corpus, cosine spread is sane, deterministic") {
@@ -477,8 +476,14 @@ class SimilaritySpec extends SparkSpec {
     val anti = Similarity.ivfDeletedTopK(spark, sfDir).collect().map(row).sorted
     assert(anti.nonEmpty)
     // THE two-path contract: the gated anti-join and the pushed
-    // predicate must be row-identical
-    val pred = Similarity.ivfDeletedTopK(spark, sfDir, viaPredicate = true)
+    // predicate must be row-identical. The predicate path is the
+    // reference: the same index searched with the tombstones filtered
+    // out of the corpus.
+    val e = Similarity.vecs(spark, sfDir)
+    val index = IvfIndex.ensure(spark, sfDir, "first", 16, iters = 0,
+      train = () => Similarity.firstVectorCentroids(e, 16), corpus = e)
+    val pred = Similarity.ivfSearch(index, e.where(col("vec_id") < 5), 5, 5, 4,
+      corpusFilter = Some(col("vec_id") % 17 =!= 0))
       .collect().map(row).sorted
     assert(anti.sameElements(pred))
     // no tombstoned id survives as a RESULT...

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.SparkSpec
+import graft.{SparkSpec, TempDirSpec, TimedSpec}
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -13,12 +13,11 @@ import org.apache.spark.sql.streaming.Trigger
   * is fixed; new vectors land in its cells". The end state must be
   * indistinguishable from having built the index over the full corpus.
   */
-class StreamingIvfSpec extends SparkSpec with graft.TimedSpec {
+class StreamingIvfSpec extends SparkSpec with TempDirSpec with TimedSpec {
 
   test("foreachBatch-appended IVF index equals the full batch build") {
     import scala.jdk.CollectionConverters._
-    val base = "/root/repo/out/test_stream_ivf"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
+    val base = s"$tempDir/stream_ivf"
     // clean prior spec indexes (rerun would otherwise append twice)
     java.nio.file.Files.list(java.nio.file.Paths.get("/root/repo/out")).iterator().asScala
       .filter(_.getFileName.toString.contains("spec_stream"))
@@ -69,7 +68,6 @@ class StreamingIvfSpec extends SparkSpec with graft.TimedSpec {
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(streamed.nonEmpty && streamed == full)
     assert(streamed.exists(_._1 > cut), "streamed half must be searchable")
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
   }
 
   test("ivfStreamedTopK: the fully-streamed index ranks identically to the batch index") {
@@ -82,8 +80,7 @@ class StreamingIvfSpec extends SparkSpec with graft.TimedSpec {
 
   test("foreachBatch-appended IVF-PQ index equals the full build, replay-idempotent") {
     import scala.jdk.CollectionConverters._
-    val base = "/root/repo/out/test_stream_ivfpq"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
+    val base = s"$tempDir/stream_ivfpq"
     java.nio.file.Files.list(java.nio.file.Paths.get("/root/repo/out")).iterator().asScala
       .filter(_.getFileName.toString.contains("pqstream_spec"))
       .foreach(p => org.apache.commons.io.FileUtils.deleteQuietly(p.toFile))
@@ -127,6 +124,5 @@ class StreamingIvfSpec extends SparkSpec with graft.TimedSpec {
     val full = rows(IvfIndex.ensurePq(spark, sfDir, "pqstream_spec_full", 16, 0,
       train, books, e))
     assert(streamed.toSet == full.toSet && streamed.exists(_._1 > cut))
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
   }
 }

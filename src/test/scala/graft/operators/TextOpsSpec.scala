@@ -1,9 +1,9 @@
 package graft.operators
 
-import graft.SparkSpec
+import graft.{SparkSpec, TempDirSpec}
 import org.apache.spark.sql.functions._
 
-class TextOpsSpec extends SparkSpec {
+class TextOpsSpec extends SparkSpec with TempDirSpec {
 
   private def docsDf(ds: Seq[(Long, String)]) = {
     import spark.implicits._
@@ -454,7 +454,7 @@ class TextOpsSpec extends SparkSpec {
       (2L, "a b c Z Z Z b c d"),
       (3L, "q r s t u v"),
       (4L, "x"), (5L, "x")))
-    val tmp = s"/root/repo/out/test_grams_${System.nanoTime()}"
+    val tmp = s"$tempDir/grams"
     TextAnalysis.gramInstances(d).write.parquet(tmp)
     val inst = spark.read.parquet(tmp)
     def rows(df: org.apache.spark.sql.DataFrame) =
@@ -484,7 +484,7 @@ class TextOpsSpec extends SparkSpec {
       (30L, "n o p n o p n o p"), // delta: intra-doc repeat
       (40L, "h i j k l m n"),   // delta ∩ delta 50 share "k l m"
       (50L, "z z z k l m"))
-    val dir = s"/root/repo/out/test_spans_inc_${System.nanoTime()}"
+    val dir = s"$tempDir/spans_inc"
     corpus.toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
     val inc = TextAnalysis.dedupSpansIncremental(spark, dir)
       .collect().map(_.toSeq).toSet
@@ -522,7 +522,7 @@ class TextOpsSpec extends SparkSpec {
         id.toLong -> Seq.fill(n)(('a' + rnd.nextInt(vocabN)).toChar.toString)
           .mkString(" ")
       }
-      val dir = s"/root/repo/out/test_inc_fuzz_${round}_${System.nanoTime()}"
+      val dir = s"$tempDir/inc_fuzz_$round"
       import spark.implicits._
       corpus.toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
       def rows(df: org.apache.spark.sql.DataFrame) =

@@ -1,14 +1,13 @@
 package graft.streaming
 
-import graft.SparkSpec
+import graft.{SparkSpec, TempDirSpec, TimedSpec}
 import org.apache.spark.sql.functions._
 
-class StreamingDedupSpec extends SparkSpec with graft.TimedSpec {
+class StreamingDedupSpec extends SparkSpec with TempDirSpec with TimedSpec {
 
   test("streaming dedup emits one row per fingerprint, parity with batch exact dedup") {
     import spark.implicits._
-    val dir = "/root/repo/out/test_stream_dedup"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+    val dir = s"$tempDir/stream_dedup"
     // corpus with planted duplicates (same text, different doc ids)
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       .select(col("doc_id"), col("text"))
@@ -35,7 +34,6 @@ class StreamingDedupSpec extends SparkSpec with graft.TimedSpec {
     val g = got.select("fp").collect().map(_.getString(0)).toSet
     val b = batch.select("fp").collect().map(_.getString(0)).toSet
     assert(g == b)
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
   }
 
   test("ensureStreamed landing survives planted re-arrivals with exactly one copy per fingerprint") {

@@ -1,14 +1,12 @@
 package graft.streaming
 
-import graft.SparkSpec
+import graft.{SparkSpec, TempDirSpec, TimedSpec}
 import graft.tsdb.{AggBuilder, AggKind, Db, Duration, Ingest}
 
-class StreamingRollupSpec extends SparkSpec with graft.TimedSpec {
+class StreamingRollupSpec extends SparkSpec with TempDirSpec with TimedSpec {
 
   test("streaming-maintained rollup answers identically to the raw batch aggregation") {
-    val base = "/root/repo/out/test_stream_rollup"
-    Seq("dest", "ckpt", "landing").foreach(d =>
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(s"$base/$d")))
+    val base = s"$tempDir/stream_rollup"
     // the file source watches a DIRECTORY (landing zone); the sf table
     // is a single parquet file — link it into one
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$base/landing"))
@@ -42,8 +40,6 @@ class StreamingRollupSpec extends SparkSpec with graft.TimedSpec {
       new java.io.File(s"$base/dest/batch_id=0"), crashed)
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(crashed, "_SUCCESS"))
     assert(totals() == expected, "incomplete batch must be pruned at open")
-    Seq("dest", "ckpt", "landing").foreach(d =>
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(s"$base/$d")))
   }
 
   test("ensureStreamed builds once, caches, and answers like the batch aggregation") {

@@ -1,15 +1,14 @@
 package graft.streaming
 
-import graft.SparkSpec
+import graft.{SparkSpec, TempDirSpec, TimedSpec}
 import graft.operators.TextAnalysis
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
-class StreamingVocabSpec extends SparkSpec with graft.TimedSpec {
+class StreamingVocabSpec extends SparkSpec with TempDirSpec with TimedSpec {
 
   test("streamed running vocab equals the batch word count; top-k matches vocabTopK") {
-    val base = "/root/repo/out/test_stream_vocab"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
+    val base = s"$tempDir/stream_vocab"
     val landing = s"$base/landing"
 
     // land the corpus as several files → several micro-batches, so the

@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.Harness.jsonString
+import graft.SparkEntry.Tag
 
 /** Benchmark main: times every SparkEntry query at SPARK_GRAFT_SF_DIR.
   *
@@ -11,7 +13,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Output contract: sections are printed as human-readable lines as
   * they complete (so a crash mid-run still leaves earlier numbers in
-  * stdout), the full JSON is written to /root/repo/BENCH_LOCAL.json,
+  * stdout), the full JSON is written to BENCH_LOCAL.json under Harness.Home,
   * and the LAST stdout line is a compact summary JSON — rounded values,
   * scale sections as `[base_sec, xN_sec, ratio]` arrays — sized to fit
   * a bounded log-tail capture (the round-3 one-line artifact outgrew
@@ -22,112 +24,77 @@ object Bench {
   private def fmt(x: Double, dp: Int): String =
     if (x < 0) "-1" else s"%.${dp}f".format(x)
 
-  /** Strip characters that would corrupt hand-assembled JSON (quotes,
-    * backslashes, control chars) from an interpolated string — the
-    * error paths already did this; names/paths now ride it too
-    * (ADVICE r09: a future query name with a quote would corrupt the
-    * record).
-    */
-  private def jstr(s: String): String =
-    s.replaceAll("[\"\\\\\\p{Cntrl}]", " ")
+  /** A thrown exception as one short line: class name and message. */
+  private def errMsg(e: Throwable, max: Int = 120): String =
+    (e.getClass.getSimpleName + ": " + Option(e.getMessage).getOrElse("")).take(max)
 
-  /** Driver entries that are deliberately-uncached VALIDATION CONTRACT
-    * replays, not queries: ts_flaps_replay re-runs a 4-micro-batch
-    * stateful replay per invocation, ann_recall_curve runs a full
-    * recall sweep, dedup_cluster_hist re-clusters, and
-    * text_decontaminate_bloom rebuilds + probes the filter against the
-    * exact chain. Their cost is the contract being re-proven, so the
-    * artifact tags them and reports the suite total BOTH ways — mixing
-    * them into one number made cross-round per-query totals
-    * incomparable (r09 verdict item 7).
-    */
-  private val ValidationEntries: Set[String] = Set(
-    "ts_flaps_replay", "ann_recall_curve", "dedup_cluster_hist",
-    "text_decontaminate_bloom")
-
-  /** Sub-1.5 s entries measured swinging 1.5–1.7× across cold-JVM runs
-    * with zero code changes (r12 verdict item 5: text_dup_ngrams
-    * 0.77–1.71 s over six runs; text_decontaminate_bloom's r12
-    * "regression" was this band). Their per-query dict value is the
-    * MEDIAN of the three timed runs instead of the min — one lucky
-    * run no longer defines the recorded number — while the suite
-    * totals keep summing the min for every entry, so the total stays
-    * methodology-identical and cross-round comparable.
-    */
-  private val NoiseBandEntries: Set[String] = Set(
-    "text_dup_ngrams", "text_decontaminate_bloom", "ts_mad",
-    "q7_volume", "ts_active_series_sketch")
+  /** The record of a section or cell that threw. */
+  private def errJson(e: Throwable): String = s"""{"error":${jsonString(errMsg(e))}}"""
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // static conf, default 100: a 42-query suite generates far more
-      // codegen'd classes than that, and LRU eviction forces janino to
-      // recompile every generated class on every run — the round-1
-      // full-suite bench spent most of its time compiling, not executing
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config(graft.Conf.WorkDirKey, "/root/repo/out")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
 
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     // dev-only section filter (routes to BENCH_LOCAL_DEV.json like the
-    // other partial-run knobs): SPARK_GRAFT_SECTIONS=minhash_routed
-    // runs one section without paying the ~25-min full record
+    // query filter): SPARK_GRAFT_SECTIONS=minhash_routed runs one
+    // section without paying the ~25-min full record
     val sections = sys.env.get("SPARK_GRAFT_SECTIONS").map(_.split(",").toSet)
     def secOn(name: String): Boolean = sections.forall(_.contains(name))
+    // a section that is on runs and prints its record as it completes
+    // (a crash mid-run still leaves earlier numbers in stdout)
+    def section(name: String)(run: => String): String = {
+      val json = if (secOn(name)) run else "{}"
+      println(s"# $name: $json")
+      json
+    }
     // validation-tagged entries gate independently of "queries": a
     // single-section dev run (the knob's stated purpose) must not pay
     // the validation suite
-    val names = SparkEntry.queries.keys.toSeq.sorted
-      .filter(n =>
-        if (ValidationEntries(n)) secOn("validation") else secOn("queries"))
-      .filter(n => only.forall(_.contains(n)))
+    def tagged(tag: Tag) = SparkEntry.entries.filter(_.tags(tag)).map(_.name).sorted
+    val validation = tagged(Tag.Validation)
+    val entries = SparkEntry.entries.sortBy(_.name)
+      .filter(e =>
+        if (validation.contains(e.name)) secOn("validation") else secOn("queries"))
+      .filter(e => only.forall(_.contains(e.name)))
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
-    val results = names.map { name =>
-      val fn = SparkEntry.queries(name)
+    val results = entries.map { e =>
       def once(): Double = {
         val t0 = System.nanoTime()
         // noop sink: fully evaluates every output column (a count() lets
         // Catalyst prune projection-only work down to a row count)
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+        e.run(spark, sfDir).write.format("noop").mode("overwrite").save()
         (System.nanoTime() - t0) / 1e9
       }
       // best-of-3 after warm: a single GC pause or host-load stall in
       // one timed run (observed up to tens of seconds on a busy host)
       // must not be recorded as the query's steady-state latency.
       // Noise-band entries additionally record the MEDIAN in the dict
-      // (see [[NoiseBandEntries]]); the min always feeds the totals.
+      // (see [[SparkEntry.Tag.NoiseBand]]); the min always feeds the totals.
       val (tMin, tDict) = try {
         once()
         val runs = Seq(once(), once(), once()).sorted
-        (runs.head, if (NoiseBandEntries(name)) runs(1) else runs.head)
-      } catch { case e: Throwable =>
+        (runs.head, if (e.tags(Tag.NoiseBand)) runs(1) else runs.head)
+      } catch { case t: Throwable =>
         // a failed query must be distinguishable from a slow one
-        errors(name) = (e.getClass.getSimpleName + ": " +
-          Option(e.getMessage).getOrElse("")).take(160)
-          .replaceAll("[\"\\\\\\p{Cntrl}]", " ")
+        errors(e.name) = errMsg(t, 160)
         (-1.0, -1.0)
       }
       // ContextCleaner only releases broadcast blocks / shuffle state
       // after a driver GC; without this, earlier queries' debris slows
       // later ones by an order of magnitude
       System.gc()
-      (name, tMin, tDict)
+      (e.name, tMin, tDict)
     }
-    val errJson = errors.map { case (k, v) => "\"" + k + "\":\"" + v + "\"" }
+    val errorsJson = errors
+      .map { case (k, v) => jsonString(k) + ":" + jsonString(v) }
       .mkString("{", ",", "}")
     // dict values: median for the noise band, min elsewhere; totals
     // ALWAYS sum the min (cross-round total comparability)
     val qs = results.map { case (k, _, d) => "\"" + k + "\":" + fmt(d, 3) }
       .mkString("{", ",", "}")
     val total = results.map(_._2).filter(_ >= 0).sum
-    val totalQuery = results.filterNot(r => ValidationEntries(r._1))
+    val totalQuery = results.filterNot(r => validation.contains(r._1))
       .map(_._2).filter(_ >= 0).sum
     val totalValidation = total - totalQuery
     println(s"# queries: $qs")
@@ -136,14 +103,13 @@ object Bench {
     // assembled by hand (diffed on the dict values, the numbers the
     // previous record carries)
     val (regressions, nRegressions) =
-      regressionsJson("/root/repo/BENCH_LOCAL.json",
+      regressionsJson(s"${Harness.Home}/BENCH_LOCAL.json",
         results.map(r => (r._1, r._3)))
     println(s"# regressions: $regressions")
     val (ingest, ingestCompact) =
-      if (sys.env.contains("SPARK_GRAFT_SKIP_INGEST") || !secOn("ingest")) ("{}", "{}")
-      else ingestBench(spark, sfDir)
+      if (secOn("ingest")) ingestBench(spark, sfDir) else ("{}", "{}")
     println(s"# ingest: $ingest")
-    val s10rows = if (sys.env.contains("SPARK_GRAFT_SKIP_SCALE") || !secOn("scale10")) Nil
+    val s10rows = if (!secOn("scale10")) Nil
                   else scaleRows(spark, sfDir, 10, scale10Entries,
                     ScaleData.AllTables)
     val scale10 = if (s10rows.isEmpty) "{}"
@@ -155,7 +121,7 @@ object Bench {
                         knnWorkJson(spark, sfDir, dir10))
                   }
     println(s"# scale10: $scale10")
-    val s100rows = if (sys.env.contains("SPARK_GRAFT_SKIP_SCALE100") || !secOn("scale100")) Nil
+    val s100rows = if (!secOn("scale100")) Nil
                    else scaleRows(spark, sfDir, 100, scale100Entries,
                      // customer+orders: q13's leg reads them — on a
                      // fresh out/ the q5-bucketed section hasn't
@@ -174,26 +140,14 @@ object Bench {
                        """"standalone re-materializing shape; headline is text_grams100.from_shared"}""")
     println(s"# scale100: $scale100")
     println(s"# scale100 skip reasons: $scale100SkipProse")
-    val lshPhases = if (sys.env.contains("SPARK_GRAFT_SKIP_SCALE100") || !secOn("lsh_phases")) "{}"
-                    else lshPhasesJson(spark, sfDir)
-    println(s"# lsh_phases: $lshPhases")
-    val skew = if (sys.env.contains("SPARK_GRAFT_SKIP_SKEW") || !secOn("skew")) "{}"
-               else skewBench(spark, sfDir)
-    println(s"# skew: $skew")
-    val lshCounts = if (sys.env.contains("SPARK_GRAFT_SKIP_SCALE") || !secOn("lsh_counts")) "{}"
-                    else lshCountsJson(spark, sfDir)
-    println(s"# lsh_counts: $lshCounts")
-    val semanticCounts = if (sys.env.contains("SPARK_GRAFT_SKIP_SCALE") || !secOn("semantic_counts")) "{}"
-                         else semanticCountsJson(spark, sfDir)
-    println(s"# semantic_counts: $semanticCounts")
-    val q5b = if (sys.env.contains("SPARK_GRAFT_SKIP_SCALE100") || !secOn("q5_bucketed100")) "{}"
-              else q5Bucketed100Json(spark, sfDir)
-    println(s"# q5_bucketed100: $q5b")
-    val minhash100 = if (sys.env.contains("SPARK_GRAFT_SKIP_SCALE100") || !secOn("minhash100")) "{}"
-                     else minhash100Json(spark, sfDir)
-    println(s"# minhash100: $minhash100")
-    val minhashRouted0 = if (sys.env.contains("SPARK_GRAFT_SKIP_SCALE100") || !secOn("minhash_routed")) "{}"
-                         else minhashRoutedJson(spark, sfDir)
+    val lshPhases = section("lsh_phases")(lshPhasesJson(spark, sfDir))
+    val skew = section("skew")(skewBench(spark, sfDir))
+    val lshCounts = section("lsh_counts")(lshCountsJson(spark, sfDir))
+    val semanticCounts = section("semantic_counts")(semanticCountsJson(spark, sfDir))
+    val q5b = section("q5_bucketed100")(q5Bucketed100Json(spark, sfDir))
+    val minhash100 = section("minhash100")(minhash100Json(spark, sfDir))
+    val minhashRouted0 =
+      if (secOn("minhash_routed")) minhashRoutedJson(spark, sfDir) else "{}"
     // fresh-JVM adjudication leg (r11 verdict item 3): a
     // SPARK_GRAFT_SECTIONS=minhash_routed run executes nothing before
     // this section, so its JVM is the isolation control — such a run
@@ -201,7 +155,7 @@ object Bench {
     // latest persisted control under "fresh_jvm" for cross-JVM
     // comparison inside one artifact
     val freshPath =
-      java.nio.file.Paths.get("/root/repo/BENCH_FRESHJVM_minhash_routed.json")
+      java.nio.file.Paths.get(s"${Harness.Home}/BENCH_FRESHJVM_minhash_routed.json")
     if (sections.contains(Set("minhash_routed")) &&
         !minhashRouted0.startsWith("""{"error""""))
       java.nio.file.Files.writeString(freshPath,
@@ -218,41 +172,25 @@ object Bench {
         minhashRouted0.dropRight(1) + s""","fresh_jvm":$fresh}"""
       }
     println(s"# minhash_routed: $minhashRouted")
-    val simhashPhases = if (sys.env.contains("SPARK_GRAFT_SKIP_SCALE100") || !secOn("simhash_phases")) "{}"
-                        else simhashPhasesJson(spark, sfDir)
-    println(s"# simhash_phases: $simhashPhases")
-    val incDelta = if (sys.env.contains("SPARK_GRAFT_SKIP_SCALE100") || !secOn("incremental_delta")) "{}"
-                   else incrementalDeltaJson(spark, sfDir)
-    println(s"# incremental_delta: $incDelta")
-    val streamedState = if (sys.env.contains("SPARK_GRAFT_SKIP_SCALE") || !secOn("streamed_state")) "{}"
-                        else streamedStateJson(spark, sfDir)
-    println(s"# streamed_state: $streamedState")
-    val textGrams100 = if (sys.env.contains("SPARK_GRAFT_SKIP_SCALE100") || !secOn("text_grams100")) "{}"
-                       else textGrams100Json(spark, sfDir)
-    println(s"# text_grams100: $textGrams100")
-    val recallScale = if (sys.env.contains("SPARK_GRAFT_SKIP_SCALE") || !secOn("recall_curve_scale")) "{}"
-                      else recallCurveScaleJson(spark, sfDir)
-    println(s"# recall_curve_scale: $recallScale")
-    val bloomPaths = if (sys.env.contains("SPARK_GRAFT_SKIP_SCALE") || !secOn("bloom_paths")) "{}"
-                     else bloomPathsJson(spark, sfDir)
-    println(s"# bloom_paths: $bloomPaths")
-    val runtimeBloom = if (sys.env.contains("SPARK_GRAFT_SKIP_SCALE") || !secOn("runtime_bloom")) "{}"
-                       else runtimeBloomJson(spark, sfDir)
-    println(s"# runtime_bloom: $runtimeBloom")
+    val simhashPhases = section("simhash_phases")(simhashPhasesJson(spark, sfDir))
+    val incDelta = section("incremental_delta")(incrementalDeltaJson(spark, sfDir))
+    val streamedState = section("streamed_state")(streamedStateJson(spark, sfDir))
+    val textGrams100 = section("text_grams100")(textGrams100Json(spark, sfDir))
+    val recallScale = section("recall_curve_scale")(recallCurveScaleJson(spark, sfDir))
+    val bloomPaths = section("bloom_paths")(bloomPathsJson(spark, sfDir))
+    val runtimeBloom = section("runtime_bloom")(runtimeBloomJson(spark, sfDir))
     // MUST run last: this section stops the suite session to re-run
     // the heavy 100× legs on a fresh low-core session (nothing after
     // it may touch `spark`)
-    val scaling100 = if (sys.env.contains("SPARK_GRAFT_SKIP_SCALE100") || !secOn("scaling100")) "{}"
-                     else scaling100Json(spark, sfDir, cpus.toInt, s100rows)
-    println(s"# scaling100: $scaling100")
-    val validationJson = ValidationEntries.toSeq.sorted
-      .map("\"" + _ + "\"").mkString("[", ",", "]")
+    val scaling100 =
+      section("scaling100")(scaling100Json(spark, sfDir, Harness.Cpus, s100rows))
+    val validationJson = validation.map(jsonString).mkString("[", ",", "]")
     val full =
       s"""{"metric":"total","value":${fmt(total, 2)},"unit":"sec",""" +
       s""""total_query_sec":${fmt(totalQuery, 2)},""" +
       s""""total_validation_sec":${fmt(totalValidation, 2)},""" +
       s""""validation_queries":$validationJson,"queries":$qs,""" +
-      s""""errors":$errJson,"ingest":$ingest,"scale10":$scale10,"scale100":$scale100,""" +
+      s""""errors":$errorsJson,"ingest":$ingest,"scale10":$scale10,"scale100":$scale100,""" +
       s""""skew":$skew,"lsh_counts":$lshCounts,"minhash100":$minhash100,""" +
       s""""minhash_routed":$minhashRouted,"text_grams100":$textGrams100,""" +
       s""""simhash_phases":$simhashPhases,"incremental_delta":$incDelta,""" +
@@ -261,16 +199,14 @@ object Bench {
       s""""semantic_counts":$semanticCounts,"q5_bucketed100":$q5b,""" +
       s""""recall_curve_scale":$recallScale,"bloom_paths":$bloomPaths,""" +
       s""""runtime_bloom":$runtimeBloom,"scaling100":$scaling100,""" +
-      s""""noise_band_median":${NoiseBandEntries.toSeq.sorted
-        .map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
+      s""""noise_band_median":${tagged(Tag.NoiseBand)
+        .map(jsonString).mkString("[", ",", "]")},""" +
       s""""fmt":"scale entries are [base_sec,xN_sec,ratio]; lsh_counts entries are [candidates,verified]; telemetry spans each leg's warm+timed runs","sf":"$sfDir"}"""
-    // partial dev runs (query subset / skipped sections) must never
+    // partial dev runs (query or section subset) must never
     // clobber the committed full-run record
     val record =
-      if (only.isDefined || sections.isDefined ||
-          sys.env.keys.exists(_.startsWith("SPARK_GRAFT_SKIP_")))
-        "/root/repo/BENCH_LOCAL_DEV.json"
-      else "/root/repo/BENCH_LOCAL.json"
+      if (only.isDefined || sections.isDefined) s"${Harness.Home}/BENCH_LOCAL_DEV.json"
+      else s"${Harness.Home}/BENCH_LOCAL.json"
     java.nio.file.Files.writeString(java.nio.file.Paths.get(record), full + "\n")
     // the LAST stdout line is the driver's machine-parsed artifact: it
     // must (a) be last — build.sbt sets showSuccess := false so sbt's
@@ -311,7 +247,7 @@ object Bench {
     spark.stop()
   }
 
-  private type Entry = (String, (SparkSession, String) => DataFrame)
+  private[graft] type ScaleEntry = (String, (SparkSession, String) => DataFrame)
 
   /** Per-query diff vs the previous committed full-run record: every
     * query whose steady-state time grew ≥ `1.5×` AND ≥ 0.3 s absolute
@@ -336,26 +272,23 @@ object Bench {
         val curSf = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
         if (q == null) (s"""{"prev":null,"items":{}}""", 0)
         else if (prevSf != curSf)
-          (s"""{"prev":"${jstr(prevRecord)}","skipped":"sf mismatch: prev '${jstr(prevSf)}' vs current '${jstr(curSf)}'","items":{}}""", 0)
+          (s"""{"prev":${jsonString(prevRecord)},"skipped":""" +
+            s"""${jsonString(s"sf mismatch: prev '$prevSf' vs current '$curSf'")},"items":{}}""", 0)
         else {
           val items = current.flatMap { case (name, sec) =>
             Option(q.get(name)).map(_.asDouble(-1)).filter(_ > 0).flatMap { p =>
               if (sec > 0 && sec >= 1.5 * p && sec - p >= 0.3)
-                Some(s""""${jstr(name)}":[${fmt(p, 3)},${fmt(sec, 3)},${fmt(sec / p, 2)}]""")
+                Some(s"""${jsonString(name)}:[${fmt(p, 3)},${fmt(sec, 3)},${fmt(sec / p, 2)}]""")
               else None
             }
           }
-          (s"""{"prev":"${jstr(prevRecord)}","threshold":1.5,"abs_floor_sec":0.3,""" +
+          (s"""{"prev":${jsonString(prevRecord)},"threshold":1.5,"abs_floor_sec":0.3,""" +
             s""""fmt":"[prev_sec,now_sec,ratio]",""" +
             s""""items":{${items.mkString(",")}}}""", items.size)
         }
       }
     } catch {
-      case e: Throwable =>
-        val msg = (e.getClass.getSimpleName + ": " +
-          Option(e.getMessage).getOrElse("")).take(120)
-          .replaceAll("[\"\\\\\\p{Cntrl}]", " ")
-        (s"""{"error":"$msg"}""", 0)
+      case e: Throwable => (errJson(e), 0)
     }
 
   /** 10× scaling curve: the heavy family plus TSDB representatives.
@@ -364,7 +297,7 @@ object Bench {
     * .lshPlanSized]], 2^b ∝ n), so no per-scale knob exists to
     * mis-set: the 10× corpus automatically gets deeper bands.
     */
-  private def scale10Entries: Seq[Entry] = Seq(
+  private[graft] def scale10Entries: Seq[ScaleEntry] = Seq(
     "dedup_exact", "dedup_minhash", "dedup_ngram_jaccard",
     "dedup_embedding", "dedup_embedding_lsh", "dedup_cluster",
     "dedup_pipeline", "dedup_simhash_pairs", "dedup_pipeline_simhash",
@@ -483,36 +416,69 @@ object Bench {
     * production deployment would. Excluded queries are DOCUMENTED in
     * the `skipped` key — no silent caps.
     */
-  private def scale100Entries: Seq[Entry] = Seq[Entry](
-    "dedup_exact" -> SparkEntry.queries("dedup_exact"),
+  private[graft] def scale100Entries: Seq[ScaleEntry] = Seq(
+    "dedup_exact",
     // rejoined the timed curve late in round 6: the r03 "quadratic
     // verify" exclusion predated the single-pass graft_jaccard kernel.
     // Walls are host-band-sensitive (local probe 7.7 s, driver r06
     // 94.4 s on identical candidate counts) — the per-leg telemetry
     // and lsh_counts are what make a given run's number attributable
-    "dedup_minhash" -> SparkEntry.queries("dedup_minhash"),
+    "dedup_minhash",
     // the incremental posture NEXT TO the full run it replaces: the
     // delta probes the persisted band index (built outside the timed
     // query, as a deployment would), so its 100× wall should sit at
     // ~d/n of the full re-run's — the measured case for maintaining a
     // corpus instead of re-deduping it
-    "dedup_minhash_incremental" -> SparkEntry.queries("dedup_minhash_incremental"),
-    "dedup_embedding_lsh" -> SparkEntry.queries("dedup_embedding_lsh"),
+    "dedup_minhash_incremental", "dedup_embedding_lsh",
     // the embedding incremental next to ITS full run: the 100× leg
     // whose candidate phase is the engine's last wall — probed, not
     // re-paired
-    "dedup_embedding_lsh_incremental" ->
-      SparkEntry.queries("dedup_embedding_lsh_incremental"),
+    "dedup_embedding_lsh_incremental",
     // the END-TO-END dedup composition at 100×: SimHash pairs keep the
     // verify constant per candidate, so the pipeline stays linear where
     // the minhash variant's true-dup clusters go quadratic (see skips)
-    "dedup_pipeline_simhash" -> SparkEntry.queries("dedup_pipeline_simhash"),
-    "ann_bruteforce" -> SparkEntry.queries("ann_bruteforce"),
-    "ann_lsh" -> SparkEntry.queries("ann_lsh"),
-    "ann_lsh_multiprobe" -> SparkEntry.queries("ann_lsh_multiprobe"),
-    // nlist ∝ √n: 16 at base → 160 at 100× (the base leg of the ratio
-    // keeps the production default; the knob change is part of how an
-    // IVF deployment scales and is called out in SURVEY §5d)
+    "dedup_pipeline_simhash", "ann_bruteforce", "ann_lsh",
+    "ann_lsh_multiprobe",
+    "ann_ivf", "ann_ivf_kmeans", "ann_ivfpq", "ts_avg", "ts_latest",
+    "ts_raw",
+    // the sketch at 100×: bounded register state per bucket — the
+    // curve should stay scan-bound while the exact distinct's expand
+    // grows with series cardinality
+    "ts_active_series_sketch",
+    // the outer-join histogram at 100×: both sides shuffle on the
+    // customer key (1.5M customers × 15M orders here) but the
+    // post-join reduce is one row per customer — the bounded-output
+    // claim that keeps the 100 TB shape viable
+    "q13_order_dist", "text_decontaminate",
+    // round-8 late additions: the chunk-key corpus shuffle and the
+    // gram-vocabulary broadcast — the two text ops whose scale story
+    // is a data-volume question, not a bounded-frame one
+    "text_chunk_dedup", "text_dup_ngrams",
+    // round-11: the substring-grain incremental NEXT TO the full-corpus
+    // gram query it replaces for daily maintenance — the delta probes
+    // the persisted gram-vocab index (built in the warm run, as a
+    // deployment would), so its 100× wall should sit near the delta
+    // fraction of text_dup_ngrams', not on its 21 s curve
+    "text_dedup_spans_incremental",
+    // its rewrite pass: the spans probe plus one delta-sized word
+    // explode + cut — the complete daily-maintenance read at 100×
+    "text_dedup_rewrite_incremental",
+    // round-9: SemDeDup at its corpus-sized nlist (√n — 16→45→447
+    // across the curve); the semantic_counts key carries the per-cell
+    // pair volume that proves the sizing bounds intra-cell work
+    "dedup_semantic",
+    // fifth continuation: the three new alerting shapes at 100× —
+    // each is a scan + bucket-grain frame, so the curves should stay
+    // scan-bound like ts_avg's (the detectors' 100 TB viability claim)
+    "ts_cusum", "ts_burnrate", "ts_bollinger")
+    .map(n => n -> ivfAt100.getOrElse(n, SparkEntry.queries(n)))
+
+  /** The IVF legs of [[scale100Entries]]: nlist ∝ √n, 16 at base → 160 at
+    * 100× (the base leg of the ratio keeps the production default; the
+    * knob change is part of how an IVF deployment scales and is called
+    * out in SURVEY §5d).
+    */
+  private def ivfAt100: Map[String, (SparkSession, String) => DataFrame] = Map(
     "ann_ivf" -> ((s: SparkSession, d: String) =>
       if (d.contains("scale100")) graft.operators.Similarity.ivfTopK(s, d, nlist = 160)
       else graft.operators.Similarity.ivfTopK(s, d)),
@@ -524,46 +490,7 @@ object Bench {
     // the whole materialized-code thesis
     "ann_ivfpq" -> ((s: SparkSession, d: String) =>
       if (d.contains("scale100")) graft.operators.Similarity.ivfPqTopK(s, d, nlist = 160)
-      else graft.operators.Similarity.ivfPqTopK(s, d)),
-    "ts_avg" -> SparkEntry.queries("ts_avg"),
-    "ts_latest" -> SparkEntry.queries("ts_latest"),
-    "ts_raw" -> SparkEntry.queries("ts_raw"),
-    // the sketch at 100×: bounded register state per bucket — the
-    // curve should stay scan-bound while the exact distinct's expand
-    // grows with series cardinality
-    "ts_active_series_sketch" -> SparkEntry.queries("ts_active_series_sketch"),
-    // the outer-join histogram at 100×: both sides shuffle on the
-    // customer key (1.5M customers × 15M orders here) but the
-    // post-join reduce is one row per customer — the bounded-output
-    // claim that keeps the 100 TB shape viable
-    "q13_order_dist" -> SparkEntry.queries("q13_order_dist"),
-    "text_decontaminate" -> SparkEntry.queries("text_decontaminate"),
-    // round-8 late additions: the chunk-key corpus shuffle and the
-    // gram-vocabulary broadcast — the two text ops whose scale story
-    // is a data-volume question, not a bounded-frame one
-    "text_chunk_dedup" -> SparkEntry.queries("text_chunk_dedup"),
-    "text_dup_ngrams" -> SparkEntry.queries("text_dup_ngrams"),
-    // round-11: the substring-grain incremental NEXT TO the full-corpus
-    // gram query it replaces for daily maintenance — the delta probes
-    // the persisted gram-vocab index (built in the warm run, as a
-    // deployment would), so its 100× wall should sit near the delta
-    // fraction of text_dup_ngrams', not on its 21 s curve
-    "text_dedup_spans_incremental" ->
-      SparkEntry.queries("text_dedup_spans_incremental"),
-    // its rewrite pass: the spans probe plus one delta-sized word
-    // explode + cut — the complete daily-maintenance read at 100×
-    "text_dedup_rewrite_incremental" ->
-      SparkEntry.queries("text_dedup_rewrite_incremental"),
-    // round-9: SemDeDup at its corpus-sized nlist (√n — 16→45→447
-    // across the curve); the semantic_counts key carries the per-cell
-    // pair volume that proves the sizing bounds intra-cell work
-    "dedup_semantic" -> SparkEntry.queries("dedup_semantic"),
-    // fifth continuation: the three new alerting shapes at 100× —
-    // each is a scan + bucket-grain frame, so the curves should stay
-    // scan-bound like ts_avg's (the detectors' 100 TB viability claim)
-    "ts_cusum" -> SparkEntry.queries("ts_cusum"),
-    "ts_burnrate" -> SparkEntry.queries("ts_burnrate"),
-    "ts_bollinger" -> SparkEntry.queries("ts_bollinger"))
+      else graft.operators.Similarity.ivfPqTopK(s, d)))
 
   /** Short codes in the JSON (the compact final line has a byte
     * budget); the full reasons are printed as a comment line by
@@ -679,7 +606,7 @@ object Bench {
     * no-silent-caps policy exists to prevent.
     */
   private def scaleRows(spark: SparkSession, sfDir: String, factor: Int,
-                        entries: Seq[Entry], tables: Seq[String])
+                        entries: Seq[ScaleEntry], tables: Seq[String])
       : Seq[ScaleRow] = {
     sectionHygiene(spark)
     val dirN = ScaleData.ensure(spark, sfDir, factor, tables = tables)
@@ -701,12 +628,7 @@ object Bench {
         var err: Option[String] = None
         val (sec, tel) = legTelemetry(tally) {
           try { once(); math.min(once(), once()) }
-          catch { case e: Throwable =>
-            err = Some((e.getClass.getSimpleName + ": " +
-              Option(e.getMessage).getOrElse("")).take(160)
-              .replaceAll("[\"\\\\\\p{Cntrl}]", " "))
-            -1.0
-          }
+          catch { case e: Throwable => err = Some(errMsg(e, 160)); -1.0 }
         }
         System.gc()
         ScaleLeg(sec, err, tel)
@@ -730,10 +652,8 @@ object Bench {
   private def lshCountsJson(spark: SparkSession, sfDir: String): String = {
     sectionHygiene(spark)
     val dir10 = ScaleData.ensure(spark, sfDir, 10, tables = ScaleData.AllTables)
-    val legs100 =
-      if (sys.env.contains("SPARK_GRAFT_SKIP_SCALE100")) Nil
-      else Seq("x100" -> ScaleData.ensure(spark, sfDir, 100,
-        tables = Seq("documents", "embeddings", "events")))
+    val legs100 = Seq("x100" -> ScaleData.ensure(spark, sfDir, 100,
+      tables = Seq("documents", "embeddings", "events")))
     def cell(op: String, dir: String): String =
       try {
         val (c, v) = graft.operators.Dedup.lshStats(spark, dir, op)
@@ -816,11 +736,7 @@ object Bench {
         s""""join16_sec":${fmt(w16, 2)},"join8_sec":${fmt(w8, 2)},""" +
         s""""est_full_sec":${fmt(estFull, 2)}}"""
     } catch {
-      case e: Throwable =>
-        val msg = (e.getClass.getSimpleName + ": " +
-          Option(e.getMessage).getOrElse("")).take(120)
-          .replaceAll("[\"\\\\\\p{Cntrl}]", " ")
-        s"""{"error":"$msg"}"""
+      case e: Throwable => errJson(e)
     }
 
   /** The r10 verdict's dedup_minhash 100× adjudication (item 3): the
@@ -877,9 +793,7 @@ object Bench {
       s"""{"max_exact_group":$maxGroup,"collapse_gate":$gate,""" +
         s""""routed":"$routed","runs":[${runs.mkString(",")}]}"""
     } catch {
-      case e: Throwable =>
-        s"""{"error":"${jstr((e.getClass.getSimpleName + ": " +
-          Option(e.getMessage).getOrElse("")).take(120))}"}"""
+      case e: Throwable => errJson(e)
     } finally {
       spark.listenerManager.unregister(plans)
       spark.sparkContext.removeSparkListener(tally)
@@ -931,7 +845,7 @@ object Bench {
       def n(pat: String) = pat.r.findAllMatchIn(p).size
       if (p.isEmpty) """{"captured":false}"""
       else
-        s"""{"fn":"${jstr(fn)}",""" +
+        s"""{"fn":${jsonString(fn)},""" +
           s""""exchanges":${n("Exchange (hash|range|single|rebalance)")},""" +
           s""""bcast":${n("BroadcastExchange")},""" +
           s""""smj":${n("SortMergeJoin")},"shj":${n("ShuffledHashJoin")},""" +
@@ -1045,9 +959,7 @@ object Bench {
         s"""${cell(compSec, compTel).drop(1)},""" +
         s""""pipeline":${cell(pipeSec, pipeTel)}}"""
     } catch {
-      case e: Throwable =>
-        s"""{"error":"${jstr((e.getClass.getSimpleName + ": " +
-          Option(e.getMessage).getOrElse("")).take(120))}"}"""
+      case e: Throwable => errJson(e)
     } finally {
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmpP))
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmpC))
@@ -1083,8 +995,7 @@ object Bench {
             if (op.startsWith("text_")) TextAnalysis.incrementalStats(spark, dir)
             else Dedup.incrementalStats(spark, dir, op)
           s"""{"delta_rows":$d,"index_rows":$i}"""
-        } catch { case e: Throwable =>
-          s"""{"error":"${jstr(e.getClass.getSimpleName)}"}""" }
+        } catch { case e: Throwable => errJson(e) }
       // each op's counts at the dirs its timed curve actually visits
       val counts = Seq(
         "dedup_exact_incremental" -> Seq("base" -> sfDir, "x10" -> dir10),
@@ -1121,9 +1032,7 @@ object Bench {
           s""""x100_mod1000":${leg(dir100, 1000)}}"""
       s"""{"counts":$counts,"minhash_fixed_delta":$fixed}"""
     } catch {
-      case e: Throwable =>
-        s"""{"error":"${jstr((e.getClass.getSimpleName + ": " +
-          Option(e.getMessage).getOrElse("")).take(120))}"}"""
+      case e: Throwable => errJson(e)
     } finally spark.sparkContext.removeSparkListener(tally)
   }
 
@@ -1155,9 +1064,7 @@ object Bench {
       val gram10 = side(StreamingVocab.ensureGramStreamed(spark, dir10))
       s"""{"vocab":$vocab,"gram":$gram,"gram_x10":$gram10}"""
     } catch {
-      case e: Throwable =>
-        s"""{"error":"${jstr((e.getClass.getSimpleName + ": " +
-          Option(e.getMessage).getOrElse("")).take(120))}"}"""
+      case e: Throwable => errJson(e)
     }
 
   /** The dup-gram TRIO sharing measurement (r10 verdict item 6):
@@ -1243,9 +1150,7 @@ object Bench {
         s""""gram_codec":"zstd","gram_bytes":$gramBytes,""" +
         s""""from_shared":{${shared.mkString(",")}}}"""
     } catch {
-      case e: Throwable =>
-        s"""{"error":"${jstr((e.getClass.getSimpleName + ": " +
-          Option(e.getMessage).getOrElse("")).take(120))}"}"""
+      case e: Throwable => errJson(e)
     } finally {
       // the multi-GB gram frame must not orphan under workDir when a
       // shared leg throws (r11 ADVICE)
@@ -1262,8 +1167,8 @@ object Bench {
     }
     // a -1 leg always has its exception string here (never a bare -1)
     val errs = rows.flatMap(r =>
-      r.base.err.map(e => s""""${r.name}_base":"$e"""") ++
-        r.xN.err.map(e => s""""${r.name}_xN":"$e""""))
+      r.base.err.map(e => s""""${r.name}_base":${jsonString(e)}""") ++
+        r.xN.err.map(e => s""""${r.name}_xN":${jsonString(e)}"""))
       .mkString("{", ",", "}")
     val tel = rows.map(r =>
       s""""${r.name}":{"base":${r.base.tel},"xN":${r.xN.tel}}""")
@@ -1390,11 +1295,7 @@ object Bench {
         s""""verified_shuffle_hash":$nShj,""" +
         s""""default_at_this_scale":"shuffle_hash"}}"""
     } catch {
-      case e: Throwable =>
-        val msg = (e.getClass.getSimpleName + ": " +
-          Option(e.getMessage).getOrElse("")).take(120)
-          .replaceAll("[\"\\\\\\p{Cntrl}]", " ")
-        s"""{"error":"$msg"}"""
+      case e: Throwable => errJson(e)
     } finally spark.sparkContext.removeSparkListener(tally)
   }
 
@@ -1411,10 +1312,9 @@ object Bench {
   private def semanticCountsJson(spark: SparkSession, sfDir: String): String = {
     sectionHygiene(spark)
     val dir10 = ScaleData.ensure(spark, sfDir, 10, tables = ScaleData.AllTables)
-    val legs = Seq("base" -> sfDir, "x10" -> dir10) ++
-      (if (sys.env.contains("SPARK_GRAFT_SKIP_SCALE100")) Nil
-       else Seq("x100" -> ScaleData.ensure(spark, sfDir, 100,
-         tables = Seq("documents", "embeddings", "events"))))
+    val legs = Seq("base" -> sfDir, "x10" -> dir10,
+      "x100" -> ScaleData.ensure(spark, sfDir, 100,
+        tables = Seq("documents", "embeddings", "events")))
     legs.map { case (k, d) =>
       val cell =
         try {
@@ -1441,10 +1341,9 @@ object Bench {
     sectionHygiene(spark)
     val nprobes = Seq(1, 2, 4, 8, 16)
     val dir10 = ScaleData.ensure(spark, sfDir, 10, tables = ScaleData.AllTables)
-    val legs = Seq("base" -> sfDir, "x10" -> dir10) ++
-      (if (sys.env.contains("SPARK_GRAFT_SKIP_SCALE100")) Nil
-       else Seq("x100" -> ScaleData.ensure(spark, sfDir, 100,
-         tables = Seq("documents", "embeddings", "events"))))
+    val legs = Seq("base" -> sfDir, "x10" -> dir10,
+      "x100" -> ScaleData.ensure(spark, sfDir, 100,
+        tables = Seq("documents", "embeddings", "events")))
     legs.map { case (k, d) =>
       val cell =
         try {
@@ -1463,11 +1362,7 @@ object Bench {
             .mkString(",")
           s"""{"n":$n,"nlist":$nlist,"sec":${fmt(sec, 2)},"mean_recall":{$curve}}"""
         } catch {
-          case e: Throwable =>
-            val msg = (e.getClass.getSimpleName + ": " +
-              Option(e.getMessage).getOrElse("")).take(120)
-              .replaceAll("[\"\\\\\\p{Cntrl}]", " ")
-            s"""{"error":"$msg"}"""
+          case e: Throwable => errJson(e)
         }
       s""""$k":$cell"""
     }.mkString("{", ",", "}")
@@ -1500,9 +1395,7 @@ object Bench {
       s"""{"broadcast_sec":${fmt(bSec, 2)},"shuffle_hash_sec":${fmt(sSec, 2)},""" +
         s""""rows_broadcast":$bN,"rows_shuffle_hash":$sN,"rows_equal":${bN == sN}}"""
     } catch {
-      case e: Throwable =>
-        s"""{"error":"${jstr((e.getClass.getSimpleName + ": " +
-          Option(e.getMessage).getOrElse("")).take(120))}"}"""
+      case e: Throwable => errJson(e)
     }
 
   /** Spark's RUNTIME bloom-filter join pruning (injected semi-join
@@ -1553,9 +1446,7 @@ object Bench {
           "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold")
       }
     } catch {
-      case e: Throwable =>
-        s"""{"error":"${jstr((e.getClass.getSimpleName + ": " +
-          Option(e.getMessage).getOrElse("")).take(120))}"}"""
+      case e: Throwable => errJson(e)
     }
 
   /** The 100× q5 leg over the layout that answers it: rounds 3–8
@@ -1635,11 +1526,7 @@ object Bench {
       } finally spark.conf
         .unset("spark.sql.legacy.bucketedTableScan.outputOrdering")
     } catch {
-      case e: Throwable =>
-        val msg = (e.getClass.getSimpleName + ": " +
-          Option(e.getMessage).getOrElse("")).take(120)
-          .replaceAll("[\"\\\\\\p{Cntrl}]", " ")
-        s"""{"error":"$msg"}"""
+      case e: Throwable => errJson(e)
     }
 
   /** Parallel-scaling evidence at 100× (r12 verdict item 2): the
@@ -1675,15 +1562,7 @@ object Bench {
         spark.stop()
         SparkSession.clearActiveSession()
         SparkSession.clearDefaultSession()
-        val lospark = SparkSession.builder()
-          .master(s"local[$lo]")
-          .config("spark.sql.shuffle.partitions", lo)
-          .config("spark.sql.session.timeZone", "UTC")
-          .config("spark.ui.enabled", "false")
-          .config("spark.sql.codegen.cache.maxEntries", "10000")
-          .config(graft.Conf.WorkDirKey, "/root/repo/out")
-          .getOrCreate()
-        lospark.sparkContext.setLogLevel("WARN")
+        val lospark = Harness.session(lo)
         try {
           val legs = names.map { n =>
             val fn = SparkEntry.queries(n)
@@ -1700,10 +1579,7 @@ object Bench {
               val speedup = if (h > 0 && timed > 0) timed / h else -1.0
               s""""$n":{"high_sec":${fmt(h, 2)},"low_sec":${fmt(timed, 2)},""" +
                 s""""low_warm_sec":${fmt(warm, 2)},"speedup":${fmt(speedup, 2)}}"""
-            } catch { case e: Throwable =>
-              s""""$n":{"error":"${jstr((e.getClass.getSimpleName + ": " +
-                Option(e.getMessage).getOrElse("")).take(120))}"}"""
-            }
+            } catch { case e: Throwable => s""""$n":${errJson(e)}""" }
             System.gc()
             cell
           }
@@ -1713,9 +1589,7 @@ object Bench {
         } finally lospark.stop()
       }
     } catch {
-      case e: Throwable =>
-        s"""{"error":"${jstr((e.getClass.getSimpleName + ": " +
-          Option(e.getMessage).getOrElse("")).take(120))}"}"""
+      case e: Throwable => errJson(e)
     }
 
   /** `ts_rollup_avg`'s scale legs with BUILD and QUERY separated: the
@@ -1832,12 +1706,7 @@ object Bench {
         graft.operators.Dedup.minhashLshFrame(planted, bands = 2, salt = salt)
           .write.format("noop").mode("overwrite").save()
         (System.nanoTime() - t0) / 1e9
-      } catch { case e: Throwable =>
-        err = (e.getClass.getSimpleName + ": " +
-          Option(e.getMessage).getOrElse("")).take(160)
-          .replaceAll("[\"\\\\\\p{Cntrl}]", " ")
-        -1.0
-      }
+      } catch { case e: Throwable => err = errMsg(e, 160); -1.0 }
       // listener events are posted asynchronously; give the bus a beat
       Thread.sleep(1000)
       spark.sparkContext.removeSparkListener(listener)
@@ -1874,7 +1743,7 @@ object Bench {
           s"""{"stage":$sid,"max_ms":$mx,"med_ms":$md,"tasks":$n,"ratio":${fmt(mx.toDouble / md, 1)}}"""
         }.getOrElse("{}")
       System.gc()
-      val errField = if (err != null) s""","error":"$err"""" else ""
+      val errField = if (err != null) s""","error":${jsonString(err)}""" else ""
       s"""{"sec":${fmt(res, 2)},"max_task_ms":$maxMs,"med_task_ms":$medMs,"tasks":${all.size},"most_skewed":$mostSkewed,"top_stages":$stages$errField}"""
     }
     val prevThresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
@@ -1912,7 +1781,7 @@ object Bench {
   private def ingestBench(spark: SparkSession, sfDir: String): (String, String) = {
     sectionHygiene(spark)
     import org.apache.spark.sql.functions._
-    val base = "/root/repo/out/bench_ingest"
+    val base = graft.Conf.workDir(spark) + "/bench_ingest"
     def clean(p: String): Unit =
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p))
     def timed(f: => Unit): Double = {

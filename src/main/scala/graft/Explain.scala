@@ -1,25 +1,14 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-audit tool: `runMain graft.Explain <query>[,<query>...] [sfDir]`
   * prints each query's formatted physical plan and warm/steady timings.
   */
 object Explain {
   def main(args: Array[String]): Unit = {
     val names = args.headOption.map(_.split(",").toSeq)
-      .getOrElse(SparkEntry.queries.keys.toSeq.sorted)
+      .getOrElse(SparkEntry.entries.map(_.name).sorted)
     val sfDir = args.drop(1).headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config(graft.Conf.WorkDirKey, "/root/repo/out")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     names.foreach { name =>
       val df = SparkEntry.queries(name)(spark, sfDir)
       println(s"===== $name =====")

@@ -1,10 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Golden-artifact generator: writes `SparkEntry.queries(name)` output
-  * at sf0.01 to `/root/repo/golden/<name>` as one parquet file, which
-  * `SparkEntry.oracleSql` then reads back via DuckDB `read_parquet`.
+  * at sf0.01 to `SparkEntry.GoldenDir/<name>` as one parquet file, which
+  * the entry's oracle SQL then reads back via DuckDB `read_parquet`.
   *
   * This is the oracle mechanism for queries whose values hinge on
   * xxhash64 / byte-level parsing / trained index state that DuckDB
@@ -21,38 +19,21 @@ import org.apache.spark.sql.SparkSession
   * and total-order rank tiebreaks. Regenerate (run this main) ONLY on
   * an intentional kernel-contract change, then re-run the suite —
   * a stale golden fails Verify rather than silently passing.
+  *
+  * Arguments name the entries to write; with none, every entry tagged
+  * [[SparkEntry.Tag.Golden]] is written.
   */
 object GenGolden {
-
-  /** The golden-oracle set: every rows-only entry plus the two round-3
-    * originals.
-    */
-  val names: Seq[String] = Seq(
-    "dedup_simhash", "mm_meta", "mm_framesample", "mm_resize", "mm_phash",
-    "mm_audio_stats", "mm_video_frames",
-    "dedup_minhash", "dedup_minhash_incremental", "dedup_minhash_calibration",
-    "dedup_embedding_lsh", "dedup_embedding_lsh_incremental",
-    "dedup_semantic",
-    "ann_lsh", "ann_lsh_multiprobe", "ann_ivf_kmeans", "ann_cluster_stats", "ann_pq",
-    "ann_ivfpq", "dedup_pipeline")
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config(graft.Conf.WorkDirKey, "/root/repo/out")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val targets = if (args.nonEmpty) args.toSeq else names
+    val spark = Harness.session()
+    val targets =
+      if (args.nonEmpty) args.toSeq
+      else SparkEntry.entries.filter(_.tags(SparkEntry.Tag.Golden)).map(_.name)
     targets.foreach { name =>
       SparkEntry.queries(name)(spark, sfDir)
         .coalesce(1).write.mode("overwrite")
-        .parquet(s"/root/repo/golden/$name")
+        .parquet(s"${SparkEntry.GoldenDir}/$name")
       println(s"golden: $name written")
     }
     spark.stop()

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 /** Replicated scale-up of an sf dir for scaling-curve measurement:
   * `factor`× the rows of the heavy-family tables, written once per
-  * (source content, factor) under out/ and reused.
+  * (source content, factor) under the work dir and reused.
   *
   * Copies are content-perturbed so the scaled corpus keeps the
   * original's *similarity structure* instead of planting `factor`-sized
@@ -49,12 +49,14 @@ object ScaleData {
     * the missing ones — per-table `_SUCCESS` markers make the cache
     * incremental, so a 100× run that needs only documents + embeddings
     * + events never pays for a 60M-row lineitem write it won't read.
+    * The copies live under `base`, by default the session's work dir
+    * ([[Conf.workDir]]).
     */
   def ensure(spark: SparkSession, sfDir: String, factor: Int = 10,
-             base: String = "/root/repo/out",
+             base: String = "",
              tables: Seq[String] = AllTables): String = {
     val fp = graft.tsdb.Ingest.contentFingerprint(sfDir)
-    val dir = s"$base/scale${factor}_v${GenVersion}_${Integer.toHexString(sfDir.hashCode)}_$fp"
+    val dir = s"${Conf.resolveWorkDir(spark, base)}/scale${factor}_v${GenVersion}_${Integer.toHexString(sfDir.hashCode)}_$fp"
     tables.foreach { t =>
       if (!java.nio.file.Files.exists(
           java.nio.file.Paths.get(dir, s"$t.parquet", "_SUCCESS")))

@@ -495,10 +495,12 @@ final class Db(val frame: DataFrame) {
           lit(s") for metric '$metric'; widen widthNs or narrow the filter")))))
     val buckets = bounds
       .select(explode(expr(s"sequence(b_lo, b_hi, ${widthNs}L)")).as("bucket_start"))
-    val spine = series.crossJoin(buckets)
-    val cond = tagColumns.map(c => spine(c) <=> present(c))
-      .foldLeft(spine("bucket_start") === present("bucket_start"))(_ && _)
-    spine.join(present, cond, "left_anti")
+    // both sides derive from `pts`, so they share attributes: the
+    // aliases let the condition name each side explicitly
+    val spine = series.crossJoin(buckets).as("spine")
+    val cond = tagColumns.map(c => col(s"spine.$c") <=> col(s"present.$c"))
+      .foldLeft(col("spine.bucket_start") === col("present.bucket_start"))(_ && _)
+    spine.join(present.as("present"), cond, "left_anti")
   }
 
   /** Series churn: per bucket, how many series were BORN (first-ever

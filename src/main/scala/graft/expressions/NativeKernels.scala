@@ -61,7 +61,9 @@ object NativeKernels {
   /** 64-bit SimHash of a token array.
     *
     * Equivalent HOF: per-token `xxhash64`, ±1 vote per bit
-    * (`(shiftright(h, b) & 1) = 1`), bit set iff vote sum > 0.
+    * (`(shiftright(h, b) & 1) = 1`), bit set iff vote sum > 0. The vote
+    * is branchless (`2·bit − 1`): the bits of a hash are coin flips, so
+    * an `if` per bit mispredicts about half the time.
     */
   def simhash(tokens: ArrayData): Long = {
     val votes = new Array[Int](64)
@@ -71,7 +73,7 @@ object NativeKernels {
       val h = XxHash64Function.hash(tokens.getUTF8String(j), StringType, 42L)
       var b = 0
       while (b < 64) {
-        if (((h >> b) & 1L) == 1L) votes(b) += 1 else votes(b) -= 1
+        votes(b) += ((h >>> b).toInt & 1) * 2 - 1
         b += 1
       }
       j += 1
@@ -432,11 +434,11 @@ object NativeKernels {
     * way, matching the HOF formulation over cast-to-double arrays.
     */
   def lshBucket(v: ArrayData, planes: Int, isFloat: Boolean): Long = {
-    val n = v.numElements()
+    val dots = planeDots(v, planes, isFloat)
     var bucket = 0L
     var j = 0
     while (j < planes) {
-      if (planeSign(v, n, j, isFloat) > 0) bucket += (1L << j)
+      if (dots(j) > 0) bucket += (1L << j)
       j += 1
     }
     bucket
@@ -449,14 +451,14 @@ object NativeKernels {
     * random-hyperplane signatures.
     */
   def lshBandBuckets(v: ArrayData, rowsPerBand: Int, bands: Int, isFloat: Boolean): ArrayData = {
-    val n = v.numElements()
+    val dots = planeDots(v, rowsPerBand * bands, isFloat)
     val out = new Array[Long](bands)
     var b = 0
     while (b < bands) {
       var bucket = 0L
       var r = 0
       while (r < rowsPerBand) {
-        if (planeSign(v, n, b * rowsPerBand + r, isFloat) > 0) bucket += (1L << r)
+        if (dots(b * rowsPerBand + r) > 0) bucket += (1L << r)
         r += 1
       }
       out(b) = bucket
@@ -577,33 +579,84 @@ object NativeKernels {
     new GenericArrayData(out)
   }
 
-  /** Hyperplane sign rows are a fixed function of (plane, dim) — cache
-    * them per JVM so the per-row signature is a pure multiply-add loop
-    * instead of two xxhash64 chains per (plane, dim) element (which
-    * dominated the banded-LSH scan: planes × dim hashes per row).
-    * Multiplying by cached ±1.0 is bit-identical to the conditional
-    * add/subtract of the hash-per-element formulation.
+  /** The packed sign matrix of `planes` hyperplanes over `dim`
+    * dimensions: `signs(j*dim + d)` is plane j's ±1.0 for dimension d.
+    * Signs are a fixed function of (plane, dim), so each JVM builds one
+    * matrix per (planes, dim) and every row fetches it with one lookup:
+    * the per-row signature is then a pure multiply-add loop instead of
+    * two xxhash64 chains per (plane, dim) element. Multiplying by ±1.0
+    * is bit-identical to the conditional add/subtract of the
+    * hash-per-element formulation.
     */
-  private val planeSignCache =
-    new java.util.concurrent.ConcurrentHashMap[(Int, Int), Array[Double]]()
+  private val signMatrixCache =
+    new java.util.concurrent.ConcurrentHashMap[java.lang.Long, Array[Double]]()
 
-  private def planeSigns(plane: Int, dim: Int): Array[Double] =
-    planeSignCache.computeIfAbsent((plane, dim), { case (j, n) =>
-      val hj = XxHash64Function.hash(j, IntegerType, 42L)
-      Array.tabulate(n) { d =>
-        if ((XxHash64Function.hash(d, IntegerType, hj) & 1L) == 1L) 1.0 else -1.0
+  private def signMatrix(planes: Int, dim: Int): Array[Double] =
+    signMatrixCache.computeIfAbsent((planes.toLong << 32) | dim, _ => {
+      val signs = new Array[Double](planes * dim)
+      var j = 0
+      while (j < planes) {
+        val hj = XxHash64Function.hash(j, IntegerType, 42L)
+        var d = 0
+        while (d < dim) {
+          signs(j * dim + d) =
+            if ((XxHash64Function.hash(d, IntegerType, hj) & 1L) == 1L) 1.0 else -1.0
+          d += 1
+        }
+        j += 1
       }
+      signs
     })
 
-  private def planeSign(v: ArrayData, n: Int, plane: Int, isFloat: Boolean): Double = {
-    val signs = planeSigns(plane, n)
-    var s = 0.0
+  /** `dots(j)` = Σ_d v(d)·sign(j, d), each plane a left fold in `d`
+    * order (so signs match the one-plane-at-a-time formulation bit for
+    * bit). The vector is read into a `double[]` once, and four planes
+    * accumulate side by side, which keeps four independent add chains
+    * in flight per element instead of one.
+    */
+  private def planeDots(v: ArrayData, planes: Int, isFloat: Boolean): Array[Double] = {
+    val n = v.numElements()
+    val x = new Array[Double](n)
     var d = 0
     while (d < n) {
-      val x = if (isFloat) v.getFloat(d).toDouble else v.getDouble(d)
-      s += x * signs(d)
+      x(d) = if (isFloat) v.getFloat(d).toDouble else v.getDouble(d)
       d += 1
     }
-    s
+    val m = signMatrix(planes, n)
+    val dots = new Array[Double](planes)
+    var j = 0
+    while (j + 4 <= planes) {
+      val o0 = j * n
+      val o1 = o0 + n
+      val o2 = o1 + n
+      val o3 = o2 + n
+      var s0 = 0.0
+      var s1 = 0.0
+      var s2 = 0.0
+      var s3 = 0.0
+      d = 0
+      while (d < n) {
+        val xd = x(d)
+        s0 += xd * m(o0 + d)
+        s1 += xd * m(o1 + d)
+        s2 += xd * m(o2 + d)
+        s3 += xd * m(o3 + d)
+        d += 1
+      }
+      dots(j) = s0
+      dots(j + 1) = s1
+      dots(j + 2) = s2
+      dots(j + 3) = s3
+      j += 4
+    }
+    while (j < planes) {
+      val o = j * n
+      var s = 0.0
+      d = 0
+      while (d < n) { s += x(d) * m(o + d); d += 1 }
+      dots(j) = s
+      j += 1
+    }
+    dots
   }
 }

@@ -529,17 +529,21 @@ object Dedup {
     GraftFunctions.register(docsDf.sparkSession)
     require(numHashes % bands == 0, "bands must divide numHashes")
     val banded = bandFrame(docsDf, numHashes, bands)
-    // distinct first (multi-band matches), then re-spread: the pair
-    // stream is ~16 bytes/row but costs a full set-intersection each in
-    // the verify — AQE's BYTE-based coalescing shrinks it to a
-    // handful of partitions (measured: 3 tasks carrying the whole
-    // verify at 10×, flat max≈median — serialized, not skewed) and
-    // byte-cheap/CPU-heavy stages must pin their parallelism explicitly
+    // spread by the pair ids at a pinned count, then distinct (multi-band
+    // matches) with no second exchange: the pair stream is ~16 bytes/row
+    // but costs a full set-intersection each in the verify — AQE's
+    // BYTE-based coalescing shrinks it to a handful of partitions
+    // (measured: 3 tasks carrying the whole verify at 10×, flat
+    // max≈median — serialized, not skewed) and byte-cheap/CPU-heavy
+    // stages must pin their parallelism explicitly. Hashing on the ids
+    // (not a column-less round-robin, which sorts every row first)
+    // already clusters the duplicates the distinct removes
     hotSaltedSelfJoin(banded, Seq("band", "band_hash"), "doc_id",
       salt, hotMin)
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
+      .repartition(docsDf.sparkSession.sparkContext.defaultParallelism,
+        col("doc_a"), col("doc_b"))
       .distinct()
-      .repartition(docsDf.sparkSession.sparkContext.defaultParallelism)
   }
 
   /** Materialize the persisted LSH band index for `dir`'s INDEX docs
@@ -629,8 +633,9 @@ object Dedup {
     val cand = cross.unionByName(intra)
       .select(least(col("doc_a"), col("doc_b")).as("doc_a"),
         greatest(col("doc_a"), col("doc_b")).as("doc_b"))
+      .repartition(spark.sparkContext.defaultParallelism,
+        col("doc_a"), col("doc_b"))
       .distinct()
-      .repartition(spark.sparkContext.defaultParallelism)
       .persist()
     // shingle ONLY candidate-involved docs: the full path pays the
     // kernel over the whole corpus because ~every doc appears in some
@@ -1294,7 +1299,22 @@ object Dedup {
   /** The cosine verify join over a pre-built candidate-pair frame —
     * exposed so a benchmark can materialize the candidates once and
     * time the verify phase as its own wall (Bench's `lsh_phases`
-    * section). Payload fetch: the side is only (vec_id, v, nrm) —
+    * section).
+    *
+    * The candidate ids are made distinct BEFORE the payload joins, so
+    * a pair found in k bands is verified once; when the candidates
+    * arrive hash-partitioned on (vec_a, vec_b), as [[embeddingCandFrame]]
+    * emits them, that distinct needs no exchange of its own. The cosine
+    * is a function of the pair, so the output equals verifying every
+    * candidate and taking the distinct of the thresholded rows.
+    * Spark's `round(x, 6)` costs a `BigDecimal` per row, so it runs only
+    * on the pairs whose unrounded cosine is ≥ `threshold - 1e-6`:
+    * rounding moves a value by at most 5e-7, so no pair that the
+    * rounded threshold keeps is dropped there. Spark orders NaN above
+    * every double, so a NaN cosine passes the prefilter too (a
+    * zero-norm vector fails the division under ANSI mode either way).
+    *
+    * Payload fetch: the side is only (vec_id, v, nrm) —
     * broadcast it while the corpus stays under
     * [[BroadcastVerifyMaxRows]] (measured, not guessed: at 400k rows
     * the broadcast verify cost 97 s / 39 GB peak heap at 100× while
@@ -1312,33 +1332,39 @@ object Dedup {
                                           broadcastVerify: Boolean = true): DataFrame = {
     val side0 = e.select(col("vec_id"), col("v"), col("nrm"))
     val side = if (broadcastVerify) broadcast(side0) else side0.hint("shuffle_hash")
-    cand
+    cand.select(col("vec_a"), col("vec_b")).distinct()
       .join(side.as("sa"), col("vec_a") === col("sa.vec_id"))
       .join(side.as("sb"), col("vec_b") === col("sb.vec_id"))
       .select(col("vec_a"), col("vec_b"),
-        round(call_function("graft_dot", col("sa.v"), col("sb.v"))
-          / (col("sa.nrm") * col("sb.nrm")), 6).as("cos"))
+        (call_function("graft_dot", col("sa.v"), col("sb.v"))
+          / (col("sa.nrm") * col("sb.nrm"))).as("raw"))
+      .where(col("raw") >= threshold - 1e-6)
+      .select(col("vec_a"), col("vec_b"), round(col("raw"), 6).as("cos"))
       .where(col("cos") >= threshold)
-      .distinct()
   }
 
   /** [[embeddingCosineLshFrame]]'s candidate pairs BEFORE cosine
     * verification — exposed for benchmark candidate-volume evidence
     * like [[minhashCandFrame]]. Counted WITH multi-band multiplicity
-    * (each row is one verify-kernel invocation; the production path's
-    * exactly-once `distinct` runs on the thresholded output).
+    * (Bench's `lsh_counts` counts these rows); [[embeddingVerifyFrame]]
+    * makes the ids distinct before it fetches payloads, so each pair
+    * is verified once.
     *
     * Banded rows are ids-only (vec_id, band, bucket): the self-join
     * shuffles the minimum possible volume — bands × ~24 bytes per
     * vector — and payloads are fetched per CANDIDATE, not replicated
     * per band (carrying v on banded rows multiplies shuffle bytes by
     * the band count and spills at scale). A pair matching in k bands
-    * is verified k times (measured multiplicity ~1.07 at the planned
+    * appears k times (measured multiplicity ~1.07 at the planned
     * depth — banding makes multi-band agreement rare for non-dups).
     * Ids-only candidates are byte-cheap but CPU-heavy downstream (a
     * 64-dim dot product each): re-spread to cluster parallelism so
     * AQE's byte-based coalescing can't serialize the verify stage
-    * (same finding as minhashLshFrame; one tiny extra shuffle).
+    * (same finding as minhashLshFrame; one tiny extra shuffle). The
+    * re-spread hashes on (vec_a, vec_b): a column-less `repartition(n)`
+    * is round-robin, which sorts every row before the shuffle, and the
+    * hash partitioning is what lets the verify's distinct run without
+    * an exchange.
     */
   private[graft] def embeddingCandFrame(e: DataFrame, rowsPerBand: Int,
                                         bands: Int, salt: Int = 1,
@@ -1347,7 +1373,8 @@ object Dedup {
     val banded = embBandFrame(e, rowsPerBand, bands)
     hotSaltedSelfJoin(banded, Seq("band", "bucket"), "vec_id", salt, hotMin)
       .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"))
-      .repartition(e.sparkSession.sparkContext.defaultParallelism)
+      .repartition(e.sparkSession.sparkContext.defaultParallelism,
+        col("vec_a"), col("vec_b"))
   }
 
   /** The sign-LSH banded rows `(vec_id, band, bucket)` — the embedding
@@ -1440,14 +1467,15 @@ object Dedup {
     val intra = hotSaltedSelfJoin(deltaBands, Seq("band", "bucket"),
         "vec_id", 1, 128)
       .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"))
-    // multiplicity candidates, like the full path; the verify's
-    // exactly-once distinct runs on the thresholded output. Cached
+    // multiplicity candidates, like the full path, hash-spread on the
+    // pair ids so the verify's distinct needs no exchange. Cached
     // once (persist, not checkpoint — see [[minhashIncrementalFrame]]):
     // the frame feeds both the verify join and the ids restriction
     val cand = cross.unionByName(intra)
       .select(least(col("vec_a"), col("vec_b")).as("vec_a"),
         greatest(col("vec_a"), col("vec_b")).as("vec_b"))
-      .repartition(e.sparkSession.sparkContext.defaultParallelism)
+      .repartition(e.sparkSession.sparkContext.defaultParallelism,
+        col("vec_a"), col("vec_b"))
       .persist()
     // fetch payloads ONLY for candidate-involved vectors: the r8/r9
     // broadcast-verify lesson applied at the source — the payload

@@ -946,9 +946,11 @@ object TextAnalysis {
         posexplode(col("wl")).as(Seq("p0", "word")))
       .select(col("doc_id"), col("n_words"),
         (col("p0") + 1).cast("long").as("pos"), col("word"))
-    val cut = words.join(spans,
-      words("doc_id") === spans("doc_id") &&
-        col("pos") >= col("start_word") && col("pos") <= col("end_word"),
+    // both sides derive from `d`, so they share attributes: the
+    // aliases let the condition name each side explicitly
+    val cut = words.as("w").join(spans.as("s"),
+      col("w.doc_id") === col("s.doc_id") &&
+        col("w.pos") >= col("s.start_word") && col("w.pos") <= col("s.end_word"),
       "left_anti")
     val rebuilt = cut
       .groupBy(col("doc_id"))

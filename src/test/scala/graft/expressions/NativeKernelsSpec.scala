@@ -1,7 +1,10 @@
 package graft.expressions
 
 import graft.SparkSpec
+import org.apache.spark.sql.catalyst.expressions.XxHash64Function
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Every native kernel must be bit-identical to the interpreted HOF
   * formulation it replaced (the round-1 implementations, which were
@@ -11,6 +14,23 @@ import org.apache.spark.sql.functions._
 class NativeKernelsSpec extends SparkSpec {
 
   private val P = NativeKernels.P
+
+  /** The interpreted SimHash formulation `graft_simhash` replaced: per
+    * token a ±1 vote per bit, bit b set iff its vote sum is > 0.
+    */
+  private val SimhashHof =
+    """aggregate(
+      |  transform(sequence(0, 63), b -> IF(element_at(
+      |    aggregate(
+      |      transform(split(text, ' '), t -> xxhash64(t)),
+      |      array_repeat(CAST(0 AS BIGINT), 64),
+      |      (acc, h) -> zip_with(acc,
+      |        transform(sequence(0, 63),
+      |          bb -> IF((shiftright(h, bb) & 1) = 1,
+      |                   CAST(1 AS BIGINT), CAST(-1 AS BIGINT))),
+      |        (x, y) -> x + y)), b + 1) > 0,
+      |    shiftleft(CAST(1 AS BIGINT), b), CAST(0 AS BIGINT))),
+      |  CAST(0 AS BIGINT), (x, y) -> x + y)""".stripMargin
 
   private def docs = {
     GraftFunctions.register(spark)
@@ -78,21 +98,30 @@ class NativeKernelsSpec extends SparkSpec {
     val out = docs
       .select(col("doc_id"),
         call_function("graft_simhash", split(col("text"), " ")).as("native"),
-        expr(
-          """aggregate(
-            |  transform(sequence(0, 63), b -> IF(element_at(
-            |    aggregate(
-            |      transform(split(text, ' '), t -> xxhash64(t)),
-            |      array_repeat(CAST(0 AS BIGINT), 64),
-            |      (acc, h) -> zip_with(acc,
-            |        transform(sequence(0, 63),
-            |          bb -> IF((shiftright(h, bb) & 1) = 1,
-            |                   CAST(1 AS BIGINT), CAST(-1 AS BIGINT))),
-            |        (x, y) -> x + y)), b + 1) > 0,
-            |    shiftleft(CAST(1 AS BIGINT), b), CAST(0 AS BIGINT))),
-            |  CAST(0 AS BIGINT), (x, y) -> x + y)""".stripMargin).as("hof"))
+        expr(SimhashHof).as("hof"))
       .limit(50).collect()
     out.foreach(r => assert(r.getLong(1) == r.getLong(2)))
+  }
+
+  test("graft_simhash == vote-loop HOF on even-token (tied) and single-token texts") {
+    import spark.implicits._
+    val texts = Seq("alpha beta", "one two three four", "solo", "", "same same")
+    val out = texts.toDF("text")
+      .select(col("text"),
+        call_function("graft_simhash", split(col("text"), " ")).as("native"),
+        expr(SimhashHof).as("hof"))
+      .collect()
+    out.foreach(r => assert(r.getLong(1) == r.getLong(2), s"text '${r.getString(0)}'"))
+    def h(t: String): Long = XxHash64Function.hash(UTF8String.fromString(t), StringType, 42L)
+    val native = out.map(r => r.getString(0) -> r.getLong(1)).toMap
+    // two tokens tie (vote 0) on every bit where their hashes differ: bit 0
+    val tied = h("alpha") ^ h("beta")
+    assert(tied != 0L)
+    assert((native("alpha beta") & tied) == 0L)
+    assert(native("alpha beta") == (h("alpha") & h("beta")))
+    // one token: every vote is ±1, so the SimHash is the token's hash
+    assert(native("solo") == h("solo"))
+    assert(native("") == h(""))
   }
 
   test("graft_rollhash == aggregate-over-chars HOF") {
@@ -162,6 +191,41 @@ class NativeKernelsSpec extends SparkSpec {
       assert(bands.length == 3)
       (0 until 3).foreach { b =>
         assert(bands(b) == ((flat >> (2 * b)) & 3L))
+      }
+    }
+  }
+
+  /** Band buckets the way the hash-per-element formulation computed
+    * them: plane j's component for dimension d is +x or −x by
+    * `xxhash64(j, d) & 1`, folded left in d order, one plane at a time.
+    */
+  private def lshBandsReference(v: Array[Double], rowsPerBand: Int, bands: Int): Seq[Long] =
+    (0 until bands).map { b =>
+      (0 until rowsPerBand).foldLeft(0L) { (bucket, r) =>
+        val hj = XxHash64Function.hash(b * rowsPerBand + r, IntegerType, 42L)
+        val dot = v.indices.foldLeft(0.0) { (acc, d) =>
+          if ((XxHash64Function.hash(d, IntegerType, hj) & 1L) == 1L) acc + v(d)
+          else acc - v(d)
+        }
+        if (dot > 0) bucket + (1L << r) else bucket
+      }
+    }
+
+  test("graft_lsh_bands == per-element xxhash64(j, d) reference at 15 x 39 and 7 x 3") {
+    // array<float>, and array<double> values no float can hold
+    val frame = embs.select(col("embedding").as("f"),
+      expr("transform(embedding, x -> CAST(x AS DOUBLE) / 3.0)").as("d"))
+    for ((rowsPerBand, bands) <- Seq((15, 39), (7, 3))) {
+      val out = frame.select(col("f"), col("d"),
+        call_function("graft_lsh_bands", col("f"), lit(rowsPerBand), lit(bands)).as("bf"),
+        call_function("graft_lsh_bands", col("d"), lit(rowsPerBand), lit(bands)).as("bd"))
+        .collect()
+      assert(out.nonEmpty)
+      out.foreach { r =>
+        val f = r.getSeq[Float](0).map(_.toDouble).toArray
+        val d = r.getSeq[Double](1).toArray
+        assert(r.getSeq[Long](2) == lshBandsReference(f, rowsPerBand, bands))
+        assert(r.getSeq[Long](3) == lshBandsReference(d, rowsPerBand, bands))
       }
     }
   }

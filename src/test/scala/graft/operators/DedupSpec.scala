@@ -427,6 +427,68 @@ class DedupSpec extends SparkSpec {
     assert(broadcasts >= 2, s"expected >=2 broadcast payload joins, got $broadcasts")
   }
 
+  test("embedding verify == verify-every-candidate-then-distinct, at the rounding edge") {
+    import spark.implicits._
+    graft.expressions.GraftFunctions.register(spark)
+    val t = 0.9
+    // (1, 0) against (c, sqrt(1 - c²)) has cosine c up to the last bits
+    def at(c: Double) = Array(c, math.sqrt(1 - c * c))
+    val vecs = Seq(
+      1L -> Array(1.0, 0.0),
+      2L -> at(0.95),         // clearly kept
+      3L -> at(t - 3e-7),     // rounds up to t: kept
+      4L -> at(t - 6e-7),     // rounds to t - 1e-6: dropped after the prefilter
+      5L -> at(t - 2e-6),     // dropped by the prefilter
+      6L -> Array(0.0, 0.0),  // zero norm: 0/0 under ANSI division
+      7L -> Array(0.0, 1.0))  // orthogonal: dropped
+    val e = vecs.toDF("vec_id", "v")
+      .withColumn("nrm", sqrt(call_function("graft_dot", col("v"), col("v"))))
+    // every candidate three times, as multi-band matches arrive
+    def candOf(pairs: Seq[(Long, Long)]) = Seq.fill(3)(pairs).flatten.toDF("vec_a", "vec_b")
+      .repartition(3, col("vec_a"), col("vec_b"))
+    val cand = candOf(Seq(1L -> 2L, 1L -> 3L, 1L -> 4L, 1L -> 5L, 1L -> 7L, 2L -> 3L))
+    val zeroCand = candOf(Seq(1L -> 2L, 1L -> 6L))
+    for (broadcastVerify <- Seq(true, false)) {
+      val side0 = e.select(col("vec_id"), col("v"), col("nrm"))
+      val side = if (broadcastVerify) broadcast(side0) else side0.hint("shuffle_hash")
+      def reference(cand: org.apache.spark.sql.DataFrame) = cand
+        .join(side.as("sa"), col("vec_a") === col("sa.vec_id"))
+        .join(side.as("sb"), col("vec_b") === col("sb.vec_id"))
+        .select(col("vec_a"), col("vec_b"),
+          round(call_function("graft_dot", col("sa.v"), col("sb.v"))
+            / (col("sa.nrm") * col("sb.nrm")), 6).as("cos"))
+        .where(col("cos") >= t)
+        .distinct()
+      val got = Dedup.embeddingVerifyFrame(e, cand, t, broadcastVerify)
+      assert(sortedRows(got) == sortedRows(reference(cand)), s"broadcastVerify = $broadcastVerify")
+      val kept = got.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(kept == Set(1L -> 2L, 1L -> 3L, 2L -> 3L), s"broadcastVerify = $broadcastVerify")
+      // a zero vector's cosine divides by zero; both formulations fail alike
+      for (df <- Seq(reference(zeroCand), Dedup.embeddingVerifyFrame(e, zeroCand, t, broadcastVerify))) {
+        val err = intercept[Exception](df.collect())
+        assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+          .exists(x => String.valueOf(x.getMessage).contains("DIVIDE_BY_ZERO")), err)
+      }
+    }
+  }
+
+  test("LSH candidate streams hash-partition on the pair ids, never round-robin") {
+    // inputs read as they are, so any round-robin exchange in the plan
+    // belongs to the candidate stream
+    val frame = spark.read.parquet(s"$sfDir/embeddings.parquet")
+      .select(col("vec_id"), col("embedding").as("v"))
+      .withColumn("nrm", sqrt(call_function("graft_dot", col("v"), col("v"))))
+    val emb = Dedup.embeddingCosineLshFrame(frame, threshold = 0.9)
+    emb.collect()
+    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    val mh = Dedup.minhashCandFrame(docs)
+    mh.collect()
+    for (df <- Seq(emb, mh)) {
+      val plan = df.queryExecution.executedPlan.toString
+      assert(!plan.contains("RoundRobinPartitioning"), plan)
+    }
+  }
+
   test("salted embedding LSH returns exactly the unsalted pairs") {
     val frame = Dedup.withPlantedNearDups(spark, sfDir)
     // hotMin = 2: every bucket with any pair potential is "hot", the

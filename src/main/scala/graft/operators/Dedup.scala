@@ -1071,6 +1071,8 @@ object Dedup {
 
   /** [[embeddingCosine]] over an arbitrary (vec_id, label, v, nrm)
     * frame — the exhaustive ground truth the LSH specs compare against.
+    * A zero-norm vector has no cosine, so it pairs with nothing, as
+    * in [[embeddingVerifyFrame]].
     */
   def embeddingCosineFrame(e: DataFrame, threshold: Double): DataFrame =
     // broadcast self-join: pair generation + dot + filter all stream in
@@ -1082,8 +1084,8 @@ object Dedup {
     // is fine precisely because this exhaustive variant is the
     // small-scale correctness oracle; the corpus-scale path is
     // [[embeddingCosineLsh]].
-    e.as("a")
-      .join(broadcast(e.as("b")),
+    nonzero(e).as("a")
+      .join(broadcast(nonzero(e).as("b")),
         col("a.label") === col("b.label") && col("a.vec_id") < col("b.vec_id"))
       .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"),
         round(call_function("graft_dot", col("a.v"), col("b.v"))
@@ -1255,14 +1257,17 @@ object Dedup {
   }
 
   /** The pruning half over a pre-assigned (vec_id, v, nrm, list_id)
-    * frame — shared by the cached-index and ad-hoc paths.
+    * frame — shared by the cached-index and ad-hoc paths. A zero-norm
+    * vector has no cosine with anything, so it drops nothing and is
+    * kept.
     */
   private def semanticOverAssigned(assignedIn: DataFrame,
                                    threshold: Double): DataFrame = {
     val assigned = assignedIn
-    val a = assigned.select(col("list_id"), col("vec_id").as("vec_a"),
+    val paired = nonzero(assigned)
+    val a = paired.select(col("list_id"), col("vec_id").as("vec_a"),
       col("v").as("va"), col("nrm").as("na"))
-    val b = assigned.select(col("list_id").as("lb"), col("vec_id").as("vec_b"),
+    val b = paired.select(col("list_id").as("lb"), col("vec_id").as("vec_b"),
       col("v").as("vb"), col("nrm").as("nb"))
     val drops = a.join(b, col("list_id") === col("lb") && col("vec_a") < col("vec_b"))
       .where(round(call_function("graft_dot", col("va"), col("vb"))
@@ -1311,8 +1316,10 @@ object Dedup {
     * on the pairs whose unrounded cosine is ≥ `threshold - 1e-6`:
     * rounding moves a value by at most 5e-7, so no pair that the
     * rounded threshold keeps is dropped there. Spark orders NaN above
-    * every double, so a NaN cosine passes the prefilter too (a
-    * zero-norm vector fails the division under ANSI mode either way).
+    * every double, so a NaN cosine passes the prefilter too. A
+    * zero-norm vector has no cosine: it leaves the payload side
+    * ([[nonzero]]), so its pairs drop out of the inner joins rather
+    * than failing the query with ANSI mode's `DIVIDE_BY_ZERO`.
     *
     * Payload fetch: the side is only (vec_id, v, nrm) —
     * broadcast it while the corpus stays under
@@ -1330,7 +1337,7 @@ object Dedup {
   private[graft] def embeddingVerifyFrame(e: DataFrame, cand: DataFrame,
                                           threshold: Double,
                                           broadcastVerify: Boolean = true): DataFrame = {
-    val side0 = e.select(col("vec_id"), col("v"), col("nrm"))
+    val side0 = nonzero(e).select(col("vec_id"), col("v"), col("nrm"))
     val side = if (broadcastVerify) broadcast(side0) else side0.hint("shuffle_hash")
     cand.select(col("vec_a"), col("vec_b")).distinct()
       .join(side.as("sa"), col("vec_a") === col("sa.vec_id"))
@@ -1342,6 +1349,15 @@ object Dedup {
       .select(col("vec_a"), col("vec_b"), round(col("raw"), 6).as("cos"))
       .where(col("cos") >= threshold)
   }
+
+  /** The vectors of `e` whose norm `nrm` is not zero. A zero-norm
+    * vector has no cosine with anything, so the cosine joins drop it
+    * before pairing, as DuckDB's NULL division drops its pairs; one such
+    * vector would otherwise fail the whole query with ANSI mode's
+    * `DIVIDE_BY_ZERO`. Filtering per vector keeps the per-pair division
+    * unchanged.
+    */
+  private def nonzero(e: DataFrame): DataFrame = e.where(col("nrm") =!= 0.0)
 
   /** [[embeddingCosineLshFrame]]'s candidate pairs BEFORE cosine
     * verification — exposed for benchmark candidate-volume evidence

@@ -58,9 +58,19 @@ object AggKind {
   * the reference treats unknown tags as empty posting lists
   * (`src/tag_index.rs` query_eq on an absent key) and skips series
   * lacking the group tag (`src/agg/builder.rs:121`).
+  *
+  * A Db routes each aggregate's input through its own
+  * [[SmallInputRoute]], so the route statistic is read once per Db and
+  * metric; [[Ingest.open]] hands out the same one for as long as the
+  * layout is unchanged.
   */
-final class Db(val frame: DataFrame) {
+final class Db private[tsdb] (private[tsdb] val smallInputRoute: SmallInputRoute) {
   import Db.TagPrefix
+
+  /** A Db over any canonical series frame. */
+  def this(frame: DataFrame) = this(new SmallInputRoute(frame))
+
+  val frame: DataFrame = smallInputRoute.frame
 
   def avg(metric: String, groupBy: String): AggBuilder   = AggBuilder(this, AggKind.Avg, Db.validated(metric), groupBy)
   def sum(metric: String, groupBy: String): AggBuilder   = AggBuilder(this, AggKind.Sum, Db.validated(metric), groupBy)
@@ -100,22 +110,27 @@ final class Db(val frame: DataFrame) {
 
   /** Raw series scan: metric + filter DSL + optional bounds, no aggregation. */
   def scan(metric: String, filterExpr: String = "*",
-           minTs: Option[Long] = None, maxTs: Option[Long] = None): DataFrame = {
-    var df = frame.where(col("metric") === lit(Db.validated(metric)))
-    minTs.foreach(t => df = df.where(col("ts") >= lit(t)))
-    maxTs.foreach(t => df = df.where(col("ts") <= lit(t)))
-    df.where(FilterParser.compileString(filterExpr, tagCol))
-  }
+           minTs: Option[Long] = None, maxTs: Option[Long] = None): DataFrame =
+    frame.where(scanCondition(metric, filterExpr, minTs, maxTs))
+
+  /** [[scan]]'s predicate as one conjunction, so a scan is one analysed
+    * `where` rather than one per bound.
+    */
+  private[tsdb] def scanCondition(metric: String, filterExpr: String,
+                                  minTs: Option[Long], maxTs: Option[Long]): Column =
+    (Seq(col("metric") === lit(Db.validated(metric))) ++
+      minTs.map(t => col("ts") >= lit(t)) ++ maxTs.map(t => col("ts") <= lit(t)) :+
+      FilterParser.compileString(filterExpr, tagCol)).reduce(_ && _)
 
   /** Newest-N data points per series (metric × full tagset), mirroring the
     * reference's newest-first primary-key scan (timestamps stored negated
     * big-endian so forward scans read newest first — README "Data model").
-    * A small input ([[Db.smallInputRoute]]) ranks on one partition with
+    * A small input ([[SmallInputRoute]]) ranks on one partition with
     * no exchange; a large one shuffles on the series key.
     */
   def latest(metric: String, n: Int, filterExpr: String = "*"): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val base = Db.smallInputRoute(scan(metric, filterExpr))
+    val base = smallInputRoute(Db.validated(metric), scan(metric, filterExpr))
     val w = Window.partitionBy(tagColumns.map(col): _*).orderBy(col("ts").desc, col("value").desc)
     base.withColumn("rn", row_number().over(w)).where(col("rn") <= n).drop("rn")
   }
@@ -1509,34 +1524,12 @@ object Db {
     * analog of `Database::builder().open(path)` (talna
     * `src/db_builder.rs`): the storage-engine knobs (LSM cache sizes,
     * keyspaces) have no Spark counterpart, so opening is just binding
-    * the layout path: one listing and one parquet footer read on the
-    * driver, no Spark job.
+    * the layout path. The handle is reused while the layout is unchanged,
+    * so a reopen costs one file status; see [[Ingest.open]].
     */
   def open(spark: SparkSession, path: String): Db = Ingest.open(spark, path)
 
   private[tsdb] def validated(metric: String): String = MetricName(metric).name
-
-  /** Route an aggregate's filtered input by its size: `df.coalesce(1)`
-    * when every leaf of its physical plan is a file scan and the files
-    * those scans select after partition pruning total at most
-    * `spark.sql.files.openCostInBytes` (Spark's estimate of the bytes
-    * one file open costs), else `df` unchanged. A single-partition child
-    * satisfies any aggregate's or window's required distribution, so a
-    * small query plans no exchange and runs as one job with one task
-    * instead of an AQE shuffle stage plus a result stage. The statistic
-    * comes from the file index listed at open and costs driver-side
-    * planning only, no job. Large inputs and in-memory, RDD or cached
-    * frames keep the shuffle route.
-    */
-  private[tsdb] def smallInputRoute(df: DataFrame): DataFrame = {
-    val qe = df.queryExecution
-    val leaves = qe.sparkPlan.collectLeaves()
-    val scans = leaves.collect { case s: FileSourceScanExec => s }
-    val small = scans.nonEmpty && scans.size == leaves.size &&
-      scans.map(_.selectedPartitions.totalFileSize).sum <=
-        qe.sparkSession.sessionState.conf.filesOpenCostInBytes
-    if (small) df.coalesce(1) else df
-  }
 
   /** Canonical series frame from the driver's `events` table:
     * metric = event_type, ts = ns epoch, value = value,
@@ -1602,6 +1595,47 @@ object Db {
   }
 }
 
+/** The route of an aggregate's filtered input, picked by its size:
+  * `input.coalesce(1)` when the files its scans select total at most
+  * `spark.sql.files.openCostInBytes` (Spark's estimate of the bytes one
+  * file open costs), else `input` unchanged. A single-partition child
+  * satisfies any aggregate's or window's required distribution, so a
+  * small query plans no exchange and runs as one job with one task
+  * instead of an AQE shuffle stage plus a result stage. Large inputs
+  * and in-memory, RDD or cached frames keep the shuffle route.
+  *
+  * The statistic ([[scannedBytes]]) is read once per metric, over
+  * `frame.where(metric = m)`, and kept: only partition columns prune
+  * files, and a graft layout's one partition column is `metric`, so
+  * the time bounds, tag filters and group-tag test of an input select
+  * the same files. The threshold is read on every call.
+  */
+private[tsdb] final class SmallInputRoute(val frame: DataFrame) {
+  private val scanned = new java.util.concurrent.ConcurrentHashMap[String, Option[Long]]()
+
+  /** `input`, a filter of [[frame]] to `metric` (validated), routed. */
+  def apply(metric: String, input: DataFrame): DataFrame = {
+    val bytes = scanned.computeIfAbsent(metric,
+      m => scannedBytes(frame.where(col("metric") === lit(m))))
+    if (bytes.exists(_ <= input.sparkSession.sessionState.conf.filesOpenCostInBytes))
+      input.coalesce(1)
+    else input
+  }
+
+  /** The total size of the files `df`'s scans select after partition
+    * pruning, read from the file index listed at open (driver-side
+    * planning, no job); None unless every leaf of its physical plan is a
+    * file scan (in-memory, RDD or cached frames).
+    */
+  private def scannedBytes(df: DataFrame): Option[Long] = {
+    val leaves = df.queryExecution.sparkPlan.collectLeaves()
+    val scans = leaves.collect { case s: FileSourceScanExec => s }
+    if (scans.nonEmpty && scans.size == leaves.size)
+      Some(scans.map(_.selectedPartitions.totalFileSize).sum)
+    else None
+  }
+}
+
 /** Fluent grouped-aggregation builder, parity with talna `src/agg/builder.rs`.
   *
   * Output schema: `grp string, bucket_start long, n long, value double`.
@@ -1609,7 +1643,7 @@ object Db {
   * width` — deterministic under parallel merge, unlike the reference's
   * scan-anchored buckets (`src/agg/stream.rs:73`) which are inherently
   * sequential. One hash-aggregate, on one of two routes picked by
-  * [[Db.smallInputRoute]] from the total size of the files the scan
+  * [[SmallInputRoute]] from the total size of the files the scan
   * selects after partition pruning: at most
   * `spark.sql.files.openCostInBytes` (4 MB by default) reads the input
   * on one partition with no exchange, one job with one task; anything
@@ -1684,11 +1718,12 @@ final case class AggBuilder(
 
   /** The points every aggregate of this builder reads: the scan, minus
     * series lacking the group tag (the reference skips them,
-    * agg/builder.rs:121), routed by [[Db.smallInputRoute]].
+    * agg/builder.rs:121), in one `where`, routed by the Db's
+    * [[SmallInputRoute]].
     */
-  private def input: DataFrame =
-    Db.smallInputRoute(db.scan(metric, filterExpr, minTs, maxTs)
-      .where(db.tagCol(groupBy).isNotNull))
+  private[tsdb] def input: DataFrame =
+    db.smallInputRoute(metric, db.frame.where(
+      db.scanCondition(metric, filterExpr, minTs, maxTs) && db.tagCol(groupBy).isNotNull))
 
   def build(): DataFrame = {
     val bucketStart = (expr(s"ts div ${widthNs}L") * lit(widthNs)).as("bucket_start")

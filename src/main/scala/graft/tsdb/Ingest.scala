@@ -14,16 +14,24 @@ import org.apache.spark.sql.functions._
   * ahead of the write keeps file counts bounded per partition, and time
   * locality within files makes `start/end` scans IO-minimal.
   *
+  * A layout is opened once per session and reused ([[open]],
+  * [[openRollup]], [[Handles]]): the handle — the opened frame with its
+  * file index — stays valid while the root's `_SUCCESS` keeps the file
+  * status it had when the handle was built, and every writer below
+  * drops the handles of the path it writes. A dashboard query on an
+  * unchanged layout therefore pays one file status to open it.
+  *
   * Aggregates over these layouts ([[AggBuilder.build]], [[Db.latest]],
   * [[Rollup.agg]]) take one of two routes, picked per query by
-  * [[Db.smallInputRoute]] from one statistic: the total size of the
+  * [[SmallInputRoute]] from one statistic: the total size of the
   * files the scan selects after partition pruning, read from the file
-  * index listed at open. At most `spark.sql.files.openCostInBytes`
-  * (4 MB by default), the input is read on one partition and the query
-  * runs as one job with no exchange; above it, the aggregate shuffles
-  * as usual. Layout upkeep (compaction, `_SUCCESS` checks, batch
-  * discovery) goes through the Hadoop `FileSystem` of the path, so the
-  * work dir may be any URI Spark writes to (HDFS, an object store).
+  * index listed at open, once per handle and metric. At most
+  * `spark.sql.files.openCostInBytes` (4 MB by default), the input is
+  * read on one partition and the query runs as one job with no
+  * exchange; above it, the aggregate shuffles as usual. Layout upkeep
+  * (compaction, `_SUCCESS` checks, batch discovery) goes through the
+  * Hadoop `FileSystem` of the path, so the work dir may be any URI
+  * Spark writes to (HDFS, an object store).
   */
 object Ingest {
 
@@ -79,24 +87,40 @@ object Ingest {
     */
   private def writeLayout(db: Db, path: String, filesPerWeek: Int,
                           highPrecision: Boolean, mode: String): Unit =
-    db.frame
+    save(db.frame
       .withColumn("metric", validatedMetric)
       .withColumn("value", storedValue(highPrecision))
       .repartition(layoutKey(filesPerWeek): _*)
-      .sortWithinPartitions(col("metric"), col("ts"))
-      .write.partitionBy("metric").mode(mode).parquet(path)
+      .sortWithinPartitions(col("metric"), col("ts")), path, mode)
+
+  /** Write `df` as metric-partitioned parquet at `path` in `mode`, then
+    * drop the open handles of `path`, so a reopen in this JVM reads the
+    * write.
+    */
+  private def save(df: DataFrame, path: String, mode: String): Unit = {
+    df.write.partitionBy("metric").mode(mode).parquet(path)
+    Handles.drop(df.sparkSession, path)
+  }
 
   /** Reopen a graft layout as a Db. The `metric` partition column comes
     * back as a string column; tag columns keep their `tag_` prefix; a
     * float-stored `value` (see [[write]]) widens back to double so
     * aggregation always runs in f64, like the reference's query path.
-    * Opening lists the layout and reads one parquet footer on the
-    * driver ([[FooterSchema]]); it launches no Spark job.
+    *
+    * The first open in a session lists the layout and reads one parquet
+    * footer on the driver ([[FooterSchema]]); it launches no Spark job.
+    * Later opens return the same handle — the same frame, file index
+    * and route statistics — for as long as the root's `_SUCCESS` keeps
+    * its modification time and length and no graft writer has written
+    * the path ([[Handles]]); such an open costs one file status. A root
+    * without `_SUCCESS` (a streaming sink) is opened afresh every time.
     */
   def open(spark: SparkSession, path: String): Db =
-    new Db(FooterSchema.read(spark, path)
-      .withColumn("metric", col("metric").cast("string"))
-      .withColumn("value", col("value").cast("double")))
+    new Db(Handles.open(spark, path, "layout") {
+      FooterSchema.read(spark, path)
+        .withColumn("metric", col("metric").cast("string"))
+        .withColumn("value", col("value").cast("double"))
+    })
 
   /** Bucketed series layout: `bucketBy` on the series key (metric +
     * primary tag) with in-bucket sort. Repeated series-keyed joins and
@@ -129,8 +153,7 @@ object Ingest {
     * amortized after a handful of dashboard queries.
     */
   def writeRollup(db: Db, path: String, widthNs: Long): Unit =
-    rollupPartials(db, widthNs)
-      .write.partitionBy("metric").mode("overwrite").parquet(path)
+    save(rollupPartials(db, widthNs), path, "overwrite")
 
   private def rollupPartials(db: Db, widthNs: Long) = {
     val tags = db.tagColumns.map(col)
@@ -161,8 +184,7 @@ object Ingest {
     * per series-bucket — is an optimization, not a correctness need.)
     */
   def appendRollup(db: Db, path: String, widthNs: Long): Unit =
-    rollupPartials(db, widthNs)
-      .write.partitionBy("metric").mode("append").parquet(path)
+    save(rollupPartials(db, widthNs), path, "append")
 
   /** Exactly-once variant of [[appendRollup]] for replayable writers
     * (Structured Streaming `foreachBatch`): the batch's partials land
@@ -177,9 +199,7 @@ object Ingest {
     */
   def appendRollupBatch(db: Db, path: String, widthNs: Long,
                         batchId: Long): Unit =
-    rollupPartials(db, widthNs)
-      .write.partitionBy("metric").mode("overwrite")
-      .parquet(s"$path/batch_id=$batchId")
+    save(rollupPartials(db, widthNs), s"$path/batch_id=$batchId", "overwrite")
 
   /** Compact a rollup layout: merge the partial rows accumulated by
     * [[appendRollup]] back to ONE row per (series, bucket) — the same
@@ -195,8 +215,7 @@ object Ingest {
     */
   def compactRollup(spark: SparkSession, path: String): Unit = {
     val tmp = path + ".compact"
-    mergePartials(FooterSchema.read(spark, path), col("bucket_start"))
-      .write.partitionBy("metric").mode("overwrite").parquet(tmp)
+    save(mergePartials(FooterSchema.read(spark, path), col("bucket_start")), tmp, "overwrite")
     val dir = new Path(path)
     val old = new Path(path + ".old")
     val fs = fileSystem(spark, dir)
@@ -208,6 +227,7 @@ object Ingest {
       fs.rename(old, dir)
       throw new java.io.IOException(s"compaction swap failed: $tmp -> $path")
     }
+    Handles.drop(spark, path)
     fs.delete(old, true)
   }
 
@@ -231,8 +251,17 @@ object Ingest {
     * which is the read half of the exactly-once contract. Like [[open]],
     * opening launches no Spark job: batches are found through the
     * Hadoop `FileSystem` of `path`, and the schema comes from one footer.
+    * Also like [[open]], a rollup whose root holds `_SUCCESS` (written
+    * by [[writeRollup]], [[appendRollup]] or [[compactRollup]]) is
+    * opened once and reused while that marker is unchanged; a staged
+    * root has no marker of its own, so its complete batches are found
+    * afresh on every open.
     */
-  def openRollup(spark: SparkSession, path: String, widthNs: Long): Rollup = {
+  def openRollup(spark: SparkSession, path: String, widthNs: Long): Rollup =
+    new Rollup(Handles.open(spark, path, "rollup")(rollupFrame(spark, path)), widthNs)
+
+  /** The partials of the rollup at `path`, read as [[openRollup]] describes. */
+  private def rollupFrame(spark: SparkSession, path: String): DataFrame = {
     val root = new Path(path)
     val fs = fileSystem(spark, root)
     val staged =
@@ -247,7 +276,7 @@ object Ingest {
         FooterSchema.read(spark, complete.map(_.toString).sorted, Map("basePath" -> path))
           .drop("batch_id")
       }
-    new Rollup(frame.withColumn("metric", col("metric").cast("string")), widthNs)
+    frame.withColumn("metric", col("metric").cast("string"))
   }
 
   /** Write-once cached rollup for a source events dir (same contract as
@@ -281,9 +310,9 @@ object Ingest {
                       path: String, widthNs: Long): Unit = {
     require(widthNs % srcWidth == 0,
       s"cascade width $widthNs is not a multiple of the source width $srcWidth")
-    mergePartials(openRollup(spark, srcPath, srcWidth).frame,
-      (expr(s"bucket_start div ${widthNs}L") * lit(widthNs)).as("bucket_start"))
-      .write.partitionBy("metric").mode("overwrite").parquet(path)
+    save(mergePartials(openRollup(spark, srcPath, srcWidth).frame,
+      (expr(s"bucket_start div ${widthNs}L") * lit(widthNs)).as("bucket_start")),
+      path, "overwrite")
   }
 
   /** Merge rollup partials to one row per (metric, tagset, `bucketStart`),

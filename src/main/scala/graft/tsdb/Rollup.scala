@@ -22,8 +22,13 @@ import org.apache.spark.sql.functions._
   * Quantiles are NOT decomposable into these partials and stay on the
   * raw path ([[Db.quantile]]).
   */
-final class Rollup(val frame: DataFrame, val widthNs: Long) {
+final class Rollup private[tsdb] (private[tsdb] val smallInputRoute: SmallInputRoute,
+                                  val widthNs: Long) {
   import Db.TagPrefix
+
+  def this(frame: DataFrame, widthNs: Long) = this(new SmallInputRoute(frame), widthNs)
+
+  val frame: DataFrame = smallInputRoute.frame
 
   private def tagCol(key: String): Column =
     if (frame.columns.contains(TagPrefix + key)) col(TagPrefix + key)
@@ -105,7 +110,7 @@ final class Rollup(val frame: DataFrame, val widthNs: Long) {
     * `grp, bucket_start, n, value`. Routed like [[AggBuilder.build]]:
     * partials whose selected files total at most
     * `spark.sql.files.openCostInBytes` merge on one partition with no
-    * exchange ([[Db.smallInputRoute]]); larger ones shuffle on
+    * exchange ([[SmallInputRoute]]); larger ones shuffle on
     * (group, bucket).
     */
   def agg(kind: AggKind, metric: String, groupBy: String, width: Long,
@@ -125,10 +130,7 @@ final class Rollup(val frame: DataFrame, val widthNs: Long) {
       case _ => ()
     }
     val grpCol = tagCol(groupBy)
-    val base = Db.smallInputRoute(frame
-      .where(col("metric") === lit(Db.validated(metric)))
-      .where(FilterParser.compileString(filterExpr, tagCol))
-      .where(grpCol.isNotNull))
+    val base = input(metric, groupBy, filterExpr)
     val bucket = (expr(s"bucket_start div ${width}L") * lit(width)).as("bucket_start")
     val n = functions.sum(col("n")).as("n")
     val decSum = functions.sum(col("sum_value"))
@@ -150,5 +152,14 @@ final class Rollup(val frame: DataFrame, val widthNs: Long) {
         throw new IllegalStateException("unreachable")
     }).as("value")
     base.groupBy(grpCol.as("grp"), bucket).agg(n, valueCol)
+  }
+
+  /** The partials [[agg]] merges: `metric`, the filter and the group-tag
+    * test in one `where`, routed by [[SmallInputRoute]].
+    */
+  private[tsdb] def input(metric: String, groupBy: String, filterExpr: String): DataFrame = {
+    val m = Db.validated(metric)
+    smallInputRoute(m, frame.where(col("metric") === lit(m) &&
+      FilterParser.compileString(filterExpr, tagCol) && tagCol(groupBy).isNotNull))
   }
 }

@@ -463,13 +463,25 @@ class DedupSpec extends SparkSpec {
       assert(sortedRows(got) == sortedRows(reference(cand)), s"broadcastVerify = $broadcastVerify")
       val kept = got.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(kept == Set(1L -> 2L, 1L -> 3L, 2L -> 3L), s"broadcastVerify = $broadcastVerify")
-      // a zero vector's cosine divides by zero; both formulations fail alike
-      for (df <- Seq(reference(zeroCand), Dedup.embeddingVerifyFrame(e, zeroCand, t, broadcastVerify))) {
-        val err = intercept[Exception](df.collect())
-        assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
-          .exists(x => String.valueOf(x.getMessage).contains("DIVIDE_BY_ZERO")), err)
-      }
+      // a zero vector has no cosine: its pair is dropped, as DuckDB's NULL division drops it
+      val zeroKept = Dedup.embeddingVerifyFrame(e, zeroCand, t, broadcastVerify).collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(zeroKept == Set(1L -> 2L), s"broadcastVerify = $broadcastVerify")
     }
+  }
+
+  test("a zero-norm vector drops its pairs from the exhaustive and semantic cosines") {
+    import spark.implicits._
+    graft.expressions.GraftFunctions.register(spark)
+    // k-means starts from the vectors with the smallest ids, so id 0 is nonzero
+    val e = Seq(0L -> Array(1.0f, 0.0f), 1L -> Array(0.99f, 0.1f), 2L -> Array(0.0f, 0.0f))
+      .toDF("vec_id", "v").withColumn("label", lit(0))
+      .withColumn("nrm", sqrt(call_function("graft_dot", col("v"), col("v"))))
+    val pairs = Dedup.embeddingCosineFrame(e, 0.9).collect().map(r => (r.getLong(0), r.getLong(1)))
+    assert(pairs.toSeq == Seq(0L -> 1L))
+    val keep = Dedup.semanticFrame(e.drop("label"), nlist = 1, iters = 1, threshold = 0.9)
+      .collect().map(r => r.getLong(0) -> r.getBoolean(2)).toMap
+    assert(keep == Map(0L -> true, 1L -> false, 2L -> true))
   }
 
   test("LSH candidate streams hash-partition on the pair ids, never round-robin") {

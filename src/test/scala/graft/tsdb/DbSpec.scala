@@ -152,4 +152,29 @@ class DbSpec extends SparkSpec {
       .agg(min("ts"), max("ts")).collect()(0)
     assert(c.getLong(0) >= lo && c.getLong(1) <= hi)
   }
+
+  test("scan and aggregate inputs filter in one where, optimised as the chained wheres") {
+    def optimized(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.optimizedPlan.canonicalized
+    val (m, f, g) = ("purchase", "(k:1* AND !user:2*)", "user")
+    val lo = 1704067200000000000L // 2024-01-01
+    val hi = lo + Duration.days(10)
+    def chained(d: Db, lo: Option[Long], hi: Option[Long]) = {
+      var df = d.frame.where(col("metric") === lit(m))
+      lo.foreach(t => df = df.where(col("ts") >= lit(t)))
+      hi.foreach(t => df = df.where(col("ts") <= lit(t)))
+      df.where(FilterParser.compileString(f, d.tagCol))
+    }
+    for ((l, h) <- Seq((None, None), (Some(lo), None), (Some(lo), Some(hi)))) {
+      assert(optimized(db.scan(m, f, l, h)) == optimized(chained(db, l, h)), s"scan $l $h")
+      val b = AggBuilder(db, AggKind.Avg, m, g, f, l, h)
+      assert(optimized(b.input) == optimized(db.smallInputRoute(m,
+        chained(db, l, h).where(db.tagCol(g).isNotNull))), s"input $l $h")
+    }
+    val rollup = new Rollup(db.frame, Duration.hours(1))
+    assert(optimized(rollup.input(m, g, f)) == optimized(rollup.smallInputRoute(m,
+      rollup.frame.where(col("metric") === lit(m))
+        .where(FilterParser.compileString(f, db.tagCol))
+        .where(db.tagCol(g).isNotNull))))
+  }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import graft.io.Source
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -71,7 +72,7 @@ object ScaleData {
 
   private def writeTable(spark: SparkSession, sfDir: String, dir: String,
                          factor: Int, table: String): Unit = {
-    def src(t: String) = spark.read.parquet(s"$sfDir/$t.parquet")
+    def src(t: String) = Source.table(spark, sfDir, t)
     def out(df: DataFrame): Unit =
       df.write.mode("overwrite").parquet(s"$dir/$table.parquet")
 

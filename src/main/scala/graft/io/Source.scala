@@ -1,4 +1,4 @@
-package graft.tsdb
+package graft.io
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
@@ -10,18 +10,23 @@ import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
   ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.types.StructType
 
+import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
-/** Driver-side parquet schema for graft layouts. A bare
-  * `spark.read.parquet` infers the schema inside a Spark job even with
-  * `mergeSchema=false`, where that job reads exactly one footer: the
-  * first data file in sorted path order. Reading that same footer here
-  * and handing the schema to `spark.read.schema(..)` yields the same
-  * frame with no job, so opening a layout costs a file listing and one
-  * footer read — the fixed per-query cost an embedded store never pays.
-  * Partition discovery and Spark's own file listing are untouched.
+/** How graft opens a parquet input and learns its size: every operator,
+  * streaming job and layout open reads through here.
+  *
+  * A bare `spark.read.parquet` infers the schema inside a Spark job even
+  * with `mergeSchema=false`, where that job reads exactly one footer: the
+  * first data file in sorted path order. [[read]] reads that same footer
+  * on the driver and hands the schema to `spark.read.schema(..)`, which
+  * yields the same frame with no job; partition discovery and Spark's own
+  * file listing are untouched. [[rows]] sums the row counts the footers
+  * record instead of running a `count()` job. So opening an input costs a
+  * file listing and footer reads — the per-query setup an embedded engine
+  * never pays.
   */
-private[graft] object FooterSchema {
+private[graft] object Source {
 
   /** `spark.read.options(options).parquet(paths: _*)` with the data
     * schema read on the driver; defers to the plain read (and so to
@@ -37,6 +42,31 @@ private[graft] object FooterSchema {
   }
 
   def read(spark: SparkSession, path: String): DataFrame = read(spark, Seq(path))
+
+  /** [[read]] of the table `$dir/$name.parquet`. */
+  def table(spark: SparkSession, dir: String, name: String): DataFrame =
+    read(spark, s"$dir/$name.parquet")
+
+  /** The row count of the parquet input at `path`: the sum of the
+    * row-group row counts in the footers of the files [[read]] lists.
+    * The footers are read on the driver while there are at most
+    * `spark.sql.sources.parallelPartitionDiscovery.threshold` files —
+    * the bound above which Spark itself stops listing on the driver —
+    * and the frame is counted by a Spark job above it.
+    */
+  def rows(spark: SparkSession, path: String): Long = {
+    val df = read(spark, path)
+    val files = df.inputFiles
+    if (files.length > spark.sessionState.conf.parallelPartitionDiscoveryThreshold) df.count()
+    else {
+      val conf = spark.sessionState.newHadoopConf()
+      files.iterator.map { f =>
+        ParquetFooterReader.readFooter(
+          HadoopInputFile.fromPath(new Path(new java.net.URI(f)), conf),
+          ParquetMetadataConverter.NO_FILTER).getBlocks.asScala.map(_.getRowCount).sum
+      }.sum
+    }
+  }
 
   /** The data schema (partition columns excluded) Spark infers for
     * `paths` without merging, or None when Spark must decide: no data

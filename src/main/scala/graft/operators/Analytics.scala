@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.io.Source
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -22,16 +23,13 @@ import org.apache.spark.sql.functions._
   */
 object Analytics {
 
-  private def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
-
   /** Exact per-row revenue term: extendedprice * (1 - discount), DECIMAL. */
   private val revTerm =
     expr("CAST(l_extendedprice AS DECIMAL(12,2)) * (CAST(1 AS DECIMAL(3,2)) - CAST(l_discount AS DECIMAL(4,2)))")
 
   /** TPC-H Q1-flavor pricing summary: single scan, hash aggregate. */
   def q1(spark: SparkSession, dir: String): DataFrame =
-    t(spark, dir, "lineitem")
+    Source.table(spark, dir, "lineitem")
       .where(col("l_shipdate") <= lit("1999-12-31").cast("timestamp"))
       .groupBy(col("l_returnflag"), col("l_linestatus"))
       .agg(
@@ -54,12 +52,12 @@ object Analytics {
     * broadcast stops fitting an order of magnitude further out.
     */
   def q3(spark: SparkSession, dir: String): DataFrame = {
-    val custKeys = t(spark, dir, "customer")
+    val custKeys = Source.table(spark, dir, "customer")
       .where(col("c_mktsegment") === "BUILDING")
       .select(col("c_custkey"))
-    val ord = t(spark, dir, "orders")
+    val ord = Source.table(spark, dir, "orders")
       .where(col("o_orderdate") < lit("1999-01-01").cast("timestamp"))
-    val li = t(spark, dir, "lineitem")
+    val li = Source.table(spark, dir, "lineitem")
       .where(col("l_shipdate") > lit("1999-01-01").cast("timestamp"))
     li.join(ord, col("l_orderkey") === col("o_orderkey"))
       .join(broadcast(custKeys), col("o_custkey") === col("c_custkey"), "left_semi")
@@ -79,12 +77,12 @@ object Analytics {
     * lineitem grain.
     */
   def q5(spark: SparkSession, dir: String): DataFrame = {
-    val region = t(spark, dir, "region").where(col("r_name") === "ASIA")
-    val nation = t(spark, dir, "nation")
-    val supp = t(spark, dir, "supplier")
-    val cust = t(spark, dir, "customer")
-    val ord = t(spark, dir, "orders")
-    val li = t(spark, dir, "lineitem")
+    val region = Source.table(spark, dir, "region").where(col("r_name") === "ASIA")
+    val nation = Source.table(spark, dir, "nation")
+    val supp = Source.table(spark, dir, "supplier")
+    val cust = Source.table(spark, dir, "customer")
+    val ord = Source.table(spark, dir, "orders")
+    val li = Source.table(spark, dir, "lineitem")
     li.join(ord, col("l_orderkey") === col("o_orderkey"))
       .join(broadcast(supp), col("l_suppkey") === col("s_suppkey"))
       .join(cust.select("c_custkey", "c_nationkey"),
@@ -97,8 +95,8 @@ object Analytics {
 
   /** Top-3 parts by revenue per brand — window rank over a hash aggregate. */
   def topkPerBrand(spark: SparkSession, dir: String, k: Int = 3): DataFrame = {
-    val perPart = t(spark, dir, "lineitem")
-      .join(broadcast(t(spark, dir, "part").select("p_partkey", "p_brand")),
+    val perPart = Source.table(spark, dir, "lineitem")
+      .join(broadcast(Source.table(spark, dir, "part").select("p_partkey", "p_brand")),
         col("l_partkey") === col("p_partkey"))
       .groupBy(col("p_brand"), col("p_partkey"))
       .agg(sum(revTerm).as("rev_dec"))
@@ -136,12 +134,12 @@ object Analytics {
       df.repartition(buckets, col(key))
         .write.bucketBy(buckets, key).sortBy(key)
         .mode("overwrite").format("parquet").saveAsTable(table)
-    write(t(spark, dir, "lineitem"), "l_orderkey", s"${prefix}_lineitem_b")
-    write(t(spark, dir, "orders"), "o_orderkey", s"${prefix}_orders_b")
+    write(Source.table(spark, dir, "lineitem"), "l_orderkey", s"${prefix}_lineitem_b")
+    write(Source.table(spark, dir, "orders"), "o_orderkey", s"${prefix}_orders_b")
     // customer co-bucketed on its key: the layout [[q5CoBucketed]] rides
     // so the one fact-sized table q5 still shuffled per query never
     // leaves its scan
-    write(t(spark, dir, "customer"), "c_custkey", s"${prefix}_customer_b")
+    write(Source.table(spark, dir, "customer"), "c_custkey", s"${prefix}_customer_b")
   }
 
   /** [[q3]] over [[bucketFacts]] tables — identical results, zero
@@ -152,7 +150,7 @@ object Analytics {
     */
   def q3Bucketed(spark: SparkSession, dir: String,
                  prefix: String = "graft"): DataFrame = {
-    val custKeys = t(spark, dir, "customer")
+    val custKeys = Source.table(spark, dir, "customer")
       .where(col("c_mktsegment") === "BUILDING")
       .select(col("c_custkey"))
     val ord = spark.table(s"${prefix}_orders_b")
@@ -183,10 +181,10 @@ object Analytics {
     */
   def q5Bucketed(spark: SparkSession, dir: String,
                  prefix: String = "graft"): DataFrame = {
-    val region = t(spark, dir, "region").where(col("r_name") === "ASIA")
-    val nation = t(spark, dir, "nation")
-    val supp = t(spark, dir, "supplier")
-    val cust = t(spark, dir, "customer")
+    val region = Source.table(spark, dir, "region").where(col("r_name") === "ASIA")
+    val nation = Source.table(spark, dir, "nation")
+    val supp = Source.table(spark, dir, "supplier")
+    val cust = Source.table(spark, dir, "customer")
     val ord = spark.table(s"${prefix}_orders_b")
     val li = spark.table(s"${prefix}_lineitem_b")
     li.join(ord, col("l_orderkey") === col("o_orderkey"))
@@ -217,9 +215,9 @@ object Analytics {
     */
   def q5CoBucketed(spark: SparkSession, dir: String,
                    prefix: String = "graft"): DataFrame = {
-    val region = t(spark, dir, "region").where(col("r_name") === "ASIA")
-    val nation = t(spark, dir, "nation")
-    val supp = t(spark, dir, "supplier")
+    val region = Source.table(spark, dir, "region").where(col("r_name") === "ASIA")
+    val nation = Source.table(spark, dir, "nation")
+    val supp = Source.table(spark, dir, "supplier")
     val cust = spark.table(s"${prefix}_customer_b")
     val buckets = spark.sessionState.catalog
       .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(s"${prefix}_customer_b"))
@@ -254,13 +252,13 @@ object Analytics {
     val amount = expr(
       "CAST(l_extendedprice AS DECIMAL(12,2)) * (CAST(1 AS DECIMAL(3,2)) - CAST(l_discount AS DECIMAL(4,2)))" +
         " - CAST(p_retailprice AS DECIMAL(12,2)) * CAST(l_quantity AS DECIMAL(12,2)) * CAST(0.10 AS DECIMAL(3,2))")
-    val supp = t(spark, dir, "supplier")
-      .join(broadcast(t(spark, dir, "nation")
+    val supp = Source.table(spark, dir, "supplier")
+      .join(broadcast(Source.table(spark, dir, "nation")
         .select(col("n_nationkey"), col("n_name"))),
         col("s_nationkey") === col("n_nationkey"))
       .select(col("s_suppkey"), col("n_name").as("nation"))
     spark.table(s"${prefix}_lineitem_b")
-      .join(broadcast(t(spark, dir, "part")
+      .join(broadcast(Source.table(spark, dir, "part")
         .where(col("p_name").contains(nameToken))
         .select(col("p_partkey"), col("p_retailprice"))),
         col("l_partkey") === col("p_partkey"))
@@ -288,7 +286,7 @@ object Analytics {
     q21Frame(
       spark.table(s"${prefix}_lineitem_b"),
       spark.table(s"${prefix}_orders_b"),
-      t(spark, dir, "supplier"))
+      Source.table(spark, dir, "supplier"))
 
   /** Sessionize the event stream: 30-min-gap sessions per user (lag +
     * running sum — the classic distributed sessionization shape; one
@@ -317,10 +315,10 @@ object Analytics {
     * otherwise.
     */
   def q4SemiJoin(spark: SparkSession, dir: String): DataFrame = {
-    val o = t(spark, dir, "orders")
+    val o = Source.table(spark, dir, "orders")
       .where(col("o_orderdate") >= lit("1995-01-01").cast("timestamp") &&
         col("o_orderdate") < lit("1995-07-01").cast("timestamp"))
-    val l = t(spark, dir, "lineitem").select(col("l_orderkey"), col("l_shipdate"))
+    val l = Source.table(spark, dir, "lineitem").select(col("l_orderkey"), col("l_shipdate"))
     o.join(l,
         l("l_orderkey") === o("o_orderkey") &&
           l("l_shipdate") > o("o_orderdate") + expr("INTERVAL 60 DAYS"),
@@ -336,8 +334,8 @@ object Analytics {
     * only its key column.
     */
   def qOrdersNoLineitem(spark: SparkSession, dir: String): DataFrame = {
-    val o = t(spark, dir, "orders")
-    val l = t(spark, dir, "lineitem").select(col("l_orderkey"))
+    val o = Source.table(spark, dir, "orders")
+    val l = Source.table(spark, dir, "lineitem").select(col("l_orderkey"))
     o.join(l, o("o_orderkey") === l("l_orderkey"), "left_anti")
       .groupBy(col("o_orderstatus"))
       .agg(count(lit(1)).as("n_orders"),
@@ -370,13 +368,13 @@ object Analytics {
     * makes the kept set engine-deterministic.
     */
   def q10Returns(spark: SparkSession, dir: String): DataFrame = {
-    val ord = t(spark, dir, "orders")
+    val ord = Source.table(spark, dir, "orders")
       .where(col("o_orderdate") >= lit("1996-01-01").cast("timestamp") &&
         col("o_orderdate") < lit("1996-04-01").cast("timestamp"))
-    val li = t(spark, dir, "lineitem").where(col("l_returnflag") === "R")
+    val li = Source.table(spark, dir, "lineitem").where(col("l_returnflag") === "R")
     li.join(ord, col("l_orderkey") === col("o_orderkey"))
-      .join(t(spark, dir, "customer"), col("o_custkey") === col("c_custkey"))
-      .join(broadcast(t(spark, dir, "nation")),
+      .join(Source.table(spark, dir, "customer"), col("o_custkey") === col("c_custkey"))
+      .join(broadcast(Source.table(spark, dir, "nation")),
         col("c_nationkey") === col("n_nationkey"))
       .groupBy(col("c_custkey"), col("c_name"), col("c_acctbal"), col("n_name"))
       .agg(sum(revTerm).cast("double").as("revenue"))
@@ -399,13 +397,13 @@ object Analytics {
     */
   def q18LargeVolume(spark: SparkSession, dir: String,
                      minQty: Double = 250.0): DataFrame = {
-    val li = t(spark, dir, "lineitem")
+    val li = Source.table(spark, dir, "lineitem")
     val qualifying = li.groupBy(col("l_orderkey").as("q_orderkey"))
       .agg(sum(expr("CAST(l_quantity AS DECIMAL(12,2))")).as("qty"))
       .where(col("qty") > lit(minQty))
-    t(spark, dir, "orders")
+    Source.table(spark, dir, "orders")
       .join(qualifying, col("o_orderkey") === col("q_orderkey"))
-      .join(t(spark, dir, "customer"), col("o_custkey") === col("c_custkey"))
+      .join(Source.table(spark, dir, "customer"), col("o_custkey") === col("c_custkey"))
       .select(col("c_name"), col("c_custkey"), col("o_orderkey"),
         col("o_orderdate"), col("o_totalprice"),
         col("qty").cast("double").as("sum_qty"))
@@ -422,7 +420,7 @@ object Analytics {
     * side — a plain 0.05 runs DECIMAL comparison semantics there).
     */
   def q6Forecast(spark: SparkSession, dir: String): DataFrame =
-    t(spark, dir, "lineitem")
+    Source.table(spark, dir, "lineitem")
       .where(col("l_shipdate") >= lit("1996-01-01").cast("timestamp") &&
         col("l_shipdate") < lit("1997-01-01").cast("timestamp") &&
         col("l_discount") >= lit(0.05) && col("l_discount") <= lit(0.07) &&
@@ -443,15 +441,15 @@ object Analytics {
   def q8MarketShare(spark: SparkSession, dir: String,
                     regionName: String = "ASIA",
                     nationName: String = "NATION_2"): DataFrame = {
-    val nations = t(spark, dir, "nation")
-      .join(broadcast(t(spark, dir, "region")
+    val nations = Source.table(spark, dir, "nation")
+      .join(broadcast(Source.table(spark, dir, "region")
         .where(col("r_name") === regionName)), col("n_regionkey") === col("r_regionkey"))
       .select(col("n_nationkey"), col("n_name"))
-    val cust = t(spark, dir, "customer")
+    val cust = Source.table(spark, dir, "customer")
       .join(broadcast(nations), col("c_nationkey") === col("n_nationkey"))
       .select(col("c_custkey"), col("n_name"))
-    t(spark, dir, "lineitem")
-      .join(t(spark, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
+    Source.table(spark, dir, "lineitem")
+      .join(Source.table(spark, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
       .join(cust, col("o_custkey") === col("c_custkey"))
       .groupBy(year(col("o_orderdate")).cast("long").as("o_year"))
       .agg(
@@ -473,17 +471,17 @@ object Analytics {
   def q7Volume(spark: SparkSession, dir: String,
                nationA: String = "NATION_1",
                nationB: String = "NATION_2"): DataFrame = {
-    val n = t(spark, dir, "nation")
+    val n = Source.table(spark, dir, "nation")
       .where(col("n_name").isin(nationA, nationB))
       .select(col("n_nationkey"), col("n_name"))
-    val supp = t(spark, dir, "supplier")
+    val supp = Source.table(spark, dir, "supplier")
       .join(broadcast(n), col("s_nationkey") === col("n_nationkey"))
       .select(col("s_suppkey"), col("n_name").as("supp_nation"))
-    val cust = t(spark, dir, "customer")
+    val cust = Source.table(spark, dir, "customer")
       .join(broadcast(n), col("c_nationkey") === col("n_nationkey"))
       .select(col("c_custkey"), col("n_name").as("cust_nation"))
-    t(spark, dir, "lineitem")
-      .join(t(spark, dir, "orders").select(col("o_orderkey"), col("o_custkey")),
+    Source.table(spark, dir, "lineitem")
+      .join(Source.table(spark, dir, "orders").select(col("o_orderkey"), col("o_custkey")),
         col("l_orderkey") === col("o_orderkey"))
       .join(broadcast(supp), col("l_suppkey") === col("s_suppkey"))
       .join(broadcast(cust), col("o_custkey") === col("c_custkey"))
@@ -503,9 +501,9 @@ object Analytics {
     */
   def q14Promo(spark: SparkSession, dir: String,
                shipYear: Int = 1998): DataFrame =
-    t(spark, dir, "lineitem")
+    Source.table(spark, dir, "lineitem")
       .where(year(col("l_shipdate")) === shipYear)
-      .join(broadcast(t(spark, dir, "part")
+      .join(broadcast(Source.table(spark, dir, "part")
         .select(col("p_partkey"), col("p_type"))),
         col("l_partkey") === col("p_partkey"))
       .agg(
@@ -515,13 +513,13 @@ object Analytics {
         sum(revTerm).cast("double").as("total_revenue"))
 
   def q17AvgSubquery(spark: SparkSession, dir: String): DataFrame = {
-    val l = t(spark, dir, "lineitem")
+    val l = Source.table(spark, dir, "lineitem")
     val th = l.groupBy(col("l_partkey").as("t_partkey"))
       .agg((sum(expr("CAST(l_quantity AS DECIMAL(12,2))")).cast("double")
         / count(lit(1)) * lit(0.2)).as("lim"))
     l.join(th, col("l_partkey") === col("t_partkey"))
       .where(col("l_quantity") < col("lim"))
-      .join(t(spark, dir, "part"), col("l_partkey") === col("p_partkey"))
+      .join(Source.table(spark, dir, "part"), col("l_partkey") === col("p_partkey"))
       .groupBy(col("p_brand"))
       .agg(
         (sum(expr("CAST(l_extendedprice AS DECIMAL(12,2))")).cast("double")
@@ -530,7 +528,7 @@ object Analytics {
   }
 
   def rollupCube(spark: SparkSession, dir: String): DataFrame =
-    t(spark, dir, "orders")
+    Source.table(spark, dir, "orders")
       .rollup(year(col("o_orderdate")).cast("long").as("o_year"),
         col("o_orderpriority"))
       .agg(
@@ -547,7 +545,7 @@ object Analytics {
     * set is its vocabulary-sized output rows.
     */
   def cubeAgg(spark: SparkSession, dir: String): DataFrame =
-    t(spark, dir, "orders")
+    Source.table(spark, dir, "orders")
       .cube(year(col("o_orderdate")).cast("long").as("o_year"),
         col("o_orderpriority"))
       .agg(
@@ -568,7 +566,7 @@ object Analytics {
     // and an aliased expression in `cols` vs its unaliased twin in a
     // set would register as a THIRD grouping column (measured: gid ran
     // 0..7 instead of 0..3)
-    t(spark, dir, "orders")
+    Source.table(spark, dir, "orders")
       .select(year(col("o_orderdate")).cast("long").as("o_year"),
         col("o_orderpriority"), col("o_totalprice"))
       .groupingSets(
@@ -580,7 +578,7 @@ object Analytics {
         grouping_id().as("gid"))
 
   def sessionize(spark: SparkSession, dir: String, gapNs: Long = 1800L * 1000 * 1000 * 1000): DataFrame = {
-    val raw = spark.read.parquet(s"$dir/events.parquet")
+    val raw = Source.table(spark, dir, "events")
     val ev = raw.select(col("user_id"), graft.tsdb.Db.tsNs(raw.schema).as("ts"), col("event_type"))
     val w = Window.partitionBy(col("user_id")).orderBy(col("ts"))
     ev.withColumn("new_sess",
@@ -608,7 +606,7 @@ object Analytics {
     * is the tiny transition matrix at any corpus scale.
     */
   def eventTransitions(spark: SparkSession, dir: String): DataFrame = {
-    val raw = spark.read.parquet(s"$dir/events.parquet")
+    val raw = Source.table(spark, dir, "events")
     val ev = raw.select(col("user_id"),
       graft.tsdb.Db.tsNs(raw.schema).as("ts"),
       col("event_id"), col("event_type"))
@@ -661,7 +659,7 @@ object Analytics {
     * [[revenueConcentration]] and [[gini]].
     */
   private def rankedSpend(spark: SparkSession, dir: String): DataFrame = {
-    val spend = t(spark, dir, "orders")
+    val spend = Source.table(spark, dir, "orders")
       .groupBy(col("o_custkey"))
       .agg(sum(col("o_totalprice").cast("decimal(28,6)")).as("spend_dec"))
     val parts = math.max(spark.sparkContext.defaultParallelism, 2)
@@ -745,7 +743,7 @@ object Analytics {
     * recipe). One row out at any corpus size.
     */
   def abTest(spark: SparkSession, dir: String): DataFrame = {
-    val users = spark.read.parquet(s"$dir/events.parquet")
+    val users = Source.table(spark, dir, "events")
       .select(col("user_id"), col("event_type"))
       .groupBy(col("user_id"))
       .agg(max(when(col("event_type") === "purchase", 1L).otherwise(0L))
@@ -779,7 +777,7 @@ object Analytics {
     * pooled SE, else NULL.
     */
   def abTestValue(spark: SparkSession, dir: String): DataFrame = {
-    val ev = spark.read.parquet(s"$dir/events.parquet")
+    val ev = Source.table(spark, dir, "events")
       .where(col("event_type") === "purchase")
       .select((col("user_id") % 2).as("variant"), col("value"))
     def side(v: Int, tag: String) = {
@@ -835,7 +833,7 @@ object Analytics {
     */
   def cohortLtv(spark: SparkSession, dir: String): DataFrame = {
     val dayNs = 86400L * 1000000000L
-    val raw = spark.read.parquet(s"$dir/events.parquet")
+    val raw = Source.table(spark, dir, "events")
     val ev = raw.select(col("user_id"),
         graft.tsdb.Db.tsNs(raw.schema).as("ts"),
         col("event_type"), col("value"))
@@ -861,7 +859,7 @@ object Analytics {
     val w = Window.partitionBy(col("o_custkey"))
       .orderBy(col("o_orderdate"), col("o_orderkey"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    t(spark, dir, "orders").select(
+    Source.table(spark, dir, "orders").select(
       col("o_custkey"), col("o_orderkey"), col("o_orderdate"),
       sum(col("o_totalprice").cast("decimal(28,6)")).over(w)
         .cast("double").as("running_spend"),
@@ -880,7 +878,7 @@ object Analytics {
     */
   def funnel(spark: SparkSession, dir: String,
              windowNs: Long = 7L * 86400L * 1000000000L): DataFrame = {
-    val raw = spark.read.parquet(s"$dir/events.parquet")
+    val raw = Source.table(spark, dir, "events")
     val ev = raw.select(col("user_id"), graft.tsdb.Db.tsNs(raw.schema).as("ts"),
         col("event_type"))
     val dayNs = 86400L * 1000000000L
@@ -909,7 +907,7 @@ object Analytics {
     */
   def retention(spark: SparkSession, dir: String,
                 maxWeeks: Int = 8): DataFrame = {
-    val raw = spark.read.parquet(s"$dir/events.parquet")
+    val raw = Source.table(spark, dir, "events")
     val ev = raw.select(col("user_id"), graft.tsdb.Db.tsNs(raw.schema).as("ts"),
       col("event_type"))
     val weekNs = 7L * 86400L * 1000000000L
@@ -938,7 +936,7 @@ object Analytics {
     */
   def sessionWindows(spark: SparkSession, dir: String,
                      gapNs: Long = 1800L * 1000 * 1000 * 1000): DataFrame = {
-    val raw = spark.read.parquet(s"$dir/events.parquet")
+    val raw = Source.table(spark, dir, "events")
     val ev = raw
       .select(col("user_id"), graft.tsdb.Db.tsNs(raw.schema).as("ts_ns"))
       .select(col("user_id"), timestamp_micros(expr("ts_ns div 1000L")).as("ts"))
@@ -966,7 +964,7 @@ object Analytics {
                   steps: Seq[String] = Seq("signup", "view", "purchase"),
                   windowNs: Long = 7L * 86400L * 1000000000L): DataFrame = {
     require(steps.nonEmpty, "funnelSteps needs at least one step")
-    val raw = spark.read.parquet(s"$dir/events.parquet")
+    val raw = Source.table(spark, dir, "events")
     val ev = raw.select(col("user_id"), graft.tsdb.Db.tsNs(raw.schema).as("ts"),
       col("event_type"))
     val dayNs = 86400L * 1000000000L
@@ -1010,7 +1008,7 @@ object Analytics {
   def activeUsers(spark: SparkSession, dir: String,
                   windowDays: Int = 7): DataFrame = {
     val dayNs = 86400L * 1000000000L
-    val raw = spark.read.parquet(s"$dir/events.parquet")
+    val raw = Source.table(spark, dir, "events")
     raw
       .select(graft.tsdb.Db.tsNs(raw.schema).as("ts"), col("user_id"))
       .select((expr(s"ts div ${dayNs}L") * lit(dayNs)).as("day"), col("user_id"),
@@ -1123,7 +1121,7 @@ object Analytics {
   def pivotDaily(spark: SparkSession, dir: String): DataFrame = {
     val dayNs = 86400L * 1000000000L
     val types = Seq("click", "error", "purchase", "signup", "view")
-    val raw = spark.read.parquet(s"$dir/events.parquet")
+    val raw = Source.table(spark, dir, "events")
     val piv = raw
       .select(graft.tsdb.Db.tsNs(raw.schema).as("ts"), col("event_type"))
       .select((expr(s"ts div ${dayNs}L") * lit(dayNs)).as("day"), col("event_type"))
@@ -1156,16 +1154,16 @@ object Analytics {
     */
   def q2MinCostSupp(spark: SparkSession, dir: String,
                     regionName: String = "ASIA"): DataFrame = {
-    val supp = t(spark, dir, "supplier")
-      .join(broadcast(t(spark, dir, "nation")
-        .join(broadcast(t(spark, dir, "region")
+    val supp = Source.table(spark, dir, "supplier")
+      .join(broadcast(Source.table(spark, dir, "nation")
+        .join(broadcast(Source.table(spark, dir, "region")
           .where(col("r_name") === regionName)
           .select(col("r_regionkey"))),
           col("n_regionkey") === col("r_regionkey"))
         .select(col("n_nationkey"))),
         col("s_nationkey") === col("n_nationkey"))
       .select(col("s_suppkey"), col("s_name"))
-    t(spark, dir, "lineitem")
+    Source.table(spark, dir, "lineitem")
       .join(broadcast(supp), col("l_suppkey") === col("s_suppkey"))
       .groupBy(col("l_partkey"), col("s_suppkey"), col("s_name"))
       .agg(min(revTerm).as("cost"))
@@ -1192,18 +1190,18 @@ object Analytics {
     val amount = expr(
       "CAST(l_extendedprice AS DECIMAL(12,2)) * (CAST(1 AS DECIMAL(3,2)) - CAST(l_discount AS DECIMAL(4,2)))" +
         " - CAST(p_retailprice AS DECIMAL(12,2)) * CAST(l_quantity AS DECIMAL(12,2)) * CAST(0.10 AS DECIMAL(3,2))")
-    val supp = t(spark, dir, "supplier")
-      .join(broadcast(t(spark, dir, "nation")
+    val supp = Source.table(spark, dir, "supplier")
+      .join(broadcast(Source.table(spark, dir, "nation")
         .select(col("n_nationkey"), col("n_name"))),
         col("s_nationkey") === col("n_nationkey"))
       .select(col("s_suppkey"), col("n_name").as("nation"))
-    t(spark, dir, "lineitem")
-      .join(broadcast(t(spark, dir, "part")
+    Source.table(spark, dir, "lineitem")
+      .join(broadcast(Source.table(spark, dir, "part")
         .where(col("p_name").contains(nameToken))
         .select(col("p_partkey"), col("p_retailprice"))),
         col("l_partkey") === col("p_partkey"))
       .join(broadcast(supp), col("l_suppkey") === col("s_suppkey"))
-      .join(t(spark, dir, "orders").select(col("o_orderkey"), col("o_orderdate")),
+      .join(Source.table(spark, dir, "orders").select(col("o_orderkey"), col("o_orderdate")),
         col("l_orderkey") === col("o_orderkey"))
       .groupBy(col("nation"), year(col("o_orderdate")).cast("long").as("o_year"))
       .agg(sum(amount).cast("double").as("sum_profit"),
@@ -1218,8 +1216,8 @@ object Analytics {
     * conditional counts ride a single two-phase hash aggregate.
     */
   def q12Priority(spark: SparkSession, dir: String): DataFrame =
-    t(spark, dir, "lineitem")
-      .join(t(spark, dir, "orders")
+    Source.table(spark, dir, "lineitem")
+      .join(Source.table(spark, dir, "orders")
         .select(col("o_orderkey"), col("o_orderdate"), col("o_orderpriority")),
         col("l_orderkey") === col("o_orderkey"))
       .where(lateShip)
@@ -1241,8 +1239,8 @@ object Analytics {
     */
   def q13OrderDist(spark: SparkSession, dir: String,
                    excludePriority: String = "5-LOW"): DataFrame =
-    t(spark, dir, "customer").select(col("c_custkey"))
-      .join(t(spark, dir, "orders")
+    Source.table(spark, dir, "customer").select(col("c_custkey"))
+      .join(Source.table(spark, dir, "orders")
         .where(col("o_orderpriority") =!= excludePriority)
         .select(col("o_custkey"), col("o_orderkey")),
         col("c_custkey") === col("o_custkey"), "left_outer")
@@ -1265,14 +1263,14 @@ object Analytics {
   def q15TopSupplier(spark: SparkSession, dir: String,
                      qStart: String = "1997-01-01",
                      qEnd: String = "1997-04-01"): DataFrame =
-    t(spark, dir, "lineitem")
+    Source.table(spark, dir, "lineitem")
       .where(col("l_shipdate") >= lit(qStart).cast("timestamp") &&
         col("l_shipdate") < lit(qEnd).cast("timestamp"))
       .groupBy(col("l_suppkey"))
       .agg(sum(revTerm).as("rev"))
       .withColumn("max_rev", max(col("rev")).over(Window.partitionBy(lit(1))))
       .where(col("rev") === col("max_rev"))
-      .join(broadcast(t(spark, dir, "supplier")
+      .join(broadcast(Source.table(spark, dir, "supplier")
         .select(col("s_suppkey"), col("s_name"))),
         col("l_suppkey") === col("s_suppkey"))
       .select(col("s_suppkey"), col("s_name"),
@@ -1287,8 +1285,8 @@ object Analytics {
     * row.
     */
   def q19Disjunctive(spark: SparkSession, dir: String): DataFrame =
-    t(spark, dir, "lineitem")
-      .join(broadcast(t(spark, dir, "part")
+    Source.table(spark, dir, "lineitem")
+      .join(broadcast(Source.table(spark, dir, "part")
         .select(col("p_partkey"), col("p_brand"), col("p_size"))),
         col("l_partkey") === col("p_partkey"))
       .where(
@@ -1316,9 +1314,9 @@ object Analytics {
     */
   def q21Waiting(spark: SparkSession, dir: String): DataFrame =
     q21Frame(
-      t(spark, dir, "lineitem"),
-      t(spark, dir, "orders"),
-      t(spark, dir, "supplier"))
+      Source.table(spark, dir, "lineitem"),
+      Source.table(spark, dir, "orders"),
+      Source.table(spark, dir, "supplier"))
 
   /** The q21 aggregate chain over caller-supplied frames (plain or
     * bucketed tables). TWO STACKED plain aggregates, deliberately NOT
@@ -1365,15 +1363,15 @@ object Analytics {
   def q11ImportantStock(spark: SparkSession, dir: String,
                         nationName: String = "NATION_3",
                         fractionInv: Int = 1000): DataFrame = {
-    val supp = t(spark, dir, "supplier")
-      .join(broadcast(t(spark, dir, "nation")
+    val supp = Source.table(spark, dir, "supplier")
+      .join(broadcast(Source.table(spark, dir, "nation")
         .where(col("n_name") === nationName)
         .select(col("n_nationkey"))),
         col("s_nationkey") === col("n_nationkey"))
       .select(col("s_suppkey"))
-    val v = t(spark, dir, "lineitem")
+    val v = Source.table(spark, dir, "lineitem")
       .join(broadcast(supp), col("l_suppkey") === col("s_suppkey"))
-      .join(broadcast(t(spark, dir, "part")
+      .join(broadcast(Source.table(spark, dir, "part")
         .select(col("p_partkey"), col("p_retailprice"))),
         col("l_partkey") === col("p_partkey"))
       .groupBy(col("l_partkey").as("p_partkey"))
@@ -1402,12 +1400,12 @@ object Analytics {
   def q16PartsSupplier(spark: SparkSession, dir: String,
                        excludeBrand: String = "Brand#5",
                        sizes: Seq[Int] = Seq(1, 4, 9, 16, 25, 36)): DataFrame =
-    t(spark, dir, "lineitem")
-      .join(broadcast(t(spark, dir, "part")
+    Source.table(spark, dir, "lineitem")
+      .join(broadcast(Source.table(spark, dir, "part")
         .where(col("p_brand") =!= excludeBrand && col("p_size").isin(sizes: _*))
         .select(col("p_partkey"), col("p_brand"), col("p_type"), col("p_size"))),
         col("l_partkey") === col("p_partkey"))
-      .join(broadcast(t(spark, dir, "supplier")
+      .join(broadcast(Source.table(spark, dir, "supplier")
         .where(col("s_acctbal") < 0)
         .select(col("s_suppkey"))),
         col("l_suppkey") === col("s_suppkey"), "left_anti")
@@ -1427,9 +1425,9 @@ object Analytics {
   def q20PotentialPromo(spark: SparkSession, dir: String,
                         nameToken: String = "red",
                         shipYear: Int = 1997): DataFrame = {
-    val q = t(spark, dir, "lineitem")
+    val q = Source.table(spark, dir, "lineitem")
       .where(year(col("l_shipdate")) === shipYear)
-      .join(broadcast(t(spark, dir, "part")
+      .join(broadcast(Source.table(spark, dir, "part")
         .where(col("p_name").contains(nameToken))
         .select(col("p_partkey"))),
         col("l_partkey") === col("p_partkey"))
@@ -1440,7 +1438,7 @@ object Analytics {
     q.withColumn("n", count(lit(1)).over(Window.partitionBy(lit(1))))
       .withColumn("tot", sum(col("qty")).over(Window.partitionBy(lit(1))))
       .where(col("qty") * col("n") * lit(10) > lit(12) * col("tot"))
-      .join(broadcast(t(spark, dir, "supplier")
+      .join(broadcast(Source.table(spark, dir, "supplier")
         .select(col("s_suppkey"), col("s_name"))),
         col("l_suppkey") === col("s_suppkey"))
       .select(col("s_suppkey"), col("s_name"), col("qty").cast("double").as("qty"))
@@ -1458,13 +1456,13 @@ object Analytics {
     */
   def q22Global(spark: SparkSession, dir: String): DataFrame = {
     val bal = expr("CAST(c_acctbal AS DECIMAL(12,2))")
-    val stats = t(spark, dir, "customer")
+    val stats = Source.table(spark, dir, "customer")
       .where(col("c_acctbal") > 0)
       .agg(count(lit(1)).as("n_pos"), sum(bal).as("sum_pos"))
-    t(spark, dir, "customer")
+    Source.table(spark, dir, "customer")
       .crossJoin(broadcast(stats))
       .where(bal * col("n_pos") > col("sum_pos"))
-      .join(t(spark, dir, "orders")
+      .join(Source.table(spark, dir, "orders")
         .where(col("o_orderpriority") === "1-URGENT")
         .select(col("o_custkey")).distinct(),
         col("c_custkey") === col("o_custkey"), "left_anti")
@@ -1493,7 +1491,7 @@ object Analytics {
     */
   def pathTopK(spark: SparkSession, dir: String,
                steps: Int = 5, k: Int = 10): DataFrame = {
-    val raw = spark.read.parquet(s"$dir/events.parquet")
+    val raw = Source.table(spark, dir, "events")
     val ev = raw.select(col("user_id"),
       graft.tsdb.Db.tsNs(raw.schema).as("ts"),
       col("event_id"), col("event_type"))
@@ -1533,7 +1531,7 @@ object Analytics {
     * is engine-deterministic even for same-timestamp arrivals.
     */
   def attribution(spark: SparkSession, dir: String): DataFrame = {
-    val raw = spark.read.parquet(s"$dir/events.parquet")
+    val raw = Source.table(spark, dir, "events")
     val ev = raw.select(col("user_id"),
       graft.tsdb.Db.tsNs(raw.schema).as("ts"),
       col("event_id"), col("event_type"), col("value"))
@@ -1564,7 +1562,7 @@ object Analytics {
     */
   def newVsReturning(spark: SparkSession, dir: String): DataFrame = {
     val day = 86400L * 1000000000L
-    val raw = spark.read.parquet(s"$dir/events.parquet")
+    val raw = Source.table(spark, dir, "events")
     val du = raw.select(col("user_id"), graft.tsdb.Db.tsNs(raw.schema).as("ts"))
       .select(col("user_id"), (expr(s"ts div ${day}L") * lit(day)).as("day"))
       .distinct()
@@ -1595,7 +1593,7 @@ object Analytics {
     * engine-deterministic.
     */
   def copurchase(spark: SparkSession, dir: String, k: Int = 20): DataFrame = {
-    val items = spark.read.parquet(s"$dir/lineitem.parquet")
+    val items = Source.table(spark, dir, "lineitem")
       .select(col("l_orderkey").as("o"), col("l_partkey")).distinct()
     items.select(col("o"), col("l_partkey").as("part_a"))
       .join(items.select(col("o"), col("l_partkey").as("part_b")), Seq("o"))
@@ -1627,7 +1625,7 @@ object Analytics {
   def copurchaseLift(spark: SparkSession, dir: String,
                      k: Int = 20, minSupport: Long = 3L): DataFrame = {
     require(minSupport >= 1, "minSupport must be >= 1")
-    val items = spark.read.parquet(s"$dir/lineitem.parquet")
+    val items = Source.table(spark, dir, "lineitem")
       .select(col("l_orderkey").as("o"), col("l_partkey")).distinct()
     val total = items.select(col("o")).distinct()
       .agg(count(lit(1)).as("n_orders_total"))
@@ -1677,7 +1675,7 @@ object Analytics {
                  fromType: String = "signup",
                  toType: String = "purchase"): DataFrame = {
     val day = 86400L * 1000000000L
-    val raw = spark.read.parquet(s"$dir/events.parquet")
+    val raw = Source.table(spark, dir, "events")
     val ev = raw.select(col("user_id"),
       graft.tsdb.Db.tsNs(raw.schema).as("ts"), col("event_type"))
     val first = ev.where(col("event_type") === fromType)
@@ -1731,7 +1729,7 @@ object Analytics {
     */
   def rfm(spark: SparkSession, dir: String): DataFrame = {
     val dayNs = 86400000000000L
-    val orders = spark.read.parquet(s"$dir/orders.parquet")
+    val orders = Source.table(spark, dir, "orders")
     val ns = expr("unix_micros(cast(o_orderdate as timestamp)) * 1000")
     val cust = orders
       .groupBy(col("o_custkey").as("cust_key"))

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.io.Source
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.expressions.GraftFunctions
@@ -16,11 +17,6 @@ import graft.functions.TextFunctions.md5Fingerprint
   * interpreted HOFs.
   */
 object Dedup {
-
-  private def docs(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
-    spark.read.parquet(s"$dir/documents.parquet")
-  }
 
   /** Spread a small-file scan across the cluster before compute-heavy
     * per-row work. A single small parquet file arrives as one split;
@@ -39,7 +35,7 @@ object Dedup {
     * aggregate with map-side combine.
     */
   def exact(spark: SparkSession, dir: String): DataFrame =
-    docs(spark, dir)
+    Source.table(spark, dir, "documents")
       .groupBy(md5Fingerprint(col("text")).as("fp"))
       .agg(count(lit(1)).as("n_docs"), min(col("doc_id")).as("keeper"))
 
@@ -110,9 +106,9 @@ object Dedup {
     */
   def exactIncremental(spark: SparkSession, dir: String,
                        deltaMod: Int = 10): DataFrame = {
-    val planted = plantedReDelivery(docs(spark, dir))
+    val planted = plantedReDelivery(Source.table(spark, dir, "documents"))
     val path = ensureExactIndex(spark, dir, planted, deltaMod)
-    val baseFps = spark.read.parquet(s"$path/fps")
+    val baseFps = Source.read(spark, s"$path/fps")
       .withColumn("in_base_raw", lit(true))
     val delta = planted
       .where(col("doc_id") % deltaMod === 0)
@@ -213,7 +209,7 @@ object Dedup {
   def minhashLsh(spark: SparkSession, dir: String,
                  numHashes: Int = 32, bands: Int = 16,
                  threshold: Double = 0.5, salt: Int = 1): DataFrame = {
-    val d = parallelize(docs(spark, dir))
+    val d = parallelize(Source.table(spark, dir, "documents"))
     // CENSUS-ROUTED (round 10): one fingerprint aggregate — the cheap
     // exact precursor of [[clusterSizeHist]]'s census — detects the
     // giant-boilerplate regime where the verify goes per-cluster-
@@ -252,7 +248,7 @@ object Dedup {
 
   /** [[maxExactGroup]] over the shipped corpus (bench hook). */
   def maxExactGroup(spark: SparkSession, dir: String): Long =
-    maxExactGroup(parallelize(docs(spark, dir)))
+    maxExactGroup(parallelize(Source.table(spark, dir, "documents")))
 
   /** The routing census as its own GATED read — one row
     * `(max_group, n_groups, n_docs)` over [[exact]]'s fingerprint
@@ -382,34 +378,9 @@ object Dedup {
         jaccard(col("sa.shingles"), col("sb.shingles")).as("jaccard"))
   }
 
-  /** Verification of a deterministic 1-in-`sampleMod` hash-sample of
-    * the minhash candidate stream — the MEASURED bound for corpora
-    * whose full verify is workload-quadratic (true-dup clusters make
-    * candidates ∝ Σ cluster², and each candidate's set-intersection is
-    * what the 100× timed leg cannot afford). Per-candidate verify cost
-    * is i.i.d. across the xxhash64 sample, so
-    * `total ≈ sample_sec × sampleMod` is an unbiased estimate of the
-    * full verify wall — the number the bench records next to the full
-    * candidate count, replacing a leg that would otherwise be a silent
-    * skip. The sample is by PAIR hash, not by document, so hot
-    * clusters are sampled proportionally to their candidate volume.
-    */
-  def minhashSampledVerify(docsDf: DataFrame, sampleMod: Int = 16,
-                           numHashes: Int = 32, bands: Int = 16,
-                           threshold: Double = 0.5, salt: Int = 1,
-                           hotMin: Long = 128,
-                           broadcastVerify: Boolean = true): DataFrame = {
-    require(sampleMod >= 1, "sampleMod must be >= 1")
-    GraftFunctions.register(docsDf.sparkSession)
-    val base = minhashBase(docsDf, numHashes)
-    val cand = minhashCandFrame(docsDf, numHashes, bands, salt, hotMin)
-      .where(pmod(xxhash64(col("doc_a"), col("doc_b")), lit(sampleMod)) === 0)
-    minhashVerify(base, cand, threshold, broadcastVerify)
-  }
-
   /** The candidate stream over the shipped corpus (bench hook). */
   def minhashCandidates(spark: SparkSession, dir: String): DataFrame =
-    minhashCandFrame(parallelize(docs(spark, dir)))
+    minhashCandFrame(parallelize(Source.table(spark, dir, "documents")))
 
   /** One-action (sampled, verified) counts for a 1-in-`sampleMod`
     * pair-hash sample of the candidate stream: the verify join runs
@@ -421,7 +392,7 @@ object Dedup {
                                sampleMod: Int,
                                threshold: Double = 0.5,
                                broadcastVerify: Boolean = true): (Long, Long) = {
-    val cand = minhashCandFrame(parallelize(docs(spark, dir)))
+    val cand = minhashCandFrame(parallelize(Source.table(spark, dir, "documents")))
     minhashSampleVerifyStatsFrames(minhashShingleBase(spark, dir), cand,
       sampleMod, threshold, broadcastVerify)
   }
@@ -430,7 +401,7 @@ object Dedup {
     * benchmark can materialize it once and time the join phase alone.
     */
   def minhashShingleBase(spark: SparkSession, dir: String): DataFrame =
-    minhashBase(parallelize(docs(spark, dir)), 32)
+    minhashBase(parallelize(Source.table(spark, dir, "documents")), 32)
       .select(col("doc_id"), col("shingles"))
 
   /** [[minhashSampleVerifyStats]] over pre-materialized base and
@@ -479,7 +450,7 @@ object Dedup {
                          numHashes: Int = 32, bands: Int = 16,
                          threshold: Double = 0.5,
                          band: Double = 0.35): DataFrame = {
-    val d = parallelize(docs(spark, dir))
+    val d = parallelize(Source.table(spark, dir, "documents"))
     val pairs = minhashLsh(spark, dir, numHashes, bands, threshold)
       .select(col("doc_a"), col("doc_b"), col("jaccard"))
     val sigs = minhashBase(d, numHashes).select(col("doc_id"), col("sig"))
@@ -495,10 +466,12 @@ object Dedup {
         abs(col("jaccard_est") - col("jaccard")) <= band)
   }
 
-  private def minhashBase(docsDf: DataFrame, numHashes: Int): DataFrame =
+  private def minhashBase(docsDf: DataFrame, numHashes: Int): DataFrame = {
+    GraftFunctions.register(docsDf.sparkSession)
     docsDf
       .select(col("doc_id"), wordShingles.as("shingles"))
       .withColumn("sig", call_function("graft_minhash_sig", col("shingles"), lit(numHashes)))
+  }
 
   /** The banded signature rows `(doc_id, band, band_hash)` — the LSH
     * index representation: one row per (doc, band), band key = hash of
@@ -563,7 +536,7 @@ object Dedup {
     if (!java.nio.file.Files.exists(
         java.nio.file.Paths.get(path, "_SUCCESS"))) {
       bandFrame(
-        parallelize(docs(spark, dir)).where(col("doc_id") % deltaMod =!= 0),
+        parallelize(Source.table(spark, dir, "documents")).where(col("doc_id") % deltaMod =!= 0),
         numHashes, bands)
         .write.mode("overwrite").parquet(path)
     }
@@ -594,9 +567,8 @@ object Dedup {
                          numHashes: Int = 32, bands: Int = 16,
                          threshold: Double = 0.5, deltaMod: Int = 10,
                          broadcastVerify: Boolean = true): DataFrame = {
-    val d = parallelize(docs(spark, dir))
-    val idxBands = spark.read.parquet(
-      ensureBandIndex(spark, dir, numHashes, bands, deltaMod))
+    val d = parallelize(Source.table(spark, dir, "documents"))
+    val idxBands = Source.read(spark, ensureBandIndex(spark, dir, numHashes, bands, deltaMod))
     minhashIncrementalFrame(d, idxBands, numHashes, bands, threshold,
       deltaMod, broadcastVerify)
   }
@@ -654,10 +626,7 @@ object Dedup {
     * scan, no shuffle.
     */
   def simhash(spark: SparkSession, dir: String): DataFrame =
-    docs(spark, dir)
-      .select(
-        col("doc_id"),
-        call_function("graft_simhash", split(col("text"), " ")).as("simhash"))
+    simhashFrame(Source.table(spark, dir, "documents"))
 
   /** SimHash banded candidates verified by Hamming distance ≤ `hamMax`.
     * 4 × 16-bit bands: a pair within Hamming ≤ 3 of 64 bits must agree
@@ -665,7 +634,7 @@ object Dedup {
     * a complete candidate generator for hamMax ≤ 3.
     */
   def simhashPairs(spark: SparkSession, dir: String, hamMax: Int = 3): DataFrame =
-    simhashPairsFrame(docs(spark, dir), hamMax)
+    simhashPairsFrame(Source.table(spark, dir, "documents"), hamMax)
 
   /** [[simhashPairs]] over an arbitrary (doc_id, text) frame. Verify
     * cost is a single `bit_count` per candidate — constant per pair,
@@ -828,7 +797,7 @@ object Dedup {
     * property through the same gate that checks the operator.
     */
   def simhashCensusRead(spark: SparkSession, dir: String): DataFrame =
-    simhashFrame(docs(spark, dir))
+    simhashFrame(Source.table(spark, dir, "documents"))
       .groupBy(col("simhash")).agg(count(lit(1)).as("c"))
       .agg(max(col("c")).as("max_group"), count(lit(1)).as("n_groups"),
         sum(col("c")).as("n_docs"))
@@ -895,10 +864,8 @@ object Dedup {
       s"${fp}_m$deltaMod"
     if (!java.nio.file.Files.exists(
         java.nio.file.Paths.get(path, "_SUCCESS"))) {
-      GraftFunctions.register(spark)
-      parallelize(docs(spark, dir)).where(col("doc_id") % deltaMod =!= 0)
-        .select(col("doc_id"),
-          call_function("graft_simhash", split(col("text"), " ")).as("simhash"))
+      simhashFrame(
+        parallelize(Source.table(spark, dir, "documents")).where(col("doc_id") % deltaMod =!= 0))
         .write.mode("overwrite").parquet(path)
     }
     path
@@ -918,16 +885,14 @@ object Dedup {
     */
   def simhashIncremental(spark: SparkSession, dir: String,
                          hamMax: Int = 3, deltaMod: Int = 10): DataFrame = {
-    GraftFunctions.register(spark)
-    val idx = spark.read.parquet(ensureSimhashIndex(spark, dir, deltaMod))
-    val delta = parallelize(docs(spark, dir))
-      .where(col("doc_id") % deltaMod === 0)
-      .select(col("doc_id"),
-        call_function("graft_simhash", split(col("text"), " ")).as("simhash"))
+    val idxPath = ensureSimhashIndex(spark, dir, deltaMod)
+    val idx = Source.read(spark, idxPath)
+    val delta = simhashFrame(
+      parallelize(Source.table(spark, dir, "documents")).where(col("doc_id") % deltaMod === 0))
     // the probe joins band both sides with the SAME corpus-sized
     // scheme (completeness needs matching keys); size on the index —
     // the corpus-proportional side whose bucket density is the risk
-    val wide = hamMax <= 3 && idx.count() >= WideBandMinHashes
+    val wide = hamMax <= 3 && Source.rows(spark, idxPath) >= WideBandMinHashes
     val bd = bandedHashFrame(delta, "doc_id", "simhash", wide)
     val bi = bandedHashFrame(idx, "doc_id", "simhash", wide)
     val cross = bd.as("a").hint("shuffle_hash")
@@ -963,21 +928,6 @@ object Dedup {
       .distinct()
   }
 
-  /** Exhaustive prefix-blocked *word-shingle* Jaccard — the ground-truth
-    * oracle for [[minhashLsh]] (same similarity measure, no hashing).
-    */
-  def wordJaccardBlocked(spark: SparkSession, dir: String,
-                         threshold: Double = 0.3): DataFrame = {
-    val g = docs(spark, dir).select(
-      col("doc_id"), substring(col("text"), 1, 16).as("blk"), wordShingles.as("grams"))
-    g.as("a")
-      .join(g.as("b"),
-        col("a.blk") === col("b.blk") && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-        jaccard(col("a.grams"), col("b.grams")).as("jaccard"))
-      .where(col("jaccard") >= threshold)
-  }
-
   // --------------------------------------------------------- n-gram jaccard
   /** Char-3-gram Jaccard over prefix-blocked candidate pairs. Blocking on
     * the first 16 chars keeps the join linear; the quadratic part runs
@@ -985,7 +935,7 @@ object Dedup {
     */
   def ngramJaccard(spark: SparkSession, dir: String,
                    threshold: Double = 0.3): DataFrame =
-    ngramJaccardFrame(parallelize(docs(spark, dir)), threshold)
+    ngramJaccardFrame(parallelize(Source.table(spark, dir, "documents")), threshold)
 
   /** [[ngramJaccard]] over an arbitrary `(doc_id, text)` frame. */
   def ngramJaccardFrame(d: DataFrame, threshold: Double = 0.3): DataFrame = {
@@ -1024,7 +974,8 @@ object Dedup {
     */
   def containment(spark: SparkSession, dir: String,
                   threshold: Double = 0.5, maxDf: Long = 20): DataFrame = {
-    val g0 = parallelize(docs(spark, dir))
+    GraftFunctions.register(spark)
+    val g0 = parallelize(Source.table(spark, dir, "documents"))
       .select(col("doc_id"), explode(wordShingles).as("gram"))
     val rare = g0.groupBy(col("gram"))
       .agg(count(lit(1)).as("df")).where(col("df") <= maxDf)
@@ -1048,7 +999,7 @@ object Dedup {
   // ----------------------------------------------------- embedding near-dup
   private def embFrame(spark: SparkSession, dir: String): DataFrame = {
     GraftFunctions.register(spark)
-    parallelize(spark.read.parquet(s"$dir/embeddings.parquet"))
+    parallelize(Source.table(spark, dir, "embeddings"))
       .select(col("vec_id"), col("label"), col("embedding").as("v"))
       // norm once per vector; graft_dot reads array<float> directly and
       // accumulates in double — bit-identical to dotting cast-to-double
@@ -1181,11 +1132,12 @@ object Dedup {
                          threshold: Double = 0.35,
                          targetRecall: Double = 0.98,
                          maxPlanes: Int = 192, salt: Int = 1): DataFrame = {
-    // verify strategy sized from the parquet footers like the banding
-    // plan — the dir-level entry must never broadcast an oversized
-    // payload (the measured 39 GB-heap failure mode); only the
-    // frame-level API leaves the knob to callers who cannot count
-    val n = spark.read.parquet(s"$dir/embeddings.parquet").count()
+    // verify strategy sized from the row counts in the parquet footers
+    // (Source.rows, no Spark job) — the dir-level entry must never
+    // broadcast an oversized payload (the measured 39 GB-heap failure
+    // mode); only the frame-level API leaves the knob to callers who
+    // cannot count
+    val n = Source.rows(spark, s"$dir/embeddings.parquet")
     embeddingCosineLshFrame(embFrame(spark, dir), threshold, targetRecall,
       maxPlanes, salt, broadcastVerify = n <= BroadcastVerifyMaxRows)
   }
@@ -1229,11 +1181,12 @@ object Dedup {
   def semantic(spark: SparkSession, dir: String,
                nlist: Int = -1, iters: Int = 3,
                threshold: Double = 0.35): DataFrame = {
-    // nlist < 0 → corpus-sized (√n from the parquet footers' row count,
-    // no scan): the default deployment never pins a cell count
+    // nlist < 0 → corpus-sized (√n from the parquet footers' row
+    // counts, Source.rows, no Spark job): the default deployment never
+    // pins a cell count
     val sized =
       if (nlist > 0) nlist
-      else nlistSized(spark.read.parquet(s"$dir/embeddings.parquet").count())
+      else nlistSized(Source.rows(spark, s"$dir/embeddings.parquet"))
     // reuse the SAME cached kmeans trainer/assignment layout as the IVF
     // family ([[IvfIndex.ensure]], keyed by (corpus content, variant,
     // nlist, iters)): at matching nlist the dedup cells provably
@@ -1243,7 +1196,7 @@ object Dedup {
       sized, iters,
       train = () => Similarity.trainedCentroids(e, sized, iters), corpus = e)
     semanticOverAssigned(
-      spark.read.parquet(s"${index.path}/assign")
+      Source.read(spark, s"${index.path}/assign")
         .select(col("vec_id"), col("v"), col("nrm"),
           col("list_id").cast("long").as("list_id")),
       threshold)
@@ -1454,10 +1407,10 @@ object Dedup {
                               threshold: Double = 0.9,
                               candPerRow: Double = 32.0,
                               deltaMod: Int = 10): DataFrame = {
-    val n = 2L * spark.read.parquet(s"$dir/embeddings.parquet").count()
+    val n = 2L * Source.rows(spark, s"$dir/embeddings.parquet")
     val (rowsPerBand, bands) = lshPlanSized(threshold, n, candPerRow = candPerRow)
-    val idxBands = spark.read.parquet(
-      ensureEmbBandIndex(spark, dir, rowsPerBand, bands, deltaMod))
+    val idxBands =
+      Source.read(spark, ensureEmbBandIndex(spark, dir, rowsPerBand, bands, deltaMod))
     embeddingLshIncrementalFrame(withPlantedNearDups(spark, dir), idxBands,
       rowsPerBand, bands, threshold, deltaMod,
       broadcastVerify = n <= BroadcastVerifyMaxRows)
@@ -1513,10 +1466,10 @@ object Dedup {
   def lshStats(spark: SparkSession, dir: String, op: String): (Long, Long) =
     op match {
       case "dedup_minhash" =>
-        val d = parallelize(docs(spark, dir))
+        val d = parallelize(Source.table(spark, dir, "documents"))
         (minhashCandFrame(d).count(), minhashLshFrame(d).count())
       case "dedup_embedding_lsh" =>
-        val n = 2L * spark.read.parquet(s"$dir/embeddings.parquet").count()
+        val n = 2L * Source.rows(spark, s"$dir/embeddings.parquet")
         val plan = lshPlanSized(0.9, n)
         val e = withPlantedNearDups(spark, dir)
         (embeddingCandFrame(e, plan._1, plan._2).count(),
@@ -1528,7 +1481,7 @@ object Dedup {
         // (collapsed → representative-level; direct → member-level)
         // and the census-chosen banding — the r11 record's 597× growth
         // was the unrouted member-level classic generator
-        val d = docs(spark, dir)
+        val d = Source.table(spark, dir, "documents")
         val hashed = simhashFrame(d)
         val (maxGroup, _, nDistinct) = simhashCensus(hashed)
         val wide = nDistinct >= WideBandMinHashes
@@ -1556,24 +1509,22 @@ object Dedup {
   def incrementalStats(spark: SparkSession, dir: String, op: String,
                        deltaMod: Int = 10): (Long, Long) = op match {
     case "dedup_exact_incremental" =>
-      val planted = plantedReDelivery(docs(spark, dir))
+      val planted = plantedReDelivery(Source.table(spark, dir, "documents"))
       val path = ensureExactIndex(spark, dir, planted, deltaMod)
       (planted.where(col("doc_id") % deltaMod === 0).count(),
-        spark.read.parquet(s"$path/fps").count())
+        Source.rows(spark, s"$path/fps"))
     case "dedup_minhash_incremental" =>
-      (docs(spark, dir).where(col("doc_id") % deltaMod === 0).count(),
-        spark.read.parquet(
-          ensureBandIndex(spark, dir, deltaMod = deltaMod)).count())
+      (Source.table(spark, dir, "documents").where(col("doc_id") % deltaMod === 0).count(),
+        Source.rows(spark, ensureBandIndex(spark, dir, deltaMod = deltaMod)))
     case "dedup_simhash_incremental" =>
-      (docs(spark, dir).where(col("doc_id") % deltaMod === 0).count(),
-        spark.read.parquet(ensureSimhashIndex(spark, dir, deltaMod)).count())
+      (Source.table(spark, dir, "documents").where(col("doc_id") % deltaMod === 0).count(),
+        Source.rows(spark, ensureSimhashIndex(spark, dir, deltaMod)))
     case "dedup_embedding_lsh_incremental" =>
-      val n = 2L * spark.read.parquet(s"$dir/embeddings.parquet").count()
+      val n = 2L * Source.rows(spark, s"$dir/embeddings.parquet")
       val (rowsPerBand, bands) = lshPlanSized(0.9, n, candPerRow = 32.0)
       (withPlantedNearDups(spark, dir)
         .where(col("vec_id") % deltaMod === 0).count(),
-        spark.read.parquet(
-          ensureEmbBandIndex(spark, dir, rowsPerBand, bands, deltaMod)).count())
+        Source.rows(spark, ensureEmbBandIndex(spark, dir, rowsPerBand, bands, deltaMod)))
     case other => sys.error(s"no incremental stats for $other")
   }
 
@@ -1588,7 +1539,7 @@ object Dedup {
     */
   def semanticStats(spark: SparkSession, dir: String,
                     iters: Int = 3): (Int, Long, Long, Long) = {
-    val n = spark.read.parquet(s"$dir/embeddings.parquet").count()
+    val n = Source.rows(spark, s"$dir/embeddings.parquet")
     // fail with the actual problem, not the NullPointerException a
     // zero-row aggregate's null max/sum would deref below
     require(n > 0, s"semanticStats: empty embeddings corpus under $dir")
@@ -1597,7 +1548,7 @@ object Dedup {
     val index = graft.operators.IvfIndex.ensure(spark, dir, "kmeans",
       sized, iters,
       train = () => Similarity.trainedCentroids(e, sized, iters), corpus = e)
-    val row = spark.read.parquet(s"${index.path}/assign")
+    val row = Source.read(spark, s"${index.path}/assign")
       .groupBy(col("list_id")).agg(count(lit(1)).as("c"))
       .agg(count(lit(1)).as("cells"), max(col("c")).as("max_c"),
         sum(expr("c * (c - 1) div 2")).as("pairs"))
@@ -1669,9 +1620,9 @@ object Dedup {
   def embeddingNearDup(spark: SparkSession, dir: String,
                        threshold: Double = 0.9,
                        candPerRow: Double = 32.0): DataFrame = {
-    // corpus size from parquet footers (row-count metadata, no scan);
-    // the planted frame doubles it
-    val n = 2L * spark.read.parquet(s"$dir/embeddings.parquet").count()
+    // corpus size from the parquet footers' row counts (Source.rows, no
+    // Spark job); the planted frame doubles it
+    val n = 2L * Source.rows(spark, s"$dir/embeddings.parquet")
     embeddingCosineLshFrame(withPlantedNearDups(spark, dir), threshold,
       planOverride = Some(lshPlanSized(threshold, n, candPerRow = candPerRow)),
       broadcastVerify = n <= BroadcastVerifyMaxRows)
@@ -2048,7 +1999,7 @@ object Dedup {
       .agg(min(col("doc_id")).as("doc_id"),
         count(lit(1)).as("weight"))
       .select(col("doc_id"), col("weight"))
-    val unpaired = docs(spark, dir).select(col("doc_id"))
+    val unpaired = Source.table(spark, dir, "documents").select(col("doc_id"))
       .join(labels, Seq("doc_id"), "left_anti")
       .select(col("doc_id"), lit(1L).as("weight"))
     unpaired.unionByName(keepers)
@@ -2066,7 +2017,7 @@ object Dedup {
     */
   def pipeline(spark: SparkSession, dir: String,
                threshold: Double = 0.5): DataFrame =
-    pipelineFrame(parallelize(docs(spark, dir)), threshold)
+    pipelineFrame(parallelize(Source.table(spark, dir, "documents")), threshold)
 
   /** [[pipeline]] over an arbitrary (doc_id, text) frame.
     *
@@ -2093,7 +2044,7 @@ object Dedup {
     */
   def pipelineSimhash(spark: SparkSession, dir: String,
                       hamMax: Int = 3): DataFrame = {
-    val d = parallelize(docs(spark, dir))
+    val d = parallelize(Source.table(spark, dir, "documents"))
     pipelineOverPairs(d, simhashPairsFrame(d, hamMax))
   }
 
@@ -2158,7 +2109,7 @@ object Dedup {
   def pipelineQuality(spark: SparkSession, dir: String,
                       threshold: Double = 0.3): DataFrame =
     pipelineQualityKeeper(
-      parallelize(docs(spark, dir)),
+      parallelize(Source.table(spark, dir, "documents")),
       ngramJaccard(spark, dir, threshold),
       TextAnalysis.quality(spark, dir)
         .select(col("doc_id"), col("quality_score")))
@@ -2185,7 +2136,7 @@ object Dedup {
     * never drift from the gated stages.
     */
   def pipelineSubstring(spark: SparkSession, dir: String): DataFrame = {
-    val d = parallelize(docs(spark, dir))
+    val d = parallelize(Source.table(spark, dir, "documents"))
     val keeperIds = exact(spark, dir).select(col("keeper").as("doc_id"))
     val keepers = d.join(keeperIds, "doc_id")
       .select(col("doc_id"), col("text"))
@@ -2257,7 +2208,7 @@ object Dedup {
   def yieldReport(spark: SparkSession, dir: String,
                   threshold: Double = 0.3,
                   minQuality: Double = 0.5): DataFrame = {
-    val raw = parallelize(docs(spark, dir))
+    val raw = parallelize(Source.table(spark, dir, "documents"))
       .select(col("doc_id"), col("text"), col("source"))
     val planted = plantedReDelivery(raw.select(col("doc_id"), col("text")))
     val exactKeepIds = planted

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.io.Source
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -86,7 +87,7 @@ object IvfIndex {
           .write.partitionBy("list_id").mode("overwrite").parquet(s"$path/assign")
         java.nio.file.Files.deleteIfExists(appendedMarker(path))
       }
-      val cents = spark.read.parquet(s"$path/centroids").collect()
+      val cents = Source.read(spark, s"$path/centroids").collect()
         .map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).toSeq.sortBy(_._1)
       Index(path, cents)
     }
@@ -171,7 +172,7 @@ object IvfIndex {
         // append path is what this layout exists to exercise
         val landing = s"$path.landing"
         corpus.coalesce(4).write.mode("overwrite").parquet(landing)
-        val schema = spark.read.parquet(landing).schema
+        val schema = Source.read(spark, landing).schema
         val q = spark.readStream.schema(schema)
           .option("maxFilesPerTrigger", 1)
           .parquet(landing)
@@ -186,7 +187,7 @@ object IvfIndex {
         java.nio.file.Files.write(java.nio.file.Paths.get(path, "_DONE"),
           Array.empty[Byte])
       }
-      val cents = spark.read.parquet(s"$path/centroids").collect()
+      val cents = Source.read(spark, s"$path/centroids").collect()
         .map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).toSeq.sortBy(_._1)
       Index(path, cents)
     }
@@ -231,7 +232,7 @@ object IvfIndex {
         f.isDirectory && f.getName.startsWith("list_id="))
     val dirs = completeBatchDirs(path)
     val frames = (if (hasBase) Seq(base) else Seq.empty) ++
-      dirs.map(spark.read.parquet(_))
+      dirs.map(Source.read(spark, _))
     require(frames.nonEmpty, s"IVF layout at $path has no data")
     frames.reduce(_.unionByName(_))
   }
@@ -241,7 +242,7 @@ object IvfIndex {
     * type.
     */
   def open(spark: SparkSession, index: Index): DataFrame =
-    withBatches(spark, index.path, spark.read.parquet(s"${index.path}/assign"))
+    withBatches(spark, index.path, Source.read(spark, s"${index.path}/assign"))
       .withColumn("list_id", col("list_id").cast("long"))
 
   // ---------------------------------------------------------------- IVF-PQ
@@ -291,9 +292,9 @@ object IvfIndex {
           .write.partitionBy("list_id").mode("overwrite").parquet(s"$path/assign")
         java.nio.file.Files.deleteIfExists(appendedMarker(path))
       }
-      val cents = spark.read.parquet(s"$path/centroids").collect()
+      val cents = Source.read(spark, s"$path/centroids").collect()
         .map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).toSeq.sortBy(_._1)
-      val b = spark.read.parquet(s"$path/pqbooks").collect()(0)
+      val b = Source.read(spark, s"$path/pqbooks").collect()(0)
       PqIndex(path, cents,
         scala.collection.immutable.ArraySeq.unsafeWrapArray(
           b.getSeq[Double](2).toArray), b.getInt(0), b.getInt(1))
@@ -335,14 +336,9 @@ object IvfIndex {
     * projection pushes through the batch-append union).
     */
   def openPqCodes(spark: SparkSession, index: PqIndex): DataFrame =
-    withBatches(spark, index.path, spark.read.parquet(s"${index.path}/assign"))
+    withBatches(spark, index.path, Source.read(spark, s"${index.path}/assign"))
       .select(col("vec_id"), col("nrm"), col("code"),
         col("list_id").cast("long").as("list_id"))
-
-  /** The full PQ layout rows (including `v`) for the re-rank phase. */
-  def openPqFull(spark: SparkSession, index: PqIndex): DataFrame =
-    withBatches(spark, index.path, spark.read.parquet(s"${index.path}/assign"))
-      .withColumn("list_id", col("list_id").cast("long"))
 
   private val pqCache =
     new java.util.concurrent.ConcurrentHashMap[String, PqIndex]()

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.io.Source
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.expressions.{GraftFunctions, MmFormat}
@@ -46,7 +47,7 @@ object Multimodal {
     */
   def blobFrame(spark: SparkSession, dir: String): DataFrame = {
     GraftFunctions.register(spark)
-    spark.read.parquet(s"$dir/documents.parquet")
+    Source.table(spark, dir, "documents")
       .select(col("doc_id"),
         call_function("graft_mm_synth", col("doc_id"), col("text")).as("payload"))
   }
@@ -310,7 +311,7 @@ object Multimodal {
     */
   def dedupImages(spark: SparkSession, dir: String, hamMax: Int = 3): DataFrame =
     Dedup.pipelineOverPairs(
-      spark.read.parquet(s"$dir/documents.parquet").select(col("doc_id")),
+      Source.table(spark, dir, "documents").select(col("doc_id")),
       phashPairs(spark, dir, hamMax))
 
   /** Deterministic resize stand-in: `ow·oh` bytes sampled at a fixed
@@ -425,6 +426,6 @@ object Multimodal {
     */
   def dedupFrames(spark: SparkSession, dir: String): DataFrame =
     Dedup.pipelineOverPairs(
-      spark.read.parquet(s"$dir/documents.parquet").select(col("doc_id")),
+      Source.table(spark, dir, "documents").select(col("doc_id")),
       framePairs(spark, dir).select(col("doc_a"), col("doc_b")))
 }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.io.Source
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -74,7 +75,7 @@ object Sampling {
 
   /** documents → (doc_id, fold) assignment (driver entry). */
   def docKfold(spark: SparkSession, dir: String, k: Int = 5): DataFrame = {
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
+    val docs = Source.table(spark, dir, "documents")
     docs.select(col("doc_id"),
       assignKfold(docs, col("doc_id"), k).cast("long").as("fold"))
   }
@@ -115,7 +116,7 @@ object Sampling {
                     trainNum: Long = 4, trainDen: Long = 5): DataFrame = {
     require(trainDen > 0 && trainNum >= 0 && trainNum <= trainDen,
       "train fraction must be in [0, 1]")
-    val raw = spark.read.parquet(s"$dir/events.parquet")
+    val raw = Source.table(spark, dir, "events")
     val ev = raw.select(col("event_id"), graft.tsdb.Db.tsNs(raw.schema).as("ts"))
     val bounds = ev.agg(min(col("ts")).as("lo"), max(col("ts")).as("hi"))
     ev.crossJoin(broadcast(bounds))
@@ -128,7 +129,7 @@ object Sampling {
   /** documents → (doc_id, split) assignment. */
   def docSplit(spark: SparkSession, dir: String,
                trainPct: Double = 0.8, valPct: Double = 0.1): DataFrame = {
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
+    val docs = Source.table(spark, dir, "documents")
     docs.select(col("doc_id"),
       assignSplit(docs, col("doc_id"), trainPct, valPct).as("split"))
   }
@@ -158,7 +159,7 @@ object Sampling {
   def decontamSplit(spark: SparkSession, dir: String,
                     trainPct: Double = 0.8, valPct: Double = 0.1,
                     threshold: Double = 0.3): DataFrame = {
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
+    val docs = Source.table(spark, dir, "documents")
       .select(col("doc_id"))
     val labels = Dedup.cluster(spark, dir, threshold)
       .select(col("doc_id"), col("cluster_id"))
@@ -181,7 +182,7 @@ object Sampling {
                 rates: Seq[(String, Double)] =
                   Seq("src0" -> 1.0, "src1" -> 0.5, "src2" -> 0.25),
                 defaultRate: Double = 0.125): DataFrame = {
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
+    val docs = Source.table(spark, dir, "documents")
     val b = hashBucket(col("doc_id"))
     val keep = rates.foldRight(bucketBelow(b, defaultRate)) {
       case ((s, r), acc) => when(col("source") === s, bucketBelow(b, r)).otherwise(acc)
@@ -247,7 +248,7 @@ object Sampling {
 
   /** documents → packing metadata (driver entry). */
   def packDocs(spark: SparkSession, dir: String, budget: Long = 1024): DataFrame =
-    packSequences(spark.read.parquet(s"$dir/documents.parquet"), budget)
+    packSequences(Source.table(spark, dir, "documents"), budget)
 
   /** Deterministic global shuffle for training-order assignment: every
     * row gets a (shard, pos) — shard from the leading `shardChars` hex
@@ -278,7 +279,7 @@ object Sampling {
 
   /** documents → deterministic shuffle order (driver entry). */
   def shuffleDocs(spark: SparkSession, dir: String): DataFrame =
-    shuffleOrder(spark.read.parquet(s"$dir/documents.parquet"), col("doc_id"))
+    shuffleOrder(Source.table(spark, dir, "documents"), col("doc_id"))
 
   /** Per-EPOCH deterministic training orders — multi-epoch training
     * re-shuffles between epochs, and reproducibility demands each
@@ -296,7 +297,7 @@ object Sampling {
     // epochs=0 threw UnsupportedOperationException instead of a
     // contract error) — same posture as frameSample's everyK guard
     require(epochs >= 1, "epochs must be >= 1")
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
+    val docs = Source.table(spark, dir, "documents")
     (0 until epochs).map { e =>
       shuffleOrder(docs, col("doc_id"), salt = s"graft-e$e")
         .withColumn("epoch", lit(e.toLong))
@@ -320,7 +321,7 @@ object Sampling {
     */
   def temperatureMix(spark: SparkSession, dir: String,
                      key: String = "lang"): DataFrame = {
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
+    val docs = Source.table(spark, dir, "documents")
     val counts = docs.groupBy(col(key)).agg(count(lit(1)).as("n_src"))
     val minN = counts.agg(min(col("n_src")).as("n_min"))
     val rates = counts.crossJoin(broadcast(minN))
@@ -372,7 +373,7 @@ object Sampling {
   def stratifiedSample(spark: SparkSession, dir: String,
                        perLabel: Int = 10): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val e = spark.read.parquet(s"$dir/embeddings.parquet")
+    val e = Source.table(spark, dir, "embeddings")
     val w = Window.partitionBy(col("label"))
       .orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
     e.select(col("vec_id"), col("label"))
@@ -394,7 +395,7 @@ object Sampling {
     */
   def balancedSample(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val e = spark.read.parquet(s"$dir/embeddings.parquet")
+    val e = Source.table(spark, dir, "embeddings")
       .select(col("vec_id"), col("label"))
     val minN = broadcast(e.groupBy(col("label")).agg(count(lit(1)).as("n"))
       .agg(min(col("n")).as("n_min")))

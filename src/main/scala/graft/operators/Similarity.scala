@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.io.Source
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions
@@ -31,7 +32,7 @@ object Similarity {
 
   private[operators] def vecs(spark: SparkSession, dir: String): DataFrame = {
     GraftFunctions.register(spark)
-    val raw = spark.read.parquet(s"$dir/embeddings.parquet")
+    val raw = Source.table(spark, dir, "embeddings")
     val p = spark.sparkContext.defaultParallelism
     // file listing, not RDD materialization: spread a single small file
     // before kernel-heavy projections; no-op when files ≥ cores

@@ -1,5 +1,7 @@
 package graft.operators
 
+import graft.expressions.GraftFunctions
+import graft.io.Source
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions._
@@ -11,13 +13,8 @@ import graft.functions.TextFunctions._
   */
 object TextAnalysis {
 
-  private def docs(spark: SparkSession, dir: String): DataFrame = {
-    graft.expressions.GraftFunctions.register(spark)
-    spark.read.parquet(s"$dir/documents.parquet")
-  }
-
   def tokens(spark: SparkSession, dir: String): DataFrame =
-    docs(spark, dir).select(
+    Source.table(spark, dir, "documents").select(
       col("doc_id"),
       wsTokenCount(col("text")).as("n_ws_tokens"),
       bpeTokenCount(col("text")).as("n_bpe_tokens"),
@@ -47,7 +44,7 @@ object TextAnalysis {
     require(window >= 1, "window must be >= 1")
     require(stride >= 1 && stride <= window,
       "stride must be in [1, window] (gaps between chunks lose tokens)")
-    docs(spark, dir)
+    Source.table(spark, dir, "documents")
       .select(col("doc_id"), wsTokenCount(col("text")).as("n"))
       .withColumn("n_chunks",
         when(col("n") <= window, lit(1L))
@@ -74,15 +71,15 @@ object TextAnalysis {
     * corpus size); integer outputs are trivially engine-exact.
     */
   def lenHist(spark: SparkSession, dir: String, binWidth: Long = 32L): DataFrame =
-    docs(spark, dir)
+    Source.table(spark, dir, "documents")
       .select(wsTokenCount(col("text")).as("n_tok"))
       .groupBy((expr(s"n_tok div ${binWidth}L") * lit(binWidth)).as("bin_lo"))
       .agg(count(lit(1)).as("n_docs"), sum(col("n_tok")).as("n_tokens"))
 
-  def langid(spark: SparkSession, dir: String): DataFrame =
-    docs(spark, dir).select(
-      col("doc_id"),
-      langId(col("text")).as("lang_pred"))
+  def langid(spark: SparkSession, dir: String): DataFrame = {
+    GraftFunctions.register(spark)
+    Source.table(spark, dir, "documents").select(col("doc_id"), langId(col("text")).as("lang_pred"))
+  }
 
   /** Classifier evaluation against the corpus ground truth: the
     * (lang, lang_pred) confusion matrix in the same single scan — the
@@ -90,17 +87,20 @@ object TextAnalysis {
     * already carries, so no join exists anywhere; one 25-cell-bounded
     * hash aggregate.
     */
-  def langidEval(spark: SparkSession, dir: String): DataFrame =
-    docs(spark, dir)
+  def langidEval(spark: SparkSession, dir: String): DataFrame = {
+    GraftFunctions.register(spark)
+    Source.table(spark, dir, "documents")
       .select(col("lang"), langId(col("text")).as("lang_pred"))
       .groupBy(col("lang"), col("lang_pred"))
       .agg(count(lit(1)).as("n"))
+  }
 
   def quality(spark: SparkSession, dir: String): DataFrame =
-    qualityFrame(docs(spark, dir))
+    qualityFrame(Source.table(spark, dir, "documents"))
 
   /** [[quality]] over an arbitrary `(doc_id, text)` frame. */
   def qualityFrame(d: DataFrame): DataFrame = {
+    GraftFunctions.register(d.sparkSession)
     val nChars = length(col("text")).cast("long")
     val nTokens = wsTokenCount(col("text"))
     val alpha = alphaCount(col("text"))
@@ -123,11 +123,11 @@ object TextAnalysis {
         6).as("quality_score"))
   }
 
-  def fingerprint(spark: SparkSession, dir: String): DataFrame =
-    docs(spark, dir).select(
-      col("doc_id"),
-      md5Fingerprint(col("text")).as("fp_md5"),
-      rollingHash(col("text")).as("fp_roll"))
+  def fingerprint(spark: SparkSession, dir: String): DataFrame = {
+    GraftFunctions.register(spark)
+    Source.table(spark, dir, "documents").select(col("doc_id"),
+      md5Fingerprint(col("text")).as("fp_md5"), rollingHash(col("text")).as("fp_roll"))
+  }
 
   /** Repetition quality signals (the Gopher-rules family): distinct-word
     * fraction, the most frequent word-bigram's count and share, and the
@@ -139,11 +139,11 @@ object TextAnalysis {
     * suite vs sub-second for the kernel).
     */
   def repetition(spark: SparkSession, dir: String): DataFrame =
-    repetitionFrame(docs(spark, dir))
+    repetitionFrame(Source.table(spark, dir, "documents"))
 
   /** [[repetition]] over an arbitrary (doc_id, text) frame. */
   def repetitionFrame(d: DataFrame): DataFrame = {
-    graft.expressions.GraftFunctions.register(d.sparkSession)
+    GraftFunctions.register(d.sparkSession)
     val st = call_function("graft_rep_stats", col("text"))
     val nw = st.getItem(0)
     d.select(
@@ -234,7 +234,7 @@ object TextAnalysis {
     * driver, never a global sort of the vocabulary).
     */
   def vocabTopK(spark: SparkSession, dir: String, k: Int = 100): DataFrame =
-    docs(spark, dir)
+    Source.table(spark, dir, "documents")
       .select(explode(split(col("text"), " ")).as("token"))
       .where(col("token") =!= "")
       .groupBy(col("token")).agg(count(lit(1)).as("cnt"))
@@ -259,7 +259,7 @@ object TextAnalysis {
     */
   def docFreq(spark: SparkSession, dir: String,
               broadcastVocab: Boolean = true): DataFrame = {
-    val toks = docs(spark, dir)
+    val toks = Source.table(spark, dir, "documents")
       .select(col("doc_id"), explode(split(col("text"), " ")).as("token"))
       .where(col("token") =!= "")
     val vocab0 = toks.groupBy(col("token")).agg(count(lit(1)).as("cnt"))
@@ -302,7 +302,7 @@ object TextAnalysis {
     */
   def bigramLm(spark: SparkSession, dir: String,
                broadcastVocab: Boolean = true): DataFrame =
-    bigramLmFrame(docs(spark, dir), broadcastVocab)
+    bigramLmFrame(Source.table(spark, dir, "documents"), broadcastVocab)
 
   /** [[bigramLm]] over a caller-supplied `(doc_id, text)` frame. */
   def bigramLmFrame(d: DataFrame,
@@ -349,7 +349,7 @@ object TextAnalysis {
   def topTerms(spark: SparkSession, dir: String, k: Int = 5,
                broadcastVocab: Boolean = true): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val toks = docs(spark, dir)
+    val toks = Source.table(spark, dir, "documents")
       .select(col("doc_id"), explode(split(col("text"), " ")).as("token"))
       .where(col("token") =!= "")
     val tf = toks.groupBy(col("doc_id"), col("token"))
@@ -357,7 +357,7 @@ object TextAnalysis {
     val df0 = toks.select(col("doc_id"), col("token")).distinct()
       .groupBy(col("token")).agg(count(lit(1)).as("df"))
     val dfSide = if (broadcastVocab) broadcast(df0) else df0.hint("shuffle_hash")
-    val nDocs = docs(spark, dir).agg(count(lit(1)).as("n_docs"))
+    val nDocs = Source.table(spark, dir, "documents").agg(count(lit(1)).as("n_docs"))
     val w = Window.partitionBy(col("doc_id"))
       .orderBy(col("score").desc, col("token"))
     tf.join(dfSide, "token")
@@ -391,7 +391,7 @@ object TextAnalysis {
     * text column.
     */
   def piiScrub(spark: SparkSession, dir: String): DataFrame = {
-    val planted = docs(spark, dir).select(
+    val planted = Source.table(spark, dir, "documents").select(
       col("doc_id"),
       concat(
         col("text"),
@@ -422,11 +422,11 @@ object TextAnalysis {
 
   def decontaminate(spark: SparkSession, dir: String,
                     evalMod: Int = 50): DataFrame =
-    decontaminateFrame(docs(spark, dir), evalMod)
+    decontaminateFrame(Source.table(spark, dir, "documents"), evalMod)
 
   /** [[decontaminate]] over an arbitrary (doc_id, text) frame. */
   def decontaminateFrame(d: DataFrame, evalMod: Int = 50): DataFrame = {
-    graft.expressions.GraftFunctions.register(d.sparkSession)
+    GraftFunctions.register(d.sparkSession)
     val grams = call_function("graft_word_shingles", col("text"))
     val evalGrams = d.where(col("doc_id") % evalMod === 0)
       .select(explode(grams).as("gram")).distinct()
@@ -455,7 +455,7 @@ object TextAnalysis {
   def decontaminateNearDup(spark: SparkSession, dir: String,
                            evalMod: Int = 10,
                            threshold: Double = 0.3): DataFrame =
-    decontaminateNearDupFrame(docs(spark, dir), evalMod, threshold)
+    decontaminateNearDupFrame(Source.table(spark, dir, "documents"), evalMod, threshold)
 
   /** [[decontaminateNearDup]] over an arbitrary `(doc_id, text)` frame. */
   def decontaminateNearDupFrame(d: DataFrame, evalMod: Int = 10,
@@ -510,7 +510,7 @@ object TextAnalysis {
   def bloomDecontaminate(spark: SparkSession, dir: String,
                          evalMod: Int = 50, bitsPerItem: Int = 10,
                          numHashes: Int = 7): DataFrame =
-    bloomDecontaminateFrame(docs(spark, dir), evalMod, bitsPerItem, numHashes)
+    bloomDecontaminateFrame(Source.table(spark, dir, "documents"), evalMod, bitsPerItem, numHashes)
 
   /** [[bloomDecontaminate]] over an arbitrary (doc_id, text) frame. */
   def bloomDecontaminateFrame(d: DataFrame, evalMod: Int = 50,
@@ -553,7 +553,7 @@ object TextAnalysis {
       : DataFrame = {
     require(bitsPerItem >= 1, "bitsPerItem must be >= 1")
     require(numHashes >= 1 && numHashes <= 32, "numHashes must be in [1,32]")
-    graft.expressions.GraftFunctions.register(d.sparkSession)
+    GraftFunctions.register(d.sparkSession)
     val grams = call_function("graft_word_shingles", col("text"))
     val evalGrams = d.where(col("doc_id") % evalMod === 0)
       .select(explode(grams).as("gram")).distinct()
@@ -608,6 +608,7 @@ object TextAnalysis {
                   maxDupTrigramFrac: Double = 0.05,
                   minDistinctWordFrac: Double = 0.4,
                   lang: String = "en"): DataFrame = {
+    GraftFunctions.register(spark)
     val nChars = length(col("text")).cast("long")
     val nTokens = wsTokenCount(col("text"))
     val alpha = alphaCount(col("text"))
@@ -625,7 +626,7 @@ object TextAnalysis {
     val dupTrigramFrac = round(when(nw >= 3,
       lit(1.0) - st.getItem(3) / (nw - 2).cast("double")).otherwise(0.0), 6)
     val distinctWordFrac = round(st.getItem(1) / nw.cast("double"), 6)
-    docs(spark, dir)
+    Source.table(spark, dir, "documents")
       .select(col("doc_id"), qualityScore.as("quality_score"),
         topBigramFrac.as("top_bigram_frac"),
         dupTrigramFrac.as("dup_trigram_frac"),
@@ -645,7 +646,8 @@ object TextAnalysis {
     */
   def decontaminateHashed(spark: SparkSession, dir: String,
                           evalMod: Int = 50): DataFrame = {
-    val d = docs(spark, dir)
+    GraftFunctions.register(spark)
+    val d = Source.table(spark, dir, "documents")
     val grams = call_function("graft_word_shingles", col("text"))
     val evalGrams = d.where(col("doc_id") % evalMod === 0)
       .select(explode(grams).as("g")).select(xxhash64(col("g")).as("gh"))
@@ -695,7 +697,7 @@ object TextAnalysis {
   def chunkDedup(spark: SparkSession, dir: String,
                  chunkTokens: Int = ChunkDedupBoilerTokens,
                  boilerMod: Int = 5): DataFrame = {
-    val planted = docs(spark, dir).select(
+    val planted = Source.table(spark, dir, "documents").select(
       col("doc_id"),
       when(col("doc_id") % boilerMod === 0,
         concat(lit(ChunkDedupBoiler), lit(" "), col("text")))
@@ -796,7 +798,7 @@ object TextAnalysis {
     */
   def dupNgrams(spark: SparkSession, dir: String,
                 broadcastVocab: Boolean = true): DataFrame =
-    dupNgramsFrame(docs(spark, dir), broadcastVocab)
+    dupNgramsFrame(Source.table(spark, dir, "documents"), broadcastVocab)
 
   /** [[dupNgrams]] over an arbitrary `(doc_id, text)` frame. */
   def dupNgramsFrame(d: DataFrame,
@@ -833,7 +835,7 @@ object TextAnalysis {
 
   /** [[gramInstances]] over the shipped corpus (bench hook). */
   def gramInstances(spark: SparkSession, dir: String): DataFrame =
-    gramInstances(docs(spark, dir))
+    gramInstances(Source.table(spark, dir, "documents"))
 
   /** [[dupNgramsFrame]] from a (possibly pre-materialized)
     * [[gramInstances]] frame.
@@ -883,7 +885,7 @@ object TextAnalysis {
     */
   def dedupSpans(spark: SparkSession, dir: String,
                  broadcastVocab: Boolean = true): DataFrame =
-    dedupSpansFrame(docs(spark, dir), broadcastVocab)
+    dedupSpansFrame(Source.table(spark, dir, "documents"), broadcastVocab)
 
   /** The REWRITE pass over [[dedupSpans]]: every word position covered
     * by a maximal corpus-duplicated span is CUT and the survivors
@@ -904,7 +906,7 @@ object TextAnalysis {
     */
   def dedupRewrite(spark: SparkSession, dir: String,
                    broadcastVocab: Boolean = true): DataFrame =
-    dedupRewriteFrame(docs(spark, dir), broadcastVocab)
+    dedupRewriteFrame(Source.table(spark, dir, "documents"), broadcastVocab)
 
   /** [[dedupRewrite]] over an arbitrary `(doc_id, text)` frame. */
   def dedupRewriteFrame(d: DataFrame,
@@ -929,7 +931,7 @@ object TextAnalysis {
                               deltaMod: Int = 10,
                               broadcastVocab: Boolean = true): DataFrame =
     rewriteFromSpans(
-      docs(spark, dir).where(col("doc_id") % deltaMod === 0),
+      Source.table(spark, dir, "documents").where(col("doc_id") % deltaMod === 0),
       dedupSpansIncremental(spark, dir, deltaMod, broadcastVocab))
 
   /** The span-cut + survivor re-join tail shared by the full and
@@ -1011,7 +1013,7 @@ object TextAnalysis {
       s"${Integer.toHexString(dir.hashCode)}_$cfp"
     val done = Paths.get(path, "_DONE")
     if (!Files.exists(done)) {
-      gramInstances(docs(spark, dir)
+      gramInstances(Source.table(spark, dir, "documents")
           .where(col("doc_id") % deltaMod =!= 0))
         .groupBy(col("gram")).agg(count(lit(1)).as("cnt"))
         .write.mode("overwrite").parquet(s"$path/vocab")
@@ -1029,8 +1031,8 @@ object TextAnalysis {
   def incrementalStats(spark: SparkSession, dir: String,
                        deltaMod: Int = 10): (Long, Long) = {
     val path = ensureGramVocabIndex(spark, dir, deltaMod)
-    (docs(spark, dir).where(col("doc_id") % deltaMod === 0).count(),
-      spark.read.parquet(s"$path/vocab").count())
+    (Source.table(spark, dir, "documents").where(col("doc_id") % deltaMod === 0).count(),
+      Source.rows(spark, s"$path/vocab"))
   }
 
   /** INCREMENTAL substring dedup — [[dedupSpans]]'s corpus-maintenance
@@ -1060,7 +1062,7 @@ object TextAnalysis {
                             broadcastVocab: Boolean = true): DataFrame = {
     val idx = spark.read
       .parquet(s"${ensureGramVocabIndex(spark, dir, deltaMod)}/vocab")
-    val inst = gramInstances(docs(spark, dir)
+    val inst = gramInstances(Source.table(spark, dir, "documents")
       .where(col("doc_id") % deltaMod === 0))
     val deltaVocab = inst.groupBy(col("gram")).agg(count(lit(1)).as("dcnt"))
     // left-outer keeps base-absent delta grams; the index side cannot
@@ -1091,7 +1093,7 @@ object TextAnalysis {
   private[graft] def deltaSpansAgainst(spark: SparkSession, dir: String,
                                        dupGrams: DataFrame,
                                        deltaMod: Int = 10): DataFrame = {
-    val inst = gramInstances(docs(spark, dir)
+    val inst = gramInstances(Source.table(spark, dir, "documents")
       .where(col("doc_id") % deltaMod === 0))
     spansFromDupInstances(inst
       .join(dupGrams.select(col("gram")).hint("shuffle_hash"), "gram")

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.io.Source
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -27,7 +28,7 @@ object ReplayGuard {
     */
   def spanWatermark(spark: SparkSession, landing: String,
                     marginDays: Long = 2L): String = {
-    val b = spark.read.parquet(landing)
+    val b = Source.read(spark, landing)
     val ts = graft.tsdb.Db.tsNs(b.schema)
     val row = b.agg(min(ts).as("lo"), max(ts).as("hi")).head()
     val dayNs = 86400L * 1000000000L

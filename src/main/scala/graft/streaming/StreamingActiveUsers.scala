@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.io.Source
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
@@ -80,12 +81,12 @@ object StreamingActiveUsers {
     if (!Files.exists(done)) {
       val landing = s"$path.landing"
       if (!Files.exists(Paths.get(landing, "_SUCCESS"))) {
-        spark.read.parquet(s"$sfDir/events.parquet")
+        Source.table(spark, sfDir, "events")
           .repartition(4)
           .write.mode("overwrite").parquet(landing)
       }
       val stream = spark.readStream
-        .schema(spark.read.parquet(landing).schema)
+        .schema(Source.read(spark, landing).schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(landing)
       // span-derived replay watermark (see [[ReplayGuard]]): the fixed

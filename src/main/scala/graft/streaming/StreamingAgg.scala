@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.io.Source
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -138,12 +139,12 @@ object StreamingAgg {
     if (!Files.exists(done)) {
       val landing = s"$path.landing"
       if (!Files.exists(Paths.get(landing, "_SUCCESS"))) {
-        spark.read.parquet(s"$sfDir/events.parquet")
+        Source.table(spark, sfDir, "events")
           .repartition(4)
           .write.mode("overwrite").parquet(landing)
       }
       val stream = spark.readStream
-        .schema(spark.read.parquet(landing).schema)
+        .schema(Source.read(spark, landing).schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(landing)
       val q = bucketedHll(stream, rsd = rsd,
@@ -265,12 +266,12 @@ object StreamingAgg {
     if (!Files.exists(done)) {
       val landing = s"$path.landing"
       if (!Files.exists(Paths.get(landing, "_SUCCESS"))) {
-        spark.read.parquet(s"$sfDir/events.parquet")
+        Source.table(spark, sfDir, "events")
           .repartition(4)
           .write.mode("overwrite").parquet(landing)
       }
       val stream = spark.readStream
-        .schema(spark.read.parquet(landing).schema)
+        .schema(Source.read(spark, landing).schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(landing)
       val q = bucketedApdexPartials(stream, threshold,
@@ -336,12 +337,12 @@ object StreamingAgg {
     if (!Files.exists(done)) {
       val landing = s"$path.landing"
       if (!Files.exists(Paths.get(landing, "_SUCCESS"))) {
-        spark.read.parquet(s"$sfDir/events.parquet")
+        Source.table(spark, sfDir, "events")
           .repartition(4)
           .write.mode("overwrite").parquet(landing)
       }
       val stream = spark.readStream
-        .schema(spark.read.parquet(landing).schema)
+        .schema(Source.read(spark, landing).schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(landing)
       val quant = bucketedQuantile(stream, q, accuracy,
@@ -417,12 +418,12 @@ object StreamingAgg {
     if (!Files.exists(done)) {
       val landing = s"$path.landing"
       if (!Files.exists(Paths.get(landing, "_SUCCESS"))) {
-        spark.read.parquet(s"$sfDir/events.parquet")
+        Source.table(spark, sfDir, "events")
           .repartition(4)
           .write.mode("overwrite").parquet(landing)
       }
       val stream = spark.readStream
-        .schema(spark.read.parquet(landing).schema)
+        .schema(Source.read(spark, landing).schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(landing)
       // replay posture derived from the DATA, not a fixed 45-day hope:

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.io.Source
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -106,7 +107,7 @@ object StreamingAlerts {
     if (!Files.exists(done)) {
       val landing = TimeChunkedLanding.ensure(spark, sfDir, path)
       val stream = spark.readStream
-        .schema(spark.read.parquet(landing).schema)
+        .schema(Source.read(spark, landing).schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(landing)
       val q = alertStream(stream, metric, threshold, forBuckets).writeStream

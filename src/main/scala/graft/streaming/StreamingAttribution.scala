@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.io.Source
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -89,7 +90,7 @@ object StreamingAttribution {
       val landing =
         Paths.get(TimeChunkedLanding.ensure(spark, sfDir, path))
       val stream = spark.readStream
-        .schema(spark.read.parquet(landing.toString).schema)
+        .schema(Source.read(spark, landing.toString).schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(landing.toString)
       val q = creditStream(stream).writeStream

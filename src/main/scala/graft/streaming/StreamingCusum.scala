@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.io.Source
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -46,7 +47,7 @@ object StreamingCusum {
     */
   def thresholds(spark: SparkSession, sfDir: String, metric: String,
                  k2: Int, h2: Int): DataFrame = {
-    val raw = spark.read.parquet(s"$sfDir/events.parquet")
+    val raw = Source.table(spark, sfDir, "events")
     val pts = raw.where(col("event_type") === metric)
       .select(
         concat_ws("|", col("user_id").cast("string"),
@@ -128,7 +129,7 @@ object StreamingCusum {
       val landing = Paths.get(TimeChunkedLanding.ensure(spark, sfDir, path))
       val th = thresholds(spark, sfDir, metric, k2, h2)
       val stream = spark.readStream
-        .schema(spark.read.parquet(landing.toString).schema)
+        .schema(Source.read(spark, landing.toString).schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(landing.toString)
       val q = cusumStream(stream, metric, th).writeStream

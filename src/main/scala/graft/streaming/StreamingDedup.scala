@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.io.Source
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -28,7 +29,7 @@ object StreamingDedup {
   def dedupStream(spark: SparkSession, docsDir: String,
                   watermark: String = "1 hour",
                   tsCol: String = "event_ts"): DataFrame = {
-    val schema = spark.read.parquet(docsDir).schema
+    val schema = Source.read(spark, docsDir).schema
     spark.readStream
       .schema(schema)
       .parquet(docsDir)
@@ -65,7 +66,7 @@ object StreamingDedup {
     if (!Files.exists(done)) {
       val landing = s"$path.landing"
       if (!Files.exists(Paths.get(landing, "_SUCCESS"))) {
-        val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+        val docs = Source.table(spark, sfDir, "documents")
           .select(col("doc_id"), col("text"))
         val arrival = timestamp_micros(
           lit(Epoch) + col("doc_id") * lit(1000000L))

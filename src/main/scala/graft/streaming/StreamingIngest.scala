@@ -2,7 +2,8 @@ package graft.streaming
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.Trigger
-import graft.tsdb.{Db, FooterSchema}
+import graft.io.Source
+import graft.tsdb.Db
 
 /** Structured-Streaming ingestion into the graft on-disk layout: the
   * streaming re-expression of the reference's point-write path (talna
@@ -30,7 +31,7 @@ object StreamingIngest {
   def ingestAvailable(spark: SparkSession, eventsDir: String, dest: String,
                       checkpoint: String,
                       propsTags: Seq[String] = Seq("k")): Unit = {
-    val schema = FooterSchema.read(spark, eventsDir).schema
+    val schema = Source.read(spark, eventsDir).schema
     val canonical = Db
       .canonicalEvents(spark.readStream.schema(schema).parquet(eventsDir), propsTags)
       // same write-boundary guard as the batch path (Ingest.write):

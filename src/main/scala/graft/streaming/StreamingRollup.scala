@@ -2,7 +2,8 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.Trigger
-import graft.tsdb.{Db, FooterSchema, Ingest}
+import graft.io.Source
+import graft.tsdb.{Db, Ingest}
 
 /** Streaming maintenance of a [[graft.tsdb.Rollup]] layout: each
   * micro-batch is aggregated into partials and APPENDED
@@ -28,7 +29,7 @@ object StreamingRollup {
   def rollupAvailable(spark: SparkSession, eventsDir: String, dest: String,
                       checkpoint: String, widthNs: Long,
                       propsTags: Seq[String] = Seq("k")): Unit = {
-    val schema = FooterSchema.read(spark, eventsDir).schema
+    val schema = Source.read(spark, eventsDir).schema
     val canonical = Db.canonicalEvents(
       spark.readStream.schema(schema).parquet(eventsDir), propsTags)
     val q = canonical.writeStream

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.io.Source
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -214,7 +215,7 @@ object StreamingSeriesState {
       Files.createDirectories(landing)
       val link = landing.resolve("events.parquet")
       if (!Files.exists(link)) Files.createSymbolicLink(link, evPath)
-      val schema = spark.read.parquet(landing.toString).schema
+      val schema = Source.read(spark, landing.toString).schema
       val stream = spark.readStream.schema(schema).parquet(landing.toString)
       val q = enrichFlapsEvents(stream, metric).writeStream
         .foreachBatch { (batch: Dataset[FOut], batchId: Long) =>
@@ -263,7 +264,7 @@ object StreamingSeriesState {
     // serve scrambled mtimes forever)
     if (!Files.exists(Paths.get(landing, "_MTIMES"))) {
       if (!Files.exists(Paths.get(landing, "_SUCCESS"))) {
-        spark.read.parquet(s"$sfDir/events.parquet")
+        Source.table(spark, sfDir, "events")
           .repartitionByRange(4, col("ts"), col("value"))
           .write.mode("overwrite").parquet(landing)
       }
@@ -284,7 +285,7 @@ object StreamingSeriesState {
       } finally ls.close()
       Files.createFile(Paths.get(landing, "_MTIMES"))
     }
-    val schema = spark.read.parquet(landing).schema
+    val schema = Source.read(spark, landing).schema
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1).parquet(landing)
     val name = s"graft_flaps_replay_${replaySeq.incrementAndGet()}"
@@ -332,7 +333,7 @@ object StreamingSeriesState {
       Files.createDirectories(landing)
       val link = landing.resolve("events.parquet")
       if (!Files.exists(link)) Files.createSymbolicLink(link, evPath)
-      val schema = spark.read.parquet(landing.toString).schema
+      val schema = Source.read(spark, landing.toString).schema
       val stream = spark.readStream.schema(schema).parquet(landing.toString)
       val q = enrichZEvents(stream, metric).writeStream
         .foreachBatch { (batch: Dataset[ZOut], batchId: Long) =>
@@ -366,7 +367,7 @@ object StreamingSeriesState {
           if (!Files.exists(link)) Files.createSymbolicLink(link, evPath)
           landing.toString
         }
-      val schema = spark.read.parquet(eventsDir).schema
+      val schema = Source.read(spark, eventsDir).schema
       val stream = spark.readStream.schema(schema).parquet(eventsDir)
       val q = enrichEvents(stream, metric, alpha).writeStream
         .foreachBatch { (batch: Dataset[POut], batchId: Long) =>

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.io.Source
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -75,7 +76,7 @@ object StreamingTransitions {
       val landing =
         Paths.get(TimeChunkedLanding.ensure(spark, sfDir, path))
       val stream = spark.readStream
-        .schema(spark.read.parquet(landing.toString).schema)
+        .schema(Source.read(spark, landing.toString).schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(landing.toString)
       val q = transitionPairs(stream).writeStream

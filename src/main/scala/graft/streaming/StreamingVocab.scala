@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.io.Source
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -106,7 +107,7 @@ object StreamingVocab {
     * dropping shards into object storage.
     */
   def docsStream(spark: SparkSession, landingDir: String): DataFrame = {
-    val schema = spark.read.parquet(landingDir).schema
+    val schema = Source.read(spark, landingDir).schema
     spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1)
       .parquet(landingDir)
@@ -132,7 +133,7 @@ object StreamingVocab {
     if (!Files.exists(done)) {
       val landing = s"$path.landing"
       if (!Files.exists(Paths.get(landing, "_SUCCESS"))) {
-        spark.read.parquet(s"$sfDir/documents.parquet")
+        Source.table(spark, sfDir, "documents")
           .select(col("doc_id"), col("text"))
           .repartition(4)
           .write.mode("overwrite").parquet(landing)
@@ -202,7 +203,7 @@ object StreamingVocab {
     if (!Files.exists(done)) {
       val landing = s"$path.landing"
       if (!Files.exists(Paths.get(landing, "_SUCCESS"))) {
-        spark.read.parquet(s"$sfDir/documents.parquet")
+        Source.table(spark, sfDir, "documents")
           .select(col("doc_id"), col("text"))
           .repartition(4)
           .write.mode("overwrite").parquet(landing)

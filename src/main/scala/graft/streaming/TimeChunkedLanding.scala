@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.io.Source
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -25,7 +26,7 @@ object TimeChunkedLanding {
     import java.nio.file.attribute.FileTime
     val landing = Paths.get(s"$basePath.landing")
     if (!Files.exists(landing.resolve("_READY"))) {
-      val raw = spark.read.parquet(s"$sfDir/events.parquet")
+      val raw = Source.table(spark, sfDir, "events")
       val tsNs = graft.tsdb.Db.tsNs(raw.schema)
       val ev = raw.withColumn("_tsns", tsNs)
       val Array(lo, hi) = ev.agg(min(col("_tsns")), max(col("_tsns")))

@@ -1,5 +1,6 @@
 package graft.tsdb
 
+import graft.io.Source
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
@@ -121,6 +122,14 @@ final class Db private[tsdb] (private[tsdb] val smallInputRoute: SmallInputRoute
     (Seq(col("metric") === lit(Db.validated(metric))) ++
       minTs.map(t => col("ts") >= lit(t)) ++ maxTs.map(t => col("ts") <= lit(t)) :+
       FilterParser.compileString(filterExpr, tagCol)).reduce(_ && _)
+
+  /** [[scan]] minus the series lacking the `groupBy` tag (the reference
+    * skips them, agg/builder.rs:121), in one `where`.
+    */
+  private[tsdb] def groupedScan(metric: String, filterExpr: String, groupBy: String,
+                                minTs: Option[Long] = None,
+                                maxTs: Option[Long] = None): DataFrame =
+    frame.where(scanCondition(metric, filterExpr, minTs, maxTs) && tagCol(groupBy).isNotNull)
 
   /** Newest-N data points per series (metric × full tagset), mirroring the
     * reference's newest-first primary-key scan (timestamps stored negated
@@ -461,8 +470,7 @@ final class Db private[tsdb] (private[tsdb] val smallInputRoute: SmallInputRoute
           filterExpr: String = "*",
           broadcastMed: Boolean = true): DataFrame = {
     val grpCol = tagCol(groupBy)
-    val pts = scan(metric, filterExpr)
-      .where(grpCol.isNotNull)
+    val pts = groupedScan(metric, filterExpr, groupBy)
       .select(grpCol.as("grp"),
         (expr(s"ts div ${widthNs}L") * lit(widthNs)).as("bucket_start"),
         col("value"))
@@ -822,8 +830,7 @@ final class Db private[tsdb] (private[tsdb] val smallInputRoute: SmallInputRoute
       col("value").cast("decimal(18,6)")).over(w).cast("double")
     val cnt = F.count(lit(1)).over(w)
     val sigma = sqrt(greatest((sq - (s * s) / cnt) / cnt, lit(0.0)))
-    scan(metric, filterExpr)
-      .where(grpCol.isNotNull)
+    groupedScan(metric, filterExpr, groupBy)
       .select(grpCol.as("grp"),
         (expr(s"ts div ${widthNs}L") * lit(widthNs)).as("bucket_start"),
         col("ts"), col("value"),
@@ -851,8 +858,7 @@ final class Db private[tsdb] (private[tsdb] val smallInputRoute: SmallInputRoute
     import org.apache.spark.sql.{functions => F}
     val dayNs = Duration.days(1)
     val grpCol = tagCol(groupBy)
-    val daily = scan(metric, filterExpr)
-      .where(grpCol.isNotNull)
+    val daily = groupedScan(metric, filterExpr, groupBy)
       .groupBy(grpCol.as("grp"), expr(s"ts div ${dayNs}L").as("day_idx"))
       .agg(F.sum(col("value").cast("decimal(28,6)")).as("t0"))
       .select(col("grp"), col("day_idx"),
@@ -888,8 +894,7 @@ final class Db private[tsdb] (private[tsdb] val smallInputRoute: SmallInputRoute
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.{functions => F}
     val grpCol = tagCol(groupBy)
-    val daily = scan(metric, filterExpr)
-      .where(grpCol.isNotNull)
+    val daily = groupedScan(metric, filterExpr, groupBy)
       .groupBy(grpCol.as("grp"),
         (expr(s"ts div ${widthNs}L") * lit(widthNs)).as("bucket_start"))
       .agg(F.sum(col("value").cast("decimal(28,6)")).as("t"))
@@ -924,8 +929,7 @@ final class Db private[tsdb] (private[tsdb] val smallInputRoute: SmallInputRoute
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.{functions => F}
     val grpCol = tagCol(groupBy)
-    val daily = scan(metric, filterExpr)
-      .where(grpCol.isNotNull)
+    val daily = groupedScan(metric, filterExpr, groupBy)
       .groupBy(grpCol.as("grp"), expr(s"ts div ${widthNs}L").as("day_idx"))
       .agg(F.sum(col("value").cast("decimal(28,6)")).as("t"))
       .select(col("grp"), col("day_idx"), col("t").cast("double").as("value"))
@@ -959,8 +963,7 @@ final class Db private[tsdb] (private[tsdb] val smallInputRoute: SmallInputRoute
                   filterExpr: String = "*"): DataFrame = {
     import org.apache.spark.sql.{functions => F}
     val grpCol = tagCol(groupBy)
-    scan(metric, filterExpr)
-      .where(grpCol.isNotNull)
+    groupedScan(metric, filterExpr, groupBy)
       .groupBy(grpCol.as("grp"),
         (expr(s"ts div ${widthNs}L") * lit(widthNs)).as("window_start"))
       .agg(F.count(lit(1)).as("n"),
@@ -987,8 +990,7 @@ final class Db private[tsdb] (private[tsdb] val smallInputRoute: SmallInputRoute
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.{functions => F}
     val grpCol = tagCol(groupBy)
-    val daily = scan(metric, filterExpr)
-      .where(grpCol.isNotNull)
+    val daily = groupedScan(metric, filterExpr, groupBy)
       .groupBy(grpCol.as("grp"),
         (expr(s"ts div ${widthNs}L") * lit(widthNs)).as("bucket_start"))
       .agg(F.sum(col("value").cast("decimal(28,6)")).as("t0"))
@@ -1023,8 +1025,7 @@ final class Db private[tsdb] (private[tsdb] val smallInputRoute: SmallInputRoute
     val sat = when(col("value") <= threshold, 1L).otherwise(0L)
     val tol = when(col("value") > threshold &&
       col("value") <= 4 * threshold, 1L).otherwise(0L)
-    scan(metric, filterExpr)
-      .where(grpCol.isNotNull)
+    groupedScan(metric, filterExpr, groupBy)
       .groupBy(grpCol.as("grp"),
         (expr(s"ts div ${widthNs}L") * lit(widthNs)).as("bucket_start"))
       .agg(F.count(lit(1)).as("n"), F.sum(sat).as("n_sat"),
@@ -1329,8 +1330,7 @@ final class Db private[tsdb] (private[tsdb] val smallInputRoute: SmallInputRoute
     def sumOf(m: String) =
       F.sum(when(col("metric") === lit(m), dec)).cast("decimal(18,6)")
     frame
-      .where(col("metric") === lit(a) || col("metric") === lit(b))
-      .where(grpCol.isNotNull)
+      .where((col("metric") === lit(a) || col("metric") === lit(b)) && grpCol.isNotNull)
       .groupBy(grpCol.as("grp"),
         (expr(s"ts div ${widthNs}L") * lit(widthNs)).as("bucket_start"))
       .agg(sumOf(a).as("x"), sumOf(b).as("y"))
@@ -1368,8 +1368,7 @@ final class Db private[tsdb] (private[tsdb] val smallInputRoute: SmallInputRoute
     def cnt(m: String) =
       F.sum(when(col("metric") === lit(m), lit(1L)).otherwise(lit(0L)))
     val base = frame
-      .where(col("metric") === lit(e) || col("metric") === lit(t))
-      .where(grpCol.isNotNull)
+      .where((col("metric") === lit(e) || col("metric") === lit(t)) && grpCol.isNotNull)
       .groupBy(grpCol.as("grp"),
         (expr(s"ts div ${widthNs}L") * lit(widthNs)).as("bucket_start"))
       .agg(cnt(e).as("n_err"), cnt(t).as("n_tot"))
@@ -1542,7 +1541,7 @@ object Db {
     */
   def fromEvents(spark: SparkSession, sfDir: String,
                  propsTags: Seq[String] = Seq("k")): Db =
-    new Db(canonicalEvents(FooterSchema.read(spark, s"$sfDir/events.parquet"),
+    new Db(canonicalEvents(Source.table(spark, sfDir, "events"),
       propsTags))
 
   /** The canonical series frame of an `events` frame, batch or
@@ -1586,7 +1585,7 @@ object Db {
     */
   def fromEventsAuto(spark: SparkSession, sfDir: String, sampleRows: Int = 1024): Db = {
     val KeyRe = "\"([A-Za-z0-9_-]+)\"\\s*:".r
-    val keys = FooterSchema.read(spark, s"$sfDir/events.parquet")
+    val keys = Source.table(spark, sfDir, "events")
       .select(col("props")).where(col("props").isNotNull).limit(sampleRows)
       .collect()
       .flatMap(r => KeyRe.findAllMatchIn(r.getString(0)).map(_.group(1)))
@@ -1716,14 +1715,11 @@ final case class AggBuilder(
     }).as("value")
   }
 
-  /** The points every aggregate of this builder reads: the scan, minus
-    * series lacking the group tag (the reference skips them,
-    * agg/builder.rs:121), in one `where`, routed by the Db's
-    * [[SmallInputRoute]].
+  /** The points every aggregate of this builder reads: the
+    * [[Db.groupedScan]], routed by the Db's [[SmallInputRoute]].
     */
   private[tsdb] def input: DataFrame =
-    db.smallInputRoute(metric, db.frame.where(
-      db.scanCondition(metric, filterExpr, minTs, maxTs) && db.tagCol(groupBy).isNotNull))
+    db.smallInputRoute(metric, db.groupedScan(metric, filterExpr, groupBy, minTs, maxTs))
 
   def build(): DataFrame = {
     val bucketStart = (expr(s"ts div ${widthNs}L") * lit(widthNs)).as("bucket_start")

@@ -1,5 +1,6 @@
 package graft.tsdb
 
+import graft.io.Source
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -108,7 +109,7 @@ object Ingest {
     * aggregation always runs in f64, like the reference's query path.
     *
     * The first open in a session lists the layout and reads one parquet
-    * footer on the driver ([[FooterSchema]]); it launches no Spark job.
+    * footer on the driver ([[graft.io.Source]]); it launches no Spark job.
     * Later opens return the same handle — the same frame, file index
     * and route statistics — for as long as the root's `_SUCCESS` keeps
     * its modification time and length and no graft writer has written
@@ -117,7 +118,7 @@ object Ingest {
     */
   def open(spark: SparkSession, path: String): Db =
     new Db(Handles.open(spark, path, "layout") {
-      FooterSchema.read(spark, path)
+      Source.read(spark, path)
         .withColumn("metric", col("metric").cast("string"))
         .withColumn("value", col("value").cast("double"))
     })
@@ -215,7 +216,7 @@ object Ingest {
     */
   def compactRollup(spark: SparkSession, path: String): Unit = {
     val tmp = path + ".compact"
-    save(mergePartials(FooterSchema.read(spark, path), col("bucket_start")), tmp, "overwrite")
+    save(mergePartials(Source.read(spark, path), col("bucket_start")), tmp, "overwrite")
     val dir = new Path(path)
     val old = new Path(path + ".old")
     val fs = fileSystem(spark, dir)
@@ -269,11 +270,11 @@ object Ingest {
         .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch_id="))
         .map(_.getPath)
     val frame =
-      if (staged.isEmpty) FooterSchema.read(spark, path)
+      if (staged.isEmpty) Source.read(spark, path)
       else {
         val complete = staged.filter(b => fs.exists(new Path(b, "_SUCCESS")))
         require(complete.nonEmpty, s"no complete batch under staged rollup $path")
-        FooterSchema.read(spark, complete.map(_.toString).sorted, Map("basePath" -> path))
+        Source.read(spark, complete.map(_.toString).sorted, Map("basePath" -> path))
           .drop("batch_id")
       }
     frame.withColumn("metric", col("metric").cast("string"))

@@ -80,10 +80,7 @@ final class Rollup private[tsdb] (private[tsdb] val smallInputRoute: SmallInputR
     require(frame.columns.contains("sum_sq"),
       "zscoreOver needs the v4 sum_sq partial; rebuild with Ingest.writeRollup")
     val grpCol = tagCol(groupBy)
-    val stats = frame
-      .where(col("metric") === lit(Db.validated(metric)))
-      .where(FilterParser.compileString(filterExpr, tagCol))
-      .where(grpCol.isNotNull)
+    val stats = partials(metric, groupBy, filterExpr)
       .groupBy(grpCol.as("grp"),
         (expr(s"bucket_start div ${width}L") * lit(width)).as("bucket_start"))
       .agg(functions.sum(col("n")).as("cnt"),
@@ -94,8 +91,7 @@ final class Rollup private[tsdb] (private[tsdb] val smallInputRoute: SmallInputR
     val cnt = col("cnt")
     val sigma = sqrt(greatest((sq - (s * s) / cnt) / cnt, lit(0.0)))
     val statsSide = if (broadcastStats) functions.broadcast(stats) else stats
-    db.scan(metric, filterExpr)
-      .where(db.tagCol(groupBy).isNotNull)
+    db.groupedScan(metric, filterExpr, groupBy)
       .select(db.tagCol(groupBy).as("grp"),
         (expr(s"ts div ${width}L") * lit(width)).as("bucket_start"),
         col("ts"), col("value"))
@@ -154,12 +150,14 @@ final class Rollup private[tsdb] (private[tsdb] val smallInputRoute: SmallInputR
     base.groupBy(grpCol.as("grp"), bucket).agg(n, valueCol)
   }
 
-  /** The partials [[agg]] merges: `metric`, the filter and the group-tag
-    * test in one `where`, routed by [[SmallInputRoute]].
+  /** The partials of `metric` that pass the filter and carry the group
+    * tag, in one `where`.
     */
-  private[tsdb] def input(metric: String, groupBy: String, filterExpr: String): DataFrame = {
-    val m = Db.validated(metric)
-    smallInputRoute(m, frame.where(col("metric") === lit(m) &&
-      FilterParser.compileString(filterExpr, tagCol) && tagCol(groupBy).isNotNull))
-  }
+  private def partials(metric: String, groupBy: String, filterExpr: String): DataFrame =
+    frame.where(col("metric") === lit(Db.validated(metric)) &&
+      FilterParser.compileString(filterExpr, tagCol) && tagCol(groupBy).isNotNull)
+
+  /** The [[partials]] [[agg]] merges, routed by [[SmallInputRoute]]. */
+  private[tsdb] def input(metric: String, groupBy: String, filterExpr: String): DataFrame =
+    smallInputRoute(Db.validated(metric), partials(metric, groupBy, filterExpr))
 }

@@ -69,13 +69,23 @@ trait TimedSpec extends org.scalatest.concurrent.TimeLimitedTests {
 }
 
 object SparkSpec {
+  /** The suites' work dir: one temp dir per JVM, deleted when it exits,
+    * so no spec writes under the checkout and concurrent runs never
+    * share a cached layout.
+    */
+  private lazy val workDir: String = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-spec-work").toFile
+    sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(dir))
+    dir.getAbsolutePath
+  }
+
   lazy val session: SparkSession = {
     val s = SparkSession.builder()
       .master("local[4]")
       .config("spark.sql.shuffle.partitions", 4)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      .config(graft.Conf.WorkDirKey, "/root/repo/out")
+      .config(graft.Conf.WorkDirKey, workDir)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

@@ -1,9 +1,44 @@
 package graft.operators
 
 import graft.SparkSpec
+import graft.expressions.GraftFunctions
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class DedupSpec extends SparkSpec {
+
+  /** Exhaustive prefix-blocked word-3-shingle Jaccard pairs at or above
+    * `threshold`: the ground truth for [[Dedup.minhashLsh]] (the same
+    * similarity measure, no hashing).
+    */
+  private def wordJaccardBlocked(threshold: Double): DataFrame = {
+    GraftFunctions.register(spark)
+    val g = spark.read.parquet(s"$sfDir/documents.parquet").select(col("doc_id"),
+      substring(col("text"), 1, 16).as("blk"),
+      call_function("graft_word_shingles", col("text")).as("grams"))
+    g.as("a")
+      .join(g.as("b"), col("a.blk") === col("b.blk") && col("a.doc_id") < col("b.doc_id"))
+      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
+        call_function("graft_jaccard", col("a.grams"), col("b.grams")).as("jaccard"))
+      .where(col("jaccard") >= threshold)
+  }
+
+  /** The minhash candidates of `docs` in the 1-in-`mod` pair-hash
+    * sample, each verified by its exact word-3-shingle Jaccard >= 0.5:
+    * the reference for [[Dedup.minhashSampleVerifyStats]].
+    */
+  private def minhashSampledVerify(docs: DataFrame, mod: Int): DataFrame = {
+    GraftFunctions.register(spark)
+    val sh = docs.select(col("doc_id"),
+      call_function("graft_word_shingles", col("text")).as("shingles"))
+    Dedup.minhashCandFrame(docs)
+      .where(pmod(xxhash64(col("doc_a"), col("doc_b")), lit(mod)) === 0)
+      .join(sh.as("sa"), col("doc_a") === col("sa.doc_id"))
+      .join(sh.as("sb"), col("doc_b") === col("sb.doc_id"))
+      .select(col("doc_a"), col("doc_b"),
+        call_function("graft_jaccard", col("sa.shingles"), col("sb.shingles")).as("jaccard"))
+      .where(col("jaccard") >= 0.5)
+  }
 
   test("exact dedup covers every document exactly once") {
     val out = Dedup.exact(spark, sfDir)
@@ -60,7 +95,7 @@ class DedupSpec extends SparkSpec {
     // rows, P(miss | j>=0.85) = (1 - 0.85^2)^16 < 1e-8
     val mh = Dedup.minhashLsh(spark, sfDir, threshold = 0.85)
       .select("doc_a", "doc_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val truth = Dedup.wordJaccardBlocked(spark, sfDir, threshold = 0.85)
+    val truth = wordJaccardBlocked(threshold = 0.85)
       .select("doc_a", "doc_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(truth.nonEmpty)
     assert(truth.subsetOf(mh), s"missed: ${truth.diff(mh)}")
@@ -79,7 +114,7 @@ class DedupSpec extends SparkSpec {
         org.apache.spark.sql.functions.lit(mod)) === 0)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-    val sampled = Dedup.minhashSampledVerify(docs, sampleMod = mod).collect()
+    val sampled = minhashSampledVerify(docs, mod).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(sampled == expected)
     assert(sampled.nonEmpty && sampled.size < full.size)

@@ -148,7 +148,7 @@ class SimilaritySpec extends SparkSpec with TempDirSpec {
   test("ivf append: incrementally indexed corpus carries the same assignment as a full build") {
     import scala.jdk.CollectionConverters._
     // clean the incremental index dir: a rerun would otherwise append twice
-    java.nio.file.Files.list(java.nio.file.Paths.get("/root/repo/out")).iterator().asScala
+    java.nio.file.Files.list(java.nio.file.Paths.get(graft.Conf.workDir(spark))).iterator().asScala
       .filter(_.getFileName.toString.contains("spec_inc"))
       .foreach(p => org.apache.commons.io.FileUtils.deleteQuietly(p.toFile))
     val e = Similarity.vecs(spark, sfDir)
@@ -206,7 +206,7 @@ class SimilaritySpec extends SparkSpec with TempDirSpec {
   test("ivf-pq: exact subset-of-exhaustive hits; ADC scan never reads the vector column") {
     import scala.jdk.CollectionConverters._
     // clean prior ivfpq layouts so a rerun rebuilds deterministically
-    java.nio.file.Files.list(java.nio.file.Paths.get("/root/repo/out")).iterator().asScala
+    java.nio.file.Files.list(java.nio.file.Paths.get(graft.Conf.workDir(spark))).iterator().asScala
       .filter(_.getFileName.toString.startsWith("ivfpq_"))
       .foreach(p => org.apache.commons.io.FileUtils.deleteQuietly(p.toFile))
     val ivfpq = Similarity.ivfPqTopK(spark, sfDir, numQueries = 5, k = 10)
@@ -240,7 +240,7 @@ class SimilaritySpec extends SparkSpec with TempDirSpec {
 
   test("ivf-pq append: incrementally coded corpus equals a full build (codes included)") {
     import scala.jdk.CollectionConverters._
-    java.nio.file.Files.list(java.nio.file.Paths.get("/root/repo/out")).iterator().asScala
+    java.nio.file.Files.list(java.nio.file.Paths.get(graft.Conf.workDir(spark))).iterator().asScala
       .filter(_.getFileName.toString.contains("pq_spec"))
       .foreach(p => org.apache.commons.io.FileUtils.deleteQuietly(p.toFile))
     val e = Similarity.vecs(spark, sfDir)
@@ -363,7 +363,7 @@ class SimilaritySpec extends SparkSpec with TempDirSpec {
 
   test("ivf index is materialized once and reused: inverted-list partition dirs on disk") {
     val a = Similarity.ivfTopK(spark, sfDir, numQueries = 5, k = 5).collect()
-    val layouts = new java.io.File("/root/repo/out").listFiles()
+    val layouts = new java.io.File(graft.Conf.workDir(spark)).listFiles()
       .filter(f => f.getName.startsWith("ivf_v") && f.getName.contains("_first_n16_i0"))
     assert(layouts.nonEmpty, "no materialized ivf layout written")
     val assignDir = new java.io.File(layouts.head, "assign")

@@ -19,7 +19,7 @@ class StreamingIvfSpec extends SparkSpec with TempDirSpec with TimedSpec {
     import scala.jdk.CollectionConverters._
     val base = s"$tempDir/stream_ivf"
     // clean prior spec indexes (rerun would otherwise append twice)
-    java.nio.file.Files.list(java.nio.file.Paths.get("/root/repo/out")).iterator().asScala
+    java.nio.file.Files.list(java.nio.file.Paths.get(graft.Conf.workDir(spark))).iterator().asScala
       .filter(_.getFileName.toString.contains("spec_stream"))
       .foreach(p => org.apache.commons.io.FileUtils.deleteQuietly(p.toFile))
 
@@ -81,7 +81,7 @@ class StreamingIvfSpec extends SparkSpec with TempDirSpec with TimedSpec {
   test("foreachBatch-appended IVF-PQ index equals the full build, replay-idempotent") {
     import scala.jdk.CollectionConverters._
     val base = s"$tempDir/stream_ivfpq"
-    java.nio.file.Files.list(java.nio.file.Paths.get("/root/repo/out")).iterator().asScala
+    java.nio.file.Files.list(java.nio.file.Paths.get(graft.Conf.workDir(spark))).iterator().asScala
       .filter(_.getFileName.toString.contains("pqstream_spec"))
       .foreach(p => org.apache.commons.io.FileUtils.deleteQuietly(p.toFile))
 

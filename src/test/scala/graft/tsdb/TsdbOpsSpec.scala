@@ -464,13 +464,11 @@ class TsdbOpsSpec extends SparkSpec with TempDirSpec {
       key(db.quantile("purchase", "user", 0.95).granularity(Duration.days(1))
         .build()))
     // the routed weekly plan READS THE DAY LEVEL, never raw events:
-    // the scan's file listing carries the day-rollup path and no
-    // events parquet appears anywhere in the physical plan
-    val plan = routedWeek.queryExecution.executedPlan.toString
-    assert(plan.contains("_w86400000000000_"),
-      s"weekly query did not read the day level:\n$plan")
-    assert(!plan.contains("events.parquet"),
-      s"weekly query scanned raw events:\n$plan")
+    // every file its scans list lies under the day-rollup layout (the
+    // plan string cuts paths at spark.sql.maxMetadataStringLength)
+    val files = routedWeek.inputFiles
+    assert(files.nonEmpty && files.forall(_.contains("_w86400000000000_")),
+      s"weekly query did not read the day level alone:\n${files.mkString("\n")}")
   }
 
   test("incremental rollup append merges partials exactly (no read-modify-write)") {

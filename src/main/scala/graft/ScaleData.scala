@@ -1,6 +1,6 @@
 package graft
 
-import graft.io.Source
+import graft.io.{Artifact, Source}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -47,21 +47,16 @@ object ScaleData {
     "orders", "customer", "supplier", "events", "nation", "region", "part")
 
   /** Ensure the `factor`× dir holds (at least) `tables`, generating only
-    * the missing ones — per-table `_SUCCESS` markers make the cache
-    * incremental, so a 100× run that needs only documents + embeddings
-    * + events never pays for a 60M-row lineitem write it won't read.
-    * The copies live under `base`, by default the session's work dir
-    * ([[Conf.workDir]]).
+    * the missing ones — each table is its own [[graft.io.Artifact]], so
+    * the cache is incremental: a 100× run that needs only documents +
+    * embeddings + events never pays for a 60M-row lineitem write it
+    * won't read. The copies live under the session's work dir.
     */
   def ensure(spark: SparkSession, sfDir: String, factor: Int = 10,
-             base: String = "",
              tables: Seq[String] = AllTables): String = {
-    val fp = graft.tsdb.Ingest.contentFingerprint(sfDir)
-    val dir = s"${Conf.resolveWorkDir(spark, base)}/scale${factor}_v${GenVersion}_${Integer.toHexString(sfDir.hashCode)}_$fp"
+    val dir = Artifact.path(spark, "scale", sfDir, factor, GenVersion)
     tables.foreach { t =>
-      if (!java.nio.file.Files.exists(
-          java.nio.file.Paths.get(dir, s"$t.parquet", "_SUCCESS")))
-        writeTable(spark, sfDir, dir, factor, t)
+      Artifact.once(spark, s"$dir/$t.parquet")(writeTable(spark, sfDir, dir, factor, t))
     }
     dir
   }

@@ -1748,7 +1748,7 @@ object SparkEntry {
     // entry, and the first stateful one
     Entry("ts_ewma_streamed", (s, d) => {
       val path = graft.streaming.StreamingSeriesState.ensureStreamed(s, d, "click")
-      graft.streaming.StreamingSeriesState.openStreamed(s, path)
+      graft.io.Artifact.openStaged(s, path)
     },
       // the STREAMED per-series enrichment layout vs an independent
       // raw-events re-derivation: the ewma fold is the list_reduce prefix
@@ -1781,7 +1781,7 @@ object SparkEntry {
     // sums — the tenth streamed driver entry
     Entry("ts_zscore_streamed", (s, d) => {
       val path = graft.streaming.StreamingSeriesState.ensureStreamedZ(s, d, "error")
-      graft.streaming.StreamingSeriesState.openStreamed(s, path)
+      graft.io.Artifact.openStaged(s, path)
     },
       // the STREAMED expanding z landing vs an independent re-derivation:
       // exact-decimal expanding window sums (Σ decimal(28,6) v,
@@ -1813,7 +1813,7 @@ object SparkEntry {
     // streamed fold; integer-exact vs the batch lag re-derivation
     Entry("ts_flaps_streamed", (s, d) => {
       val path = graft.streaming.StreamingSeriesState.ensureStreamedFlaps(s, d, "view")
-      graft.streaming.StreamingSeriesState.openStreamed(s, path)
+      graft.io.Artifact.openStaged(s, path)
     },
       // streamed flap counters: lag pair indicators (strict-Δt pairing,
       // duplicate-ts arrivals pair nothing) + running integer sums — the

@@ -47,6 +47,16 @@ private[graft] object Source {
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
     read(spark, s"$dir/$name.parquet")
 
+  /** The parquet files under the directory `dir` as a file-source
+    * stream with the schema [[read]] finds, at most `filesPerBatch`
+    * files per micro-batch when positive (all available files when 0).
+    */
+  def stream(spark: SparkSession, dir: String, filesPerBatch: Int = 0): DataFrame = {
+    val reader = spark.readStream.schema(read(spark, dir).schema)
+    (if (filesPerBatch > 0) reader.option("maxFilesPerTrigger", filesPerBatch.toLong) else reader)
+      .parquet(dir)
+  }
+
   /** The row count of the parquet input at `path`: the sum of the
     * row-group row counts in the footers of the files [[read]] lists.
     * The footers are read on the driver while there are at most

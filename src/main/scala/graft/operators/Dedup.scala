@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.io.Source
+import graft.io.{Artifact, Source}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.expressions.GraftFunctions
@@ -63,28 +63,17 @@ object Dedup {
 
   /** Persisted exact-fingerprint index for [[exactIncremental]]: the
     * distinct content hashes of the BASE corpus (`doc_id % deltaMod !=
-    * 0`), written once under the content-fingerprint-keyed workDir —
-    * the `ensureEmbBandIndex` caching contract at the exact-dedup
-    * grain.
+    * 0`), written once as an [[graft.io.Artifact]].
     */
   private def ensureExactIndex(spark: SparkSession, dir: String,
-                               planted: DataFrame, deltaMod: Int): String = {
-    import java.nio.file.{Files, Paths}
-    val base = graft.Conf.resolveWorkDir(spark, "")
-    val cfp = graft.tsdb.Ingest.contentFingerprint(s"$dir/documents.parquet")
-    val path = s"$base/graft_exact_fp_index_v2_${deltaMod}_" +
-      s"${Integer.toHexString(dir.hashCode)}_$cfp"
-    val done = Paths.get(path, "_DONE")
-    if (!Files.exists(done)) {
+                               planted: DataFrame, deltaMod: Int): String =
+    Artifact.ensure(spark, "exact-fp-index", s"$dir/documents.parquet", deltaMod) { path =>
       planted
         .where(col("doc_id") % deltaMod =!= 0)
         .select(md5Fingerprint(col("text")).as("fp"))
         .distinct()
         .write.mode("overwrite").parquet(s"$path/fps")
-      Files.createFile(done)
     }
-    path
-  }
 
   /** INCREMENTAL exact dedup — [[exact]]'s corpus-maintenance posture
     * (the 25k/25l contract at the cheapest grain): today's delta
@@ -521,27 +510,20 @@ object Dedup {
 
   /** Materialize the persisted LSH band index for `dir`'s INDEX docs
     * (`doc_id % deltaMod != 0` — the corpus already deduped by prior
-    * runs): `(doc_id, band, band_hash)` parquet under the workDir,
-    * content-fingerprint-keyed like every `ensure*` layout. At 100 TB
+    * runs): `(doc_id, band, band_hash)` parquet, an
+    * [[graft.io.Artifact]]. At 100 TB
     * this is the index a daily delta probes — built once per corpus
     * version, never re-banded per run.
     */
   private[graft] def ensureBandIndex(spark: SparkSession, dir: String,
                                      numHashes: Int = 32, bands: Int = 16,
-                                     deltaMod: Int = 10): String = {
-    val fp = graft.tsdb.Ingest.contentFingerprint(s"$dir/documents.parquet")
-    val root = graft.Conf.resolveWorkDir(spark, "")
-    val path = s"$root/mh_bands_${Integer.toHexString(dir.hashCode)}_" +
-      s"${fp}_h${numHashes}_b${bands}_m$deltaMod"
-    if (!java.nio.file.Files.exists(
-        java.nio.file.Paths.get(path, "_SUCCESS"))) {
+                                     deltaMod: Int = 10): String =
+    Artifact.ensure(spark, "mh-bands", s"$dir/documents.parquet", numHashes, bands, deltaMod) { path =>
       bandFrame(
         parallelize(Source.table(spark, dir, "documents")).where(col("doc_id") % deltaMod =!= 0),
         numHashes, bands)
         .write.mode("overwrite").parquet(path)
     }
-    path
-  }
 
   /** INCREMENTAL MinHash-LSH dedup — the corpus-maintenance posture: a
     * new shard (here `doc_id % deltaMod == 0`, the driver-data stand-in
@@ -851,25 +833,17 @@ object Dedup {
     }
 
   /** Persisted SimHash index of the base corpus (`doc_id % deltaMod
-    * != 0`) — (doc_id, simhash) rows under the content-fingerprint-
-    * keyed workDir, the [[ensureBandIndex]] recipe at the 64-bit-hash
-    * grain (the whole index row is 16 bytes; banding re-derives
+    * != 0`) — (doc_id, simhash) rows, an [[graft.io.Artifact]] like
+    * [[ensureBandIndex]] at the 64-bit-hash grain (the whole index row is 16 bytes; banding re-derives
     * deterministically at probe time).
     */
   private[graft] def ensureSimhashIndex(spark: SparkSession, dir: String,
-                                        deltaMod: Int = 10): String = {
-    val fp = graft.tsdb.Ingest.contentFingerprint(s"$dir/documents.parquet")
-    val root = graft.Conf.resolveWorkDir(spark, "")
-    val path = s"$root/sh_index_${Integer.toHexString(dir.hashCode)}_" +
-      s"${fp}_m$deltaMod"
-    if (!java.nio.file.Files.exists(
-        java.nio.file.Paths.get(path, "_SUCCESS"))) {
+                                        deltaMod: Int = 10): String =
+    Artifact.ensure(spark, "sh-index", s"$dir/documents.parquet", deltaMod) { path =>
       simhashFrame(
         parallelize(Source.table(spark, dir, "documents")).where(col("doc_id") % deltaMod =!= 0))
         .write.mode("overwrite").parquet(path)
     }
-    path
-  }
 
   /** INCREMENTAL SimHash dedup — the fourth member of the
     * incremental-maintenance family (exact 25n / minhash 25k /
@@ -1363,25 +1337,18 @@ object Dedup {
   /** Persisted sign-LSH band layout for the embedding INDEX side
     * (`vec_id % deltaMod != 0` of [[withPlantedNearDups]]'s corpus —
     * the same frame the full entry runs on) — [[ensureBandIndex]]'s
-    * embedding sibling, keyed by content fingerprint AND the banding
+    * embedding sibling, an [[graft.io.Artifact]] keyed by the banding
     * plan (a re-planned corpus re-banding is a new index version).
     */
   private[graft] def ensureEmbBandIndex(spark: SparkSession, dir: String,
                                         rowsPerBand: Int, bands: Int,
-                                        deltaMod: Int = 10): String = {
-    val fp = graft.tsdb.Ingest.contentFingerprint(s"$dir/embeddings.parquet")
-    val root = graft.Conf.resolveWorkDir(spark, "")
-    val path = s"$root/emb_bands_${Integer.toHexString(dir.hashCode)}_" +
-      s"${fp}_r${rowsPerBand}_b${bands}_m$deltaMod"
-    if (!java.nio.file.Files.exists(
-        java.nio.file.Paths.get(path, "_SUCCESS"))) {
+                                        deltaMod: Int = 10): String =
+    Artifact.ensure(spark, "emb-bands", s"$dir/embeddings.parquet", rowsPerBand, bands, deltaMod) { path =>
       embBandFrame(
         withPlantedNearDups(spark, dir).where(col("vec_id") % deltaMod =!= 0),
         rowsPerBand, bands)
         .write.mode("overwrite").parquet(path)
     }
-    path
-  }
 
   /** INCREMENTAL embedding-LSH dedup — [[minhashIncremental]]'s
     * embedding sibling, and the OPERATIONAL answer to the candidate

@@ -1,6 +1,7 @@
 package graft.operators
 
-import graft.io.Source
+import graft.io.{Artifact, Source}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -22,7 +23,7 @@ import org.apache.spark.sql.functions._
   * broadcast probe side), and nothing per-query ever shuffles or
   * re-assigns the corpus.
   *
-  * The path embeds a content fingerprint of the source table, so a
+  * The index is an [[graft.io.Artifact]] of the source table, so a
   * regenerated corpus is never served from a stale index. The stored
   * centroids — not a retrain — are the source of truth on reuse:
   * k-means means depend on aggregation order, so reusing the persisted
@@ -59,39 +60,40 @@ object IvfIndex {
 
   private object buildLock
 
-  /** Build-or-open the index for `dir`'s embeddings. `train` runs only
-    * on a build; `corpus` must carry (vec_id, v, nrm).
+  /** Build-or-open the index for `dir`'s embeddings, an
+    * [[graft.io.Artifact]] keyed by (variant, nlist, iters). `train` runs
+    * only on a build; `corpus` must carry (vec_id, v, nrm).
     */
   def ensure(spark: SparkSession, dir: String, variant: String,
              nlist: Int, iters: Int,
-             train: () => Similarity.Centroids, corpus: => DataFrame,
-             base: String = ""): Index = {
-    val fp = graft.tsdb.Ingest.contentFingerprint(s"$dir/embeddings.parquet")
-    val root = graft.Conf.resolveWorkDir(spark, base)
-    val path = s"$root/ivf_v2_${Integer.toHexString(dir.hashCode)}_${fp}_" +
-      s"${variant}_n${nlist}_i$iters"
+             train: () => Similarity.Centroids, corpus: => DataFrame): Index = {
+    val path = Artifact.path(spark, "ivf", s"$dir/embeddings.parquet", variant, nlist, iters)
     cached(cache, path) {
-      if (!java.nio.file.Files.exists(
-          java.nio.file.Paths.get(path, "assign", "_SUCCESS"))
-          || java.nio.file.Files.exists(appendedMarker(path))) {
+      Artifact.once(spark, path) {
         // batch appends were layered on the superseded copy — drop them
-        dropBatches(path)
+        dropBatches(spark, path)
         val data = train()
-        import spark.implicits._
-        data.map { case (id, cv) => (id, cv.toSeq) }.toDF("cent_id", "cv")
-          .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
+        writeCentroids(spark, path, data)
         // build-time shuffle on list_id bounds file counts (one writer
         // per list) — offline cost, paid once per corpus version
         Similarity.assignFrame(corpus, data)
           .repartition(col("list_id"))
           .write.partitionBy("list_id").mode("overwrite").parquet(s"$path/assign")
-        java.nio.file.Files.deleteIfExists(appendedMarker(path))
       }
-      val cents = Source.read(spark, s"$path/centroids").collect()
-        .map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).toSeq.sortBy(_._1)
-      Index(path, cents)
+      Index(path, centroids(spark, path))
     }
   }
+
+  private def writeCentroids(spark: SparkSession, path: String,
+                             cents: Similarity.Centroids): Unit = {
+    import spark.implicits._
+    cents.map { case (id, cv) => (id, cv.toSeq) }.toDF("cent_id", "cv")
+      .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
+  }
+
+  private def centroids(spark: SparkSession, path: String): Similarity.Centroids =
+    Source.read(spark, s"$path/centroids").collect()
+      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).toSeq.sortBy(_._1)
 
   /** Incremental index maintenance: assign a batch of new vectors
     * (vec_id, v, nrm) against the STORED centroids and append them to
@@ -105,16 +107,16 @@ object IvfIndex {
     * new fingerprint path via [[ensure]]).
     *
     * An appended layout is no longer the pristine build its
-    * fingerprint-keyed cache path promises, so append drops the marker
-    * file that makes the next [[ensure]] REBUILD the path (and evicts
-    * the in-memory handle) instead of silently serving the mutated
-    * index as if it matched its key. The marker lands BEFORE the data:
-    * a crash mid-append then leaves a marked layout (forced harmless
+    * fingerprint-keyed cache path promises, so append first drops the
+    * artifact's completion marker ([[graft.io.Artifact.invalidate]]) and
+    * evicts the in-memory handle: the next [[ensure]] REBUILDS the path
+    * instead of silently serving the mutated index as if it matched its
+    * key, and a crash mid-append leaves an unmarked layout (a harmless
     * rebuild), never a mutated one served as pristine. Keep using the
     * returned handle / [[open]] to serve the appended generation.
     */
   def append(index: Index, batch: DataFrame): Unit = {
-    invalidate(index.path, cache)
+    invalidate(batch.sparkSession, index.path, cache)
     Similarity.assignFrame(batch, index.centroids)
       .repartition(col("list_id"))
       .write.partitionBy("list_id").mode("append").parquet(s"${index.path}/assign")
@@ -131,7 +133,7 @@ object IvfIndex {
     * exactly-once contract for streaming IVF maintenance.
     */
   def appendBatch(index: Index, batch: DataFrame, batchId: Long): Unit = {
-    invalidate(index.path, cache)
+    invalidate(batch.sparkSession, index.path, cache)
     Similarity.assignFrame(batch, index.centroids)
       .repartition(col("list_id"))
       .write.partitionBy("list_id").mode("overwrite")
@@ -147,77 +149,50 @@ object IvfIndex {
     * the end state is indistinguishable from a full batch build —
     * which is what lets a DRIVER query through this index hash-match
     * the same oracle as the batch index, turning the streaming-IVF
-    * replay spec into an end-to-end exactness proof. Write-once cached
-    * per (source content, nlist) like [[ensure]]; a crash before the
-    * `_DONE` marker replays idempotently off the stream checkpoint.
+    * replay spec into an end-to-end exactness proof. An
+    * [[graft.io.Artifact]] keyed by nlist; a build starts from no
+    * batches and no checkpoint, so a rebuild after an append or a crash
+    * yields the pristine index again.
     */
   def ensureStreamedIndex(spark: SparkSession, dir: String, nlist: Int,
                           train: () => Similarity.Centroids,
-                          corpus: => DataFrame, base: String = ""): Index = {
-    val fp = graft.tsdb.Ingest.contentFingerprint(s"$dir/embeddings.parquet")
-    val root = graft.Conf.resolveWorkDir(spark, base)
-    val path = s"$root/ivf_streamed_v2_${Integer.toHexString(dir.hashCode)}_" +
-      s"${fp}_n$nlist"
+                          corpus: => DataFrame): Index = {
+    val path = Artifact.path(spark, "ivf-streamed", s"$dir/embeddings.parquet", nlist)
     cached(cache, path) {
-      if (!java.nio.file.Files.exists(java.nio.file.Paths.get(path, "_DONE"))) {
+      Artifact.once(spark, path) {
+        dropBatches(spark, path)
+        val ckpt = new Path(s"$path.ckpt")
+        Artifact.fileSystem(spark, ckpt).delete(ckpt, true)
         val cents = train()
-        import spark.implicits._
-        cents.map { case (id, cv) => (id, cv.toSeq) }.toDF("cent_id", "cv")
-          .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
+        writeCentroids(spark, path, cents)
         // empty base: every vector must arrive through the stream
         Similarity.assignFrame(corpus.limit(0), cents)
           .write.partitionBy("list_id").mode("overwrite").parquet(s"$path/assign")
         val idx = Index(path, cents)
         // several part files → several micro-batches: the multi-batch
         // append path is what this layout exists to exercise
-        val landing = s"$path.landing"
-        corpus.coalesce(4).write.mode("overwrite").parquet(landing)
-        val schema = Source.read(spark, landing).schema
-        val q = spark.readStream.schema(schema)
-          .option("maxFilesPerTrigger", 1)
-          .parquet(landing)
-          .writeStream
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            appendBatch(idx, batch, batchId)
-          }
-          .option("checkpointLocation", s"$path.ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        graft.streaming.StreamAwait.drain(q)
-        java.nio.file.Files.write(java.nio.file.Paths.get(path, "_DONE"),
-          Array.empty[Byte])
+        val landing = Artifact.landing(spark, path)(corpus.coalesce(4))
+        Artifact.drainTo(Source.stream(spark, landing, 1), s"$path.ckpt", "append") {
+          (batch, batchId) => appendBatch(idx, batch, batchId)
+        }
       }
-      val cents = Source.read(spark, s"$path/centroids").collect()
-        .map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).toSeq.sortBy(_._1)
-      Index(path, cents)
+      Index(path, centroids(spark, path))
     }
   }
 
-  /** Present iff an append has mutated the layout past its
-    * fingerprinted source corpus.
+  /** Mark the layout incomplete and evict its in-memory handle — BEFORE
+    * any data lands, so every partially-appended state is unmarked.
     */
-  private def appendedMarker(path: String) =
-    java.nio.file.Paths.get(path, "_appended")
-
-  /** Mark the layout mutated and evict its in-memory handle — BEFORE
-    * any data lands, so every partially-appended state is marked.
-    */
-  private def invalidate(path: String,
+  private def invalidate(spark: SparkSession, path: String,
                          c: java.util.concurrent.ConcurrentHashMap[String, _]): Unit = {
-    java.nio.file.Files.write(appendedMarker(path), Array.empty[Byte])
+    Artifact.invalidate(spark, path)
     c.remove(path)
   }
 
-  /** Complete (`_SUCCESS`-marked) batch-append directories of a layout. */
-  private def completeBatchDirs(path: String): Seq[String] =
-    Option(new java.io.File(s"$path/assign_batches").listFiles()).toSeq.flatten
-      .filter(f => f.isDirectory && f.getName.startsWith("batch_id=") &&
-        new java.io.File(f, "_SUCCESS").exists())
-      .map(_.getAbsolutePath).sorted
-
-  private def dropBatches(path: String): Unit =
-    org.apache.commons.io.FileUtils.deleteDirectory(
-      new java.io.File(s"$path/assign_batches"))
+  private def dropBatches(spark: SparkSession, path: String): Unit = {
+    val batches = new Path(s"$path/assign_batches")
+    Artifact.fileSystem(spark, batches).delete(batches, true)
+  }
 
   /** The base layout unioned with every COMPLETE batch append. A
     * streamed-built index has an EMPTY base (`corpus.limit(0)` +
@@ -227,12 +202,11 @@ object IvfIndex {
     */
   private def withBatches(spark: SparkSession, path: String,
                           base: => DataFrame): DataFrame = {
-    val hasBase = Option(new java.io.File(s"$path/assign").listFiles())
-      .toSeq.flatten.exists(f =>
-        f.isDirectory && f.getName.startsWith("list_id="))
-    val dirs = completeBatchDirs(path)
+    val assign = new Path(s"$path/assign")
+    val hasBase = Artifact.fileSystem(spark, assign).listStatus(assign)
+      .exists(s => s.isDirectory && s.getPath.getName.startsWith("list_id="))
     val frames = (if (hasBase) Seq(base) else Seq.empty) ++
-      dirs.map(Source.read(spark, _))
+      Artifact.committedBatches(spark, s"$path/assign_batches")
     require(frames.nonEmpty, s"IVF layout at $path has no data")
     frames.reduce(_.unionByName(_))
   }
@@ -264,25 +238,19 @@ object IvfIndex {
                train: () => Similarity.Centroids,
                trainBooks: () => (Array[Double], Int, Int),
                corpus: => DataFrame,
-               m: Int = 8, trainSample: Int = 4096,
-               base: String = ""): PqIndex = {
-    val fp = graft.tsdb.Ingest.contentFingerprint(s"$dir/embeddings.parquet")
-    val root = graft.Conf.resolveWorkDir(spark, base)
+               m: Int = 8, trainSample: Int = 4096): PqIndex = {
     // every knob that shapes the stored layout — coarse (nlist, iters)
-    // AND fine (m, trainSample) — is in the cache key, so requesting a
+    // AND fine (m, trainSample) — is in the key, so requesting a
     // different PQ geometry never silently reuses the old codes
-    val path = s"$root/ivfpq_v2_${Integer.toHexString(dir.hashCode)}_${fp}_" +
-      s"${variant}_n${nlist}_i${iters}_m${m}_t$trainSample"
+    val path = Artifact.path(spark, "ivfpq", s"$dir/embeddings.parquet",
+      variant, nlist, iters, m, trainSample)
     cached(pqCache, path) {
       import spark.implicits._
-      if (!java.nio.file.Files.exists(
-          java.nio.file.Paths.get(path, "assign", "_SUCCESS"))
-          || java.nio.file.Files.exists(appendedMarker(path))) {
-        dropBatches(path)
+      Artifact.once(spark, path) {
+        dropBatches(spark, path)
         val cents = train()
         val (books, m, subDim) = trainBooks()
-        cents.map { case (id, cv) => (id, cv.toSeq) }.toDF("cent_id", "cv")
-          .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
+        writeCentroids(spark, path, cents)
         Seq((m, subDim, books.toSeq)).toDF("m", "subdim", "books")
           .coalesce(1).write.mode("overwrite").parquet(s"$path/pqbooks")
         Similarity.assignFrame(corpus, cents)
@@ -290,12 +258,9 @@ object IvfIndex {
             typedLit(books.toSeq), lit(m), lit(subDim)))
           .repartition(col("list_id"))
           .write.partitionBy("list_id").mode("overwrite").parquet(s"$path/assign")
-        java.nio.file.Files.deleteIfExists(appendedMarker(path))
       }
-      val cents = Source.read(spark, s"$path/centroids").collect()
-        .map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).toSeq.sortBy(_._1)
       val b = Source.read(spark, s"$path/pqbooks").collect()(0)
-      PqIndex(path, cents,
+      PqIndex(path, centroids(spark, path),
         scala.collection.immutable.ArraySeq.unsafeWrapArray(
           b.getSeq[Double](2).toArray), b.getInt(0), b.getInt(1))
     }
@@ -305,12 +270,12 @@ object IvfIndex {
     * vectors against the STORED centroids, encode them against the
     * STORED codebooks, and append to the inverted-list partitions —
     * the same fixed-quantizer contract as [[append]], extended to the
-    * fine quantizer. Drops the same `_appended` marker (BEFORE the
-    * data, same crash posture) so a later [[ensurePq]] of the
+    * fine quantizer. Drops the completion marker the same way (BEFORE
+    * the data, same crash posture) so a later [[ensurePq]] of the
     * fingerprint key rebuilds instead of serving the mutated layout.
     */
   def appendPq(index: PqIndex, batch: DataFrame): Unit = {
-    invalidate(index.path, pqCache)
+    invalidate(batch.sparkSession, index.path, pqCache)
     pqEncoded(index, batch)
       .write.partitionBy("list_id").mode("append").parquet(s"${index.path}/assign")
   }
@@ -319,7 +284,7 @@ object IvfIndex {
     * IVF-PQ layout.
     */
   def appendPqBatch(index: PqIndex, batch: DataFrame, batchId: Long): Unit = {
-    invalidate(index.path, pqCache)
+    invalidate(batch.sparkSession, index.path, pqCache)
     pqEncoded(index, batch)
       .write.partitionBy("list_id").mode("overwrite")
       .parquet(s"${index.path}/assign_batches/batch_id=$batchId")

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.expressions.GraftFunctions
-import graft.io.Source
+import graft.io.{Artifact, Source}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions._
@@ -997,30 +997,20 @@ object TextAnalysis {
     */
   /** Persisted BASE gram-vocabulary index for
     * [[dedupSpansIncremental]]: `(gram, cnt)` over the base corpus
-    * (`doc_id % deltaMod != 0`), written once under the
-    * content-fingerprint-keyed workDir — the `ensureExactIndex`
-    * caching contract at the gram grain. COUNTS, not membership: a
+    * (`doc_id % deltaMod != 0`), written once as an
+    * [[graft.io.Artifact]]. COUNTS, not membership: a
     * base-unique gram re-delivered by the delta becomes corpus-
     * duplicated, so the probe needs `base_cnt + delta_cnt > 1`, and
     * the index append after acceptance is a count merge.
     */
   private def ensureGramVocabIndex(spark: SparkSession, dir: String,
-                                   deltaMod: Int): String = {
-    import java.nio.file.{Files, Paths}
-    val base = graft.Conf.resolveWorkDir(spark, "")
-    val cfp = graft.tsdb.Ingest.contentFingerprint(s"$dir/documents.parquet")
-    val path = s"$base/graft_gram_vocab_index_v1_${deltaMod}_" +
-      s"${Integer.toHexString(dir.hashCode)}_$cfp"
-    val done = Paths.get(path, "_DONE")
-    if (!Files.exists(done)) {
+                                   deltaMod: Int): String =
+    Artifact.ensure(spark, "gram-vocab-index", s"$dir/documents.parquet", deltaMod) { path =>
       gramInstances(Source.table(spark, dir, "documents")
           .where(col("doc_id") % deltaMod =!= 0))
         .groupBy(col("gram")).agg(count(lit(1)).as("cnt"))
         .write.mode("overwrite").parquet(s"$path/vocab")
-      Files.createFile(done)
     }
-    path
-  }
 
   /** `(delta_rows, index_rows)` evidence for the substring-dedup
     * incremental scale legs — [[graft.operators.Dedup.incrementalStats]]'s
@@ -1060,8 +1050,7 @@ object TextAnalysis {
   def dedupSpansIncremental(spark: SparkSession, dir: String,
                             deltaMod: Int = 10,
                             broadcastVocab: Boolean = true): DataFrame = {
-    val idx = spark.read
-      .parquet(s"${ensureGramVocabIndex(spark, dir, deltaMod)}/vocab")
+    val idx = Source.read(spark, s"${ensureGramVocabIndex(spark, dir, deltaMod)}/vocab")
     val inst = gramInstances(Source.table(spark, dir, "documents")
       .where(col("doc_id") % deltaMod === 0))
     val deltaVocab = inst.groupBy(col("gram")).agg(count(lit(1)).as("dcnt"))

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.io.Source
+import graft.io.{Artifact, Source}
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -48,43 +48,19 @@ object StatefulSessionize {
 
   /** Drain the events table through [[sessionize]] once as FOUR
     * time-ordered micro-batches — the landing is split into four
-    * consecutive time-range chunks whose file mtimes ascend, so the
-    * file source replays them oldest-first and a session spanning a
-    * chunk boundary genuinely crosses per-user STATE (the thing a
-    * single-batch replay cannot prove). Batches stage exactly-once
-    * (`batch_id=<n>`, `_SUCCESS`-gated) under the
-    * content-fingerprint-keyed workDir recipe.
+    * consecutive time-range chunks whose file mtimes ascend
+    * ([[TimeChunkedLanding]]), so the file source replays them
+    * oldest-first and a session spanning a chunk boundary genuinely
+    * crosses per-user STATE (the thing a single-batch replay cannot
+    * prove). Batches stage exactly-once — an [[graft.io.Artifact]].
     */
   def ensureStreamed(spark: org.apache.spark.sql.SparkSession,
                      sfDir: String,
-                     gapNs: Long = 1800L * 1000 * 1000 * 1000): String = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    import java.nio.file.attribute.FileTime
-    val base = graft.Conf.resolveWorkDir(spark, "")
-    val fp = graft.tsdb.Ingest.contentFingerprint(s"$sfDir/events.parquet")
-    val path = s"$base/graft_sess_streamed_" +
-      s"${Integer.toHexString(sfDir.hashCode)}_$fp"
-    val done = Paths.get(path, "_DONE")
-    if (!Files.exists(done)) {
-      val landing =
-        Paths.get(TimeChunkedLanding.ensure(spark, sfDir, path))
-      val stream = spark.readStream
-        .schema(Source.read(spark, landing.toString).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing.toString)
-      val q = sessionize(stream, gapNs).writeStream
-        .outputMode("append")
-        .foreachBatch { (batch: Dataset[SessOut], batchId: Long) =>
-          batch.write.mode("overwrite").parquet(s"$path/batch_id=$batchId")
-        }
-        .option("checkpointLocation", s"$path.ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      StreamAwait.drain(q)
-      Files.createFile(done)
+                     gapNs: Long = 1800L * 1000 * 1000 * 1000): String =
+    Artifact.ensure(spark, "sess-streamed", s"$sfDir/events.parquet", gapNs) { path =>
+      val landing = TimeChunkedLanding.ensure(spark, sfDir, path)
+      Artifact.drain(sessionize(Source.stream(spark, landing, 1), gapNs), path, "append")
     }
-    path
-  }
 
   /** The streamed landing's session assignment — identical columns to
     * the batch `q_event_sessionize`, so its window-SQL oracle pins the
@@ -94,7 +70,7 @@ object StatefulSessionize {
   def streamedSessions(spark: org.apache.spark.sql.SparkSession,
                        sfDir: String): DataFrame = {
     val path = ensureStreamed(spark, sfDir)
-    StreamingSeriesState.openStreamed(spark, path)
+    Artifact.openStaged(spark, path)
       .select(col("user_id"), col("ts"), col("event_type"), col("session_id"))
   }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.io.Source
+import graft.io.{Artifact, Source}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
@@ -67,44 +67,18 @@ object StreamingActiveUsers {
   }
 
   /** Drain the events table through [[dedupedDayUsers]] once (four
-    * micro-batches, exactly-once batch staging, content-fingerprint-
-    * keyed layout — the shared `ensure*` recipe).
+    * micro-batches over a four-file landing, exactly-once batch
+    * staging — an [[graft.io.Artifact]]).
     */
   def ensureStreamedExact(spark: org.apache.spark.sql.SparkSession,
-                          sfDir: String): String = {
-    import java.nio.file.{Files, Paths}
-    val base = graft.Conf.resolveWorkDir(spark, "")
-    val fp = graft.tsdb.Ingest.contentFingerprint(s"$sfDir/events.parquet")
-    val path = s"$base/graft_dau_streamed_" +
-      s"${Integer.toHexString(sfDir.hashCode)}_$fp"
-    val done = Paths.get(path, "_DONE")
-    if (!Files.exists(done)) {
-      val landing = s"$path.landing"
-      if (!Files.exists(Paths.get(landing, "_SUCCESS"))) {
-        Source.table(spark, sfDir, "events")
-          .repartition(4)
-          .write.mode("overwrite").parquet(landing)
-      }
-      val stream = spark.readStream
-        .schema(Source.read(spark, landing).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing)
+                          sfDir: String): String =
+    Artifact.ensure(spark, "dau-streamed", s"$sfDir/events.parquet") { path =>
+      val landing = StreamingAgg.eventsLanding(spark, sfDir, path)
       // span-derived replay watermark (see [[ReplayGuard]]): the fixed
       // 45-day default only holds while the landing spans < 45 days
-      val q = dedupedDayUsers(stream,
-          watermark = ReplayGuard.spanWatermark(spark, landing)).writeStream
-        .outputMode("append")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          batch.write.mode("overwrite").parquet(s"$path/batch_id=$batchId")
-        }
-        .option("checkpointLocation", s"$path.ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      StreamAwait.drain(q)
-      Files.createFile(done)
+      Artifact.drain(dedupedDayUsers(Source.stream(spark, landing, 1),
+        watermark = ReplayGuard.spanWatermark(spark, landing)), path, "append")
     }
-    path
-  }
 
   /** Exact DAU per day from the streamed deduped landing — a plain
     * count because the keyed state already guaranteed (day, user)
@@ -115,7 +89,7 @@ object StreamingActiveUsers {
   def streamedDau(spark: org.apache.spark.sql.SparkSession,
                   sfDir: String): DataFrame = {
     val path = ensureStreamedExact(spark, sfDir)
-    StreamingSeriesState.openStreamed(spark, path)
+    Artifact.openStaged(spark, path)
       .groupBy(col("day"))
       .agg(count(lit(1)).as("dau"))
   }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.io.Source
+import graft.io.{Artifact, Source}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -122,45 +122,23 @@ object StreamingAgg {
   }
 
   /** Drain the events table through [[bucketedHll]] once (four landing
-    * files, one micro-batch each) under the content-fingerprint-keyed
-    * workDir recipe shared by every `ensure*` layout.
+    * files, one micro-batch each) — an [[graft.io.Artifact]] keyed by
+    * `rsd`.
     */
   def ensureStreamedHll(spark: SparkSession, sfDir: String,
-                        rsd: Double = 0.02): String = {
-    import java.nio.file.{Files, Paths}
-    val base = graft.Conf.resolveWorkDir(spark, "")
-    val fp = graft.tsdb.Ingest.contentFingerprint(s"$sfDir/events.parquet")
-    // FULL-precision param key (ADVICE r10): truncating the double to
-    // a couple of decimals collided two nearby params on one cached
-    // landing — the bit pattern in hex is injective
-    val path = s"$base/graft_hll_streamed_r${java.lang.Long.toHexString(java.lang.Double.doubleToLongBits(rsd))}_" +
-      s"${Integer.toHexString(sfDir.hashCode)}_$fp"
-    val done = Paths.get(path, "_DONE")
-    if (!Files.exists(done)) {
-      val landing = s"$path.landing"
-      if (!Files.exists(Paths.get(landing, "_SUCCESS"))) {
-        Source.table(spark, sfDir, "events")
-          .repartition(4)
-          .write.mode("overwrite").parquet(landing)
-      }
-      val stream = spark.readStream
-        .schema(Source.read(spark, landing).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing)
-      val q = bucketedHll(stream, rsd = rsd,
-          watermark = ReplayGuard.spanWatermark(spark, landing)).writeStream
-        .outputMode("update")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          batch.write.mode("overwrite").parquet(s"$path/batch_id=$batchId")
-        }
-        .option("checkpointLocation", s"$path.ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      StreamAwait.drain(q)
-      Files.createFile(done)
+                        rsd: Double = 0.02): String =
+    Artifact.ensure(spark, "hll-streamed", s"$sfDir/events.parquet", rsd) { path =>
+      val landing = eventsLanding(spark, sfDir, path)
+      Artifact.drain(bucketedHll(Source.stream(spark, landing, 1), rsd = rsd,
+        watermark = ReplayGuard.spanWatermark(spark, landing)), path, "update")
     }
-    path
-  }
+
+  /** The events table copied once into four landing files beside the
+    * artifact at `path`: four micro-batches for a one-file-per-batch
+    * stream.
+    */
+  private[streaming] def eventsLanding(spark: SparkSession, sfDir: String, path: String): String =
+    Artifact.landing(spark, path)(Source.table(spark, sfDir, "events").repartition(4))
 
   /** The STREAMED HLL under the hash gate, `Db.activeSeriesApprox`'s
     * band recipe: per bucket, the landed sketch's final emission (the
@@ -175,7 +153,7 @@ object StreamingAgg {
                       rsd: Double = 0.02,
                       relBand: Double = 0.10): DataFrame = {
     val path = ensureStreamedHll(spark, sfDir, rsd)
-    val last = StreamingSeriesState.openStreamed(spark, path)
+    val last = Artifact.openStaged(spark, path)
       .where(col("metric") === metric)
       .groupBy(col("metric"), col("bucket_start"))
       .agg(max(struct(col("n_points"), col("approx"))).as("last"))
@@ -255,39 +233,12 @@ object StreamingAgg {
     * land separately.
     */
   def ensureStreamedApdex(spark: SparkSession, sfDir: String,
-                          threshold: Double): String = {
-    import java.nio.file.{Files, Paths}
-    val base = graft.Conf.resolveWorkDir(spark, "")
-    val fp = graft.tsdb.Ingest.contentFingerprint(s"$sfDir/events.parquet")
-    // full-precision threshold key (ADVICE r10) — see ensureStreamedHll
-    val path = s"$base/graft_apdex_streamed_t${java.lang.Long.toHexString(java.lang.Double.doubleToLongBits(threshold))}_" +
-      s"${Integer.toHexString(sfDir.hashCode)}_$fp"
-    val done = Paths.get(path, "_DONE")
-    if (!Files.exists(done)) {
-      val landing = s"$path.landing"
-      if (!Files.exists(Paths.get(landing, "_SUCCESS"))) {
-        Source.table(spark, sfDir, "events")
-          .repartition(4)
-          .write.mode("overwrite").parquet(landing)
-      }
-      val stream = spark.readStream
-        .schema(Source.read(spark, landing).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing)
-      val q = bucketedApdexPartials(stream, threshold,
-          watermark = ReplayGuard.spanWatermark(spark, landing)).writeStream
-        .outputMode("update")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          batch.write.mode("overwrite").parquet(s"$path/batch_id=$batchId")
-        }
-        .option("checkpointLocation", s"$path.ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      StreamAwait.drain(q)
-      Files.createFile(done)
+                          threshold: Double): String =
+    Artifact.ensure(spark, "apdex-streamed", s"$sfDir/events.parquet", threshold) { path =>
+      val landing = eventsLanding(spark, sfDir, path)
+      Artifact.drain(bucketedApdexPartials(Source.stream(spark, landing, 1), threshold,
+        watermark = ReplayGuard.spanWatermark(spark, landing)), path, "update")
     }
-    path
-  }
 
   /** `ts_apdex` answered from the STREAMED landing — the SLO dashboard
     * that actually runs streaming: per key the latest emission is the
@@ -302,7 +253,7 @@ object StreamingAgg {
                     metric: String = "view",
                     threshold: Double = 60.0): DataFrame = {
     val path = ensureStreamedApdex(spark, sfDir, threshold)
-    StreamingSeriesState.openStreamed(spark, path)
+    Artifact.openStaged(spark, path)
       .where(col("metric") === metric && col("tag_user").isNotNull)
       .groupBy(col("metric"), col("tag_user"), col("bucket_ts"))
       .agg(max(struct(col("n"), col("n_sat"), col("n_tol"))).as("last"))
@@ -326,40 +277,12 @@ object StreamingAgg {
     */
   def ensureStreamedQuantile(spark: SparkSession, sfDir: String,
                              q: Double = 0.95,
-                             accuracy: Int = 10000): String = {
-    import java.nio.file.{Files, Paths}
-    val base = graft.Conf.resolveWorkDir(spark, "")
-    val fp = graft.tsdb.Ingest.contentFingerprint(s"$sfDir/events.parquet")
-    // full-precision q key (ADVICE r10) — see ensureStreamedHll
-    val path = s"$base/graft_quantile_streamed_q${java.lang.Long.toHexString(java.lang.Double.doubleToLongBits(q))}_a${accuracy}_" +
-      s"${Integer.toHexString(sfDir.hashCode)}_$fp"
-    val done = Paths.get(path, "_DONE")
-    if (!Files.exists(done)) {
-      val landing = s"$path.landing"
-      if (!Files.exists(Paths.get(landing, "_SUCCESS"))) {
-        Source.table(spark, sfDir, "events")
-          .repartition(4)
-          .write.mode("overwrite").parquet(landing)
-      }
-      val stream = spark.readStream
-        .schema(Source.read(spark, landing).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing)
-      val quant = bucketedQuantile(stream, q, accuracy,
-        watermark = ReplayGuard.spanWatermark(spark, landing))
-      val qy = quant.writeStream
-        .outputMode("update")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          batch.write.mode("overwrite").parquet(s"$path/batch_id=$batchId")
-        }
-        .option("checkpointLocation", s"$path.ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      StreamAwait.drain(qy)
-      Files.createFile(done)
+                             accuracy: Int = 10000): String =
+    Artifact.ensure(spark, "quantile-streamed", s"$sfDir/events.parquet", q, accuracy) { path =>
+      val landing = eventsLanding(spark, sfDir, path)
+      Artifact.drain(bucketedQuantile(Source.stream(spark, landing, 1), q, accuracy,
+        watermark = ReplayGuard.spanWatermark(spark, landing)), path, "update")
     }
-    path
-  }
 
   /** The STREAMED sketch under the hash gate, via the rank-band
     * pattern (`AggBuilder.buildBandCheck`): the landed sketch's final
@@ -378,7 +301,7 @@ object StreamingAgg {
                            accuracy: Int = 10000,
                            rankMargin: Double = 0.01): DataFrame = {
     val path = ensureStreamedQuantile(spark, sfDir, q, accuracy)
-    val last = StreamingSeriesState.openStreamed(spark, path)
+    val last = Artifact.openStaged(spark, path)
       .where(col("metric") === metric && col("grp").isNotNull)
       .groupBy(col("metric"), col("grp"), col("bucket_start"))
       .agg(max(struct(col("n"), col("value"))).as("last"))
@@ -405,44 +328,17 @@ object StreamingAgg {
 
   /** Drain the events table through [[bucketedPartials]] once — four
     * landing files, one micro-batch each, Update-mode changelog staged
-    * exactly-once per batch — under the content-fingerprint-keyed
-    * workDir recipe shared by every `ensure*` layout.
+    * exactly-once per batch — an [[graft.io.Artifact]].
     */
-  def ensureStreamed(spark: SparkSession, sfDir: String): String = {
-    import java.nio.file.{Files, Paths}
-    val base = graft.Conf.resolveWorkDir(spark, "")
-    val fp = graft.tsdb.Ingest.contentFingerprint(s"$sfDir/events.parquet")
-    val path = s"$base/graft_agg_streamed_" +
-      s"${Integer.toHexString(sfDir.hashCode)}_$fp"
-    val done = Paths.get(path, "_DONE")
-    if (!Files.exists(done)) {
-      val landing = s"$path.landing"
-      if (!Files.exists(Paths.get(landing, "_SUCCESS"))) {
-        Source.table(spark, sfDir, "events")
-          .repartition(4)
-          .write.mode("overwrite").parquet(landing)
-      }
-      val stream = spark.readStream
-        .schema(Source.read(spark, landing).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing)
+  def ensureStreamed(spark: SparkSession, sfDir: String): String =
+    Artifact.ensure(spark, "agg-streamed", s"$sfDir/events.parquet") { path =>
+      val landing = eventsLanding(spark, sfDir, path)
       // replay posture derived from the DATA, not a fixed 45-day hope:
       // the watermark must out-span the landing's actual event-time
       // range or randomly-ordered batches silently drop late rows
-      val q = bucketedPartials(stream,
-          watermark = ReplayGuard.spanWatermark(spark, landing)).writeStream
-        .outputMode("update")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          batch.write.mode("overwrite").parquet(s"$path/batch_id=$batchId")
-        }
-        .option("checkpointLocation", s"$path.ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      StreamAwait.drain(q)
-      Files.createFile(done)
+      Artifact.drain(bucketedPartials(Source.stream(spark, landing, 1),
+        watermark = ReplayGuard.spanWatermark(spark, landing)), path, "update")
     }
-    path
-  }
 
   /** `ts_avg` answered from the STREAMED landing: per key the latest
     * running total is the row with the largest `n` (a window's count
@@ -457,7 +353,7 @@ object StreamingAgg {
   def streamedAvg(spark: SparkSession, sfDir: String,
                   metric: String = "purchase"): DataFrame = {
     val path = ensureStreamed(spark, sfDir)
-    StreamingSeriesState.openStreamed(spark, path)
+    Artifact.openStaged(spark, path)
       .where(col("metric") === metric && col("tag_user").isNotNull)
       .groupBy(col("metric"), col("tag_user"), col("bucket_ts"))
       .agg(max(struct(col("n"), col("sum_dec"))).as("last"))
@@ -483,7 +379,7 @@ object StreamingAgg {
                        metric: String = "view"): DataFrame = {
     val path = ensureStreamed(spark, sfDir)
     val dayNs = 86400L * 1000000000L
-    StreamingSeriesState.openStreamed(spark, path)
+    Artifact.openStaged(spark, path)
       .where(col("metric") === metric && col("tag_user").isNotNull)
       .groupBy(col("metric"), col("tag_user"), col("bucket_ts"))
       .agg(max(struct(col("n"), col("sum_dec"))).as("last"))

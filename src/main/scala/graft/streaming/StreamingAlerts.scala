@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.io.Source
+import graft.io.{Artifact, Source}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -90,39 +90,17 @@ object StreamingAlerts {
 
   /** Drain the events table through [[alertStream]] as FOUR
     * time-ordered micro-batches ([[TimeChunkedLanding]]), each batch's
-    * Append output staged exactly-once under the
-    * content-fingerprint-keyed workDir.
+    * Append output staged exactly-once — an [[graft.io.Artifact]] keyed
+    * by (metric, threshold, forBuckets).
     */
   def ensureStreamed(spark: SparkSession, sfDir: String, metric: String,
-                     threshold: Double, forBuckets: Int): String = {
-    import java.nio.file.{Files, Paths}
-    val base = graft.Conf.resolveWorkDir(spark, "")
-    val fp = graft.tsdb.Ingest.contentFingerprint(s"$sfDir/events.parquet")
-    val path = s"$base/graft_alerts_streamed_${metric}_" +
-      // full-precision threshold key (ADVICE r10): two thresholds
-      // <0.01 apart must not share a cached landing
-      s"t${java.lang.Long.toHexString(java.lang.Double.doubleToLongBits(threshold))}_f${forBuckets}_" +
-      s"${Integer.toHexString(sfDir.hashCode)}_$fp"
-    val done = Paths.get(path, "_DONE")
-    if (!Files.exists(done)) {
+                     threshold: Double, forBuckets: Int): String =
+    Artifact.ensure(spark, "alerts-streamed", s"$sfDir/events.parquet",
+        metric, threshold, forBuckets) { path =>
       val landing = TimeChunkedLanding.ensure(spark, sfDir, path)
-      val stream = spark.readStream
-        .schema(Source.read(spark, landing).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing)
-      val q = alertStream(stream, metric, threshold, forBuckets).writeStream
-        .outputMode("append")
-        .foreachBatch { (batch: Dataset[AOut], batchId: Long) =>
-          batch.write.mode("overwrite").parquet(s"$path/batch_id=$batchId")
-        }
-        .option("checkpointLocation", s"$path.ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      StreamAwait.drain(q)
-      Files.createFile(done)
+      Artifact.drain(alertStream(Source.stream(spark, landing, 1), metric, threshold, forBuckets),
+        path, "append")
     }
-    path
-  }
 
   /** The landed streamed alert rows — the driver entry reads the
     * staged layout; the oracle re-derives the identical lifecycle with
@@ -134,6 +112,6 @@ object StreamingAlerts {
                      threshold: Double = 60.0,
                      forBuckets: Int = 3): DataFrame = {
     val path = ensureStreamed(spark, sfDir, metric, threshold, forBuckets)
-    StreamingSeriesState.openStreamed(spark, path)
+    Artifact.openStaged(spark, path)
   }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.io.Source
+import graft.io.{Artifact, Source}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -72,40 +72,14 @@ object StreamingAttribution {
   }
 
   /** Drain the events table through [[creditStream]] once as FOUR
-    * time-ordered micro-batches (the [[StreamingTransitions]] landing
-    * recipe verbatim: consecutive time-range chunks, ascending
-    * mtimes → oldest-first file replay), staging each batch's Append
-    * output exactly-once (`batch_id=<n>`, `_SUCCESS`-gated) under the
-    * content-fingerprint-keyed workDir.
+    * time-ordered micro-batches ([[TimeChunkedLanding]]), staging each
+    * batch's Append output exactly-once — an [[graft.io.Artifact]].
     */
-  def ensureStreamed(spark: SparkSession, sfDir: String): String = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    import java.nio.file.attribute.FileTime
-    val base = graft.Conf.resolveWorkDir(spark, "")
-    val fp = graft.tsdb.Ingest.contentFingerprint(s"$sfDir/events.parquet")
-    val path = s"$base/graft_attr_streamed_" +
-      s"${Integer.toHexString(sfDir.hashCode)}_$fp"
-    val done = Paths.get(path, "_DONE")
-    if (!Files.exists(done)) {
-      val landing =
-        Paths.get(TimeChunkedLanding.ensure(spark, sfDir, path))
-      val stream = spark.readStream
-        .schema(Source.read(spark, landing.toString).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing.toString)
-      val q = creditStream(stream).writeStream
-        .outputMode("append")
-        .foreachBatch { (batch: Dataset[Credit], batchId: Long) =>
-          batch.write.mode("overwrite").parquet(s"$path/batch_id=$batchId")
-        }
-        .option("checkpointLocation", s"$path.ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      StreamAwait.drain(q)
-      Files.createFile(done)
+  def ensureStreamed(spark: SparkSession, sfDir: String): String =
+    Artifact.ensure(spark, "attr-streamed", s"$sfDir/events.parquet") { path =>
+      val landing = TimeChunkedLanding.ensure(spark, sfDir, path)
+      Artifact.drain(creditStream(Source.stream(spark, landing, 1)), path, "append")
     }
-    path
-  }
 
   /** The channel roll-up folded from the streamed credit changelog —
     * identical columns and revenue chain to the batch
@@ -114,7 +88,7 @@ object StreamingAttribution {
     */
   def streamedAttribution(spark: SparkSession, sfDir: String): DataFrame = {
     val path = ensureStreamed(spark, sfDir)
-    StreamingSeriesState.openStreamed(spark, path)
+    Artifact.openStaged(spark, path)
       .groupBy(col("touch"))
       .agg(count(lit(1)).as("n_conv"),
         sum(col("value").cast("decimal(28,6)")).cast("double").as("revenue"))

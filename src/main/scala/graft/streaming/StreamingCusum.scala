@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.io.Source
+import graft.io.{Artifact, Source}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -114,37 +114,16 @@ object StreamingCusum {
 
   /** Drain the events table through [[cusumStream]] once as FOUR
     * time-ordered micro-batches ([[TimeChunkedLanding]]), staging each
-    * batch's Append output exactly-once (`batch_id=<n>`,
-    * `_SUCCESS`-gated) under the content-fingerprint-keyed workDir.
+    * batch's Append output exactly-once — an [[graft.io.Artifact]] keyed
+    * by (metric, k2, h2).
     */
   def ensureStreamed(spark: SparkSession, sfDir: String, metric: String,
-                     k2: Int = 1, h2: Int = 5): String = {
-    import java.nio.file.{Files, Paths}
-    val base = graft.Conf.resolveWorkDir(spark, "")
-    val fp = graft.tsdb.Ingest.contentFingerprint(s"$sfDir/events.parquet")
-    val path = s"$base/graft_cusum_streamed_${metric}_${k2}_${h2}_" +
-      s"${Integer.toHexString(sfDir.hashCode)}_$fp"
-    val done = Paths.get(path, "_DONE")
-    if (!Files.exists(done)) {
-      val landing = Paths.get(TimeChunkedLanding.ensure(spark, sfDir, path))
+                     k2: Int = 1, h2: Int = 5): String =
+    Artifact.ensure(spark, "cusum-streamed", s"$sfDir/events.parquet", metric, k2, h2) { path =>
+      val landing = TimeChunkedLanding.ensure(spark, sfDir, path)
       val th = thresholds(spark, sfDir, metric, k2, h2)
-      val stream = spark.readStream
-        .schema(Source.read(spark, landing.toString).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing.toString)
-      val q = cusumStream(stream, metric, th).writeStream
-        .outputMode("append")
-        .foreachBatch { (batch: Dataset[COut], batchId: Long) =>
-          batch.write.mode("overwrite").parquet(s"$path/batch_id=$batchId")
-        }
-        .option("checkpointLocation", s"$path.ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      StreamAwait.drain(q)
-      Files.createFile(done)
+      Artifact.drain(cusumStream(Source.stream(spark, landing, 1), metric, th), path, "append")
     }
-    path
-  }
 
   /** The landed per-point CUSUM layout — the driver entry reads it
     * directly; the oracle re-derives the identical integers with the
@@ -153,6 +132,6 @@ object StreamingCusum {
   def streamedCusum(spark: SparkSession, sfDir: String,
                     metric: String): DataFrame = {
     val path = ensureStreamed(spark, sfDir, metric)
-    StreamingSeriesState.openStreamed(spark, path)
+    Artifact.openStaged(spark, path)
   }
 }

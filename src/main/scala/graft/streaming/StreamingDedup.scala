@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.io.Source
+import graft.io.{Artifact, Source}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -29,10 +29,7 @@ object StreamingDedup {
   def dedupStream(spark: SparkSession, docsDir: String,
                   watermark: String = "1 hour",
                   tsCol: String = "event_ts"): DataFrame = {
-    val schema = Source.read(spark, docsDir).schema
-    spark.readStream
-      .schema(schema)
-      .parquet(docsDir)
+    Source.stream(spark, docsDir)
       .withColumn("fp", graft.functions.TextFunctions.md5Fingerprint(col("text")))
       .withWatermark(tsCol, watermark)
       .dropDuplicatesWithinWatermark("fp")
@@ -47,25 +44,17 @@ object StreamingDedup {
   /** Build a documents landing zone with PLANTED duplicate arrivals
     * (every `dupMod`-th document re-arrives one second after its
     * original, under a fresh doc_id) and run [[dedupStream]] over it
-    * once to completion, staging each micro-batch exactly-once
-    * (`batch_id=<n>` dirs, `_SUCCESS`-gated) — the same
-    * content-fingerprint-keyed workDir recipe as the other `ensure*`
-    * layouts, so a regenerated corpus re-keys and rebuilds instead of
-    * serving stale state. The planting is what makes the entry prove
-    * something: the shipped corpus has no duplicate texts, so without
-    * it the keyed dedup state would never fire.
+    * once to completion, staging each micro-batch exactly-once — an
+    * [[graft.io.Artifact]], so a regenerated corpus re-keys and
+    * rebuilds instead of serving stale state. The planting is what
+    * makes the entry prove something: the shipped corpus has no
+    * duplicate texts, so without it the keyed dedup state would never
+    * fire.
     */
   def ensureStreamed(spark: SparkSession, sfDir: String,
-                     dupMod: Int = 7): String = {
-    import java.nio.file.{Files, Paths}
-    val base = graft.Conf.resolveWorkDir(spark, "")
-    val fp = graft.tsdb.Ingest.contentFingerprint(s"$sfDir/documents.parquet")
-    val path = s"$base/graft_dedup_streamed_" +
-      s"${Integer.toHexString(sfDir.hashCode)}_$fp"
-    val done = Paths.get(path, "_DONE")
-    if (!Files.exists(done)) {
-      val landing = s"$path.landing"
-      if (!Files.exists(Paths.get(landing, "_SUCCESS"))) {
+                     dupMod: Int = 7): String =
+    Artifact.ensure(spark, "dedup-streamed", s"$sfDir/documents.parquet", dupMod) { path =>
+      val landing = Artifact.landing(spark, path) {
         val docs = Source.table(spark, sfDir, "documents")
           .select(col("doc_id"), col("text"))
         val arrival = timestamp_micros(
@@ -77,20 +66,9 @@ object StreamingDedup {
             (timestamp_micros(lit(Epoch) + col("doc_id") * lit(1000000L)
               + lit(1000000L))).as("event_ts"))
         orig.unionByName(clones).coalesce(4)
-          .write.mode("overwrite").parquet(landing)
       }
-      val q = dedupStream(spark, landing).writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          batch.write.mode("overwrite").parquet(s"$path/batch_id=$batchId")
-        }
-        .option("checkpointLocation", s"$path.ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      StreamAwait.drain(q)
-      Files.createFile(done)
+      Artifact.drain(dedupStream(spark, landing), path, "append")
     }
-    path
-  }
 
   /** The streamed landing reduced to its dedup contract: one row per
     * content fingerprint with how many copies SURVIVED the stream —
@@ -102,7 +80,7 @@ object StreamingDedup {
     */
   def streamedFingerprints(spark: SparkSession, sfDir: String): DataFrame = {
     val path = ensureStreamed(spark, sfDir)
-    StreamingSeriesState.openStreamed(spark, path)
+    Artifact.openStaged(spark, path)
       .groupBy(col("fp"))
       .agg(count(lit(1)).as("n_kept"))
   }

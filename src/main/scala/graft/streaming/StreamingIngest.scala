@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.Trigger
-import graft.io.Source
+import graft.io.{Artifact, Source}
 import graft.tsdb.Db
 
 /** Structured-Streaming ingestion into the graft on-disk layout: the
@@ -31,9 +31,8 @@ object StreamingIngest {
   def ingestAvailable(spark: SparkSession, eventsDir: String, dest: String,
                       checkpoint: String,
                       propsTags: Seq[String] = Seq("k")): Unit = {
-    val schema = Source.read(spark, eventsDir).schema
     val canonical = Db
-      .canonicalEvents(spark.readStream.schema(schema).parquet(eventsDir), propsTags)
+      .canonicalEvents(Source.stream(spark, eventsDir), propsTags)
       // same write-boundary guard as the batch path (Ingest.write):
       // reference MetricName::try_from rejects invalid names at ingest,
       // and graft's own query APIs refuse to read them back
@@ -49,30 +48,16 @@ object StreamingIngest {
   }
 
   /** Ingest the events table through the streaming path once into a
-    * content-fingerprint-keyed graft layout (the shared `ensure*`
-    * recipe: symlinked landing zone, exactly-once file sink off the
-    * checkpoint, `_DONE`-guarded idempotent reopen). The returned path
+    * graft layout, an [[graft.io.Artifact]] (symlinked landing,
+    * exactly-once file sink off the checkpoint). The returned path
     * opens with [[graft.tsdb.Ingest.open]] like any batch-written
     * layout — which is the interchangeability claim the driver entry
     * proves against the raw-events oracle.
     */
   def ensureStreamedLayout(spark: SparkSession, sfDir: String): String = {
-    import java.nio.file.{Files, Paths}
-    val base = graft.Conf.resolveWorkDir(spark, "")
-    val fp = graft.tsdb.Ingest.contentFingerprint(s"$sfDir/events.parquet")
-    val root = s"$base/graft_ingest_streamed_" +
-      s"${Integer.toHexString(sfDir.hashCode)}_$fp"
-    val layout = s"$root/layout"
-    val done = Paths.get(root, "_DONE")
-    if (!Files.exists(done)) {
-      val landing = Paths.get(s"$root.landing")
-      Files.createDirectories(landing)
-      val link = landing.resolve("events.parquet")
-      if (!Files.exists(link)) Files.createSymbolicLink(link,
-        Paths.get(s"$sfDir/events.parquet").toAbsolutePath.normalize())
-      ingestAvailable(spark, landing.toString, layout, s"$root.ckpt")
-      Files.createFile(done)
-    }
-    layout
+    val events = s"$sfDir/events.parquet"
+    Artifact.ensure(spark, "ingest-streamed", events) { root =>
+      ingestAvailable(spark, Artifact.linked(spark, root, events), s"$root/layout", s"$root.ckpt")
+    } + "/layout"
   }
 }

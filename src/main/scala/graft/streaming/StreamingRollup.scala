@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.Trigger
-import graft.io.Source
+import org.apache.spark.sql.SparkSession
+import graft.io.{Artifact, Source}
 import graft.tsdb.{Db, Ingest}
 
 /** Streaming maintenance of a [[graft.tsdb.Rollup]] layout: each
@@ -28,19 +27,11 @@ object StreamingRollup {
     */
   def rollupAvailable(spark: SparkSession, eventsDir: String, dest: String,
                       checkpoint: String, widthNs: Long,
-                      propsTags: Seq[String] = Seq("k")): Unit = {
-    val schema = Source.read(spark, eventsDir).schema
-    val canonical = Db.canonicalEvents(
-      spark.readStream.schema(schema).parquet(eventsDir), propsTags)
-    val q = canonical.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        Ingest.appendRollupBatch(new Db(batch), dest, widthNs, batchId)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    StreamAwait.drain(q)
-  }
+                      propsTags: Seq[String] = Seq("k")): Unit =
+    Artifact.drainTo(Db.canonicalEvents(Source.stream(spark, eventsDir), propsTags),
+        checkpoint, "append") { (batch, batchId) =>
+      Ingest.appendRollupBatch(new Db(batch), dest, widthNs, batchId)
+    }
 
   /** Write-once cached STREAMED rollup for a source events dir — the
     * driver-checkable entry point: the layout is built by draining the
@@ -49,35 +40,15 @@ object StreamingRollup {
     * like any rollup. A query answered from it matching the raw-points
     * oracle proves the whole streaming landing — canonicalization,
     * per-batch partials, crash-safe staging, query-time merge — exact,
-    * not just spec-replayed. Content-fingerprinted like
-    * [[graft.tsdb.Ingest.ensureRollup]]; a crash between the stream
-    * and the `_DONE` marker replays idempotently off the checkpoint.
-    * The streaming file source watches a DIRECTORY; a single-file
-    * events table gets a symlinked landing dir.
+    * not just spec-replayed. An [[graft.io.Artifact]] keyed by the
+    * width; the streaming file source watches a DIRECTORY, so a
+    * single-file events table gets a symlinked landing dir.
     */
   def ensureStreamed(spark: SparkSession, sfDir: String,
                      widthNs: Long): String = {
-    val base = graft.Conf.resolveWorkDir(spark, "")
-    val fp = Ingest.contentFingerprint(s"$sfDir/events.parquet")
-    val path = s"$base/graft_rollup_streamed_w${widthNs}_" +
-      s"${Integer.toHexString(sfDir.hashCode)}_$fp"
-    val done = java.nio.file.Paths.get(path, "_DONE")
-    if (!java.nio.file.Files.exists(done)) {
-      val evPath = java.nio.file.Paths.get(s"$sfDir/events.parquet")
-        .toAbsolutePath.normalize()
-      val eventsDir =
-        if (java.nio.file.Files.isDirectory(evPath)) evPath.toString
-        else {
-          val landing = java.nio.file.Paths.get(s"$path.landing")
-          java.nio.file.Files.createDirectories(landing)
-          val link = landing.resolve("events.parquet")
-          if (!java.nio.file.Files.exists(link))
-            java.nio.file.Files.createSymbolicLink(link, evPath)
-          landing.toString
-        }
-      rollupAvailable(spark, eventsDir, path, s"$path.ckpt", widthNs)
-      java.nio.file.Files.createFile(done)
+    val events = s"$sfDir/events.parquet"
+    Artifact.ensure(spark, "rollup-streamed", events, widthNs) { path =>
+      rollupAvailable(spark, Artifact.linked(spark, path, events), path, s"$path.ckpt", widthNs)
     }
-    path
   }
 }

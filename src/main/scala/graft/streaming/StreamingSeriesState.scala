@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.io.Source
+import graft.io.{Artifact, Source}
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -154,19 +154,6 @@ object StreamingSeriesState {
         graft.tsdb.Db.tsNs(events.schema).as("ts"),
         col("value")), alpha)
 
-  /** Write-once cached STREAMED per-series enrichment layout — the
-    * third streamed driver entry point (after the rollup landing and
-    * the IVF append) and the first STATEFUL one: events drain through
-    * the checkpointed `flatMapGroupsWithState` path above and every
-    * enriched micro-batch lands in its own `batch_id=<id>` overwrite
-    * directory (the rollup landing's exactly-once staging — a replayed
-    * batch rewrites its dir; an incomplete dir is pruned at open). A
-    * query over this layout matching the raw-events SQL oracle proves
-    * the whole stateful streaming path — canonicalization, state-store
-    * fold order, per-batch landing — exact end-to-end, not just
-    * spec-replayed. Content-fingerprinted; a crash between stream and
-    * `_DONE` marker replays idempotently off the checkpoint.
-    */
   /** [[enrichZ]] over the raw events file stream for one metric —
     * the same series key construction as [[enrichEvents]].
     */
@@ -194,40 +181,20 @@ object StreamingSeriesState {
         col("value")))
 
   /** Drain the events table through the [[enrichFlaps]] counter fold
-    * once (content-fingerprint-keyed, batch-id-staged, `_DONE`-guarded
-    * — the [[ensureStreamedZ]] recipe). Every point lands with the
-    * cumulative reset/change counters its per-series history implied
-    * at arrival; the counters are integers, so the driver oracle's
-    * batch re-derivation (lag pair indicators + running sums) must
-    * match EXACTLY — any state-store mis-fold shows as an off-by-one.
+    * once, an [[graft.io.Artifact]] keyed by the metric. Every point
+    * lands with the cumulative reset/change counters its per-series
+    * history implied at arrival; the counters are integers, so the
+    * driver oracle's batch re-derivation (lag pair indicators + running
+    * sums) must match EXACTLY — any state-store mis-fold shows as an
+    * off-by-one.
     */
   def ensureStreamedFlaps(spark: org.apache.spark.sql.SparkSession,
                           sfDir: String, metric: String): String = {
-    import java.nio.file.{Files, Paths}
-    val base = graft.Conf.resolveWorkDir(spark, "")
-    val fp = graft.tsdb.Ingest.contentFingerprint(s"$sfDir/events.parquet")
-    val path = s"$base/graft_flaps_streamed_${metric}_" +
-      s"${Integer.toHexString(sfDir.hashCode)}_$fp"
-    val done = Paths.get(path, "_DONE")
-    if (!Files.exists(done)) {
-      val evPath = Paths.get(s"$sfDir/events.parquet").toAbsolutePath.normalize()
-      val landing = Paths.get(s"$path.landing")
-      Files.createDirectories(landing)
-      val link = landing.resolve("events.parquet")
-      if (!Files.exists(link)) Files.createSymbolicLink(link, evPath)
-      val schema = Source.read(spark, landing.toString).schema
-      val stream = spark.readStream.schema(schema).parquet(landing.toString)
-      val q = enrichFlapsEvents(stream, metric).writeStream
-        .foreachBatch { (batch: Dataset[FOut], batchId: Long) =>
-          batch.write.mode("overwrite").parquet(s"$path/batch_id=$batchId")
-        }
-        .option("checkpointLocation", s"$path.ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      StreamAwait.drain(q)
-      Files.createFile(done)
+    val events = s"$sfDir/events.parquet"
+    Artifact.ensure(spark, "flaps-streamed", events, metric) { path =>
+      Artifact.drain(enrichFlapsEvents(Source.stream(spark, Artifact.linked(spark, path, events)),
+        metric), path, "append")
     }
-    path
   }
 
   /** [[enrichFlaps]] replayed FRESH on every invocation — the
@@ -254,20 +221,12 @@ object StreamingSeriesState {
   def replayFlaps(spark: org.apache.spark.sql.SparkSession, sfDir: String,
                   metric: String = "view"): DataFrame = {
     import java.nio.file.{Files, Paths}
-    val base = graft.Conf.resolveWorkDir(spark, "")
-    val fp = graft.tsdb.Ingest.contentFingerprint(s"$sfDir/events.parquet")
-    val landing = s"$base/graft_flaps_replay_landing_" +
-      s"${Integer.toHexString(sfDir.hashCode)}_$fp"
     // the landing is usable only after BOTH the parquet commit AND the
-    // mtime normalization below — gate the cache on an own marker, not
-    // parquet's _SUCCESS (a crash between the two would otherwise
-    // serve scrambled mtimes forever)
-    if (!Files.exists(Paths.get(landing, "_MTIMES"))) {
-      if (!Files.exists(Paths.get(landing, "_SUCCESS"))) {
-        Source.table(spark, sfDir, "events")
-          .repartitionByRange(4, col("ts"), col("value"))
-          .write.mode("overwrite").parquet(landing)
-      }
+    // mtime normalization below, so both run inside the one build
+    val landing = Artifact.ensure(spark, "flaps-replay-landing", s"$sfDir/events.parquet") { landing =>
+      Source.table(spark, sfDir, "events")
+        .repartitionByRange(4, col("ts"), col("value"))
+        .write.mode("overwrite").parquet(landing)
       // STRICTLY INCREASING mtimes in partition order: part-0000k is
       // range partition k by construction, but task completion order
       // scrambles the written mtimes and FileStreamSource's tie-break
@@ -283,11 +242,8 @@ object StreamingSeriesState {
             .fromMillis(1704067200000L + mm.group(1).toLong * 1000L))
         }
       } finally ls.close()
-      Files.createFile(Paths.get(landing, "_MTIMES"))
     }
-    val schema = Source.read(spark, landing).schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(landing)
+    val stream = Source.stream(spark, landing, 1)
     val name = s"graft_flaps_replay_${replaySeq.incrementAndGet()}"
     val ckpt = Files.createTempDirectory("graft_flaps_replay_ckpt")
     val q = enrichFlapsEvents(stream, metric).writeStream
@@ -312,87 +268,39 @@ object StreamingSeriesState {
     new java.util.concurrent.atomic.AtomicReference[String](null)
 
   /** Drain the events table through the [[enrichZ]] expanding-stats
-    * fold once (same content-fingerprint-keyed, batch-id-staged,
-    * `_DONE`-guarded recipe as [[ensureStreamed]]). Every point lands
-    * with the z-score its full per-series history implied at arrival
-    * — exact-decimal (n, Σv, Σv²) state, so the landed values are
-    * bit-equal to a batch expanding-window formulation, which is what
-    * the driver oracle re-derives.
+    * fold once, an [[graft.io.Artifact]] keyed by the metric. Every
+    * point lands with the z-score its full per-series history implied
+    * at arrival — exact-decimal (n, Σv, Σv²) state, so the landed
+    * values are bit-equal to a batch expanding-window formulation,
+    * which is what the driver oracle re-derives.
     */
   def ensureStreamedZ(spark: org.apache.spark.sql.SparkSession, sfDir: String,
                       metric: String): String = {
-    import java.nio.file.{Files, Paths}
-    val base = graft.Conf.resolveWorkDir(spark, "")
-    val fp = graft.tsdb.Ingest.contentFingerprint(s"$sfDir/events.parquet")
-    val path = s"$base/graft_zscore_streamed_${metric}_" +
-      s"${Integer.toHexString(sfDir.hashCode)}_$fp"
-    val done = Paths.get(path, "_DONE")
-    if (!Files.exists(done)) {
-      val evPath = Paths.get(s"$sfDir/events.parquet").toAbsolutePath.normalize()
-      val landing = Paths.get(s"$path.landing")
-      Files.createDirectories(landing)
-      val link = landing.resolve("events.parquet")
-      if (!Files.exists(link)) Files.createSymbolicLink(link, evPath)
-      val schema = Source.read(spark, landing.toString).schema
-      val stream = spark.readStream.schema(schema).parquet(landing.toString)
-      val q = enrichZEvents(stream, metric).writeStream
-        .foreachBatch { (batch: Dataset[ZOut], batchId: Long) =>
-          batch.write.mode("overwrite").parquet(s"$path/batch_id=$batchId")
-        }
-        .option("checkpointLocation", s"$path.ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      StreamAwait.drain(q)
-      Files.createFile(done)
+    val events = s"$sfDir/events.parquet"
+    Artifact.ensure(spark, "zscore-streamed", events, metric) { path =>
+      Artifact.drain(enrichZEvents(Source.stream(spark, Artifact.linked(spark, path, events)),
+        metric), path, "append")
     }
-    path
   }
 
+  /** Write-once cached STREAMED per-series enrichment layout — the
+    * third streamed driver entry point (after the rollup landing and
+    * the IVF append) and the first STATEFUL one: events drain through
+    * the checkpointed `flatMapGroupsWithState` path above and every
+    * enriched micro-batch lands in its own `batch_id=<id>` overwrite
+    * directory (the rollup landing's exactly-once staging — a replayed
+    * batch rewrites its dir; an incomplete dir is pruned at open). A
+    * query over this layout matching the raw-events SQL oracle proves
+    * the whole stateful streaming path — canonicalization, state-store
+    * fold order, per-batch landing — exact end-to-end, not just
+    * spec-replayed. An [[graft.io.Artifact]] keyed by (metric, alpha).
+    */
   def ensureStreamed(spark: org.apache.spark.sql.SparkSession, sfDir: String,
                      metric: String, alpha: Double = 0.3): String = {
-    import java.nio.file.{Files, Paths}
-    val base = graft.Conf.resolveWorkDir(spark, "")
-    val fp = graft.tsdb.Ingest.contentFingerprint(s"$sfDir/events.parquet")
-    val path = s"$base/graft_series_streamed_${metric}_" +
-      s"${Integer.toHexString(sfDir.hashCode)}_$fp"
-    val done = Paths.get(path, "_DONE")
-    if (!Files.exists(done)) {
-      val evPath = Paths.get(s"$sfDir/events.parquet").toAbsolutePath.normalize()
-      val eventsDir =
-        if (Files.isDirectory(evPath)) evPath.toString
-        else {
-          val landing = Paths.get(s"$path.landing")
-          Files.createDirectories(landing)
-          val link = landing.resolve("events.parquet")
-          if (!Files.exists(link)) Files.createSymbolicLink(link, evPath)
-          landing.toString
-        }
-      val schema = Source.read(spark, eventsDir).schema
-      val stream = spark.readStream.schema(schema).parquet(eventsDir)
-      val q = enrichEvents(stream, metric, alpha).writeStream
-        .foreachBatch { (batch: Dataset[POut], batchId: Long) =>
-          batch.write.mode("overwrite").parquet(s"$path/batch_id=$batchId")
-        }
-        .option("checkpointLocation", s"$path.ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      StreamAwait.drain(q)
-      Files.createFile(done)
+    val events = s"$sfDir/events.parquet"
+    Artifact.ensure(spark, "series-streamed", events, metric, alpha) { path =>
+      Artifact.drain(enrichEvents(Source.stream(spark, Artifact.linked(spark, path, events)),
+        metric, alpha), path, "append")
     }
-    path
-  }
-
-  /** Open a layout written by [[ensureStreamed]], pruning batch dirs
-    * without a `_SUCCESS` marker (the read half of exactly-once).
-    */
-  def openStreamed(spark: org.apache.spark.sql.SparkSession,
-                   path: String): DataFrame = {
-    val staged = Option(new java.io.File(path).listFiles()).toSeq.flatten
-      .filter(f => f.isDirectory && f.getName.startsWith("batch_id="))
-    val complete = staged.filter(f => new java.io.File(f, "_SUCCESS").exists())
-    require(complete.nonEmpty, s"no complete batch under streamed layout $path")
-    spark.read.option("basePath", path)
-      .parquet(complete.map(_.getAbsolutePath).sorted: _*)
-      .drop("batch_id")
   }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.io.Source
+import graft.io.{Artifact, Source}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -58,40 +58,16 @@ object StreamingTransitions {
   }
 
   /** Drain the events table through [[transitionPairs]] once as FOUR
-    * time-ordered micro-batches (the [[StatefulSessionize]] landing
-    * recipe: consecutive time-range chunks, ascending mtimes →
-    * oldest-first file replay), staging each batch's Append output
-    * exactly-once (`batch_id=<n>`, `_SUCCESS`-gated) under the
-    * content-fingerprint-keyed workDir.
+    * time-ordered micro-batches ([[TimeChunkedLanding]]: consecutive
+    * time-range chunks, ascending mtimes → oldest-first file replay),
+    * staging each batch's Append output exactly-once — an
+    * [[graft.io.Artifact]].
     */
-  def ensureStreamed(spark: SparkSession, sfDir: String): String = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    import java.nio.file.attribute.FileTime
-    val base = graft.Conf.resolveWorkDir(spark, "")
-    val fp = graft.tsdb.Ingest.contentFingerprint(s"$sfDir/events.parquet")
-    val path = s"$base/graft_trans_streamed_" +
-      s"${Integer.toHexString(sfDir.hashCode)}_$fp"
-    val done = Paths.get(path, "_DONE")
-    if (!Files.exists(done)) {
-      val landing =
-        Paths.get(TimeChunkedLanding.ensure(spark, sfDir, path))
-      val stream = spark.readStream
-        .schema(Source.read(spark, landing.toString).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing.toString)
-      val q = transitionPairs(stream).writeStream
-        .outputMode("append")
-        .foreachBatch { (batch: Dataset[Pair], batchId: Long) =>
-          batch.write.mode("overwrite").parquet(s"$path/batch_id=$batchId")
-        }
-        .option("checkpointLocation", s"$path.ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      StreamAwait.drain(q)
-      Files.createFile(done)
+  def ensureStreamed(spark: SparkSession, sfDir: String): String =
+    Artifact.ensure(spark, "trans-streamed", s"$sfDir/events.parquet") { path =>
+      val landing = TimeChunkedLanding.ensure(spark, sfDir, path)
+      Artifact.drain(transitionPairs(Source.stream(spark, landing, 1)), path, "append")
     }
-    path
-  }
 
   /** The transition matrix folded from the streamed pair changelog —
     * identical columns to the batch `q_event_transitions`, so the same
@@ -100,7 +76,7 @@ object StreamingTransitions {
     */
   def streamedTransitions(spark: SparkSession, sfDir: String): DataFrame = {
     val path = ensureStreamed(spark, sfDir)
-    val counts = StreamingSeriesState.openStreamed(spark, path)
+    val counts = Artifact.openStaged(spark, path)
       .groupBy(col("src"), col("dst")).agg(count(lit(1)).as("n"))
     val ws = Window.partitionBy(col("src"))
     counts.select(col("src"), col("dst"), col("n"),

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.io.Source
+import graft.io.{Artifact, Source}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -52,15 +52,14 @@ object StreamingVocab {
     }
   }
 
-  /** Drain the maintenance stream, then persist a `_STATE.json`
-    * telemetry sidecar under the layout: provider, micro-batch count,
-    * final state rows and state memory of the stateful operator — the
-    * streamed bench legs' in-artifact evidence that the state store
-    * carries vocabulary-sized state (and WHICH provider carried it).
+  /** Persist a `_STATE.json` telemetry sidecar of the drained query `q`
+    * under the layout: provider, micro-batch count, final state rows and
+    * state memory of the stateful operator — the streamed bench legs'
+    * in-artifact evidence that the state store carries vocabulary-sized
+    * state (and WHICH provider carried it).
     */
-  private def drainWithStateSidecar(q: org.apache.spark.sql.streaming.StreamingQuery,
-                                    path: String, t0: Long): Unit = {
-    StreamAwait.drain(q)
+  private def stateSidecar(q: org.apache.spark.sql.streaming.StreamingQuery,
+                           path: String, t0: Long): Unit = {
     val progs = q.recentProgress.filter(_.stateOperators.nonEmpty)
     val (rows, mem) = progs.lastOption
       .map(p => (p.stateOperators.map(_.numRowsTotal).sum,
@@ -106,54 +105,30 @@ object StreamingVocab {
     * one file per micro-batch — the ingest posture of a crawler
     * dropping shards into object storage.
     */
-  def docsStream(spark: SparkSession, landingDir: String): DataFrame = {
-    val schema = Source.read(spark, landingDir).schema
-    spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(landingDir)
-  }
+  def docsStream(spark: SparkSession, landingDir: String): DataFrame =
+    Source.stream(spark, landingDir, 1)
 
   /** Drain the corpus through the stateful vocabulary stream once —
     * four landing files, one micro-batch each, so the per-token state
     * genuinely accumulates ACROSS batches — staging each batch's
-    * Update-mode changelog exactly-once (`batch_id=<n>` dirs,
-    * `_SUCCESS`-gated). Content-fingerprint-keyed like every `ensure*`
-    * layout: a regenerated corpus re-keys and rebuilds.
+    * Update-mode changelog exactly-once, an [[graft.io.Artifact]].
     */
-  def ensureStreamed(spark: SparkSession, sfDir: String): String = {
-    import java.nio.file.{Files, Paths}
-    val base = graft.Conf.resolveWorkDir(spark, "")
-    val fp = graft.tsdb.Ingest.contentFingerprint(s"$sfDir/documents.parquet")
-    // v2: the RocksDB-provider switch re-keys the layout — cached
-    // default-provider layouts from older rounds must not satisfy the
-    // gate a RocksDB run is supposed to exercise
-    val path = s"$base/graft_vocab_streamed_v2_" +
-      s"${Integer.toHexString(sfDir.hashCode)}_$fp"
-    val done = Paths.get(path, "_DONE")
-    if (!Files.exists(done)) {
-      val landing = s"$path.landing"
-      if (!Files.exists(Paths.get(landing, "_SUCCESS"))) {
-        Source.table(spark, sfDir, "documents")
-          .select(col("doc_id"), col("text"))
-          .repartition(4)
-          .write.mode("overwrite").parquet(landing)
-      }
+  def ensureStreamed(spark: SparkSession, sfDir: String): String =
+    Artifact.ensure(spark, "vocab-streamed", s"$sfDir/documents.parquet") { path =>
+      val landing = docsLanding(spark, sfDir, path)
       val t0 = System.nanoTime()
       withRocksDbState(spark) {
-        val q = tokenCounts(docsStream(spark, landing)).writeStream
-          .outputMode(OutputMode.Update)
-          .foreachBatch { (batch: Dataset[TokCount], batchId: Long) =>
-            batch.write.mode("overwrite").parquet(s"$path/batch_id=$batchId")
-          }
-          .option("checkpointLocation", s"$path.ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        drainWithStateSidecar(q, path, t0)
+        stateSidecar(Artifact.drain(tokenCounts(docsStream(spark, landing)), path, "update"),
+          path, t0)
       }
-      Files.createFile(done)
     }
-    path
-  }
+
+  /** The corpus's (doc_id, text) copied once into four landing files
+    * beside the artifact at `path`.
+    */
+  private def docsLanding(spark: SparkSession, sfDir: String, path: String): String =
+    Artifact.landing(spark, path)(Source.table(spark, sfDir, "documents")
+      .select(col("doc_id"), col("text")).repartition(4))
 
   case class Gram(gram: String)
   case class GramCount(gram: String, cnt: Long)
@@ -190,40 +165,17 @@ object StreamingVocab {
 
   /** Drain the corpus through the stateful GRAM stream once — the
     * [[ensureStreamed]] contract at the gram grain (4 landing files,
-    * exactly-once staged changelog, content-fingerprint-keyed).
+    * exactly-once staged changelog, an [[graft.io.Artifact]]).
     */
-  def ensureGramStreamed(spark: SparkSession, sfDir: String): String = {
-    import java.nio.file.{Files, Paths}
-    val base = graft.Conf.resolveWorkDir(spark, "")
-    val fp = graft.tsdb.Ingest.contentFingerprint(s"$sfDir/documents.parquet")
-    // v2: re-keyed for the RocksDB provider switch (see ensureStreamed)
-    val path = s"$base/graft_gram_streamed_v2_" +
-      s"${Integer.toHexString(sfDir.hashCode)}_$fp"
-    val done = Paths.get(path, "_DONE")
-    if (!Files.exists(done)) {
-      val landing = s"$path.landing"
-      if (!Files.exists(Paths.get(landing, "_SUCCESS"))) {
-        Source.table(spark, sfDir, "documents")
-          .select(col("doc_id"), col("text"))
-          .repartition(4)
-          .write.mode("overwrite").parquet(landing)
-      }
+  def ensureGramStreamed(spark: SparkSession, sfDir: String): String =
+    Artifact.ensure(spark, "gram-streamed", s"$sfDir/documents.parquet") { path =>
+      val landing = docsLanding(spark, sfDir, path)
       val t0 = System.nanoTime()
       withRocksDbState(spark) {
-        val q = gramCounts(docsStream(spark, landing)).writeStream
-          .outputMode(OutputMode.Update)
-          .foreachBatch { (batch: Dataset[GramCount], batchId: Long) =>
-            batch.write.mode("overwrite").parquet(s"$path/batch_id=$batchId")
-          }
-          .option("checkpointLocation", s"$path.ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        drainWithStateSidecar(q, path, t0)
+        stateSidecar(Artifact.drain(gramCounts(docsStream(spark, landing)), path, "update"),
+          path, t0)
       }
-      Files.createFile(done)
     }
-    path
-  }
 
   /** [[graft.operators.TextAnalysis.dedupSpansIncremental]] answered
     * from the STREAM-maintained gram state: the corpus drains once
@@ -239,7 +191,7 @@ object StreamingVocab {
   def streamedDeltaSpans(spark: SparkSession, sfDir: String,
                          deltaMod: Int = 10): DataFrame = {
     val path = ensureGramStreamed(spark, sfDir)
-    val dupGrams = StreamingSeriesState.openStreamed(spark, path)
+    val dupGrams = Artifact.openStaged(spark, path)
       .groupBy(col("gram"))
       .agg(max(col("cnt")).as("cnt"))
       .where(col("cnt") > 1)
@@ -260,7 +212,7 @@ object StreamingVocab {
   def streamedVocabTopK(spark: SparkSession, sfDir: String,
                         k: Int = 100): DataFrame = {
     val path = ensureStreamed(spark, sfDir)
-    StreamingSeriesState.openStreamed(spark, path)
+    Artifact.openStaged(spark, path)
       .groupBy(col("token"))
       .agg(max(col("cnt")).as("cnt"))
       .orderBy(col("cnt").desc, col("token"))

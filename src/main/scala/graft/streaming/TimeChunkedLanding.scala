@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.io.Source
+import graft.io.{Artifact, Source}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -16,16 +16,16 @@ import org.apache.spark.sql.functions._
   */
 object TimeChunkedLanding {
 
-  /** Stage `sfDir`'s events under `basePath.landing` (idempotent —
-    * `_READY`-gated; a crash mid-stage restages from scratch). The
-    * span bounds are a two-VALUE driver read, never the data. Returns
-    * the landing directory path.
+  /** Stage `sfDir`'s events under `basePath.landing` once (an
+    * [[graft.io.Artifact.once]]; a crash mid-stage restages from
+    * scratch). The span bounds are a two-VALUE driver read, never the
+    * data. Returns the landing directory path.
     */
   def ensure(spark: SparkSession, sfDir: String, basePath: String): String = {
     import java.nio.file.{Files, Paths, StandardCopyOption}
     import java.nio.file.attribute.FileTime
     val landing = Paths.get(s"$basePath.landing")
-    if (!Files.exists(landing.resolve("_READY"))) {
+    Artifact.once(spark, landing.toString) {
       val raw = Source.table(spark, sfDir, "events")
       val tsNs = graft.tsdb.Db.tsNs(raw.schema)
       val ev = raw.withColumn("_tsns", tsNs)
@@ -49,8 +49,6 @@ object TimeChunkedLanding {
           FileTime.fromMillis(1704067200000L + i * 60000L))
         org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
       }
-      Files.createFile(landing.resolve("_READY"))
     }
-    landing.toString
   }
 }

@@ -1,6 +1,6 @@
 package graft.tsdb
 
-import graft.io.Source
+import graft.io.{Artifact, Source}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -219,7 +219,7 @@ object Ingest {
     save(mergePartials(Source.read(spark, path), col("bucket_start")), tmp, "overwrite")
     val dir = new Path(path)
     val old = new Path(path + ".old")
-    val fs = fileSystem(spark, dir)
+    val fs = Artifact.fileSystem(spark, dir)
     fs.delete(old, true)
     if (!fs.rename(dir, old))
       throw new java.io.IOException(s"compaction aside-move failed: $path -> $old")
@@ -230,18 +230,6 @@ object Ingest {
     }
     Handles.drop(spark, path)
     fs.delete(old, true)
-  }
-
-  /** The Hadoop `FileSystem` of `path`, so layout upkeep works on any
-    * work dir Spark can write (local, HDFS, an object store).
-    */
-  private def fileSystem(spark: SparkSession, path: Path) =
-    path.getFileSystem(spark.sessionState.newHadoopConf())
-
-  /** Whether the write to `path` completed, i.e. left its `_SUCCESS` marker. */
-  private def written(spark: SparkSession, path: String): Boolean = {
-    val marker = new Path(path, "_SUCCESS")
-    fileSystem(spark, marker).exists(marker)
   }
 
   /** Reopen a rollup layout written by [[writeRollup]]/[[appendRollup]]
@@ -259,26 +247,8 @@ object Ingest {
     * afresh on every open.
     */
   def openRollup(spark: SparkSession, path: String, widthNs: Long): Rollup =
-    new Rollup(Handles.open(spark, path, "rollup")(rollupFrame(spark, path)), widthNs)
-
-  /** The partials of the rollup at `path`, read as [[openRollup]] describes. */
-  private def rollupFrame(spark: SparkSession, path: String): DataFrame = {
-    val root = new Path(path)
-    val fs = fileSystem(spark, root)
-    val staged =
-      (try fs.listStatus(root).toSeq catch { case _: java.io.FileNotFoundException => Nil })
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch_id="))
-        .map(_.getPath)
-    val frame =
-      if (staged.isEmpty) Source.read(spark, path)
-      else {
-        val complete = staged.filter(b => fs.exists(new Path(b, "_SUCCESS")))
-        require(complete.nonEmpty, s"no complete batch under staged rollup $path")
-        Source.read(spark, complete.map(_.toString).sorted, Map("basePath" -> path))
-          .drop("batch_id")
-      }
-    frame.withColumn("metric", col("metric").cast("string"))
-  }
+    new Rollup(Handles.open(spark, path, "rollup")(
+      Artifact.openStaged(spark, path).withColumn("metric", col("metric").cast("string"))), widthNs)
 
   /** Write-once cached rollup for a source events dir (same contract as
     * [[ensureLayout]]).
@@ -286,9 +256,7 @@ object Ingest {
   def ensureRollup(spark: SparkSession, sfDir: String, widthNs: Long,
                    base: String = ""): String = {
     val path = rollupPath(sfDir, widthNs, graft.Conf.resolveWorkDir(spark, base))
-    if (!written(spark, path))
-      writeRollup(Db.fromEvents(spark, sfDir), path, widthNs)
-    path
+    Artifact.once(spark, path)(writeRollup(Db.fromEvents(spark, sfDir), path, widthNs))
   }
 
   /** Downsample an existing rollup layout one level COARSER — the
@@ -341,39 +309,32 @@ object Ingest {
                           srcWidth: Long, widthNs: Long,
                           base: String = ""): String = {
     val srcPath = ensureRollup(spark, sfDir, srcWidth, base)
-    val path = rollupPath(sfDir, widthNs,
-      graft.Conf.resolveWorkDir(spark, base)) + s"_from${srcWidth}"
-    if (!written(spark, path))
-      writeRollupFrom(spark, srcPath, srcWidth, path, widthNs)
-    path
+    val path = Artifact.pathIn(graft.Conf.resolveWorkDir(spark, base), "rollup-cascade",
+      s"$sfDir/events.parquet", LayoutVersion, srcWidth, widthNs)
+    Artifact.once(spark, path)(writeRollupFrom(spark, srcPath, srcWidth, path, widthNs))
   }
 
   /** [[ensureRollupCascade]] over an EXISTING rollup path — e.g. the
     * batch-id-staged layout a streaming landing maintains
     * ([[graft.streaming.StreamingRollup.ensureStreamed]]): the ladder
     * does not care how its source level was landed, because
-    * [[openRollup]] already normalizes staged layouts. The cache key
-    * derives from the source path (itself content-fingerprinted), so
-    * a re-landed source re-keys the cascade.
+    * [[openRollup]] already normalizes staged layouts. The cascade
+    * lives beside the source path (itself an [[graft.io.Artifact]] key),
+    * so a re-landed source re-keys the cascade.
     */
   def ensureRollupCascadeFrom(spark: SparkSession, srcPath: String,
                               srcWidth: Long, widthNs: Long): String = {
     val path = s"${srcPath}_cascade_w$widthNs"
-    if (!written(spark, path))
-      writeRollupFrom(spark, srcPath, srcWidth, path, widthNs)
-    path
+    Artifact.once(spark, path)(writeRollupFrom(spark, srcPath, srcWidth, path, widthNs))
   }
 
-  /** The content-fingerprinted cache path [[ensureRollup]] uses for a
+  /** The [[graft.io.Artifact]] path [[ensureRollup]] uses for a
     * source dir (no side effects — lets a benchmark evict the cache to
     * time the build separately from the query).
     */
   private[graft] def rollupPath(sfDir: String, widthNs: Long,
-                                base: String): String = {
-    val fp = contentFingerprint(s"$sfDir/events.parquet")
-    s"$base/graft_rollup_v${LayoutVersion}_w${widthNs}_" +
-      s"${Integer.toHexString(sfDir.hashCode)}_$fp"
-  }
+                                base: String): String =
+    Artifact.pathIn(base, "rollup", s"$sfDir/events.parquet", LayoutVersion, widthNs)
 
   /** Bump when the canonical frame layout changes (e.g. tag semantics),
     * so cached layouts from older code are never silently reused.
@@ -381,38 +342,16 @@ object Ingest {
   // v4: rollup partials carry the Σv² column (stddev decomposability)
   private val LayoutVersion = 4
 
-  /** Content fingerprint of a source dir: md5 over every file's relative
-    * path, size, and mtime. Keying cached layouts on it (not just the
-    * dir name) means a regenerated source is never silently served from
-    * a stale layout.
-    */
-  private[graft] def contentFingerprint(dir: String): String = {
-    import scala.jdk.CollectionConverters._
-    val root = java.nio.file.Paths.get(dir)
-    val digest = java.security.MessageDigest.getInstance("MD5")
-    java.nio.file.Files.walk(root).iterator().asScala
-      .filter(java.nio.file.Files.isRegularFile(_))
-      .map(p => s"${root.relativize(p)}:${java.nio.file.Files.size(p)}:" +
-        s"${java.nio.file.Files.getLastModifiedTime(p).toMillis}")
-      .toSeq.sorted
-      .foreach(s => digest.update(s.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
-    digest.digest().take(6).map("%02x".format(_)).mkString
-  }
-
-  /** Write-once cached graft layout for a source events dir: the first
-    * call materializes `Db.fromEvents` through [[write]]; later calls
-    * reuse it. Lets queries exercise the real on-disk layout (metric
+  /** Write-once cached graft layout for a source events dir, an
+    * [[graft.io.Artifact]]: the first call materializes `Db.fromEvents`
+    * through [[write]]; later calls reuse it. Lets queries exercise the real on-disk layout (metric
     * partition dirs + materialized tag columns ⇒ partition pruning and
     * parquet tag pushdown) without rewriting per run.
     */
   def ensureLayout(spark: SparkSession, sfDir: String,
                    base: String = ""): String = {
-    val fp = contentFingerprint(s"$sfDir/events.parquet")
-    val root = graft.Conf.resolveWorkDir(spark, base)
-    val path = s"$root/graft_layout_v${LayoutVersion}_" +
-      s"${Integer.toHexString(sfDir.hashCode)}_$fp"
-    if (!written(spark, path))
-      write(Db.fromEvents(spark, sfDir), path)
-    path
+    val path = Artifact.pathIn(graft.Conf.resolveWorkDir(spark, base), "layout",
+      s"$sfDir/events.parquet", LayoutVersion)
+    Artifact.once(spark, path)(write(Db.fromEvents(spark, sfDir), path))
   }
 }

@@ -1,9 +1,9 @@
 package graft.expressions
 
-import graft.SparkSpec
+import graft.{SparkSpec, TempDirSpec}
 import org.apache.spark.sql.functions._
 
-class DotProductSpec extends SparkSpec {
+class DotProductSpec extends SparkSpec with TempDirSpec {
 
   test("graft_dot matches the HOF left-fold bit-for-bit") {
     GraftFunctions.register(spark)
@@ -37,7 +37,7 @@ class DotProductSpec extends SparkSpec {
     GraftFunctions.register(spark)
     import spark.implicits._
     // a LocalTableScan never enters WSCG; go through a real datasource
-    val tmp = java.nio.file.Files.createTempDirectory("graft_dot").toString
+    val tmp = java.nio.file.Files.createDirectories(java.nio.file.Paths.get(tempDir, "graft_dot")).toString
     Seq((Array(1.0, 2.0), Array(3.0, 4.0))).toDF("a", "b")
       .write.mode("overwrite").parquet(tmp)
     val df = spark.read.parquet(tmp).select(expr("graft_dot(a, b)").as("d"))

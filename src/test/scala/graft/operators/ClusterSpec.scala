@@ -1,9 +1,9 @@
 package graft.operators
 
-import graft.SparkSpec
+import graft.{SparkSpec, TempDirSpec}
 import org.apache.spark.sql.functions._
 
-class ClusterSpec extends SparkSpec {
+class ClusterSpec extends SparkSpec with TempDirSpec {
 
   private def pairsDf(ps: Seq[(Long, Long)]) = {
     import spark.implicits._
@@ -82,7 +82,7 @@ class ClusterSpec extends SparkSpec {
 
   test("clusterPairs switches to reliable checkpoints when the context has a checkpoint dir") {
     val sc = spark.sparkContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
+    val dir = java.nio.file.Files.createDirectories(java.nio.file.Paths.get(tempDir, "graft_ckpt")).toString
     sc.setCheckpointDir(dir)
     try {
       val out = Dedup.clusterPairs(pairsDf(Seq((1L, 2L), (2L, 3L), (9L, 10L))))

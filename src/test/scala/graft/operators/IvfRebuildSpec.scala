@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.SparkSpec
+import graft.{SparkSpec, TempDirSpec}
 import org.apache.spark.sql.functions._
 
 /** The stale-cache hazard the round-7 environment exposed: testdata was
@@ -9,10 +9,10 @@ import org.apache.spark.sql.functions._
   * `ensure*` cache paths embed a content fingerprint (file sizes +
   * mtimes), so an in-place rewrite must land on a NEW path and rebuild.
   */
-class IvfRebuildSpec extends SparkSpec {
+class IvfRebuildSpec extends SparkSpec with TempDirSpec {
 
   test("in-place corpus regeneration rebuilds the IVF index, not serves the stale one") {
-    val tmp = java.nio.file.Files.createTempDirectory("ivf_rebuild")
+    val tmp = java.nio.file.Files.createDirectories(java.nio.file.Paths.get(tempDir, "ivf_rebuild"))
     val dst = tmp.resolve("embeddings.parquet")
 
     // v1 corpus: 64 sf0.001 vectors

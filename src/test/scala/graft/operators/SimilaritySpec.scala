@@ -146,11 +146,6 @@ class SimilaritySpec extends SparkSpec with TempDirSpec {
   }
 
   test("ivf append: incrementally indexed corpus carries the same assignment as a full build") {
-    import scala.jdk.CollectionConverters._
-    // clean the incremental index dir: a rerun would otherwise append twice
-    java.nio.file.Files.list(java.nio.file.Paths.get(graft.Conf.workDir(spark))).iterator().asScala
-      .filter(_.getFileName.toString.contains("spec_inc"))
-      .foreach(p => org.apache.commons.io.FileUtils.deleteQuietly(p.toFile))
     val e = Similarity.vecs(spark, sfDir)
     val maxId = e.agg(max("vec_id")).collect()(0).getLong(0)
     val cut = maxId / 2
@@ -204,11 +199,6 @@ class SimilaritySpec extends SparkSpec with TempDirSpec {
   }
 
   test("ivf-pq: exact subset-of-exhaustive hits; ADC scan never reads the vector column") {
-    import scala.jdk.CollectionConverters._
-    // clean prior ivfpq layouts so a rerun rebuilds deterministically
-    java.nio.file.Files.list(java.nio.file.Paths.get(graft.Conf.workDir(spark))).iterator().asScala
-      .filter(_.getFileName.toString.startsWith("ivfpq_"))
-      .foreach(p => org.apache.commons.io.FileUtils.deleteQuietly(p.toFile))
     val ivfpq = Similarity.ivfPqTopK(spark, sfDir, numQueries = 5, k = 10)
     val rows = ivfpq.select("q_id", "vec_id", "cos").collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
@@ -239,10 +229,6 @@ class SimilaritySpec extends SparkSpec with TempDirSpec {
   }
 
   test("ivf-pq append: incrementally coded corpus equals a full build (codes included)") {
-    import scala.jdk.CollectionConverters._
-    java.nio.file.Files.list(java.nio.file.Paths.get(graft.Conf.workDir(spark))).iterator().asScala
-      .filter(_.getFileName.toString.contains("pq_spec"))
-      .foreach(p => org.apache.commons.io.FileUtils.deleteQuietly(p.toFile))
     val e = Similarity.vecs(spark, sfDir)
     val maxId = e.agg(max("vec_id")).collect()(0).getLong(0)
     val cut = maxId / 2
@@ -363,10 +349,13 @@ class SimilaritySpec extends SparkSpec with TempDirSpec {
 
   test("ivf index is materialized once and reused: inverted-list partition dirs on disk") {
     val a = Similarity.ivfTopK(spark, sfDir, numQueries = 5, k = 5).collect()
-    val layouts = new java.io.File(graft.Conf.workDir(spark)).listFiles()
-      .filter(f => f.getName.startsWith("ivf_v") && f.getName.contains("_first_n16_i0"))
-    assert(layouts.nonEmpty, "no materialized ivf layout written")
-    val assignDir = new java.io.File(layouts.head, "assign")
+    // the index ivfTopK built: the same key, so ensure returns its path
+    // without building anything
+    val e = Similarity.vecs(spark, sfDir)
+    val (index, jobs) = jobsDuring(IvfIndex.ensure(spark, sfDir, "first", 16, iters = 0,
+      train = () => Similarity.firstVectorCentroids(e, 16), corpus = e))
+    assert(jobs == 0, s"ensure of ivfTopK's key built an index ($jobs jobs)")
+    val assignDir = new java.io.File(index.path, "assign")
     val listDirs = assignDir.listFiles().filter(_.getName.startsWith("list_id="))
     assert(listDirs.nonEmpty, "assignment not partitioned by list_id")
     val success = new java.io.File(assignDir, "_SUCCESS")

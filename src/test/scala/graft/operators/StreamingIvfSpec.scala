@@ -16,12 +16,7 @@ import org.apache.spark.sql.streaming.Trigger
 class StreamingIvfSpec extends SparkSpec with TempDirSpec with TimedSpec {
 
   test("foreachBatch-appended IVF index equals the full batch build") {
-    import scala.jdk.CollectionConverters._
     val base = s"$tempDir/stream_ivf"
-    // clean prior spec indexes (rerun would otherwise append twice)
-    java.nio.file.Files.list(java.nio.file.Paths.get(graft.Conf.workDir(spark))).iterator().asScala
-      .filter(_.getFileName.toString.contains("spec_stream"))
-      .foreach(p => org.apache.commons.io.FileUtils.deleteQuietly(p.toFile))
 
     val e = Similarity.vecs(spark, sfDir)
     val maxId = e.agg(max("vec_id")).collect()(0).getLong(0)
@@ -79,11 +74,7 @@ class StreamingIvfSpec extends SparkSpec with TempDirSpec with TimedSpec {
   }
 
   test("foreachBatch-appended IVF-PQ index equals the full build, replay-idempotent") {
-    import scala.jdk.CollectionConverters._
     val base = s"$tempDir/stream_ivfpq"
-    java.nio.file.Files.list(java.nio.file.Paths.get(graft.Conf.workDir(spark))).iterator().asScala
-      .filter(_.getFileName.toString.contains("pqstream_spec"))
-      .foreach(p => org.apache.commons.io.FileUtils.deleteQuietly(p.toFile))
 
     val e = Similarity.vecs(spark, sfDir)
     val maxId = e.agg(max("vec_id")).collect()(0).getLong(0)

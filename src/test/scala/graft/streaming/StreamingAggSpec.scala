@@ -107,7 +107,7 @@ class StreamingAggSpec extends SparkSpec with graft.TimedSpec {
     // — unlike GK, the cross-micro-batch streamed estimate must equal
     // the single-pass batch estimate EXACTLY
     val path = StreamingAgg.ensureStreamedHll(spark, sfDir)
-    val streamed = StreamingSeriesState.openStreamed(spark, path)
+    val streamed = graft.io.Artifact.openStaged(spark, path)
       .where(col("metric") === "view")
       .groupBy(col("bucket_start"))
       .agg(max(struct(col("n_points"), col("approx"))).as("last"))

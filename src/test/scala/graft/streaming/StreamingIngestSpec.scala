@@ -1,13 +1,13 @@
 package graft.streaming
 
-import graft.SparkSpec
+import graft.{SparkSpec, TempDirSpec}
 import graft.tsdb.{Db, Ingest}
 import org.apache.spark.sql.functions._
 
-class StreamingIngestSpec extends SparkSpec with graft.TimedSpec {
+class StreamingIngestSpec extends SparkSpec with TempDirSpec with graft.TimedSpec {
 
   test("streaming ingest produces a layout interchangeable with batch fromEvents") {
-    val base = java.nio.file.Files.createTempDirectory("graft_sing").toString
+    val base = java.nio.file.Files.createDirectories(java.nio.file.Paths.get(tempDir, "graft_sing")).toString
     // stage the event file into a landing-zone directory (the streaming
     // file source watches a directory for arriving files)
     val landing = java.nio.file.Paths.get(base, "landing")
@@ -48,7 +48,7 @@ class StreamingIngestSpec extends SparkSpec with graft.TimedSpec {
   }
 
   test("streaming ingest enforces the metric-name write boundary like batch") {
-    val base = java.nio.file.Files.createTempDirectory("graft_sbad").toString
+    val base = java.nio.file.Files.createDirectories(java.nio.file.Paths.get(tempDir, "graft_sbad")).toString
     val landing = java.nio.file.Paths.get(base, "landing")
     java.nio.file.Files.createDirectories(landing)
     // one event with a name the reference's MetricName::try_from rejects;

@@ -44,14 +44,11 @@ class StreamingRollupSpec extends SparkSpec with TempDirSpec with TimedSpec {
 
   test("ensureStreamed builds once, caches, and answers like the batch aggregation") {
     val p1 = StreamingRollup.ensureStreamed(spark, sfDir, Duration.hours(1))
-    assert(java.nio.file.Files.exists(java.nio.file.Paths.get(p1, "_DONE")))
-    val mtime = java.nio.file.Files.getLastModifiedTime(
-      java.nio.file.Paths.get(p1, "_DONE"))
+    // the layout is marked complete: a build at its path does not run
+    graft.io.Artifact.once(spark, p1)(fail("streamed rollup not marked complete"))
     // second call serves the cached layout (same path, no rebuild)
-    val p2 = StreamingRollup.ensureStreamed(spark, sfDir, Duration.hours(1))
-    assert(p2 == p1)
-    assert(java.nio.file.Files.getLastModifiedTime(
-      java.nio.file.Paths.get(p1, "_DONE")) == mtime)
+    val (p2, jobs) = jobsDuring(StreamingRollup.ensureStreamed(spark, sfDir, Duration.hours(1)))
+    assert(p2 == p1 && jobs == 0, s"second ensure launched $jobs job(s)")
     val direct = AggBuilder(Db.fromEvents(spark, sfDir), AggKind.Avg,
       "purchase", "user").granularity(Duration.days(1)).build()
       .collect().map(_.toString).sorted

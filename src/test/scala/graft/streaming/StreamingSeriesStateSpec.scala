@@ -128,13 +128,12 @@ class StreamingSeriesStateSpec extends SparkSpec with graft.TimedSpec {
   }
 
   test("ensureStreamed lands the stateful enrichment exactly once and reopens bit-equal") {
-    import java.nio.file.{Files, Paths}
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getAs[String]("series"), r.getAs[Long]("ts"),
         r.getAs[Double]("value"), r.getAs[Double]("increase"),
         r.getAs[Double]("ewma"))).sortBy(t => (t._1, t._2, t._3)).toSeq
     val path = StreamingSeriesState.ensureStreamed(spark, sfDir, "click")
-    val opened = rows(StreamingSeriesState.openStreamed(spark, path))
+    val opened = rows(graft.io.Artifact.openStaged(spark, path))
     // reference: the same stateful stream drained into a memory sink
     val stream = StreamingAgg.eventsStream(spark, sfDir)
     val q = StreamingSeriesState.enrichEvents(stream, "click")
@@ -143,13 +142,14 @@ class StreamingSeriesStateSpec extends SparkSpec with graft.TimedSpec {
     try q.processAllAvailable() finally q.stop()
     val ref = rows(spark.table("ewma_streamed_ref"))
     assert(opened.nonEmpty && opened == ref)
-    // idempotent rebuild: dropping _DONE re-enters the build, which
-    // replays off the checkpoint (AvailableNow sees no new files) and
-    // must leave the layout identical — the exactly-once read-back
-    Files.delete(Paths.get(path, "_DONE"))
+    // idempotent rebuild: dropping the completion marker re-enters the
+    // build, which replays off the checkpoint (AvailableNow sees no new
+    // files) and must leave the layout identical — the exactly-once
+    // read-back
+    graft.io.Artifact.invalidate(spark, path)
     val path2 = StreamingSeriesState.ensureStreamed(spark, sfDir, "click")
     assert(path2 == path)
-    assert(rows(StreamingSeriesState.openStreamed(spark, path)) == opened)
+    assert(rows(graft.io.Artifact.openStaged(spark, path)) == opened)
   }
 
   test("ensureStreamedZ lands the expanding z exactly once; reopen is idempotent") {
@@ -158,11 +158,11 @@ class StreamingSeriesStateSpec extends SparkSpec with graft.TimedSpec {
       .map(r => (r.getAs[String]("series"), r.getAs[Long]("ts"),
         r.getAs[Double]("value"),
         Option(r.getAs[java.lang.Double]("z")).map(_.toDouble))).toSet
-    val opened = rows(StreamingSeriesState.openStreamed(spark, path))
+    val opened = rows(graft.io.Artifact.openStaged(spark, path))
     val n = spark.read.parquet(s"$sfDir/events.parquet")
       .where(col("event_type") === "error").count()
     assert(opened.size == n)
     assert(StreamingSeriesState.ensureStreamedZ(spark, sfDir, "error") == path)
-    assert(rows(StreamingSeriesState.openStreamed(spark, path)) == opened)
+    assert(rows(graft.io.Artifact.openStaged(spark, path)) == opened)
   }
 }

@@ -1,12 +1,12 @@
 package graft.tsdb
 
-import graft.SparkSpec
+import graft.{SparkSpec, TempDirSpec}
 import org.apache.spark.sql.functions._
 
-class IngestSpec extends SparkSpec {
+class IngestSpec extends SparkSpec with TempDirSpec {
 
   test("ingest roundtrip preserves query results and prunes partitions") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_ingest").toString
+    val tmp = java.nio.file.Files.createDirectories(java.nio.file.Paths.get(tempDir, "graft_ingest")).toString
     val db = Db.fromEvents(spark, sfDir)
     Ingest.write(db, tmp)
     val db2 = Ingest.open(spark, tmp)
@@ -26,13 +26,13 @@ class IngestSpec extends SparkSpec {
 
   test("Db.open binds a written layout (builder().open() parity)") {
     val layout = Ingest.ensureLayout(spark, sfDir,
-      base = java.nio.file.Files.createTempDirectory("graft_open").toString)
+      base = java.nio.file.Files.createDirectories(java.nio.file.Paths.get(tempDir, "graft_open")).toString)
     val db = Db.open(spark, layout)
     assert(db.frame.count() == Db.fromEvents(spark, sfDir).frame.count())
   }
 
   test("f32 layout: value stored float on disk, widened to double on open") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_f32").toString
+    val tmp = java.nio.file.Files.createDirectories(java.nio.file.Paths.get(tempDir, "graft_f32")).toString
     val db = Db.fromEvents(spark, sfDir)
     Ingest.write(db, tmp, highPrecision = false)
     // on-disk schema carries float (2x footprint saving at scale)...
@@ -55,7 +55,7 @@ class IngestSpec extends SparkSpec {
   }
 
   test("append adds a second batch to the layout") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_append").toString
+    val tmp = java.nio.file.Files.createDirectories(java.nio.file.Paths.get(tempDir, "graft_append")).toString
     val db = Db.fromEvents(spark, sfDir)
     val n = db.frame.count()
     Ingest.write(db, tmp)
@@ -74,7 +74,7 @@ class IngestSpec extends SparkSpec {
   }
 
   test("layout upkeep goes through the Hadoop FileSystem of a file: URI work dir") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_uri")
+    val dir = java.nio.file.Files.createDirectories(java.nio.file.Paths.get(tempDir, "graft_uri"))
     val root = dir.toUri.toString.stripSuffix("/")
     assert(root.startsWith("file:"))
     val (h, d) = (Duration.hours(1), Duration.days(1))
@@ -139,7 +139,7 @@ class IngestSpec extends SparkSpec {
     val db = Db.fromEvents(spark, sfDir)
     val bad = new Db(db.frame.withColumn("metric",
       concat(upper(col("metric")), lit(" X"))))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_badmetric").toString
+    val tmp = java.nio.file.Files.createDirectories(java.nio.file.Paths.get(tempDir, "graft_badmetric")).toString
     val e = intercept[Exception](Ingest.write(bad, tmp))
     def messages(t: Throwable): Seq[String] =
       Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ messages(x.getCause))
@@ -148,7 +148,7 @@ class IngestSpec extends SparkSpec {
 
   test("tag predicates push down to the parquet scan over the ingest layout") {
     val layout = Ingest.ensureLayout(spark, sfDir,
-      base = java.nio.file.Files.createTempDirectory("graft_layout").toString)
+      base = java.nio.file.Files.createDirectories(java.nio.file.Paths.get(tempDir, "graft_layout")).toString)
     val db = Ingest.open(spark, layout)
     val plan = db.scan("purchase", "user:123 AND k:1*")
       .queryExecution.executedPlan.toString
@@ -171,7 +171,7 @@ class IngestSpec extends SparkSpec {
   }
 
   test("an open with no data file fails as spark.read.parquet does") {
-    val root = java.nio.file.Files.createTempDirectory("graft_footer_err")
+    val root = java.nio.file.Files.createDirectories(java.nio.file.Paths.get(tempDir, "graft_footer_err"))
     val onlySuccess = root.resolve("only_success")
     java.nio.file.Files.createDirectories(onlySuccess)
     java.nio.file.Files.createFile(onlySuccess.resolve("_SUCCESS"))

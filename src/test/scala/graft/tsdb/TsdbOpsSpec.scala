@@ -465,9 +465,11 @@ class TsdbOpsSpec extends SparkSpec with TempDirSpec {
         .build()))
     // the routed weekly plan READS THE DAY LEVEL, never raw events:
     // every file its scans list lies under the day-rollup layout (the
-    // plan string cuts paths at spark.sql.maxMetadataStringLength)
+    // plan string cuts paths at spark.sql.maxMetadataStringLength), the
+    // path Ladder.ensure's cascade ensure returns
+    val dayLevel = Ingest.ensureRollupCascade(spark, sfDir, Duration.hours(1), Duration.days(1))
     val files = routedWeek.inputFiles
-    assert(files.nonEmpty && files.forall(_.contains("_w86400000000000_")),
+    assert(files.nonEmpty && files.forall(_.contains(s"$dayLevel/")),
       s"weekly query did not read the day level alone:\n${files.mkString("\n")}")
   }
 

@@ -141,7 +141,6 @@ object Bench {
     println(s"# scale100: $scale100")
     println(s"# scale100 skip reasons: $scale100SkipProse")
     val lshPhases = section("lsh_phases")(lshPhasesJson(spark, sfDir))
-    val skew = section("skew")(skewBench(spark, sfDir))
     val lshCounts = section("lsh_counts")(lshCountsJson(spark, sfDir))
     val semanticCounts = section("semantic_counts")(semanticCountsJson(spark, sfDir))
     val q5b = section("q5_bucketed100")(q5Bucketed100Json(spark, sfDir))
@@ -191,7 +190,7 @@ object Bench {
       s""""total_validation_sec":${fmt(totalValidation, 2)},""" +
       s""""validation_queries":$validationJson,"queries":$qs,""" +
       s""""errors":$errorsJson,"ingest":$ingest,"scale10":$scale10,"scale100":$scale100,""" +
-      s""""skew":$skew,"lsh_counts":$lshCounts,"minhash100":$minhash100,""" +
+      s""""lsh_counts":$lshCounts,"minhash100":$minhash100,""" +
       s""""minhash_routed":$minhashRouted,"text_grams100":$textGrams100,""" +
       s""""simhash_phases":$simhashPhases,"incremental_delta":$incDelta,""" +
       s""""streamed_state":$streamedState,""" +
@@ -1383,10 +1382,13 @@ object Bench {
       val dir10 = ScaleData.ensure(spark, sfDir, 10, tables = ScaleData.AllTables)
       val d = spark.read.parquet(s"$dir10/documents.parquet")
         .select(col("doc_id"), col("text"))
+      // the contaminated docs (bloomDecontaminateFrame's rows) under
+      // each pinned filter-side route
       def leg(bf: Boolean): (Double, Long) = {
         val t0 = System.nanoTime()
         val n = graft.operators.TextAnalysis
-          .bloomDecontaminateFrame(d, broadcastFilter = Some(bf)).count()
+          .bloomGramVerdicts(d, broadcastFilter = Some(bf))
+          .where(col("exact_hit")).groupBy(col("doc_id")).count().count()
         ((System.nanoTime() - t0) / 1e9, n)
       }
       leg(true); leg(false) // warm both codegen shapes
@@ -1625,143 +1627,6 @@ object Bench {
     def r(a: Double, b: Double) = if (a > 0 && b > 0) b / a else -1.0
     s""""ts_rollup_avg_build":[${fmt(b0, 2)},${fmt(bN, 2)},${fmt(r(b0, bN), 2)}],""" +
     s""""ts_rollup_avg_query":[${fmt(q0, 2)},${fmt(qN, 2)},${fmt(r(q0, qN), 2)}]"""
-  }
-
-  /** Reducer-balance demo for the hot-salted band joins
-    * (Dedup.hotSaltedSelfJoin), in the regime where salting actually
-    * pays. Three findings are encoded here, each measured:
-    *
-    *  1. Blanket salting (round 3) replicated the right side 16× for
-    *     EVERY bucket — 4× slower overall. Hot-targeted salting
-    *     replicates only buckets ≥ hotMin rows.
-    *  2. The apparent "skew straggler" at default banding was really
-    *     AQE byte-coalescing serializing the verify stage (fixed by
-    *     the candidate re-spread in both LSH frames) — at 16 bands a
-    *     dup cluster is already spread over 16 reducers and salt buys
-    *     nothing. Salting becomes real when the band count is LOW
-    *     (precision-heavy LSH configs): this demo uses 2 bands, so a
-    *     planted 1500-dup cluster funnels ~4.5M pairs through each of
-    *     TWO reducers unsalted.
-    *  3. With salt=16 those two hot buckets split 16-ways with
-    *     identical results; ordinary buckets are untouched.
-    *  4. The shuffle regime itself must be FORCED here: at bench scale
-    *     the banded side auto-broadcasts (no reducers exist to skew —
-    *     plan-verified), and AQE's skew-join split also handles a
-    *     single hot key in SMJ/SHJ plans when its stats see it. The
-    *     demo disables both (autoBroadcastJoinThreshold=-1,
-    *     adaptive.skewJoin=false) to measure the salt mechanism in the
-    *     plan shape a 100 TB banded join actually has — a shuffle join
-    *     too big to broadcast, with hot-salt as the planner-independent
-    *     fallback when size estimates mislead.
-    *
-    * Reported per run: wall seconds, max/median task millis, and the
-    * top stages by max task (stage ids are run-relative; compare
-    * max/med shapes) — unsalted shows a flat ~2-task straggler stage
-    * (one reducer per band carrying the cluster pair volume pairs); salted
-    * removes it with identical output.
-    */
-  private def skewBench(spark: SparkSession, sfDir: String): String = {
-    sectionHygiene(spark)
-    import org.apache.spark.sql.functions._
-    val dir10 = ScaleData.ensure(spark, sfDir, 10, tables = Seq("documents"))
-    val docs = spark.read.parquet(s"$dir10/documents.parquet")
-      .select(col("doc_id"), col("text"))
-    // 4000 planted clones: the unsalted leg funnels ~8M in-bucket pairs
-    // through each of TWO band reducers (seconds of straggler), far
-    // above host jitter — 1500 clones produced a ~1 s straggler that
-    // run-to-run GC noise could invert
-    val one = docs.orderBy(col("doc_id")).limit(1).select(col("text"))
-    val cluster = spark.range(4000).crossJoin(broadcast(one))
-      .select((col("id") + 900000000L).as("doc_id"), col("text"))
-    val planted = docs.union(cluster)
-
-    val durs = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Long)]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        durs.add((t.stageId, t.taskInfo.duration))
-    }
-    def run(salt: Int): String = {
-      // fresh heap before EACH leg: this section runs last in the suite
-      // and the verify stage's broadcast/shuffle debris otherwise skews
-      // the second leg by 2×+ (observed run-to-run)
-      System.gc()
-      // warm untimed pass (same methodology as every query leg): a cold
-      // leg's max_task is as often a JIT/GC pause as the straggler this
-      // demo measures — an in-suite cold salt16 leg once recorded a
-      // 1.9 s max_task that vanished warm
-      try graft.operators.Dedup.minhashLshFrame(planted, bands = 2, salt = salt)
-        .write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => }
-      System.gc()
-      durs.clear()
-      spark.sparkContext.addSparkListener(listener)
-      val t0 = System.nanoTime()
-      // a failed leg must be distinguishable from a slow one in the
-      // committed record: -1 plus the exception, never a bare -1
-      // (with broadcast and skew-join handling forced off, an OOM or
-      // plan failure here is exactly the signal the demo exists for)
-      var err: String = null
-      val res = try {
-        graft.operators.Dedup.minhashLshFrame(planted, bands = 2, salt = salt)
-          .write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      } catch { case e: Throwable => err = errMsg(e, 160); -1.0 }
-      // listener events are posted asynchronously; give the bus a beat
-      Thread.sleep(1000)
-      spark.sparkContext.removeSparkListener(listener)
-      val ds = {
-        val it = durs.iterator(); val b = Seq.newBuilder[(Int, Long)]
-        while (it.hasNext) b += it.next()
-        b.result()
-      }
-      val all = ds.map(_._2).sorted
-      val maxMs = if (all.nonEmpty) all.last else -1L
-      val medMs = if (all.nonEmpty) all(all.size / 2) else -1L
-      // the straggler lives in ONE stage: report the top stages by max
-      // task so the demo localizes it instead of hand-waving at a job
-      // total (stage ids are run-relative, compare shapes not ids)
-      val stageStats = ds.groupBy(_._1).toSeq.map { case (sid, ts) =>
-        val v = ts.map(_._2).sorted
-        (sid, v.last, v(v.size / 2), v.size)
-      }
-      val stages = stageStats.sortBy(-_._2).take(3).map { case (sid, mx, md, n) =>
-        s"""{"stage":$sid,"max_ms":$mx,"med_ms":$md,"tasks":$n}"""
-      }.mkString("[", ",", "]")
-      // THE demo metric: the most-skewed real stage (max/median task
-      // ratio). The wall clock is verify-bound and salt-independent —
-      // the candidate re-spread already balances verification; what
-      // salting fixes is the reducer balance of the pair-GENERATION
-      // join stage, and this ratio is where that is visible (≈13×
-      // unsalted → ≈1× salted) regardless of host jitter.
-      // only stages whose max task is ≥1 s qualify: sub-second map
-      // stages show huge ratios from input-split placement of the
-      // planted docs, which is not the reducer balance under test
-      val mostSkewed = stageStats.filter(s => s._4 >= 8 && s._3 > 0 && s._2 >= 1000)
-        .sortBy(s => -(s._2.toDouble / s._3)).headOption
-        .map { case (sid, mx, md, n) =>
-          s"""{"stage":$sid,"max_ms":$mx,"med_ms":$md,"tasks":$n,"ratio":${fmt(mx.toDouble / md, 1)}}"""
-        }.getOrElse("{}")
-      System.gc()
-      val errField = if (err != null) s""","error":${jsonString(err)}""" else ""
-      s"""{"sec":${fmt(res, 2)},"max_task_ms":$maxMs,"med_task_ms":$medMs,"tasks":${all.size},"most_skewed":$mostSkewed,"top_stages":$stages$errField}"""
-    }
-    val prevThresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    val prevSkew = spark.conf.get("spark.sql.adaptive.skewJoin.enabled")
-    val prevCoalesce = spark.conf.get("spark.sql.adaptive.coalescePartitions.enabled")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "false")
-    // byte-based coalescing collapses reducer stages to 2-3 fat tasks in
-    // BOTH legs, hiding the straggler the demo exists to show; with it
-    // off, every reducer stage keeps its 32 partitions and skew reads as
-    // max >> median WITHIN one stage (salt collapses that ratio)
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    val (noSalt, salted) = try (run(1), run(16)) finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThresh)
-      spark.conf.set("spark.sql.adaptive.skewJoin.enabled", prevSkew)
-      spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", prevCoalesce)
-    }
-    s"""{"cluster":4000,"bands":2,"forced_shuffle":true,"salt1":$noSalt,"salt16":$salted}"""
   }
 
   /** Ingest-throughput measurement (pts/s), the reference's headline

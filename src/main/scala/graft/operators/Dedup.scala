@@ -22,11 +22,13 @@ object Dedup {
     * per-row work. A single small parquet file arrives as one split;
     * without this the expensive kernel projections run on one core.
     * File counting is a listing, not an RDD materialization; at real
-    * scale (files ≥ cores) this is a no-op.
+    * scale (files ≥ cores) this is a no-op. The spread hashes on the
+    * frame's `id` column: a column-less `repartition(p)` is
+    * round-robin, which sorts every row before the shuffle.
     */
-  private[operators] def parallelize(df: DataFrame): DataFrame = {
+  private[operators] def parallelize(df: DataFrame, id: String = "doc_id"): DataFrame = {
     val p = df.sparkSession.sparkContext.defaultParallelism
-    if (df.inputFiles.length < p) df.repartition(p) else df
+    if (df.inputFiles.length < p) df.repartition(p, col(id)) else df
   }
 
   // ------------------------------------------------------------------ exact
@@ -127,29 +129,16 @@ object Dedup {
   private def jaccard(a: Column, b: Column): Column =
     call_function("graft_jaccard", a, b)
 
-  // ---------------------------------------------------- hot-bucket salting
-  /** Self-join `banded` on `keyCols` (+ `idCol` ordering) with
-    * HOT-BUCKET-TARGETED salting.
-    *
-    * Blanket salting (replicate the whole right side `salt`×) is a
-    * trap this repo measured: it multiplies join volume for EVERY
-    * bucket to fix a straggler in one, and the round-3 skew bench came
-    * out 4× slower WITH the salt. Here only buckets holding ≥ `hotMin`
-    * rows — found by one ids-only aggregate, then broadcast (hot keys
-    * are by definition few) — get their left rows split across `salt`
-    * sub-keys and their right rows replicated; every other bucket joins
-    * exactly as unsalted. Pair multiset is identical in all cases: a
-    * pair in a hot bucket meets at the left row's salt, a pair
-    * elsewhere meets at salt 0. This is precisely AQE's skew-join
-    * split done manually — kept because the candidate join is a
-    * self-join of a generated frame whose skew AQE's size estimates
-    * cannot see at planning time.
+  // ------------------------------------------------------ band self-join
+  /** Self-join `banded` on `keyCols` (+ `idCol` ordering): every pair of
+    * rows sharing a band bucket, once, as `a` and `b`. A skewed bucket
+    * (a large duplicate cluster) is left to AQE's runtime skew-join
+    * split: hand salting of hot buckets measured no gain at the
+    * shipped 16 bands.
     */
-  private[operators] def hotSaltedSelfJoin(banded: DataFrame,
-                                           keyCols: Seq[String], idCol: String,
-                                           salt: Int, hotMin: Long): DataFrame = {
-    val keyEq = (a: String, b: String) =>
-      keyCols.map(k => col(s"$a.$k") === col(s"$b.$k")).reduce(_ && _)
+  private[operators] def bandSelfJoin(banded: DataFrame,
+                                      keyCols: Seq[String], idCol: String): DataFrame = {
+    val keyEq = keyCols.map(k => col(s"a.$k") === col(s"b.$k")).reduce(_ && _)
     // SHUFFLE-HASH, not sort-merge: banded rows are ids-only (~24 B)
     // and the join key is the band bucket, so the per-partition hash
     // build is small and cheap while SMJ pays TWO full sorts of the
@@ -160,24 +149,8 @@ object Dedup {
     // bucket's matching group per key, SHJ hashes the partition's
     // rows — both bounded by the same sized-banding invariant that
     // keeps bucket volume ∝ candPerRow.
-    if (salt <= 1) {
-      val h = banded.hint("shuffle_hash")
-      h.as("a").join(h.as("b"),
-        keyEq("a", "b") && col(s"a.$idCol") < col(s"b.$idCol"))
-    } else {
-      val hot = banded.groupBy(keyCols.map(col): _*)
-        .agg(count(lit(1)).as("cnt")).where(col("cnt") >= hotMin)
-        .select(keyCols.map(col) :+ lit(true).as("is_hot"): _*)
-      val tagged = banded.join(broadcast(hot), keyCols, "left")
-      val a = tagged.withColumn("salt",
-        when(col("is_hot"), pmod(hash(col(idCol)), lit(salt))).otherwise(lit(0)))
-      val b = tagged.withColumn("salt",
-        explode(when(col("is_hot"), expr(s"sequence(0, ${salt - 1})"))
-          .otherwise(array(lit(0)))))
-      a.hint("shuffle_hash").as("a").join(b.hint("shuffle_hash").as("b"),
-        keyEq("a", "b") && col("a.salt") === col("b.salt") &&
-          col(s"a.$idCol") < col(s"b.$idCol"))
-    }
+    val h = banded.hint("shuffle_hash")
+    h.as("a").join(h.as("b"), keyEq && col(s"a.$idCol") < col(s"b.$idCol"))
   }
 
   // ---------------------------------------------------------------- minhash
@@ -197,7 +170,7 @@ object Dedup {
     */
   def minhashLsh(spark: SparkSession, dir: String,
                  numHashes: Int = 32, bands: Int = 16,
-                 threshold: Double = 0.5, salt: Int = 1): DataFrame = {
+                 threshold: Double = 0.5): DataFrame = {
     val d = parallelize(Source.table(spark, dir, "documents"))
     // CENSUS-ROUTED (round 10): one fingerprint aggregate — the cheap
     // exact precursor of [[clusterSizeHist]]'s census — detects the
@@ -212,9 +185,9 @@ object Dedup {
     // vocabulary-sized aggregate and the direct path runs unchanged.
     val maxGroup = maxExactGroup(d)
     if (maxGroup >= CollapseMinGroup)
-      minhashLshCollapsed(d, numHashes, bands, threshold, salt)
+      minhashLshCollapsed(d, numHashes, bands, threshold)
     else
-      minhashLshFrame(d, numHashes, bands, threshold, salt)
+      minhashLshFrame(d, numHashes, bands, threshold)
   }
 
   /** Exact-group census gate for [[minhashLsh]]: route through the
@@ -280,10 +253,7 @@ object Dedup {
     */
   private[graft] def minhashLshCollapsed(docsDf: DataFrame,
                                          numHashes: Int = 32, bands: Int = 16,
-                                         threshold: Double = 0.5,
-                                         salt: Int = 1,
-                                         broadcastVerify: Boolean = true,
-                                         hotMin: Long = 128): DataFrame = {
+                                         threshold: Double = 0.5): DataFrame = {
     GraftFunctions.register(docsDf.sparkSession)
     val m = docsDf.select(col("doc_id"),
       md5Fingerprint(col("text")).as("fp"), col("text"))
@@ -294,8 +264,7 @@ object Dedup {
       .join(reps.select(col("fp"), col("rep")), "fp")
     val repDocs = m.join(reps.select(col("rep")),
       m("doc_id") === col("rep")).select(col("doc_id"), col("text"))
-    val repPairs = minhashLshFrame(repDocs, numHashes, bands, threshold,
-      salt, broadcastVerify, hotMin)
+    val repPairs = minhashLshFrame(repDocs, numHashes, bands, threshold)
     val ma = members.select(col("doc_id").as("a_id"), col("rep").as("doc_a"))
     val mb = members.select(col("doc_id").as("b_id"), col("rep").as("doc_b"))
     val cross = repPairs.join(ma, "doc_a").join(mb, "doc_b")
@@ -316,50 +285,35 @@ object Dedup {
     cross.unionByName(intra)
   }
 
-  /** [[minhashLsh]] over an arbitrary (doc_id, text) frame.
-    *
-    * `salt > 1` spreads each HOT band bucket (≥ `hotMin` rows) over
-    * `salt` sub-keys via [[hotSaltedSelfJoin]]: identical pairs, but a
-    * pathological duplicate cluster's O(c²) in-bucket pairs land on
-    * `salt`× more reducers instead of one straggler task — while
-    * ordinary buckets pay nothing.
-    */
+  /** [[minhashLsh]] over an arbitrary (doc_id, text) frame. */
   def minhashLshFrame(docsDf: DataFrame,
                       numHashes: Int = 32, bands: Int = 16,
-                      threshold: Double = 0.5, salt: Int = 1,
-                      broadcastVerify: Boolean = true,
-                      hotMin: Long = 128): DataFrame = {
+                      threshold: Double = 0.5): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
-    require(salt >= 1, "salt must be >= 1")
     GraftFunctions.register(docsDf.sparkSession)
     val base = minhashBase(docsDf, numHashes)
-    val cand = minhashCandFrame(docsDf, numHashes, bands, salt, hotMin)
-    minhashVerify(base, cand, threshold, broadcastVerify)
+    val cand = minhashCandFrame(docsDf, numHashes, bands)
+    minhashVerify(base, cand, threshold)
   }
 
   /** The verify join over a candidate-pair frame. Joins must HASH,
     * never sort-merge: shingle-set rows are KBs each, and sorting the
     * candidate×shingles intermediate spills once the corpus outgrows
-    * the auto-broadcast threshold. Default: broadcast the
-    * (doc_id, shingles) side while the corpus fits executor memory;
-    * `broadcastVerify = false` switches to shuffle-hash joins
-    * (per-partition hash build on the fat side) for beyond-memory
-    * corpora — same contract as [[embeddingCosineLshFrame]].
+    * the auto-broadcast threshold. Both fetches broadcast the
+    * (doc_id, shingles) side, so the candidate stream never shuffles
+    * for them.
     */
   private def minhashVerify(base: DataFrame, cand: DataFrame,
-                            threshold: Double,
-                            broadcastVerify: Boolean): DataFrame =
-    minhashVerifyScored(base, cand, broadcastVerify)
+                            threshold: Double): DataFrame =
+    minhashVerifyScored(base, cand)
       .where(col("jaccard") >= threshold)
 
   /** The verify join WITHOUT the threshold cut — every candidate with
     * its exact Jaccard, so callers can count candidates and survivors
     * in one aggregate pass.
     */
-  private def minhashVerifyScored(base: DataFrame, cand: DataFrame,
-                                  broadcastVerify: Boolean): DataFrame = {
-    val sh0 = base.select(col("doc_id"), col("shingles"))
-    val sh = if (broadcastVerify) broadcast(sh0) else sh0.hint("shuffle_hash")
+  private def minhashVerifyScored(base: DataFrame, cand: DataFrame): DataFrame = {
+    val sh = broadcast(base.select(col("doc_id"), col("shingles")))
     cand
       .join(sh.as("sa"), col("doc_a") === col("sa.doc_id"))
       .join(sh.as("sb"), col("doc_b") === col("sb.doc_id"))
@@ -379,11 +333,10 @@ object Dedup {
     */
   def minhashSampleVerifyStats(spark: SparkSession, dir: String,
                                sampleMod: Int,
-                               threshold: Double = 0.5,
-                               broadcastVerify: Boolean = true): (Long, Long) = {
+                               threshold: Double = 0.5): (Long, Long) = {
     val cand = minhashCandFrame(parallelize(Source.table(spark, dir, "documents")))
     minhashSampleVerifyStatsFrames(minhashShingleBase(spark, dir), cand,
-      sampleMod, threshold, broadcastVerify)
+      sampleMod, threshold)
   }
 
   /** The (doc_id, shingles) side of the verify join, exposed so a
@@ -401,17 +354,11 @@ object Dedup {
     */
   def minhashSampleVerifyStatsFrames(base: DataFrame, cand: DataFrame,
                                      sampleMod: Int,
-                                     threshold: Double = 0.5,
-                                     broadcastVerify: Boolean = true): (Long, Long) = {
-    // the sampled bound is PRECISELY the methodology for corpora whose
-    // full verify is unaffordable — the same beyond-memory regime where
-    // broadcasting the whole (doc_id, shingles) map can OOM executors,
-    // so the bound path honors the broadcastVerify escape hatch like
-    // every other verify join
+                                     threshold: Double = 0.5): (Long, Long) = {
     GraftFunctions.register(base.sparkSession)
     val sample = cand
       .where(pmod(xxhash64(col("doc_a"), col("doc_b")), lit(sampleMod)) === 0)
-    val r = minhashVerifyScored(base, sample, broadcastVerify)
+    val r = minhashVerifyScored(base, sample)
       .agg(count(lit(1)).as("sampled"),
         sum(when(col("jaccard") >= threshold, 1L).otherwise(0L)).as("verified"))
       .collect()(0)
@@ -486,8 +433,7 @@ object Dedup {
     * workload, not plan).
     */
   private[graft] def minhashCandFrame(docsDf: DataFrame,
-                                      numHashes: Int = 32, bands: Int = 16,
-                                      salt: Int = 1, hotMin: Long = 128): DataFrame = {
+                                      numHashes: Int = 32, bands: Int = 16): DataFrame = {
     GraftFunctions.register(docsDf.sparkSession)
     require(numHashes % bands == 0, "bands must divide numHashes")
     val banded = bandFrame(docsDf, numHashes, bands)
@@ -500,8 +446,7 @@ object Dedup {
     // stages must pin their parallelism explicitly. Hashing on the ids
     // (not a column-less round-robin, which sorts every row first)
     // already clusters the duplicates the distinct removes
-    hotSaltedSelfJoin(banded, Seq("band", "band_hash"), "doc_id",
-      salt, hotMin)
+    bandSelfJoin(banded, Seq("band", "band_hash"), "doc_id")
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .repartition(docsDf.sparkSession.sparkContext.defaultParallelism,
         col("doc_a"), col("doc_b"))
@@ -539,20 +484,18 @@ object Dedup {
     * difference between re-deduping 100 TB and probing it.
     *
     * Verify is the standard shingle-set kernel over the candidate ids
-    * (broadcast / shuffle-hash gated like [[minhashLshFrame]]); the
-    * shingle side is scanned fresh (projection-pruned), which a full
-    * run pays too. Contract: the pair set equals the FULL run's pairs
-    * restricted to delta-involving rows (spec-pinned) — same kernel,
-    * same jaccard, same banding.
+    * (broadcast, like [[minhashLshFrame]]'s); the shingle side is
+    * scanned fresh (projection-pruned), which a full run pays too.
+    * Contract: the pair set equals the FULL run's pairs restricted to
+    * delta-involving rows (spec-pinned) — same kernel, same jaccard,
+    * same banding.
     */
   def minhashIncremental(spark: SparkSession, dir: String,
                          numHashes: Int = 32, bands: Int = 16,
-                         threshold: Double = 0.5, deltaMod: Int = 10,
-                         broadcastVerify: Boolean = true): DataFrame = {
+                         threshold: Double = 0.5, deltaMod: Int = 10): DataFrame = {
     val d = parallelize(Source.table(spark, dir, "documents"))
     val idxBands = Source.read(spark, ensureBandIndex(spark, dir, numHashes, bands, deltaMod))
-    minhashIncrementalFrame(d, idxBands, numHashes, bands, threshold,
-      deltaMod, broadcastVerify)
+    minhashIncrementalFrame(d, idxBands, numHashes, bands, threshold, deltaMod)
   }
 
   /** [[minhashIncremental]] over caller-supplied corpus and index-band
@@ -561,22 +504,20 @@ object Dedup {
   private[graft] def minhashIncrementalFrame(d: DataFrame,
                                              idxBands: DataFrame,
                                              numHashes: Int, bands: Int,
-                                             threshold: Double, deltaMod: Int,
-                                             broadcastVerify: Boolean): DataFrame = {
+                                             threshold: Double, deltaMod: Int): DataFrame = {
     val spark = d.sparkSession
     val delta = d.where(col("doc_id") % deltaMod === 0)
     val deltaBands = bandFrame(delta, numHashes, bands)
     // the probe: delta bands against the index layout scan — an
     // equi-join on the band key, shuffle-hash (ids-only rows; the
-    // hotSaltedSelfJoin SMJ argument applies verbatim)
+    // bandSelfJoin SMJ argument applies verbatim)
     val cross = deltaBands.as("a").hint("shuffle_hash")
       .join(idxBands.as("b"),
         col("a.band") === col("b.band") &&
           col("a.band_hash") === col("b.band_hash"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-    // delta×delta: the standard salted self-join over the new shard
-    val intra = hotSaltedSelfJoin(deltaBands, Seq("band", "band_hash"),
-        "doc_id", 1, 128)
+    // delta×delta: the standard band self-join over the new shard
+    val intra = bandSelfJoin(deltaBands, Seq("band", "band_hash"), "doc_id")
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
     // cache the candidate ids once: they feed BOTH the verify join and
     // the involved-docs restriction below. persist, NOT localCheckpoint
@@ -598,8 +539,7 @@ object Dedup {
     val ids = cand.select(col("doc_a").as("doc_id"))
       .unionByName(cand.select(col("doc_b").as("doc_id"))).distinct()
     val involved = d.join(ids, Seq("doc_id"), "left_semi")
-    minhashVerify(minhashBase(involved, numHashes), cand, threshold,
-      broadcastVerify)
+    minhashVerify(minhashBase(involved, numHashes), cand, threshold)
   }
 
   // ---------------------------------------------------------------- simhash
@@ -675,8 +615,8 @@ object Dedup {
     * [[simhashPairsFrame]]: simhash verify is constant-cost, so the
     * collapse pays off only when a group's c² in-bucket join rows
     * would form a straggler task; 1024² = ~1M rows in one bucket is
-    * the same order [[hotSaltedSelfJoin]]'s `hotMin = 128` targets at
-    * its 16-row banding multiplier).
+    * the same order as a 128-row bucket under the 16-row banding
+    * multiplier).
     */
   private[graft] val SimhashCollapseMinGroup = 1024L
 
@@ -973,7 +913,7 @@ object Dedup {
   // ----------------------------------------------------- embedding near-dup
   private def embFrame(spark: SparkSession, dir: String): DataFrame = {
     GraftFunctions.register(spark)
-    parallelize(Source.table(spark, dir, "embeddings"))
+    parallelize(Source.table(spark, dir, "embeddings"), "vec_id")
       .select(col("vec_id"), col("label"), col("embedding").as("v"))
       // norm once per vector; graft_dot reads array<float> directly and
       // accumulates in double — bit-identical to dotting cast-to-double
@@ -1105,15 +1045,14 @@ object Dedup {
   def embeddingCosineLsh(spark: SparkSession, dir: String,
                          threshold: Double = 0.35,
                          targetRecall: Double = 0.98,
-                         maxPlanes: Int = 192, salt: Int = 1): DataFrame = {
+                         maxPlanes: Int = 192): DataFrame = {
     // verify strategy sized from the row counts in the parquet footers
     // (Source.rows, no Spark job) — the dir-level entry must never
     // broadcast an oversized payload (the measured 39 GB-heap failure
-    // mode); only the frame-level API leaves the knob to callers who
-    // cannot count
+    // mode)
     val n = Source.rows(spark, s"$dir/embeddings.parquet")
     embeddingCosineLshFrame(embFrame(spark, dir), threshold, targetRecall,
-      maxPlanes, salt, broadcastVerify = n <= BroadcastVerifyMaxRows)
+      maxPlanes, broadcastVerify = n <= BroadcastVerifyMaxRows)
   }
 
   /** SemDeDup-style semantic dedup (Abbas et al. 2023,
@@ -1208,23 +1147,22 @@ object Dedup {
 
   /** [[embeddingCosineLsh]] over an arbitrary (vec_id, v, nrm) frame.
     *
-    * `salt > 1` spreads each HOT band bucket (≥ `hotMin` rows) over
-    * `salt` sub-keys exactly like [[minhashLshFrame]]: identical pairs,
-    * but a pathological near-dup cluster's O(c²) in-bucket pairs land
-    * on `salt`× more reducers instead of one straggler task — while
-    * ordinary buckets pay nothing.
+    * `broadcastVerify` picks the payload fetch of
+    * [[embeddingVerifyFrame]]. It is the one route parameter left on a
+    * public signature, since a caller holding a bare frame may not
+    * know its size: pass `rows <= BroadcastVerifyMaxRows`, as
+    * [[embeddingCosineLsh]] and [[embeddingNearDup]] do from the
+    * parquet footers.
     */
   def embeddingCosineLshFrame(e: DataFrame, threshold: Double,
                               targetRecall: Double = 0.98,
-                              maxPlanes: Int = 192, salt: Int = 1,
+                              maxPlanes: Int = 192,
                               broadcastVerify: Boolean = true,
-                              planOverride: Option[(Int, Int)] = None,
-                              hotMin: Long = 128): DataFrame = {
-    require(salt >= 1, "salt must be >= 1")
+                              planOverride: Option[(Int, Int)] = None): DataFrame = {
     GraftFunctions.register(e.sparkSession)
     val (rowsPerBand, bands) =
       planOverride.getOrElse(lshPlan(threshold, targetRecall, maxPlanes))
-    val cand = embeddingCandFrame(e, rowsPerBand, bands, salt, hotMin)
+    val cand = embeddingCandFrame(e, rowsPerBand, bands)
     embeddingVerifyFrame(e, cand, threshold, broadcastVerify)
   }
 
@@ -1310,11 +1248,10 @@ object Dedup {
     * an exchange.
     */
   private[graft] def embeddingCandFrame(e: DataFrame, rowsPerBand: Int,
-                                        bands: Int, salt: Int = 1,
-                                        hotMin: Long = 128): DataFrame = {
+                                        bands: Int): DataFrame = {
     GraftFunctions.register(e.sparkSession)
     val banded = embBandFrame(e, rowsPerBand, bands)
-    hotSaltedSelfJoin(banded, Seq("band", "bucket"), "vec_id", salt, hotMin)
+    bandSelfJoin(banded, Seq("band", "bucket"), "vec_id")
       .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"))
       .repartition(e.sparkSession.sparkContext.defaultParallelism,
         col("vec_a"), col("vec_b"))
@@ -1354,7 +1291,7 @@ object Dedup {
     * embedding sibling, and the OPERATIONAL answer to the candidate
     * phase being the cost center at 100× (r9 verdict): a daily delta
     * (`vec_id % deltaMod == 0`) probes the persisted band layout with
-    * one equi-join plus a delta-only salted self-join — the index
+    * one equi-join plus a delta-only band self-join — the index
     * never self-joins, so the banded self-join whose intermediate
     * dominates the full run's wall simply never forms. Candidate work
     * drops from O((n+d)²/2^b) to O((n·d + d²)/2^b); at a daily
@@ -1393,15 +1330,14 @@ object Dedup {
     val delta = e.where(col("vec_id") % deltaMod === 0)
     val deltaBands = embBandFrame(delta, rowsPerBand, bands)
     // the probe leg: ids-only rows, shuffle-hash on the band key (the
-    // hotSaltedSelfJoin SMJ argument); the index side arrives from its
+    // bandSelfJoin SMJ argument); the index side arrives from its
     // pruned layout scan
     val cross = deltaBands.as("a").hint("shuffle_hash")
       .join(idxBands.as("b"),
         col("a.band") === col("b.band") &&
           col("a.bucket") === col("b.bucket"))
       .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"))
-    val intra = hotSaltedSelfJoin(deltaBands, Seq("band", "bucket"),
-        "vec_id", 1, 128)
+    val intra = bandSelfJoin(deltaBands, Seq("band", "bucket"), "vec_id")
       .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"))
     // multiplicity candidates, like the full path, hash-spread on the
     // pair ids so the verify's distinct needs no exchange. Cached
@@ -1928,8 +1864,8 @@ object Dedup {
     * does BEFORE trusting a dedup run at 100 TB: the size distribution
     * says whether duplication is long-tail pairs (healthy crawl) or a
     * few giant boilerplate clusters (the regime where verify joins go
-    * quadratic per cluster and hot-bucket salting starts paying — see
-    * the minhash 100× finding). One distinct + one aggregate over the
+    * quadratic per cluster and the collapsed route starts paying — see
+    * [[minhashLshCollapsed]]). One distinct + one aggregate over the
     * LABELED (paired) subset; output rows ≤ the max cluster size, so
     * the census is dashboard-sized no matter the corpus.
     */
@@ -1955,7 +1891,7 @@ object Dedup {
     * the unpaired remainder comes from ONE left join of the corpus ids
     * against the labels on the doc key — the doc-key shuffle that
     * every split/labeling op in this library already pays, with no
-    * broadcast assumption on the paired set (the [[pipelineFrame]]
+    * broadcast assumption on the paired set (the [[unpairedIds]]
     * lesson applied by construction).
     */
   def keepersWeighted(spark: SparkSession, dir: String,
@@ -1986,22 +1922,9 @@ object Dedup {
                threshold: Double = 0.5): DataFrame =
     pipelineFrame(parallelize(Source.table(spark, dir, "documents")), threshold)
 
-  /** [[pipeline]] over an arbitrary (doc_id, text) frame.
-    *
-    * The final anti-join's build side is the whole paired-id set — NOT
-    * guaranteed small on the corpora dedup exists for: web crawls run
-    * 30-50% near-duplicate, so at 100 TB the paired ids are billions of
-    * rows and an unconditional broadcast ships tens of GB to every
-    * executor. The hint is therefore gated on the actual paired count
-    * (free to read here — clusterPairs has already materialized the
-    * labels); above `broadcastMaxIds` the plan falls back to a plain
-    * shuffled anti-join on doc_id, which AQE may still convert if
-    * runtime stats turn out small.
-    */
-  def pipelineFrame(docsDf: DataFrame, threshold: Double = 0.5,
-                    broadcastMaxIds: Long = 4_000_000L): DataFrame =
-    pipelineOverPairs(docsDf, minhashLshFrame(docsDf, threshold = threshold),
-      broadcastMaxIds)
+  /** [[pipeline]] over an arbitrary (doc_id, text) frame. */
+  def pipelineFrame(docsDf: DataFrame, threshold: Double = 0.5): DataFrame =
+    pipelineOverPairs(docsDf, minhashLshFrame(docsDf, threshold = threshold))
 
   /** [[pipeline]] with SimHash banded pairs as the candidate source —
     * constant verify cost per pair (`bit_count`, not shingle-set
@@ -2041,28 +1964,19 @@ object Dedup {
     * scale shape as the canonical pipeline: the score join and keeper
     * window run over the PAIRED subset only (labels-sized), never the
     * corpus; the corpus-sized operations remain the pair pass and one
-    * anti-join (broadcast-gated, see [[pipelineFrame]]).
+    * anti-join ([[unpairedIds]]).
     */
   def pipelineQualityKeeper(docsDf: DataFrame, pairs: DataFrame,
-                            scores: DataFrame,
-                            broadcastMaxIds: Long = 4_000_000L): DataFrame = {
+                            scores: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val clusters = clusterPairs(pairs).transform(materialize)
-    val pairedCount = clusters.count()
     val byCluster = Window.partitionBy(col("cluster_id"))
       .orderBy(col("quality_score").desc, col("doc_id"))
     val kept = clusters.join(scores, "doc_id")
       .withColumn("rn", row_number().over(byCluster))
       .where(col("rn") === 1)
       .select(col("doc_id"), col("cluster_size"), col("quality_score"))
-    val pairedIds = clusters.select(col("doc_id").as("paired_id"))
-    // same two-way gate as [[pipelineOverPairs]]: above cap, pin the
-    // non-broadcast route against optimistic post-checkpoint estimates
-    val build =
-      if (pairedCount <= broadcastMaxIds) broadcast(pairedIds)
-      else pairedIds.hint("merge")
-    docsDf.select(col("doc_id"))
-      .join(build, col("doc_id") === col("paired_id"), "left_anti")
+    unpairedIds(docsDf, clusters)
       .join(scores, "doc_id")
       .select(col("doc_id"), lit(1L).as("cluster_size"), col("quality_score"))
       .unionByName(kept)
@@ -2118,32 +2032,49 @@ object Dedup {
   }
 
   /** The generic composition: any `(doc_a, doc_b)` near-dup pair frame
-    * → connected components → kept corpus (see [[pipelineFrame]] for
-    * the broadcast-gate contract).
+    * → connected components → kept corpus: every keeper with its
+    * cluster size, plus every unpaired document ([[unpairedIds]]) with
+    * size 1.
     */
-  def pipelineOverPairs(docsDf: DataFrame, pairs: DataFrame,
-                        broadcastMaxIds: Long = 4_000_000L): DataFrame = {
+  def pipelineOverPairs(docsDf: DataFrame, pairs: DataFrame): DataFrame = {
     val clusters = clusterPairs(pairs)
       .transform(materialize)
-    val pairedCount = clusters.count()
     val kept = clusters.where(col("is_keeper"))
       .select(col("doc_id"), col("cluster_size"))
-    // dropped ∪ keepers = every paired id
+    unpairedIds(docsDf, clusters)
+      .select(col("doc_id"), lit(1L).as("cluster_size"))
+      .unionByName(kept)
+  }
+
+  /** Paired-id ceiling for [[unpairedIds]]'s broadcast: 4M ids of 8 B. */
+  private[graft] val BroadcastMaxIds = 4_000_000L
+
+  /** The ids of `docsDf` in no cluster of `clusters` (a materialized
+    * [[clusterPairs]] frame; dropped ∪ keepers = every paired id): the
+    * keeper pipelines' one corpus-sized anti-join.
+    *
+    * Its build side is the whole paired-id set — NOT guaranteed small
+    * on the corpora dedup exists for: web crawls run 30-50%
+    * near-duplicate, so at 100 TB the paired ids are billions of rows
+    * and an unconditional broadcast ships tens of GB to every
+    * executor. The route is therefore gated on the exact paired count
+    * (one count over the materialized labels) against
+    * [[BroadcastMaxIds]], and the gate is authoritative in BOTH
+    * directions: at or below the ceiling the hint broadcasts a set the
+    * planner can't size (checkpointed lineage); above it `merge` pins
+    * the sort-merge route, since the checkpoint propagates its origin
+    * plan's estimates and a wrong (too-small) estimate must not
+    * re-introduce the broadcast cliff the count just ruled out.
+    * `broadcastIds` pins the route instead (specs run both).
+    */
+  private[graft] def unpairedIds(docsDf: DataFrame, clusters: DataFrame,
+                                 broadcastIds: Option[Boolean] = None): DataFrame = {
     val pairedIds = clusters.select(col("doc_id").as("paired_id"))
-    // the gate is authoritative in BOTH directions: below cap the hint
-    // broadcasts a set the planner can't size (checkpointed lineage);
-    // above cap `merge` pins the sort-merge route that unknown stats
-    // used to produce — since r13 the checkpoint PROPAGATES its origin
-    // plan's estimates, and a wrong (too-small) estimate over >cap
-    // paired ids must not re-introduce the broadcast cliff the exact
-    // count just ruled out
     val build =
-      if (pairedCount <= broadcastMaxIds) broadcast(pairedIds)
+      if (broadcastIds.getOrElse(clusters.count() <= BroadcastMaxIds)) broadcast(pairedIds)
       else pairedIds.hint("merge")
     docsDf.select(col("doc_id"))
       .join(build, col("doc_id") === col("paired_id"), "left_anti")
-      .select(col("doc_id"), lit(1L).as("cluster_size"))
-      .unionByName(kept)
   }
 
   /** Per-source pipeline YIELD report — the provenance accounting every

@@ -246,24 +246,20 @@ object TextAnalysis {
     * `commonness = mean over the doc's tokens of P(token in corpus)`.
     * Unusually low = rare/garbled vocabulary; unusually high =
     * boilerplate. Two passes over one scan shape: (1) the corpus word
-    * count (reduce volume = the VOCABULARY, map-side combined), joined
-    * back onto the exploded token stream — broadcast while the
-    * vocabulary fits executor memory, `broadcastVocab = false` switches
-    * to a shuffle join on the token for open-vocabulary corpora (the
-    * dedup-verify contract) — then (2) re-aggregate per document
+    * count (reduce volume = the VOCABULARY, map-side combined),
+    * broadcast back onto the exploded token stream — then (2)
+    * re-aggregate per document
     * (tokens of a doc are co-located from the scan, so the partial
     * aggregate reduces to ~one row per doc per partition before the
     * doc_id shuffle). Everything is exact BIGINT until one final IEEE
     * chain `(Σcnt / total) / n_tokens` — engine-reproducible, no
     * logarithms (libm-vs-JVM 1-ulp risk) in the contract.
     */
-  def docFreq(spark: SparkSession, dir: String,
-              broadcastVocab: Boolean = true): DataFrame = {
+  def docFreq(spark: SparkSession, dir: String): DataFrame = {
     val toks = Source.table(spark, dir, "documents")
       .select(col("doc_id"), explode(split(col("text"), " ")).as("token"))
       .where(col("token") =!= "")
-    val vocab0 = toks.groupBy(col("token")).agg(count(lit(1)).as("cnt"))
-    val vocab = if (broadcastVocab) broadcast(vocab0) else vocab0.hint("shuffle_hash")
+    val vocab = broadcast(toks.groupBy(col("token")).agg(count(lit(1)).as("cnt")))
     // one global total: a 1-row aggregate, cross-joined (broadcast) onto
     // the per-doc rows — never a driver-side collect in the plan
     val total = toks.agg(count(lit(1)).as("total"))
@@ -293,20 +289,15 @@ object TextAnalysis {
     * whitespace-filtered token array — in-codegen, no shuffle, no
     * self-join on position. Both count tables are VOCABULARY-sized
     * (bigram vocabulary ≪ corpus; map-side-combined aggregates), and
-    * join back broadcast while they fit — `broadcastVocab = false`
-    * switches both probes to shuffle-hash on the gram key for
-    * open-vocabulary corpora (the dedup-verify contract, spec-proven
-    * row-identical). The per-doc re-aggregate reduces ~per-partition
-    * before the doc_id shuffle (scan co-location). Docs with <2
-    * tokens have no bigrams and drop on both engines.
+    * both join back broadcast. The per-doc re-aggregate reduces
+    * ~per-partition before the doc_id shuffle (scan co-location). Docs
+    * with <2 tokens have no bigrams and drop on both engines.
     */
-  def bigramLm(spark: SparkSession, dir: String,
-               broadcastVocab: Boolean = true): DataFrame =
-    bigramLmFrame(Source.table(spark, dir, "documents"), broadcastVocab)
+  def bigramLm(spark: SparkSession, dir: String): DataFrame =
+    bigramLmFrame(Source.table(spark, dir, "documents"))
 
   /** [[bigramLm]] over a caller-supplied `(doc_id, text)` frame. */
-  def bigramLmFrame(d: DataFrame,
-                    broadcastVocab: Boolean = true): DataFrame = {
+  def bigramLmFrame(d: DataFrame): DataFrame = {
     val toksArr = filter(split(col("text"), " "), (t: Column) => t =!= "")
     val base = d.select(col("doc_id"), toksArr.as("toks"))
     val bg = base.where(size(col("toks")) > 1)
@@ -315,12 +306,9 @@ object TextAnalysis {
         (w: Column, i: Column) => struct(w.as("w1"),
           element_at(col("toks"), i + lit(2)).as("w2")))).as("bg"))
       .select(col("doc_id"), col("bg.w1").as("w1"), col("bg.w2").as("w2"))
-    val uni0 = base.select(explode(col("toks")).as("token"))
-      .groupBy(col("token")).agg(count(lit(1)).as("c1"))
-    val big0 = bg.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c12"))
-    val (uniC, bigC) =
-      if (broadcastVocab) (broadcast(uni0), broadcast(big0))
-      else (uni0.hint("shuffle_hash"), big0.hint("shuffle_hash"))
+    val uniC = broadcast(base.select(explode(col("toks")).as("token"))
+      .groupBy(col("token")).agg(count(lit(1)).as("c1")))
+    val bigC = broadcast(bg.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c12")))
     bg.join(bigC, Seq("w1", "w2"))
       .join(uniC, col("w1") === col("token"))
       .groupBy(col("doc_id"))
@@ -341,22 +329,19 @@ object TextAnalysis {
     * engine-exact (the sample_temperature sqrt lesson, applied to
     * ranking). Same two-pass shape as [[docFreq]]: tf is one
     * (doc, token) aggregate, df one vocabulary-sized aggregate
-    * broadcast back (`broadcastVocab=false` → shuffle-hash for open
-    * vocabularies), n_docs a one-row broadcast; the top-k rank runs
+    * broadcast back, n_docs a one-row broadcast; the top-k rank runs
     * per doc over its distinct-token frame with a (score desc, token)
     * total order. Output ∝ docs × k.
     */
-  def topTerms(spark: SparkSession, dir: String, k: Int = 5,
-               broadcastVocab: Boolean = true): DataFrame = {
+  def topTerms(spark: SparkSession, dir: String, k: Int = 5): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val toks = Source.table(spark, dir, "documents")
       .select(col("doc_id"), explode(split(col("text"), " ")).as("token"))
       .where(col("token") =!= "")
     val tf = toks.groupBy(col("doc_id"), col("token"))
       .agg(count(lit(1)).as("tf"))
-    val df0 = toks.select(col("doc_id"), col("token")).distinct()
-      .groupBy(col("token")).agg(count(lit(1)).as("df"))
-    val dfSide = if (broadcastVocab) broadcast(df0) else df0.hint("shuffle_hash")
+    val dfSide = broadcast(toks.select(col("doc_id"), col("token")).distinct()
+      .groupBy(col("token")).agg(count(lit(1)).as("df")))
     val nDocs = Source.table(spark, dir, "documents").agg(count(lit(1)).as("n_docs"))
     val w = Window.partitionBy(col("doc_id"))
       .orderBy(col("score").desc, col("token"))
@@ -515,10 +500,8 @@ object TextAnalysis {
   /** [[bloomDecontaminate]] over an arbitrary (doc_id, text) frame. */
   def bloomDecontaminateFrame(d: DataFrame, evalMod: Int = 50,
                               bitsPerItem: Int = 10,
-                              numHashes: Int = 7,
-                              broadcastFilter: Option[Boolean] = None)
-      : DataFrame =
-    bloomGramVerdicts(d, evalMod, bitsPerItem, numHashes, broadcastFilter)
+                              numHashes: Int = 7): DataFrame =
+    bloomGramVerdicts(d, evalMod, bitsPerItem, numHashes)
       .where(col("exact_hit"))
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_shared_grams"),
@@ -535,16 +518,18 @@ object TextAnalysis {
     * far beyond the ceiling and BOTH filter-side joins — the word_id
     * probe and the exact-hit gram join — shuffle-hash instead of
     * broadcasting, each co-partitioned on its own key. The spec pins
-    * the two strategies row-identical over the same corpus (the
-    * dedup-verify contract, Dedup.BroadcastVerifyMaxRows).
+    * the two strategies row-identical over the same corpus through
+    * [[bloomGramVerdicts]] (the dedup-verify contract,
+    * Dedup.BroadcastVerifyMaxRows).
     */
   private[graft] val BroadcastFilterMaxWords = 1000000L
 
   /** The build + probe shared by the entry and the FP-rate spec:
     * per corpus gram, `(doc_id, gram, bloom_hit, exact_hit)`.
-    * `broadcastFilter = None` sizes the filter-side join strategy from
-    * the eval-gram count against [[BroadcastFilterMaxWords]];
-    * Some(x) pins it (the spec uses both pins to prove equality).
+    * `broadcastFilter = None` (every production caller) sizes the
+    * filter-side join strategy from the eval-gram count against
+    * [[BroadcastFilterMaxWords]]; Some(x) pins it (the spec and the
+    * bench's `bloom_paths` section use both pins).
     */
   private[graft] def bloomGramVerdicts(d: DataFrame, evalMod: Int = 50,
                                        bitsPerItem: Int = 10,
@@ -753,22 +738,19 @@ object TextAnalysis {
     * independent — the round(,6) already in the quality contract is
     * what bounds it), (2) a window cumsum over that bounded frame
     * yields `n_below` per score (single-task, but histogram-sized),
-    * (3) the histogram joins back broadcast (`broadcastHist = false` →
-    * shuffle join, the open-cardinality escape hatch). `pct_rank =
+    * (3) the histogram joins back broadcast. `pct_rank =
     * n_below / (N − 1)` with ties sharing a rank — exactly SQL
     * `PERCENT_RANK()`, which is what the oracle runs; integers until
     * the one final IEEE division.
     */
-  def qualityRank(spark: SparkSession, dir: String,
-                  broadcastHist: Boolean = true): DataFrame = {
+  def qualityRank(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val scored = quality(spark, dir).select(col("doc_id"), col("quality_score"))
     val w = Window.orderBy(col("quality_score"))
       .rowsBetween(Window.unboundedPreceding, -1)
-    val cum = scored.groupBy(col("quality_score")).agg(count(lit(1)).as("cnt"))
+    val hist = broadcast(scored.groupBy(col("quality_score")).agg(count(lit(1)).as("cnt"))
       .withColumn("n_below", coalesce(sum(col("cnt")).over(w), lit(0L)))
-      .drop("cnt")
-    val hist = if (broadcastHist) broadcast(cum) else cum.hint("shuffle_hash")
+      .drop("cnt"))
     val total = scored.agg(count(lit(1)).as("total"))
     scored.join(hist, "quality_score")
       .crossJoin(broadcast(total))
@@ -791,19 +773,16 @@ object TextAnalysis {
     *
     * Same two-pass shape (and the same scale contract) as [[docFreq]]:
     * the corpus gram count is map-side combined down to the gram
-    * VOCABULARY before its shuffle, joined back broadcast while it
-    * fits (`broadcastVocab = false` = shuffle-hash join for
-    * open-vocabulary corpora), then one per-doc re-aggregate. All
-    * integers until the single final IEEE division.
+    * VOCABULARY before its shuffle, joined back broadcast, then one
+    * per-doc re-aggregate. All integers until the single final IEEE
+    * division.
     */
-  def dupNgrams(spark: SparkSession, dir: String,
-                broadcastVocab: Boolean = true): DataFrame =
-    dupNgramsFrame(Source.table(spark, dir, "documents"), broadcastVocab)
+  def dupNgrams(spark: SparkSession, dir: String): DataFrame =
+    dupNgramsFrame(Source.table(spark, dir, "documents"))
 
   /** [[dupNgrams]] over an arbitrary `(doc_id, text)` frame. */
-  def dupNgramsFrame(d: DataFrame,
-                     broadcastVocab: Boolean = true): DataFrame =
-    dupNgramsFromInstances(gramInstances(d), broadcastVocab)
+  def dupNgramsFrame(d: DataFrame): DataFrame =
+    dupNgramsFromInstances(gramInstances(d))
 
   /** The word-3-gram INSTANCE frame `(doc_id, i, end_w, gram)` — the
     * shared upstream of the whole substring-dedup trio
@@ -840,12 +819,9 @@ object TextAnalysis {
   /** [[dupNgramsFrame]] from a (possibly pre-materialized)
     * [[gramInstances]] frame.
     */
-  def dupNgramsFromInstances(inst0: DataFrame,
-                             broadcastVocab: Boolean = true): DataFrame = {
+  def dupNgramsFromInstances(inst0: DataFrame): DataFrame = {
     val inst = inst0.select(col("doc_id"), col("gram"))
-    val vocab0 = inst.groupBy(col("gram")).agg(count(lit(1)).as("cnt"))
-    val vocab = if (broadcastVocab) broadcast(vocab0)
-                else vocab0.hint("shuffle_hash")
+    val vocab = broadcast(inst.groupBy(col("gram")).agg(count(lit(1)).as("cnt")))
     inst.join(vocab, "gram")
       .groupBy(col("doc_id"))
       .agg(
@@ -875,17 +851,15 @@ object TextAnalysis {
     *
     * Scale shape: the corpus pass is [[dupNgramsFrame]]'s contract —
     * gram instances map-side-combine to the gram VOCABULARY before the
-    * shuffle, duplicated membership joins back broadcast while it fits
-    * (`broadcastVocab = false` = shuffle-hash for open-vocabulary
-    * corpora). The merge itself shuffles once on doc_id and runs two
-    * codegen'd window frames whose partition is ONE document's
-    * duplicated positions (bounded by doc length, corpus-size-
-    * independent); span rows out ≤ gram instances in. No global sort,
+    * shuffle, duplicated membership joins back broadcast. The merge
+    * itself shuffles once on doc_id and runs two codegen'd window
+    * frames whose partition is ONE document's duplicated positions
+    * (bounded by doc length, corpus-size-independent); span rows
+    * out ≤ gram instances in. No global sort,
     * no driver state — the same posture at 100 TB.
     */
-  def dedupSpans(spark: SparkSession, dir: String,
-                 broadcastVocab: Boolean = true): DataFrame =
-    dedupSpansFrame(Source.table(spark, dir, "documents"), broadcastVocab)
+  def dedupSpans(spark: SparkSession, dir: String): DataFrame =
+    dedupSpansFrame(Source.table(spark, dir, "documents"))
 
   /** The REWRITE pass over [[dedupSpans]]: every word position covered
     * by a maximal corpus-duplicated span is CUT and the survivors
@@ -904,21 +878,18 @@ object TextAnalysis {
     * text kernel here lives with. No global sort; word order is
     * restored per doc by an in-row array_sort.
     */
-  def dedupRewrite(spark: SparkSession, dir: String,
-                   broadcastVocab: Boolean = true): DataFrame =
-    dedupRewriteFrame(Source.table(spark, dir, "documents"), broadcastVocab)
+  def dedupRewrite(spark: SparkSession, dir: String): DataFrame =
+    dedupRewriteFrame(Source.table(spark, dir, "documents"))
 
   /** [[dedupRewrite]] over an arbitrary `(doc_id, text)` frame. */
-  def dedupRewriteFrame(d: DataFrame,
-                        broadcastVocab: Boolean = true): DataFrame =
-    dedupRewriteFromInstances(d, gramInstances(d), broadcastVocab)
+  def dedupRewriteFrame(d: DataFrame): DataFrame =
+    dedupRewriteFromInstances(d, gramInstances(d))
 
   /** [[dedupRewriteFrame]] from a pre-materialized [[gramInstances]]
     * frame (plus the doc frame for the word pass).
     */
-  def dedupRewriteFromInstances(d: DataFrame, inst: DataFrame,
-                                broadcastVocab: Boolean = true): DataFrame =
-    rewriteFromSpans(d, dedupSpansFromInstances(inst, broadcastVocab))
+  def dedupRewriteFromInstances(d: DataFrame, inst: DataFrame): DataFrame =
+    rewriteFromSpans(d, dedupSpansFromInstances(inst))
 
   /** INCREMENTAL rewrite — the delta docs' cleaned texts off
     * [[dedupSpansIncremental]]'s spans: the end-to-end substring-dedup
@@ -928,11 +899,10 @@ object TextAnalysis {
     * combined-corpus duplicated-gram definition.
     */
   def dedupRewriteIncremental(spark: SparkSession, dir: String,
-                              deltaMod: Int = 10,
-                              broadcastVocab: Boolean = true): DataFrame =
+                              deltaMod: Int = 10): DataFrame =
     rewriteFromSpans(
       Source.table(spark, dir, "documents").where(col("doc_id") % deltaMod === 0),
-      dedupSpansIncremental(spark, dir, deltaMod, broadcastVocab))
+      dedupSpansIncremental(spark, dir, deltaMod))
 
   /** The span-cut + survivor re-join tail shared by the full and
     * incremental rewrites: words of `d` cut by `spans0`'s position
@@ -971,19 +941,15 @@ object TextAnalysis {
   }
 
   /** [[dedupSpans]] over an arbitrary `(doc_id, text)` frame. */
-  def dedupSpansFrame(d: DataFrame,
-                      broadcastVocab: Boolean = true): DataFrame =
-    dedupSpansFromInstances(gramInstances(d), broadcastVocab)
+  def dedupSpansFrame(d: DataFrame): DataFrame =
+    dedupSpansFromInstances(gramInstances(d))
 
   /** [[dedupSpansFrame]] from a pre-materialized [[gramInstances]]
     * frame.
     */
-  def dedupSpansFromInstances(inst: DataFrame,
-                              broadcastVocab: Boolean = true): DataFrame = {
-    val vocab0 = inst.groupBy(col("gram")).agg(count(lit(1)).as("cnt"))
-      .where(col("cnt") > 1).select(col("gram"))
-    val vocab = if (broadcastVocab) broadcast(vocab0)
-                else vocab0.hint("shuffle_hash")
+  def dedupSpansFromInstances(inst: DataFrame): DataFrame = {
+    val vocab = broadcast(inst.groupBy(col("gram")).agg(count(lit(1)).as("cnt"))
+      .where(col("cnt") > 1).select(col("gram")))
     spansFromDupInstances(inst.join(vocab, "gram")
       .select(col("doc_id"), col("i"), col("end_w")))
   }
@@ -1043,13 +1009,12 @@ object TextAnalysis {
     *
     * Scale shape: one delta-sized gram explode + one delta-vocabulary
     * aggregate + ONE equi-join against the index (shuffle-hash on the
-    * gram key by default at corpus scale; `broadcastVocab = true`
-    * broadcasts the DELTA vocabulary side, never the index) + the
-    * bounded per-doc island frames. The index never self-joins.
+    * gram key; the index is the corpus-sized side) + a broadcast of
+    * the delta's duplicated grams onto its instances + the bounded
+    * per-doc island frames. The index never self-joins.
     */
   def dedupSpansIncremental(spark: SparkSession, dir: String,
-                            deltaMod: Int = 10,
-                            broadcastVocab: Boolean = true): DataFrame = {
+                            deltaMod: Int = 10): DataFrame = {
     val idx = Source.read(spark, s"${ensureGramVocabIndex(spark, dir, deltaMod)}/vocab")
     val inst = gramInstances(Source.table(spark, dir, "documents")
       .where(col("doc_id") % deltaMod === 0))
@@ -1058,13 +1023,11 @@ object TextAnalysis {
     // broadcast (it is the corpus-sized side and sits right of a left
     // join), so pin shuffle-hash — gram rows are fat strings and a
     // sort-merge would sort the whole vocabulary
-    val dupGrams0 = deltaVocab
+    val dupGrams = broadcast(deltaVocab
       .join(idx.withColumnRenamed("cnt", "base_cnt").hint("shuffle_hash"),
         Seq("gram"), "left")
       .where(col("dcnt") + coalesce(col("base_cnt"), lit(0L)) > 1)
-      .select(col("gram"))
-    val dupGrams = if (broadcastVocab) broadcast(dupGrams0)
-                   else dupGrams0.hint("shuffle_hash")
+      .select(col("gram")))
     spansFromDupInstances(inst.join(dupGrams, "gram")
       .select(col("doc_id"), col("i"), col("end_w")))
   }

@@ -458,25 +458,22 @@ final class Db private[tsdb] (private[tsdb] val smallInputRoute: SmallInputRoute
     * inflate a σ band, so a single spike can't widen its own alert
     * threshold): `med = median(v)`, `mad = median(|v − med|)`. Two
     * exact `percentile` aggregates over one point shuffle each, the
-    * bucket-sized median frame joined back broadcast
-    * (`broadcastMed = false` → shuffle join, the zscore_rollup
-    * contract). Like [[AggBuilder]]'s exact Quantile, the percentile
-    * buffers its group — [[quantileApprox]] is the hot-series escape;
+    * bucket-sized median frame joined back broadcast. Like
+    * [[AggBuilder]]'s exact Quantile, the percentile buffers its
+    * group — [[quantileApprox]] is the hot-series escape;
     * the MEDIAN is rounded to 6 before the deviation pass so the
     * second percentile's inputs are engine-identical doubles (the
     * ts_quantile round-6 recipe applied at both stages).
     */
   def mad(metric: String, groupBy: String, widthNs: Long,
-          filterExpr: String = "*",
-          broadcastMed: Boolean = true): DataFrame = {
+          filterExpr: String = "*"): DataFrame = {
     val grpCol = tagCol(groupBy)
     val pts = groupedScan(metric, filterExpr, groupBy)
       .select(grpCol.as("grp"),
         (expr(s"ts div ${widthNs}L") * lit(widthNs)).as("bucket_start"),
         col("value"))
-    val med0 = pts.groupBy(col("grp"), col("bucket_start"))
-      .agg(round(expr("percentile(value, 0.5d)"), 6).as("med"))
-    val med = if (broadcastMed) broadcast(med0) else med0.hint("shuffle_hash")
+    val med = broadcast(pts.groupBy(col("grp"), col("bucket_start"))
+      .agg(round(expr("percentile(value, 0.5d)"), 6).as("med")))
     pts.join(med, Seq("grp", "bucket_start"))
       .groupBy(col("grp"), col("bucket_start"), col("med"))
       .agg(org.apache.spark.sql.functions.count(lit(1)).as("n"),

@@ -63,18 +63,9 @@ final class Rollup private[tsdb] (private[tsdb] val smallInputRoute: SmallInputR
     * side). The arithmetic chain after the exact decimal sums is
     * IDENTICAL to [[Db.zscore]], and both sum paths are exact, so the
     * two formulations are bit-equal (spec-asserted).
-    *
-    * `broadcastStats = false` switches the stats side to a plain
-    * shuffled join for deployments where (series × buckets) outgrows
-    * executor memory (10M series × multi-year spans) — the same
-    * beyond-memory contract as the dedup verify joins; results are
-    * identical (spec-asserted), the points then pay one shuffle on
-    * (group, bucket) like the window formulation but still skip its
-    * sort.
     */
   def zscoreOver(db: Db, metric: String, groupBy: String, width: Long,
-                 filterExpr: String = "*",
-                 broadcastStats: Boolean = true): DataFrame = {
+                 filterExpr: String = "*"): DataFrame = {
     require(width % widthNs == 0,
       s"query width $width is not a multiple of the rollup width $widthNs")
     require(frame.columns.contains("sum_sq"),
@@ -90,12 +81,11 @@ final class Rollup private[tsdb] (private[tsdb] val smallInputRoute: SmallInputR
     val sq = col("sq_dec").cast("double")
     val cnt = col("cnt")
     val sigma = sqrt(greatest((sq - (s * s) / cnt) / cnt, lit(0.0)))
-    val statsSide = if (broadcastStats) functions.broadcast(stats) else stats
     db.groupedScan(metric, filterExpr, groupBy)
       .select(db.tagCol(groupBy).as("grp"),
         (expr(s"ts div ${width}L") * lit(width)).as("bucket_start"),
         col("ts"), col("value"))
-      .join(statsSide, Seq("grp", "bucket_start"))
+      .join(functions.broadcast(stats), Seq("grp", "bucket_start"))
       .select(col("grp"), col("bucket_start"), col("ts"), col("value"),
         when(sigma === 0.0, lit(null).cast("double"))
           .otherwise((col("value") - s / cnt) / sigma + lit(0.0)).as("z"))

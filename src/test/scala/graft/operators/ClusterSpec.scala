@@ -146,20 +146,23 @@ class ClusterSpec extends SparkSpec with TempDirSpec {
       (0 until 15).map(i =>
         (100L + i, s"duplicated boilerplate page body shared verbatim across the crawl cluster ${i / 5}")))
       .toDF("doc_id", "text")
-    val gated = Dedup.pipelineFrame(docs)                        // paired count ≤ default cap → broadcast
-    val plain = Dedup.pipelineFrame(docs, broadcastMaxIds = 0L)  // cap forces the shuffled anti-join
-    // the STATIC plans differ: hint present vs absent (the paired-id
-    // frame is a checkpointed RDD with unknown stats, so without the
-    // hint static planning cannot broadcast; AQE may still convert at
-    // runtime — which is exactly the intended above-cap behavior)
+    val gated = Dedup.pipelineFrame(docs)  // paired count ≤ BroadcastMaxIds → broadcast
+    // the above-ceiling route, pinned on the same clusters
+    val clusters = Dedup.clusterPairs(Dedup.minhashLshFrame(docs)).localCheckpoint()
+    val unpaired = Dedup.unpairedIds(docs, clusters)
+    val plainUnpaired = Dedup.unpairedIds(docs, clusters, broadcastIds = Some(false))
+    // the STATIC plans differ: broadcast hint vs the pinned sort-merge
+    // (AQE may still convert at runtime when the ids turn out small)
     def antiLine(df: org.apache.spark.sql.DataFrame) =
       df.queryExecution.sparkPlan.toString.linesIterator
         .filter(_.contains("LeftAnti")).mkString
     assert(antiLine(gated).contains("Broadcast"), "gated plan should broadcast the paired ids")
-    assert(!antiLine(plain).contains("Broadcast"), "above-cap plan must not force a broadcast")
+    assert(antiLine(unpaired).contains("Broadcast"), "gated plan should broadcast the paired ids")
+    assert(!antiLine(plainUnpaired).contains("Broadcast"), "above-cap plan must not force a broadcast")
+    assert(sortedRows(plainUnpaired) == sortedRows(unpaired))
     val a = gated.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val b = plain.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(a == b)
+    assert(a.filter(_._2 == 1L).map(_._1) ==
+      unpaired.collect().map(_.getLong(0)).toSet, "unpaired docs keep cluster size 1")
     // the corpus really is high-dup: ≥30% of the 40 docs are paired
     // (keepers carry their cluster size; 3 clusters of 5 → 15 paired)
     assert(a.filter(_._2 > 1).map(_._2).sum >= 12, "expected ≥30% of 40 docs paired")

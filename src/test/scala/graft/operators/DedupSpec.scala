@@ -126,29 +126,6 @@ class DedupSpec extends SparkSpec {
     assert(Dedup.minhashCandidates(spark, sfDir).count() > s)
   }
 
-  test("salted minhash returns exactly the unsalted pairs, even with a planted skew cluster") {
-    // plant a pathological duplicate cluster: one doc replicated 30x —
-    // its band buckets would funnel O(c^2) pairs through single tasks
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      .select(col("doc_id"), col("text"))
-    val seed = docs.orderBy("doc_id").limit(1).collect()(0)
-    import spark.implicits._
-    val clones = (1 to 30)
-      .map(i => (1000000L + i, seed.getString(1))).toDF("doc_id", "text")
-    val frame = docs.union(clones)
-    // hotMin = 8 < cluster size 31: the clone buckets genuinely take the
-    // salted path (default 128 would leave this cluster unsalted)
-    def pairs(salt: Int) =
-      Dedup.minhashLshFrame(frame, salt = salt, hotMin = 8)
-        .select("doc_a", "doc_b", "jaccard").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val unsalted = pairs(1)
-    val salted = pairs(4)
-    // the clone cluster alone contributes C(30,2)+30 pairs
-    assert(unsalted.size > 400)
-    assert(salted == unsalted)
-  }
-
   test("collapsed minhash equals the direct path pair-for-pair on a planted giant cluster") {
     // the census-routed boilerplate plan: a 40-member exact-duplicate
     // cluster plus two smaller ones — the regime where direct verify
@@ -207,17 +184,12 @@ class DedupSpec extends SparkSpec {
     def key(df: org.apache.spark.sql.DataFrame) =
       df.select("doc_a", "doc_b", "jaccard").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val inc = key(Dedup.minhashIncrementalFrame(frame, idxBands,
-      32, 16, 0.5, mod, broadcastVerify = true))
+    val inc = key(Dedup.minhashIncrementalFrame(frame, idxBands, 32, 16, 0.5, mod))
     val restricted = key(Dedup.minhashLshFrame(frame))
       .filter(p => p._1 % mod == 0 || p._2 % mod == 0)
     assert(inc == restricted)
     assert(restricted.exists(p => p._1 % mod != 0 || p._2 % mod != 0))
     assert(restricted.exists(p => p._1 % mod == 0 && p._2 % mod == 0))
-    // the shuffle-hash fallback is pair-identical (beyond-memory posture)
-    val incShj = key(Dedup.minhashIncrementalFrame(frame, idxBands,
-      32, 16, 0.5, mod, broadcastVerify = false))
-    assert(incShj == restricted)
   }
 
   test("incremental embedding LSH equals the full run restricted to delta pairs") {
@@ -522,6 +494,7 @@ class DedupSpec extends SparkSpec {
   test("LSH candidate streams hash-partition on the pair ids, never round-robin") {
     // inputs read as they are, so any round-robin exchange in the plan
     // belongs to the candidate stream
+    GraftFunctions.register(spark)
     val frame = spark.read.parquet(s"$sfDir/embeddings.parquet")
       .select(col("vec_id"), col("embedding").as("v"))
       .withColumn("nrm", sqrt(call_function("graft_dot", col("v"), col("v"))))
@@ -530,23 +503,14 @@ class DedupSpec extends SparkSpec {
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     val mh = Dedup.minhashCandFrame(docs)
     mh.collect()
-    for (df <- Seq(emb, mh)) {
+    // the dedup_embedding_lsh entry reads one small file, which
+    // Dedup.parallelize spreads by a hash of the vector id
+    val entry = Dedup.embeddingNearDup(spark, sfDir)
+    entry.collect()
+    for (df <- Seq(emb, mh, entry)) {
       val plan = df.queryExecution.executedPlan.toString
       assert(!plan.contains("RoundRobinPartitioning"), plan)
     }
-  }
-
-  test("salted embedding LSH returns exactly the unsalted pairs") {
-    val frame = Dedup.withPlantedNearDups(spark, sfDir)
-    // hotMin = 2: every bucket with any pair potential is "hot", the
-    // strongest parity stress for the salted path
-    def pairs(salt: Int) =
-      Dedup.embeddingCosineLshFrame(frame, threshold = 0.9, salt = salt,
-        hotMin = 2)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val unsalted = pairs(1)
-    assert(unsalted.nonEmpty)
-    assert(pairs(4) == unsalted)
   }
 
   test("cluster-size census partitions the paired docs; every cluster has >= 2 members") {

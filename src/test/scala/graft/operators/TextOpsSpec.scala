@@ -103,10 +103,6 @@ class TextOpsSpec extends SparkSpec with TempDirSpec {
     }
     // a token's own doc contributes to its count, so commonness ≥ 1/total
     assert(out.forall(_.getAs[Double]("commonness") >= 1.0 / total))
-    // the beyond-memory shuffle-join path is result-identical
-    val shuffled = TextAnalysis.docFreq(spark, sfDir, broadcastVocab = false)
-      .collect().map(_.toString).sorted
-    assert(shuffled.sameElements(out.map(_.toString).sorted))
   }
 
   test("bigramLm cohesion is the ratio-of-sums bigram probability; join modes agree") {
@@ -133,10 +129,6 @@ class TextOpsSpec extends SparkSpec with TempDirSpec {
     // every bigram counts itself, so 0 < cohesion ≤ 1
     assert(out.forall { r =>
       val c = r.getAs[Double]("cohesion"); c > 0.0 && c <= 1.0 })
-    // the beyond-memory shuffle-join path is result-identical
-    val shuffled = TextAnalysis.bigramLm(spark, sfDir, broadcastVocab = false)
-      .collect().map(_.toString).sorted
-    assert(shuffled.sameElements(out.map(_.toString).sorted))
   }
 
   test("bigramLm adjacency skips empty tokens and short docs") {
@@ -210,22 +202,15 @@ class TextOpsSpec extends SparkSpec with TempDirSpec {
     // the dedup-verify contract (Dedup.BroadcastVerifyMaxRows) applied
     // to the Bloom filter side: the strategy gate may only change the
     // physical join, never the verdicts
-    def key(bf: Boolean) = TextAnalysis.bloomDecontaminateFrame(
-      spark.read.parquet(s"$sfDir/documents.parquet")
-        .select(org.apache.spark.sql.functions.col("doc_id"),
-          org.apache.spark.sql.functions.col("text")),
-      broadcastFilter = Some(bf)).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
-    val b = key(true)
+    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+      .select(col("doc_id"), col("text"))
+    def key(bf: Option[Boolean]) = TextAnalysis.bloomGramVerdicts(docs, broadcastFilter = bf)
+      .collect().map(_.toString).toSet
+    val b = key(Some(true))
     assert(b.nonEmpty)
-    assert(b == key(false))
+    assert(b == key(Some(false)))
     // the auto gate derives broadcast at this scale (eval grams ≪ ceiling)
-    val auto = TextAnalysis.bloomDecontaminateFrame(
-      spark.read.parquet(s"$sfDir/documents.parquet")
-        .select(org.apache.spark.sql.functions.col("doc_id"),
-          org.apache.spark.sql.functions.col("text"))).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
-    assert(auto == b)
+    assert(key(None) == b)
   }
 
   test("filter chain keeps a strict subset and every kept row passes every gate") {
@@ -335,7 +320,6 @@ class TextOpsSpec extends SparkSpec with TempDirSpec {
       .select(col("doc_id"), col("quality_score"))
       .withColumn("pct_rank", percent_rank().over(w)))
     assert(got == exp)
-    assert(key(TextAnalysis.qualityRank(spark, sfDir, broadcastHist = false)) == got)
   }
 
   test("dupNgrams counts corpus-duplicated 3-gram instances; join modes agree") {
@@ -352,9 +336,6 @@ class TextOpsSpec extends SparkSpec with TempDirSpec {
     assert(out(1L) == ((1L, 1L, 1.0)))
     assert(out(2L) == ((1L, 1L, 1.0)))
     assert(out(3L) == ((1L, 1L, 1.0)))
-    val bc = TextAnalysis.dupNgramsFrame(d, broadcastVocab = true).collect().toSet
-    val sh = TextAnalysis.dupNgramsFrame(d, broadcastVocab = false).collect().toSet
-    assert(bc == sh)
   }
 
   test("topTerms ranks rare terms over common ones at equal tf; k-bounded per doc") {
@@ -376,10 +357,6 @@ class TextOpsSpec extends SparkSpec with TempDirSpec {
       rows.foreach { t =>
         assert(t._5 == t._3.toDouble * (nDocs / t._4.toDouble)) }
     }
-    // broadcast and shuffle df sides agree
-    val shuffled = TextAnalysis.topTerms(spark, sfDir, k = 3, broadcastVocab = false)
-      .collect().map(r => (r.getLong(0), r.getString(1), r.getAs[Long]("rnk"))).toSet
-    assert(shuffled == out.map(t => (t._1, t._2, t._6)).toSet)
   }
 
   test("chunkWindows: brute boundary recompute; full coverage with exact overlap") {
@@ -435,11 +412,6 @@ class TextOpsSpec extends SparkSpec with TempDirSpec {
       assert(rows.sortBy(_._3).map(_._2).sameElements(1L to rows.length),
         s"doc $doc span ids")
     }
-    // join strategies agree
-    val sh = TextAnalysis.dedupSpansFrame(d, broadcastVocab = false)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-        r.getLong(3), r.getLong(4))).toSet
-    assert(sh == out.toSet)
   }
 
   test("gram trio from a MATERIALIZED gramInstances frame matches the standalone plans") {

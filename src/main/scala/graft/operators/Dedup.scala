@@ -1177,11 +1177,15 @@ object Dedup {
     * emits them, that distinct needs no exchange of its own. The cosine
     * is a function of the pair, so the output equals verifying every
     * candidate and taking the distinct of the thresholded rows.
-    * Spark's `round(x, 6)` costs a `BigDecimal` per row, so it runs only
-    * on the pairs whose unrounded cosine is ≥ `threshold - 1e-6`:
-    * rounding moves a value by at most 5e-7, so no pair that the
-    * rounded threshold keeps is dropped there. Spark orders NaN above
-    * every double, so a NaN cosine passes the prefilter too. A
+    * The kept pairs are those whose `round(cosine, 6)` reaches
+    * `threshold`. Spark's `round` is monotone, so the filter compares
+    * the unrounded cosine with [[roundedFloor]]`(threshold)`, the
+    * smallest double that rounds to `threshold` or above, computed once
+    * on the driver: each candidate's cosine is computed once in the
+    * join condition that filter is pushed into, and the `BigDecimal`
+    * rounding runs only on the kept pairs, in the projection. Spark
+    * orders NaN above every double, so a NaN cosine is kept, as
+    * `round` keeps it NaN. A
     * zero-norm vector has no cosine: it leaves the payload side
     * ([[nonzero]]), so its pairs drop out of the inner joins rather
     * than failing the query with ANSI mode's `DIVIDE_BY_ZERO`.
@@ -1210,9 +1214,32 @@ object Dedup {
       .select(col("vec_a"), col("vec_b"),
         (call_function("graft_dot", col("sa.v"), col("sb.v"))
           / (col("sa.nrm") * col("sb.nrm"))).as("raw"))
-      .where(col("raw") >= threshold - 1e-6)
+      .where(col("raw") >= roundedFloor(threshold))
       .select(col("vec_a"), col("vec_b"), round(col("raw"), 6).as("cos"))
-      .where(col("cos") >= threshold)
+  }
+
+  /** The smallest double `t` with Spark's `round(t, 6) >= threshold`
+    * (±∞ and NaN are their own). `round` is monotone, so for every
+    * double `x`, `x >= t` exactly when `round(x, 6) >= threshold`.
+    * Bisection between two doubles on either side: rounding moves a
+    * finite value by at most 5e-7.
+    */
+  private[graft] def roundedFloor(threshold: Double): Double = {
+    import org.apache.spark.sql.catalyst.expressions.{Literal, Round}
+    def keeps(t: Double): Boolean =
+      Round(Literal(t), Literal(6)).eval().asInstanceOf[Double] >= threshold
+    if (threshold.isNaN || threshold.isInfinite) threshold
+    else {
+      val pad = 1e-6 + 4 * math.ulp(threshold)
+      var lo = threshold - pad  // rounds below threshold
+      var hi = threshold + pad  // rounds to threshold or above
+      while (math.nextUp(lo) < hi) {
+        val m = lo + (hi - lo) / 2
+        val mid = if (m > lo && m < hi) m else math.nextUp(lo)
+        if (keeps(mid)) hi = mid else lo = mid
+      }
+      hi
+    }
   }
 
   /** The vectors of `e` whose norm `nrm` is not zero. A zero-norm
@@ -1538,10 +1565,30 @@ object Dedup {
     * components. Output: one row per document that appears in any pair,
     * with its `cluster_id` (the component's minimum doc id — a
     * deterministic canonical representative), the `cluster_size`, and
-    * `is_keeper` (true exactly for the representative).
+    * `is_keeper` (true exactly for the representative). A pair with a
+    * NULL id links nothing: it is dropped before clustering, so its
+    * other id gets a row only through its other pairs (the keeper
+    * pipelines pass it through as unpaired).
     *
-    * Distributed shape: min-label propagation — every node starts at
-    * the minimum of itself and its neighbors; each round replaces a
+    * Two routes, chosen by one statistic: the pair count (duplicates
+    * included) of the persisted, unsymmetrised pair edges, against
+    * [[ClusterContractionMinPairs]].
+    *  - Below it, the DRIVER route: the job that counts the edges also
+    *    ships them to the driver ([[pairsBelow]]), union-by-min with
+    *    path compression ([[unionFindPartition]]) runs there, and the
+    *    rows come back as a local frame. No propagation round, window
+    *    or checkpoint runs. The driver then holds under
+    *    100k pairs, under 200k labelled ids and their output rows: a
+    *    few tens of MB.
+    *  - At or above it, the CONTRACTED route: a partition-local
+    *    union-find collapses what each partition sees, and the
+    *    distributed loop below labels the boundary graph that is left
+    *    (see [[contracted]]).
+    * Both routes need Long ids, as every caller's doc ids are; another
+    * id type runs the loop below over the whole pair graph.
+    *
+    * The loop (contracted route): min-label propagation — every node
+    * starts at the minimum of itself and its neighbors; each round replaces a
     * node's label with the minimum over itself and its neighbors (one
     * shuffle join + one aggregate per round); a fixed point is reached after O(component diameter)
     * rounds — with a pointer-doubling shortcut each round (a node's
@@ -1576,7 +1623,8 @@ object Dedup {
       df.checkpoint(eager = true)
     else df.localCheckpoint(eager = true)
 
-  /** Rounds the last [[clusterPairs]] call took to converge — loop
+  /** Rounds the last [[clusterPairs]] call took to converge (0 on the
+    * driver route, which runs no round) — loop
     * telemetry for the bench's staged component walls (the per-round
     * job overhead is the loop's scarce resource at every scale, so a
     * round-count change IS the optimization evidence). Thread-LOCAL
@@ -1608,15 +1656,17 @@ object Dedup {
   private[graft] val ClusterJumpBroadcastMaxRows: Long =
     math.min(5000000L, Runtime.getRuntime.maxMemory / (64L * 8L))
 
-  /** Partition-local union-find over one edge partition: every node
-    * that appears in the partition is mapped to the MINIMUM node id of
-    * its partition-local component (union-by-min + path compression,
-    * amortized near-linear). Runs on the src-partitioned symmetric
-    * edge frame, so a node's full local neighborhood lands in one
-    * partition and chains/stars collapse to a single representative
-    * before any distributed round runs. Emits one (id, rep) row per
-    * node per partition (a node split across partitions emits several
-    * rows — the cross-partition disagreement IS the boundary graph).
+  /** Union-find over an edge iterator: every node that appears in it
+    * is mapped to the MINIMUM node id of its component among those
+    * edges (union-by-min + path compression, amortized near-linear).
+    * The driver route runs it once over every collected edge, so its
+    * (id, rep) rows are the components. The contracted route runs it
+    * per partition of the src-partitioned symmetric edge frame, so a
+    * node's full local neighborhood lands in one partition and
+    * chains/stars collapse to a single representative before any
+    * distributed round runs; it emits one (id, rep) row per node per
+    * partition (a node split across partitions emits several rows —
+    * the cross-partition disagreement IS the boundary graph).
     */
   private def unionFindPartition(
       it: Iterator[(Long, Long)]): Iterator[(Long, Long)] = {
@@ -1642,141 +1692,216 @@ object Dedup {
     ids.iterator.map(id => (id, find(id)))
   }
 
-  /** Loop-node count of the last [[propagateLabels]] call (the row
-    * count the broadcast-jump gate already pays for) — with local
-    * contraction on, this is the CONTRACTED node count, the evidence
-    * that the distributed loop ran on the boundary graph, not the
-    * corpus pair graph. Thread-local like [[lastClusterRounds]].
+  /** Node count of the last [[clusterPairs]] call's labelling: on the
+    * driver route, the labelled ids; on a loop route, the loop's nodes
+    * (the row count the broadcast-jump gate already pays for) — with
+    * local contraction, the CONTRACTED node count, the evidence that
+    * the distributed loop ran on the boundary graph, not the corpus
+    * pair graph. Thread-local like [[lastClusterRounds]].
     */
   private val clusterNodesTL: ThreadLocal[Long] =
     ThreadLocal.withInitial(() => -1L)
   private[graft] def lastClusterNodes: Long = clusterNodesTL.get
 
-  /** Pair graphs below this edge count skip the local contraction: the
-    * contraction costs ~4 fixed jobs and 3 label-sized shuffles
-    * (union-find pass, per-node min-rep aggregate, boundary-edge
-    * distinct, member label-back join) and pays by deleting loop
-    * ROUNDS — on a tiny graph the loop is already 2-3 rounds and the
-    * fixed jobs cost more than they remove (measured sf0.1
-    * dedup_cluster 0.84 → 1.52 s ungated), while at 100× (1.07M
-    * pairs, 14 rounds) the contraction deletes 10 rounds and 7 s. A
-    * corpus statistic, not a core count: the count runs over the
-    * already-persisted symmetric edge frame the loop materializes
-    * anyway, so the gate costs one cache-scan job.
+  /** The driver/contracted crossover of [[clusterPairs]], in pairs, and
+    * the bound on what the driver route holds. Below it the driver
+    * labels the graph from the one job that counts and ships its edges
+    * (on the `dedup_corpus` benchmark's 33,677 pairs, 4-core host,
+    * `dedup.cluster` took 21 jobs and 636 ms on the uncontracted loop,
+    * 2 jobs and 140 ms here); from it
+    * up, the contracted route's fixed jobs pay for themselves by
+    * deleting loop ROUNDS — at 100× (1.07M pairs, 14 rounds) the
+    * contraction deletes 10 rounds and 7 s. At the bound the driver
+    * holds 100k pairs, 200k ids and their rows: a few tens of MB. A
+    * corpus statistic, not a core count, read by the job that fills
+    * the cache of pair edges both routes read.
     */
   private[graft] val ClusterContractionMinPairs = 100000L
 
   /** [[clusterPairs]] with its two size gates exposed, so a spec can
     * force each route:
     *  - `contractionMinPairs`: see [[ClusterContractionMinPairs]]; 0
-    *    forces the partition-local contraction, `Long.MaxValue` the
-    *    uncontracted loop over the corpus pair graph;
+    *    forces the contracted route, `Long.MaxValue` the driver route;
     *  - `broadcastJumpMaxRows`: see [[ClusterJumpBroadcastMaxRows]]; 0
-    *    forces the shuffled pointer-jump join.
-    * Every route reaches the same fixed point: comp values only step
-    * downhill through node ids of the same component, and convergence
-    * still means "no label changed across a full hop+jump round".
-    * (A `jumps > 1` variant — chaining extra pointer-jump joins per
-    * round — was measured and REJECTED: the loop is hop-limited, not
-    * chain-limited (100× rounds stayed 14 with double jumps), and the
-    * extra join on the skewed comp key blew the round cost up 8×.)
+    *    forces the loop's shuffled pointer-jump join.
+    * Every route reaches the same labels: the driver's union-by-min
+    * roots each component at its minimum, and in the loop comp values
+    * only step downhill through node ids of the same component, with
+    * convergence meaning "no label changed across a full hop+jump
+    * round". (A `jumps > 1` variant — chaining extra pointer-jump joins
+    * per round — was measured and REJECTED: the loop is hop-limited,
+    * not chain-limited (100× rounds stayed 14 with double jumps), and
+    * the extra join on the skewed comp key blew the round cost up 8×.)
     */
   private[graft] def clusterPairsTuned(pairs: DataFrame, maxIters: Int = 40,
                                        broadcastJumpMaxRows: Long =
                                          ClusterJumpBroadcastMaxRows,
                                        contractionMinPairs: Long =
-                                         ClusterContractionMinPairs): DataFrame = {
+                                         ClusterContractionMinPairs): DataFrame =
+    components(pairs, maxIters, broadcastJumpMaxRows, contractionMinPairs)._1
+
+  /** [[clusterPairs]] for the keeper pipelines, which read it twice,
+    * with its row count: a driver-built frame comes with the count the
+    * driver route knows, a distributed one is checkpointed once and
+    * counted.
+    */
+  private def countedClusters(pairs: DataFrame): (DataFrame, Long) =
+    components(pairs, 40, ClusterJumpBroadcastMaxRows, ClusterContractionMinPairs) match {
+      case (local, Some(rows)) => (local, rows)
+      case (clusters, None) =>
+        val m = materialize(clusters)
+        (m, m.count())
+    }
+
+  /** [[clusterPairsTuned]]'s routing; the count is the row count of a
+    * driver-built frame, None for a distributed one.
+    */
+  private def components(pairs: DataFrame, maxIters: Int, broadcastJumpMaxRows: Long,
+                         contractionMinPairs: Long): (DataFrame, Option[Long]) = {
     val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-    // symmetrize once: propagation must flow both directions.
-    // PRE-PARTITIONED on the probe key before the persist (round 12):
-    // every round's neighbor join probes sym on `src`, and a cached
-    // frame with hashpartitioning(src) as its output partitioning
-    // satisfies the join's required distribution — so the edge frame
-    // (the largest frame in the loop) shuffles ONCE instead of once
-    // per round. Same for the labels side below: re-partitioned on
-    // `id` before each round's checkpoint, so the two per-round label
-    // joins probe it exchange-free. Measured at 100× (1.07M pairs,
-    // 500k nodes, 15 rounds): 29.8 s → 19.1 s, identical labels.
-    val sym = edges.union(edges.select(col("dst").as("src"), col("src").as("dst")))
+      .where(col("src").isNotNull && col("dst").isNotNull)
+      .persist()
+    val longIds = edges.schema.fields.forall(_.dataType == org.apache.spark.sql.types.LongType)
+    try {
+      (if (longIds) pairsBelow(edges, contractionMinPairs) else None) match {
+        case Some(small) =>
+          val (local, rows) = driverComponents(edges.sparkSession, small)
+          (local, Some(rows))
+        case None =>
+          val sym = symmetric(edges)
+          val labels =
+            if (longIds) contracted(sym, maxIters, broadcastJumpMaxRows)
+            else propagateLabels(sym, maxIters, broadcastJumpMaxRows)
+          val out = withSizes(labels)
+          sym.unpersist()
+          (out, None)
+      }
+    } finally edges.unpersist()
+  }
+
+  /** The gate and the driver route's collect in one job over the
+    * persisted Long edges: their count, and when it is below `maxPairs`
+    * the pairs themselves, flat (src, dst, src, dst, ...). Each
+    * partition ships its rows only while they fit its equal share of
+    * `maxPairs`, so the driver never receives `maxPairs` pairs or more;
+    * a small graph with a partition over its share is shipped by a
+    * second job. The job reads through the cache both routes read (a
+    * plan with exchanges fills it in an AQE job of its own first) and
+    * plans no aggregate, which under AQE would add a shuffle stage and
+    * a result job.
+    */
+  private def pairsBelow(edges: DataFrame, maxPairs: Long): Option[Array[Long]] = {
+    val rows = edges.queryExecution.toRdd
+    def ship(share: Long): Array[(Long, Array[Long])] = rows.mapPartitions { it =>
+      val buf = new scala.collection.mutable.ArrayBuilder.ofLong
+      var n = 0L
+      it.foreach { r => n += 1; if (n <= share) { buf += r.getLong(0); buf += r.getLong(1) } }
+      Iterator((n, if (n <= share) buf.result() else null))
+    }.collect()
+    val parts = ship(maxPairs / math.max(1, rows.getNumPartitions))
+    if (parts.map(_._1).sum >= maxPairs) None
+    else Some((if (parts.forall(_._2 != null)) parts else ship(maxPairs)).flatMap(_._2))
+  }
+
+  /** The driver route: one union-find over the collected `pairs` (flat,
+    * as [[pairsBelow]] returns them), the rows as a local frame in
+    * doc_id order, and their count.
+    */
+  private def driverComponents(spark: SparkSession, pairs: Array[Long]): (DataFrame, Long) = {
+    import spark.implicits._
+    val labels = unionFindPartition(
+        Iterator.range(0, pairs.length, 2).map(i => (pairs(i), pairs(i + 1))))
+      .toArray.sortBy(_._1)
+    val sizes = scala.collection.mutable.LongMap.empty[Long]
+    labels.foreach { case (_, rep) => sizes(rep) = sizes.getOrElse(rep, 0L) + 1L }
+    clusterRoundsTL.set(0)
+    clusterNodesTL.set(labels.length.toLong)
+    val rows = labels.toSeq.map { case (id, rep) => (id, rep, sizes(rep), id == rep) }
+    (rows.toDF("doc_id", "cluster_id", "cluster_size", "is_keeper"), labels.length.toLong)
+  }
+
+  /** `edges` symmetrized, since propagation must flow both directions,
+    * and persisted PRE-PARTITIONED on the probe key (round 12): every
+    * loop round's neighbor join probes it on `src`, and a cached frame
+    * with hashpartitioning(src) as its output partitioning satisfies
+    * the join's required distribution — so the edge frame (the largest
+    * frame in the loop) shuffles ONCE instead of once per round. Same
+    * for the labels side: re-partitioned on `id` before each round's
+    * checkpoint, so the two per-round label joins probe it
+    * exchange-free. Measured at 100× (1.07M pairs, 500k nodes, 15
+    * rounds): 29.8 s → 19.1 s, identical labels.
+    */
+  private def symmetric(edges: DataFrame): DataFrame =
+    edges.union(edges.select(col("dst").as("src"), col("src").as("dst")))
       .repartition(col("src"))
       .persist()
-    // LOCAL-CONTRACTION preprocessing (round 13, guide §2.1/§2.2): the
-    // distributed loop costs one shuffle + one action PER ROUND and the
-    // round count is hop-limited by the graph's chain structure
-    // (measured r12: extra pointer jumps don't reduce it). A
-    // partition-level union-find collapses every chain/star that is
-    // local to a partition in ONE pass, and the loop then runs on the
-    // CONTRACTED boundary graph — nodes = local representatives, edges
-    // = (rep, min-rep) disagreements of nodes seen in several
-    // partitions. Component minima survive contraction exactly: a
-    // node's local rep is ≤ the node and in its component, the global
-    // minimum is its own rep everywhere, and every rep of a multi-rep
-    // component appears in a boundary edge (a rep with no boundary
-    // edge is provably its whole component's only rep, handled by the
-    // coalesce fallback below). Labels are therefore checksum-identical
-    // to the uncontracted route — spec-pinned in DedupSpec.
-    // Guarded to Long ids (every caller today): exotic id types fall
-    // back to the uncontracted loop rather than risk a cast. Size-gated
-    // by [[ClusterContractionMinPairs]]; the count scans the persisted
-    // frame the loop materializes anyway.
-    // sym holds every pair twice; halving the count (not doubling the
-    // bound) keeps `Long.MaxValue` from overflowing
-    val contract = sym.schema.fields.forall(_.dataType ==
-        org.apache.spark.sql.types.LongType) &&
-      sym.count() / 2 >= contractionMinPairs
-    val labels =
-      if (contract) {
-        val sp = sym.sparkSession
-        import sp.implicits._
-        val mapping = sym.as[(Long, Long)]
-          .mapPartitions(unionFindPartition _)
-          .toDF("id", "rep")
-        // one row per node: its minimum rep across partitions, plus
-        // the distinct reps (≤ #partitions holding the node) that seed
-        // the boundary edges
-        val byNode = mapping.groupBy(col("id"))
-          .agg(min(col("rep")).as("mrep"), collect_set(col("rep")).as("reps"))
-          .persist()
-        // boundary graph: each non-minimal rep of a node links to the
-        // node's min rep. rep > mrep always holds here, so the
-        // distinct is collision-free and the symmetric union below
-        // cannot re-duplicate.
-        val cEdges = byNode
-          .select(explode(col("reps")).as("src"), col("mrep").as("dst"))
-          .where(col("src") =!= col("dst"))
-          .distinct()
-        val cSym = cEdges
-          .union(cEdges.select(col("dst").as("src"), col("src").as("dst")))
-          .repartition(col("src"))
-          .persist()
-        val repLabels = propagateLabels(cSym, maxIters, broadcastJumpMaxRows)
-        // label every member through its min rep; reps that never hit
-        // a boundary edge are their own component's minimum
-        val out = byNode
-          .join(repLabels.select(col("id").as("rid"), col("comp").as("rcomp")),
-            col("mrep") === col("rid"), "left")
-          .select(byNode("id").as("id"),
-            coalesce(col("rcomp"), col("mrep")).as("comp"))
-          .transform(materialize)
-        cSym.unpersist()
-        byNode.unpersist()
-        out
-      } else propagateLabels(sym, maxIters, broadcastJumpMaxRows)
-    val out = labels
+
+  /** (id, comp) labels as [[clusterPairs]] rows. */
+  private def withSizes(labels: DataFrame): DataFrame =
+    labels
       .withColumn("cluster_size",
         count(lit(1)).over(org.apache.spark.sql.expressions.Window
           .partitionBy(col("comp"))))
       .select(col("id").as("doc_id"), col("comp").as("cluster_id"),
         col("cluster_size"), (col("id") === col("comp")).as("is_keeper"))
-    sym.unpersist()
+
+  /** The contracted route's (id, comp) labels over a [[symmetric]] Long
+    * edge frame (round 13, guide §2.1/§2.2): the distributed loop costs
+    * one shuffle + one action PER ROUND and the round count is
+    * hop-limited by the graph's chain structure (measured r12: extra
+    * pointer jumps don't reduce it). A partition-level union-find
+    * collapses every chain/star that is local to a partition in ONE
+    * pass, and the loop then runs on the CONTRACTED boundary graph —
+    * nodes = local representatives, edges = (rep, min-rep)
+    * disagreements of nodes seen in several partitions. Component minima
+    * survive contraction exactly: a node's local rep is ≤ the node and
+    * in its component, the global minimum is its own rep everywhere,
+    * and every rep of a multi-rep component appears in a boundary edge
+    * (a rep with no boundary edge is provably its whole component's
+    * only rep, handled by the coalesce fallback below). Labels are
+    * therefore checksum-identical to the other routes — spec-pinned in
+    * DedupSpec and ClusterFuzzSpec.
+    */
+  private def contracted(sym: DataFrame, maxIters: Int,
+                         broadcastJumpMaxRows: Long): DataFrame = {
+    val sp = sym.sparkSession
+    import sp.implicits._
+    val mapping = sym.as[(Long, Long)]
+      .mapPartitions(unionFindPartition _)
+      .toDF("id", "rep")
+    // one row per node: its minimum rep across partitions, plus the
+    // distinct reps (≤ #partitions holding the node) that seed the
+    // boundary edges
+    val byNode = mapping.groupBy(col("id"))
+      .agg(min(col("rep")).as("mrep"), collect_set(col("rep")).as("reps"))
+      .persist()
+    // boundary graph: each non-minimal rep of a node links to the
+    // node's min rep. rep > mrep always holds here, so the distinct is
+    // collision-free and the symmetric union cannot re-duplicate.
+    val cEdges = byNode
+      .select(explode(col("reps")).as("src"), col("mrep").as("dst"))
+      .where(col("src") =!= col("dst"))
+      .distinct()
+    val cSym = symmetric(cEdges)
+    val repLabels = propagateLabels(cSym, maxIters, broadcastJumpMaxRows)
+    // label every member through its min rep; reps that never hit a
+    // boundary edge are their own component's minimum
+    val out = byNode
+      .join(repLabels.select(col("id").as("rid"), col("comp").as("rcomp")),
+        col("mrep") === col("rid"), "left")
+      .select(byNode("id").as("id"),
+        coalesce(col("rcomp"), col("mrep")).as("comp"))
+      .transform(materialize)
+    cSym.unpersist()
+    byNode.unpersist()
     out
   }
 
   /** The distributed min-label-propagation loop over a persisted,
     * src-partitioned symmetric edge frame; returns the fixed-point
     * (id, comp) label frame (checkpointed). See [[clusterPairs]] for
-    * the per-round shape; [[clusterPairsTuned]] decides what graph
-    * this runs on (corpus pair graph or contracted boundary graph).
+    * the per-round shape; it runs on the contracted boundary graph
+    * ([[contracted]]), or on the whole pair graph for non-Long ids.
     */
   private def propagateLabels(sym: DataFrame, maxIters: Int,
                               broadcastJumpMaxRows: Long): DataFrame = {
@@ -1969,14 +2094,14 @@ object Dedup {
   def pipelineQualityKeeper(docsDf: DataFrame, pairs: DataFrame,
                             scores: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val clusters = clusterPairs(pairs).transform(materialize)
+    val (clusters, paired) = countedClusters(pairs)
     val byCluster = Window.partitionBy(col("cluster_id"))
       .orderBy(col("quality_score").desc, col("doc_id"))
     val kept = clusters.join(scores, "doc_id")
       .withColumn("rn", row_number().over(byCluster))
       .where(col("rn") === 1)
       .select(col("doc_id"), col("cluster_size"), col("quality_score"))
-    unpairedIds(docsDf, clusters)
+    unpairedIds(docsDf, clusters, paired)
       .join(scores, "doc_id")
       .select(col("doc_id"), lit(1L).as("cluster_size"), col("quality_score"))
       .unionByName(kept)
@@ -2037,11 +2162,10 @@ object Dedup {
     * size 1.
     */
   def pipelineOverPairs(docsDf: DataFrame, pairs: DataFrame): DataFrame = {
-    val clusters = clusterPairs(pairs)
-      .transform(materialize)
+    val (clusters, paired) = countedClusters(pairs)
     val kept = clusters.where(col("is_keeper"))
       .select(col("doc_id"), col("cluster_size"))
-    unpairedIds(docsDf, clusters)
+    unpairedIds(docsDf, clusters, paired)
       .select(col("doc_id"), lit(1L).as("cluster_size"))
       .unionByName(kept)
   }
@@ -2050,28 +2174,30 @@ object Dedup {
   private[graft] val BroadcastMaxIds = 4_000_000L
 
   /** The ids of `docsDf` in no cluster of `clusters` (a materialized
-    * [[clusterPairs]] frame; dropped ∪ keepers = every paired id): the
-    * keeper pipelines' one corpus-sized anti-join.
+    * [[clusterPairs]] frame of `pairedCount` rows; dropped ∪ keepers =
+    * every paired id): the keeper pipelines' one corpus-sized
+    * anti-join.
     *
     * Its build side is the whole paired-id set — NOT guaranteed small
     * on the corpora dedup exists for: web crawls run 30-50%
     * near-duplicate, so at 100 TB the paired ids are billions of rows
     * and an unconditional broadcast ships tens of GB to every
     * executor. The route is therefore gated on the exact paired count
-    * (one count over the materialized labels) against
+    * (known on the driver route, one count over the checkpointed
+    * labels otherwise: [[countedClusters]]) against
     * [[BroadcastMaxIds]], and the gate is authoritative in BOTH
     * directions: at or below the ceiling the hint broadcasts a set the
     * planner can't size (checkpointed lineage); above it `merge` pins
     * the sort-merge route, since the checkpoint propagates its origin
     * plan's estimates and a wrong (too-small) estimate must not
-    * re-introduce the broadcast cliff the count just ruled out.
-    * `broadcastIds` pins the route instead (specs run both).
+    * re-introduce the broadcast cliff the count just ruled out. A
+    * spec runs the merge route by passing a count above the ceiling.
     */
   private[graft] def unpairedIds(docsDf: DataFrame, clusters: DataFrame,
-                                 broadcastIds: Option[Boolean] = None): DataFrame = {
+                                 pairedCount: Long): DataFrame = {
     val pairedIds = clusters.select(col("doc_id").as("paired_id"))
     val build =
-      if (broadcastIds.getOrElse(clusters.count() <= BroadcastMaxIds)) broadcast(pairedIds)
+      if (pairedCount <= BroadcastMaxIds) broadcast(pairedIds)
       else pairedIds.hint("merge")
     docsDf.select(col("doc_id"))
       .join(build, col("doc_id") === col("paired_id"), "left_anti")

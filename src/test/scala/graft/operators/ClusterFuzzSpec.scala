@@ -3,7 +3,8 @@ package graft.operators
 import graft.SparkSpec
 
 /** Seeded fuzz: [[Dedup.clusterPairs]] against the union-find
-  * reference ([[UnionFindReference]]) on random graphs — pointer-doubling label propagation must
+  * reference ([[UnionFindReference]]) on random graphs — the driver
+  * route and the contracted pointer-doubling label propagation must
   * produce exactly the connected components for any edge set, not just
   * the chain/triangle shapes the unit spec pins.
   */
@@ -20,12 +21,24 @@ class ClusterFuzzSpec extends SparkSpec {
         while (b == a) b = rnd.nextInt(n)
         (math.min(a, b).toLong, math.max(a, b).toLong)
       }.distinct
-      // labels, cluster sizes and keeper flags, row for row
-      val got = Dedup.clusterPairs(edges.toDF("doc_a", "doc_b")).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getBoolean(3)))
-      assert(got.length == got.toSet.size, s"trial $trial: duplicate rows")
-      assert(got.toSet == UnionFindReference.clusterRows(edges),
-        s"trial $trial (n=$n, m=${edges.size})")
+      val pairs = edges.toDF("doc_a", "doc_b")
+      // every graph here is below the contraction gate, so the default
+      // (driver) route runs, and the contracted loop is forced with
+      // each pointer-jump join
+      val routes = Seq(
+        "driver" -> (() => Dedup.clusterPairs(pairs)),
+        "contracted, broadcast jump" -> (() =>
+          Dedup.clusterPairsTuned(pairs, contractionMinPairs = 0L)),
+        "contracted, shuffle jump" -> (() =>
+          Dedup.clusterPairsTuned(pairs, broadcastJumpMaxRows = 0L, contractionMinPairs = 0L)))
+      for ((route, run) <- routes) {
+        // labels, cluster sizes and keeper flags, row for row
+        val got = run().collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getBoolean(3)))
+        assert(got.length == got.toSet.size, s"trial $trial, $route: duplicate rows")
+        assert(got.toSet == UnionFindReference.clusterRows(edges),
+          s"trial $trial, $route (n=$n, m=${edges.size})")
+      }
     }
   }
 

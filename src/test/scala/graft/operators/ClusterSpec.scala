@@ -28,12 +28,19 @@ class ClusterSpec extends SparkSpec with TempDirSpec {
 
   test("pointer doubling converges on a long path within the iteration cap") {
     // a 200-node path has diameter 199: plain min-propagation needs 199
-    // rounds; with the label-shortcut step convergence is logarithmic
-    val out = Dedup.clusterPairs(pairsDf((0L until 199L).map(i => (i, i + 1))))
-      .collect()
-    assert(out.length == 200)
-    assert(out.forall(_.getLong(1) == 0L))
-    assert(out.forall(_.getLong(2) == 200L))
+    // rounds; with the label-shortcut step convergence is logarithmic.
+    // The loop runs on the contracted route, forced here: the path is
+    // below the gate, where the default route labels it on the driver
+    val path = pairsDf((0L until 199L).map(i => (i, i + 1)))
+    val loop = Dedup.clusterPairsTuned(path, contractionMinPairs = 0L).collect()
+    assert(Dedup.lastClusterRounds > 0, "the forced route ran no loop round")
+    val driver = Dedup.clusterPairs(path).collect()
+    assert(Dedup.lastClusterRounds == 0 && Dedup.lastClusterNodes == 200L)
+    for (out <- Seq(loop, driver)) {
+      assert(out.length == 200)
+      assert(out.forall(_.getLong(1) == 0L))
+      assert(out.forall(_.getLong(2) == 200L))
+    }
   }
 
   test("cluster over ngram pairs: endpoints co-clustered, keeper is the component min") {
@@ -85,14 +92,28 @@ class ClusterSpec extends SparkSpec with TempDirSpec {
     val dir = java.nio.file.Files.createDirectories(java.nio.file.Paths.get(tempDir, "graft_ckpt")).toString
     sc.setCheckpointDir(dir)
     try {
-      val out = Dedup.clusterPairs(pairsDf(Seq((1L, 2L), (2L, 3L), (9L, 10L))))
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(out == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 9L -> 9L, 10L -> 9L))
+      val pairs = pairsDf(Seq((1L, 2L), (2L, 3L), (9L, 10L)))
+      val want = Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 9L -> 9L, 10L -> 9L)
+      def labels(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      // setCheckpointDir makes one subdirectory at once; a checkpoint
+      // writes an rdd-<id> directory under it
+      def ckptEntries() = {
+        val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+        try walk.filter(_.getFileName.toString.startsWith("rdd-")).count()
+        finally walk.close()
+      }
+      // the default route on this small graph is the driver's: it
+      // checkpoints nothing
+      assert(labels(Dedup.clusterPairs(pairs)) == want)
+      assert(ckptEntries() == 0, "the driver route wrote a checkpoint")
+      // the loop, forced through the contracted route
+      assert(labels(Dedup.clusterPairsTuned(pairs, contractionMinPairs = 0L)) == want)
       // the rounds really went through the reliable path: checkpoint
       // data landed under the configured dir (and the observe-based
       // convergence probe works on that path too, or collect() above
       // would have hung/failed)
-      assert(java.nio.file.Files.list(java.nio.file.Paths.get(dir)).count() > 0)
+      assert(ckptEntries() > 0)
     } finally {
       sc.setCheckpointDir(null) // Option(null) => None: clears it
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
@@ -149,8 +170,8 @@ class ClusterSpec extends SparkSpec with TempDirSpec {
     val gated = Dedup.pipelineFrame(docs)  // paired count ≤ BroadcastMaxIds → broadcast
     // the above-ceiling route, pinned on the same clusters
     val clusters = Dedup.clusterPairs(Dedup.minhashLshFrame(docs)).localCheckpoint()
-    val unpaired = Dedup.unpairedIds(docs, clusters)
-    val plainUnpaired = Dedup.unpairedIds(docs, clusters, broadcastIds = Some(false))
+    val unpaired = Dedup.unpairedIds(docs, clusters, clusters.count())
+    val plainUnpaired = Dedup.unpairedIds(docs, clusters, Dedup.BroadcastMaxIds + 1)
     // the STATIC plans differ: broadcast hint vs the pinned sort-merge
     // (AQE may still convert at runtime when the ids turn out small)
     def antiLine(df: org.apache.spark.sql.DataFrame) =
@@ -166,5 +187,41 @@ class ClusterSpec extends SparkSpec with TempDirSpec {
     // the corpus really is high-dup: ≥30% of the 40 docs are paired
     // (keepers carry their cluster size; 3 clusters of 5 → 15 paired)
     assert(a.filter(_._2 > 1).map(_._2).sum >= 12, "expected ≥30% of 40 docs paired")
+  }
+
+  test("a pair with a NULL id links nothing, on both routes and through the pipeline") {
+    import spark.implicits._
+    val pairs = Seq[(Option[Long], Option[Long])](
+      (Some(1L), Some(2L)), (Some(2L), None), (None, Some(5L)), (None, None),
+      (Some(7L), Some(8L))).toDF("doc_a", "doc_b")
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getBoolean(3))).toSet
+    val want = UnionFindReference.clusterRows(Seq(1L -> 2L, 7L -> 8L))
+    assert(rows(Dedup.clusterPairs(pairs)) == want, "driver route")
+    assert(rows(Dedup.clusterPairsTuned(pairs, contractionMinPairs = 0L)) == want,
+      "contracted route")
+    // doc 5's only pair has a NULL partner: it passes through unpaired
+    val docs = (1L to 8L).toDF("doc_id")
+    val kept = Dedup.pipelineOverPairs(docs, pairs).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(kept == Map(1L -> 2L, 3L -> 1L, 4L -> 1L, 5L -> 1L, 6L -> 1L, 7L -> 2L))
+  }
+
+  test("a small pair graph is labelled on the driver: no loop, count or checkpoint job") {
+    def pairs() = pairsDf(Seq((1L, 2L), (2L, 3L), (5L, 6L), (6L, 7L), (9L, 10L)))
+    val (rows, collectJobs) = jobsDuring(Dedup.clusterPairs(pairs()).collect())
+    assert(rows.length == 8)
+    // one job counts the persisted edges and ships them to the driver;
+    // the labelled rows come back from a local frame
+    assert(collectJobs <= 1, s"clusterPairs(...).collect() ran $collectJobs jobs")
+    // building the pipeline runs exactly the jobs building the
+    // components runs, so none counts or checkpoints its clusters
+    val docs = { import spark.implicits._; (1L to 12L).toDF("doc_id") }
+    val (_, clusterJobs) = jobsDuring(Dedup.clusterPairs(pairs()))
+    val (pipeline, pipelineJobs) = jobsDuring(Dedup.pipelineOverPairs(docs, pairs()))
+    assert(pipelineJobs == clusterJobs,
+      s"building pipelineOverPairs ran $pipelineJobs jobs, its components $clusterJobs")
+    assert(pipeline.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ==
+      Map(1L -> 3L, 4L -> 1L, 5L -> 3L, 8L -> 1L, 9L -> 2L, 11L -> 1L, 12L -> 1L))
   }
 }

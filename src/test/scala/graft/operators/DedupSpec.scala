@@ -434,6 +434,28 @@ class DedupSpec extends SparkSpec {
     assert(broadcasts >= 2, s"expected >=2 broadcast payload joins, got $broadcasts")
   }
 
+  test("the verify's cosine floor is the smallest double that rounds to the threshold") {
+    import spark.implicits._
+    // Spark's own round(x, 6) on the 3 doubles either side of the floor
+    // and the floor itself: only the floor and those above it reach the
+    // threshold
+    for (t <- Seq(0.9, 0.95, 0.8, 0.5, 0.3, 0.1234565, 0.9000004, 0.99999951, 1.0)) {
+      val floor = Dedup.roundedFloor(t)
+      val around = (-3 to 3).map { k =>
+        val x = Iterator.iterate(floor)(d => if (k < 0) math.nextDown(d) else math.nextUp(d))
+          .drop(math.abs(k)).next()
+        k -> x
+      }
+      val rounded = around.map(_._2).toDF("x")
+        .select(round(col("x"), 6)).collect().map(_.getDouble(0))
+      around.zip(rounded).foreach { case ((k, x), r) =>
+        assert((r >= t) == (k >= 0), s"threshold $t: round($x, 6) = $r at floor${if (k >= 0) "+" else ""}$k ulp")
+      }
+    }
+    assert(Dedup.roundedFloor(Double.NaN).isNaN)
+    assert(Dedup.roundedFloor(Double.PositiveInfinity) == Double.PositiveInfinity)
+  }
+
   test("embedding verify == verify-every-candidate-then-distinct, at the rounding edge") {
     import spark.implicits._
     graft.expressions.GraftFunctions.register(spark)
@@ -543,18 +565,41 @@ class DedupSpec extends SparkSpec {
     val byCluster = reference.groupBy(_._2)
     assert(byCluster.keySet == Set(100L, 10L, 3L) && byCluster(100L).size == 60 &&
       byCluster(10L).size == 6 && byCluster(3L).size == 2)
-    // the default route on a tiny graph (size-gated: stays
-    // uncontracted below ClusterContractionMinPairs, broadcast jump) …
+    // the default route on a tiny graph (size-gated: below
+    // ClusterContractionMinPairs the driver labels it, no loop round) …
     assert(rows(Dedup.clusterPairs(pairs)) == reference,
       "default route changed the component labeling")
-    // … the uncontracted loop, forced by the gate …
+    assert(Dedup.lastClusterRounds == 0 && Dedup.lastClusterNodes == 68,
+      "the default route did not label the 68 paired docs on the driver")
+    // … the driver route, forced by the gate …
     assert(rows(Dedup.clusterPairsTuned(pairs, 40,
       contractionMinPairs = Long.MaxValue)) == reference,
+      "driver route changed the component labeling")
+    // … the driver route when one partition holds more than its equal
+    // share of the gate: one job counts, a second ships the edges. The
+    // route flips exactly at the gate …
+    def onePartition(es: Seq[(Long, Long)]) =
+      spark.createDataFrame(es).toDF("doc_a", "doc_b").repartition(1).localCheckpoint()
+    val skewed = onePartition(chain).union(onePartition(clique ++ lone))
+    val (skewedRows, skewedJobs) = jobsDuring(rows(Dedup.clusterPairsTuned(skewed, 40,
+      contractionMinPairs = edges.size + 1L)))
+    assert(skewedRows == reference && Dedup.lastClusterRounds == 0 && skewedJobs == 2,
+      s"skewed driver route: ${Dedup.lastClusterRounds} rounds, $skewedJobs jobs")
+    assert(rows(Dedup.clusterPairsTuned(skewed, 40,
+      contractionMinPairs = edges.size.toLong)) == reference && Dedup.lastClusterRounds > 0,
+      "a graph at the gate must take the contracted route")
+    // … the uncontracted loop over the whole pair graph, which only
+    // non-Long ids take …
+    val intPairs = pairs.select(col("doc_a").cast("int").as("doc_a"),
+      col("doc_b").cast("int").as("doc_b"))
+    assert(Dedup.clusterPairs(intPairs).collect()
+      .map(r => (r.getInt(0).toLong, r.getInt(1).toLong, r.getLong(2), r.getBoolean(3)))
+      .toSet == reference,
       "uncontracted route changed the component labeling")
     val uncontractedRounds = Dedup.lastClusterRounds
     // … the shuffled pointer-jump join …
     assert(rows(Dedup.clusterPairsTuned(pairs, 40,
-      broadcastJumpMaxRows = 0L)) == reference,
+      broadcastJumpMaxRows = 0L, contractionMinPairs = 0L)) == reference,
       "shuffle-jump route changed the component labeling")
     // … and the contraction route, forced on via the gate: partition-
     // local union-find feeding the same loop. The chain is the
